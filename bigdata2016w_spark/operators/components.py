@@ -10,12 +10,24 @@ graph diameter — small for dedup clusters (near-dups chain shallowly).
 For adversarial long-path graphs at 100 TB you'd switch to
 large-star/small-star (Kiveris et al.) which converges in O(log n)
 rounds; min-propagation is the right tool for the shallow-cluster shape.
+
+Both variants run each round as ONE Spark action: the convergence probe
+is an ``Observation`` on the round's eager ``localCheckpoint``, not a
+separate count/collect job (per-action cost dominates dedup-sized graphs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _checkpoint(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it with ``metrics``
+    (aggregates over its rows) observed during that same job."""
+    obs = Observation()
+    out = df.observe(obs, *metrics).localCheckpoint(eager=True)
+    return out, obs.get
 
 
 def connected_components_star(
@@ -28,9 +40,10 @@ def connected_components_star(
     docstring promises for adversarial long-path graphs at scale.
 
     Each round is two (groupBy + join) shuffles over the current edge
-    set; no driver-side state beyond the one-row convergence probe (an
-    order-independent hash-sum of the edge set, so "unchanged" costs one
-    tiny aggregate, not a distributed set-difference)."""
+    set, materialized by one eager checkpoint. The convergence probe —
+    an order-independent ``(n, hash-sum)`` signature of the edge set, so
+    "unchanged" costs no distributed set-difference — is an
+    ``Observation`` on that checkpoint, not a separate collect."""
 
     def _canon(e: DataFrame) -> DataFrame:
         return e.select(
@@ -61,32 +74,26 @@ def connected_components_star(
             pairs.select("u", F.col("m").alias("v"))
         ).where(F.col("u") != F.col("v"))
 
-    def _sig(e: DataFrame) -> tuple[int, int]:
-        # hashes reduced mod 2^31 before the sum so it cannot overflow
-        # int64 under ANSI mode (safe to ~4e9 edges; collision odds for a
-        # convergence probe are irrelevant)
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(2147483648))),
-                F.lit(0),
-            ).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
+    # hashes reduced mod 2^31 before the sum so it cannot overflow int64
+    # under ANSI mode (safe to ~4e9 edges; collision odds for a
+    # convergence probe are irrelevant)
+    sig_of = (
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(2147483648))), F.lit(0)
+        ).alias("h"),
+    )
     nodes = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    e = _canon(
+    e, sig = _checkpoint(_canon(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    ).localCheckpoint(eager=True)
-    sig = _sig(e)
+    ), *sig_of)
     for _ in range(max_rounds):
-        e = _canon(_small_star(_large_star(e))).localCheckpoint(eager=True)
-        new_sig = _sig(e)
+        e, new_sig = _checkpoint(_canon(_small_star(_large_star(e))), *sig_of)
         if new_sig == sig:
             break
         sig = new_sig
@@ -109,49 +116,37 @@ def connected_components(
     edges: DataFrame, max_iters: int = 20
 ) -> DataFrame:
     """edges(src, dst) undirected → (id, component) with component = min
-    node id reachable. Converges early when a round is a no-op."""
-    sym = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
+    node id reachable. Converges early when a round is a no-op.
+
+    The symmetric edge set holds a self-loop per node, so one join +
+    groupBy per round yields both the new label (min over the node and
+    its neighbors) and the previous one (the self-loop row's label).
+    Round 1 reads label(b) = b straight from the edges."""
+    # union is positional; distinct (in the one setup job) leaves 2E + V
+    # rows, so duplicate edges and per-edge self-loops never reach a round
+    sym = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    sym = sym.union(sym.select("b", "a")).union(sym.select("a", "a")).union(
+        sym.select("b", "b")
+    ).distinct().localCheckpoint(eager=True)
+    labeled = sym.withColumn("component", F.col("b"))
     for _ in range(max_iters):
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("component").alias("nmin"))
+        labels, probe = _checkpoint(
+            labeled.groupBy(F.col("a").alias("id")).agg(
+                F.min("component").alias("component"),
+                F.min(F.when(F.col("a") == F.col("b"), F.col("component")))
+                .alias("prev"),
+            ),
+            F.count_if(F.col("component") != F.col("prev")).alias("changed"),
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nmin"), F.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if probe["changed"] == 0:
             break
+        labeled = sym.join(
+            labels.select(F.col("id").alias("b"), "component"), "b"
+        )
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "
             "(rounds needed = graph diameter); raise max_iters or use "
             "connected_components_star"
         )
-    return labels
+    return labels.select("id", "component")

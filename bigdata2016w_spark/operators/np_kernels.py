@@ -151,7 +151,8 @@ def _encode_batch(
     sd: int,
 ) -> np.ndarray:
     """(n, M) int32 nearest-codeword ids; ties → lowest code; NaN
-    distance terms raise (ANSI bigint cast)."""
+    distance terms and overflowing distances raise (ANSI bigint cast and
+    sum)."""
     n = X.shape[0]
     codes_out = np.empty((n, n_subspaces), dtype=np.int32)
     for m in range(n_subspaces):
@@ -177,7 +178,15 @@ def _encode_batch(
                     "[CAST_OVERFLOW] PQ distance term exceeds BIGINT "
                     "range (ANSI cast semantics)"
                 )
-            d2 = np.cumsum(np.rint(terms).astype(np.int64), axis=1)[:, -1]
+            # ANSI bigint sum raises on overflow; every term is in
+            # [0, 2^63), so the first wrapped running sum is negative
+            run = np.cumsum(np.rint(terms).astype(np.int64), axis=1)
+            if (run < 0).any():
+                raise ArithmeticError(
+                    "[ARITHMETIC_OVERFLOW] PQ squared distance exceeds "
+                    "BIGINT range (ANSI sum semantics)"
+                )
+            d2 = run[:, -1]
             if idx == 0:
                 best_d2 = d2
                 best_code = np.full(n, code, dtype=np.int64)

@@ -98,10 +98,12 @@ def bm25_rank(docs: DataFrame, terms: list[str], k: int = 10,
     score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)),
     idf = ln((N − df + 0.5)/(df + 0.5) + 1).
 
-    One postings scan filtered to the query terms (point lookups — the
-    same pushdown path as term_postings), broadcast of the tiny per-term
-    df/idf table, one aggregation. All counts stay int64; ln is rounded
-    at the edge (libm last-ulp).
+    Only tokens matching a query term are exploded and grouped into
+    (term, docid, tf); document lengths dl come from per-document token
+    counts (``size`` of the token array, docs with no tokens dropped), so
+    no (term, docid) aggregate of the whole corpus is built. Broadcast of
+    the tiny per-term df/idf table, one scoring aggregation. All counts
+    stay int64; ln is rounded at the edge (libm last-ulp).
 
     Scale shape: N (corpus size) and avgdl are 1-row aggregates folded
     into the plan as broadcast cross-joins — no separate driver-side
@@ -112,11 +114,20 @@ def bm25_rank(docs: DataFrame, terms: list[str], k: int = 10,
     """
     from pyspark.sql.functions import broadcast
 
-    flat = postings_flat(docs)
+    toks = docs.select(F.col("doc_id").alias("docid"),
+                       tokenize("text").alias("t"))
     nd = docs.agg(F.count("*").alias("n_docs"))
-    dl = flat.groupBy("docid").agg(F.sum("tf").alias("dl"))
+    # filter the aggregate, not the rows: a row filter on size(t) would
+    # be pushed below the projection and run the tokenizer twice
+    dl = (toks.groupBy("docid").agg(F.sum(F.size("t")).alias("dl"))
+          .where(F.col("dl") > 0))
     avgdl = dl.agg(F.sum("dl").alias("s"), F.count("*").alias("c"))
-    hits = flat.where(F.col("term").isin(*terms))
+    hits = (
+        toks.select("docid", F.explode("t").alias("term"))
+        .where(F.col("term").isin(*terms))
+        .groupBy("term", "docid")
+        .agg(F.count("*").alias("tf"))
+    )
     df_t = hits.groupBy("term").agg(F.count("*").alias("df"))
     scored = (
         hits.join(broadcast(df_t), "term")

@@ -105,7 +105,9 @@ def test_isolated_block_covers_every_slow_suite_query():
     run itself mutated two rounds straight (r11, r12 — both adjudicated
     as harness coupling, not engine bugs). The policy is about what the
     repo SHIPS, so the committed file is the right subject; fall back
-    to the working tree only when git is unavailable."""
+    to the working tree only when git is unavailable. The price is a
+    one-commit lag: a commit that adds a slow query together with its
+    refreshed artifact is flagged by the next test run, not this one."""
     import json
     import subprocess
     from pathlib import Path

@@ -98,6 +98,30 @@ def test_bm25_topk_is_take_ordered_no_window(spark, sf_dir):
     assert "Window" not in plan
 
 
+def test_bm25_aggregates_only_query_term_tokens(spark, sf_dir):
+    """BM25 needs tf only for the query terms: every (term, docid)
+    aggregate must sit above the ``term IN (...)`` filter, never over the
+    whole exploded corpus. Document lengths come from per-doc token
+    counts instead of summing a full postings table."""
+    import re
+
+    from bigdata2016w_spark.plans.retrieval import retrieval_bm25
+
+    lines = (retrieval_bm25(spark, sf_dir)._jdf.queryExecution()
+             .optimizedPlan().toString().splitlines())
+    aggs = [i for i, line in enumerate(lines)
+            if re.search(r"Aggregate \[term#\d+, docid#\d+L?\]", line)]
+    assert aggs
+    for i in aggs:
+        below = []
+        for line in lines[i + 1:]:
+            if "Generate explode" in line:
+                break
+            below.append(line)
+        assert any("Filter" in ln and " IN (" in ln for ln in below), (
+            lines[i])
+
+
 def test_knn_topk_is_two_stage(spark, sf_dir):
     """Per-query top-k must be local-then-global: the global per-group
     window may only rank stage-1 survivors (≤ k·P rows per query), never

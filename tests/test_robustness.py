@@ -395,3 +395,18 @@ def test_encode_kernel_overflow_raises_instead_of_wrapping():
     pdf = pd.DataFrame({"vec_id": [7], "embedding": [[1e12, 0.0]]})
     with pytest.raises(ArithmeticError, match="CAST_OVERFLOW"):
         list(fn(iter([pdf])))
+
+
+def test_encode_kernel_sum_overflow_raises_instead_of_wrapping():
+    import pandas as pd
+    from bigdata2016w_spark.operators.np_kernels import encode_pq_fn
+
+    # each term is 2^62 (passes the per-term cast bound) but their int64
+    # sum wraps negative and would win the argmin; the ANSI bigint sum in
+    # the expression twin raises ARITHMETIC_OVERFLOW instead
+    x = float(2 ** 19)  # x^2 * 2^24 = 2^62
+    fn = encode_pq_fn([(0, 0, [0.0, 0.0]), (0, 1, [x, 0.0])],
+                      n_subspaces=1, dim=2)
+    pdf = pd.DataFrame({"vec_id": [7], "embedding": [[x, x]]})
+    with pytest.raises(ArithmeticError, match="ARITHMETIC_OVERFLOW"):
+        list(fn(iter([pdf])))

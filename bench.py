@@ -197,28 +197,31 @@ def main() -> None:
     # its full cost and the rest ~0. Materialize it up front as an
     # explicit bench line so the PPJoin path can't hide in consumer
     # timings; consumers below then show their marginal cost. Same
-    # best-of-2 protocol as the queries (the caches are cleared between
-    # runs so both fully re-materialize; run 1 pays one-time codegen);
-    # the second materialization stays cached for the consumers.
+    # best-of-2 protocol as the queries (the shared entries are forgotten
+    # between runs so both fully re-materialize; run 1 pays one-time
+    # codegen); the second materialization stays shared for the consumers.
     from bigdata2016w_spark.plans import pipeline as _pipe
 
     from bigdata2016w_spark.operators.dedup import jaccard_near_dupes
+    from bigdata2016w_spark.shared import forget
     from bigdata2016w_spark.sources.catalog import load_table
+
+    def forget_pairs() -> None:
+        forget(spark, ("jaccard_pairs", sf_dir, _pipe.JACCARD_THRESHOLD))
+        forget(spark, ("shingles", sf_dir))
 
     # run 1: un-memoized with Observations attached so the artifact
     # records the PPJoin cost breakdown (shingle rows → post-filter
     # candidates → verified pairs) — candidate/doc growth across rounds
     # is the skew signal a profiler would otherwise hide. run 2: through
     # the memoized path, leaving the cache warm for the consumers below.
-    _pipe._JACCARD_PAIRS_CACHE.clear()
-    _pipe._SHINGLES_CACHE.clear()
+    forget_pairs()
     m: dict = {}
     t0 = time.perf_counter()
     jaccard_near_dupes(load_table(spark, sf_dir, "documents"), metrics=m).count()
     best = time.perf_counter() - t0
     ppjoin_metrics = {k: int(v.get["n"]) for k, v in m.items()}
-    _pipe._JACCARD_PAIRS_CACHE.clear()
-    _pipe._SHINGLES_CACHE.clear()
+    forget_pairs()
     t0 = time.perf_counter()
     _pipe._shared_jaccard_pairs(spark, sf_dir).count()
     best = min(best, time.perf_counter() - t0)
@@ -260,8 +263,7 @@ def main() -> None:
             if name == "shared_shingle_pairs_pipeline":
                 # memoized — clear so the isolated number is a true
                 # full re-materialization, like the suite line above
-                _pipe._JACCARD_PAIRS_CACHE.clear()
-                _pipe._SHINGLES_CACHE.clear()
+                forget_pairs()
                 _pipe._shared_jaccard_pairs(spark, sf_dir).count()
             else:
                 _ = specs[name].fn(spark, sf_dir).collect()

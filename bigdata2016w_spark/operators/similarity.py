@@ -33,6 +33,7 @@ from bigdata2016w_spark.operators.np_kernels import (
     pair_cosine_fn as np_pair_cosine_fn,
 )
 from bigdata2016w_spark.operators.topk import topk_per_group
+from bigdata2016w_spark.shared import shared
 
 LSH_SEED = 42
 # 4 planes = 16 buckets; with 1-bit multiprobe a query scans ~5/16 of the
@@ -1821,31 +1822,27 @@ def knn_ivf_pq_rerank(
 # touch centroids/codebook, and write_ivfpq_index invalidates its path
 # on (re)write. Shaves two model parquet scans + a metadata agg job off
 # EVERY probe — the fixed overhead that dominated the serve path.
-_INDEX_MODELS_CACHE: dict[tuple[str, str], tuple[list, list]] = {}
-
-
-def _index_cache_key(spark, index_path: str) -> tuple[str, str]:
-    """Cache key with a NORMALIZED path: the same physical index
+def _index_cache_key(index_path: str) -> tuple[str, str]:
+    """Shared-entry key with a NORMALIZED path: the same physical index
     addressed with a trailing slash or a relative path must hit the
-    same entry, and — more important — the write-side invalidation pop
-    must remove whatever the read side stored. URI-style paths
-    (scheme://) only lose trailing slashes (os.path.abspath would
-    mangle the double slash); plain local paths are made absolute."""
+    same entry, and — more important — the write-side ``forget`` must
+    remove whatever the read side stored. URI-style paths (scheme://)
+    only lose trailing slashes (os.path.abspath would mangle the double
+    slash); plain local paths are made absolute."""
     import os
 
     p = index_path.rstrip("/")
     if "://" not in p:
         p = os.path.abspath(p or "/")
-    return (spark.sparkContext.applicationId, p)
+    return ("index_models", p)
 
 
 def _index_models(spark, index_path: str) -> tuple[list, list]:
     """(codebook rows [(m, code, cv)], centroid rows [(cell, centroid)])
-    of the index at ``index_path``, session-cached. Empty lists for an
+    of the index at ``index_path``, session-shared. Empty lists for an
     index written from an empty corpus."""
-    key = _index_cache_key(spark, index_path)
-    got = _INDEX_MODELS_CACHE.get(key)
-    if got is None:
+
+    def build() -> tuple[list, list]:
         cb_rows = sorted(
             (int(r["m"]), int(r["code"]), [float(x) for x in r["cv"]])
             for r in spark.read.parquet(f"{index_path}/codebook").collect()
@@ -1855,9 +1852,9 @@ def _index_models(spark, index_path: str) -> tuple[list, list]:
             for r in spark.read.parquet(
                 f"{index_path}/centroids").collect()
         )
-        got = (cb_rows, cent_rows)
-        _INDEX_MODELS_CACHE[key] = got
-    return got
+        return cb_rows, cent_rows
+
+    return shared(spark, _index_cache_key(index_path), build)
 
 
 def _adc_lut_driver(q_rows, cent_rows, cb_rows, n_probe: int,

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from bigdata2016w_spark.operators.dedup import portable_hash60
 from bigdata2016w_spark.registry import QuerySpec, register
+from bigdata2016w_spark.shared import scratch_dir, shared, stream_two_batches
 from bigdata2016w_spark.sources.catalog import load_table
 
 _STAT_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -470,40 +471,30 @@ register(QuerySpec("orders_ivm_join_delta", orders_ivm_join_delta,
 # mergeSchema cannot read this directory at all (int32/int64 conflict);
 # sources/catalog.read_conformed reads it through the declared v3+
 # contract. The oracle replays the generation split statically.
-_EVOLVE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _evolving_orders_root(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _EVOLVE_CACHE.get(key)
-    if root is not None:
+    def build() -> str:
+        root = scratch_dir("bigdata2016w_evolve_")
+        orders = load_table(spark, sf_dir, "orders")
+        gen = F.col("o_orderkey") % 3
+        orders.where(gen == 0).select(
+            "o_orderkey",
+            F.col("o_custkey").cast(T.IntegerType()).alias("o_custkey"),
+            "o_totalprice",
+        ).write.parquet(f"{root}/batch=v1")
+        orders.where(gen == 1).select(
+            "o_orderkey",
+            F.col("o_custkey").cast(T.IntegerType()).alias("o_custkey"),
+            "o_totalprice", "o_orderpriority",
+        ).write.parquet(f"{root}/batch=v2")
+        orders.where(gen == 2).select(
+            "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority",
+            "o_orderstatus",
+        ).write.parquet(f"{root}/batch=v3")
         return root
-    root = tempfile.mkdtemp(prefix="bigdata2016w_evolve_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders")
-    gen = F.col("o_orderkey") % 3
-    orders.where(gen == 0).select(
-        "o_orderkey",
-        F.col("o_custkey").cast(T.IntegerType()).alias("o_custkey"),
-        "o_totalprice",
-    ).write.parquet(f"{root}/batch=v1")
-    orders.where(gen == 1).select(
-        "o_orderkey",
-        F.col("o_custkey").cast(T.IntegerType()).alias("o_custkey"),
-        "o_totalprice", "o_orderpriority",
-    ).write.parquet(f"{root}/batch=v2")
-    orders.where(gen == 2).select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority",
-        "o_orderstatus",
-    ).write.parquet(f"{root}/batch=v3")
-    _EVOLVE_CACHE[key] = root
-    return root
+
+    return shared(spark, ("evolving_orders_root", sf_dir), build)
 
 
 def orders_schema_evolution_read(
@@ -795,59 +786,29 @@ register(QuerySpec("orders_replica_reconcile", orders_replica_reconcile,
 # subdirs → merge-on-read), and the oracle recomputes the view from
 # scratch over all orders. Equality proves the whole streamed chain —
 # per-batch ΔV, replay-safe batch=N overwrite layout, read_view's
-# merge-on-read — not just the delta arithmetic. Temp view dirs are built
+# merge-on-read — not just the delta arithmetic. The view dir is built
 # once per (session, sf_dir); DECIMAL money math keeps the streamed merge
 # bit-equal to the one-shot rebuild.
-_IVM_STREAM_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _streamed_ivm_view(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
     from bigdata2016w_spark.streaming.ivm import ivm_view_sink
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    view = _IVM_STREAM_CACHE.get(key)
-    if view is not None:
-        return view
-    root = tempfile.mkdtemp(prefix="bigdata2016w_ivm_stream_")
-    view = f"{root}/view"
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    customer = load_table(spark, sf_dir, "customer")
-    src_dir = f"{root}/in"
-    os.makedirs(src_dir)
-    # two single-file inputs + maxFilesPerTrigger=1 → exactly two
-    # micro-batches under the availableNow trigger (the
-    # _streamed_ivfpq_index convention); the view merge is commutative,
-    # but the batch COUNT is asserted so this always exercises the
-    # multi-batch merge, never a degenerate single-delta read
-    for j, m in ((1, 0), (2, 1)):
-        w = f"{root}/w{j}"
-        orders.where(F.col("o_orderkey") % 2 == m).coalesce(1) \
-            .write.parquet(w)
-        shutil.copy(next(Path(w).glob("part-*.parquet")),
-                    f"{src_dir}/{j}.parquet")
-    stream = (
-        spark.readStream
-        .schema("o_orderkey bigint, o_custkey bigint, o_totalprice double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    ivm_view_sink(stream, customer, view, f"{root}/ckpt") \
-        .awaitTermination()
-    n_batches = len(_batch_dirs(spark, view))
-    if n_batches != 2:
-        raise AssertionError(
-            f"expected 2 streamed delta batches, got {n_batches}"
+    def build() -> str:
+        root = scratch_dir("bigdata2016w_ivm_stream_")
+        view = f"{root}/view"
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_totalprice"
         )
-    _IVM_STREAM_CACHE[key] = view
-    return view
+        customer = load_table(spark, sf_dir, "customer")
+        # the view merge is commutative, so batch order is immaterial
+        stream_two_batches(
+            spark, root,
+            [orders.where(F.col("o_orderkey") % 2 == m) for m in (0, 1)],
+            lambda stream, ckpt: ivm_view_sink(stream, customer, view, ckpt),
+            view,
+        )
+        return view
+
+    return shared(spark, ("streamed_ivm_view", sf_dir), build)
 
 
 def orders_ivm_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -878,63 +839,36 @@ register(QuerySpec("orders_ivm_streamed", orders_ivm_streamed, _IVM_SQL,
 
 # ----------------------------------------------------- streamed CDC ivm
 
-_CDC_STREAM_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _streamed_cdc_view(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
     from bigdata2016w_spark.streaming.ivm import cdc_ivm_view_sink
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    view = _CDC_STREAM_CACHE.get(key)
-    if view is not None:
+    def build() -> str:
+        root = scratch_dir("bigdata2016w_cdc_stream_")
+        view = f"{root}/view"
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_totalprice"
+        )
+        customer = load_table(spark, sf_dir, "customer")
+        # batch 0: the base load as inserts. batch 1: the change batch —
+        # new arrivals as inserts PLUS retractions of base rows as
+        # deletes. The signed merge is commutative.
+        b0 = orders.where(~F.expr(_DELTA_PRED)).withColumn("op", F.lit("I"))
+        b1 = (
+            orders.where(F.expr(_IVM_INS_PRED)).withColumn("op", F.lit("I"))
+            .unionByName(
+                orders.where((~F.expr(_DELTA_PRED)) & F.expr(_IVM_DEL_PRED))
+                .withColumn("op", F.lit("D"))
+            )
+        )
+        stream_two_batches(
+            spark, root, [b0, b1],
+            lambda stream, ckpt: cdc_ivm_view_sink(
+                stream, customer, view, ckpt),
+            view,
+        )
         return view
-    root = tempfile.mkdtemp(prefix="bigdata2016w_cdc_stream_")
-    view = f"{root}/view"
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    customer = load_table(spark, sf_dir, "customer")
-    src_dir = f"{root}/in"
-    os.makedirs(src_dir)
-    # batch 1: the base load as inserts. batch 2: the change batch —
-    # new arrivals as inserts PLUS retractions of base rows as deletes.
-    # The signed merge is commutative, but two real micro-batches are
-    # asserted (the _streamed_ivm_view convention).
-    b1 = orders.where(~F.expr(_DELTA_PRED)).withColumn("op", F.lit("I"))
-    b2 = (
-        orders.where(F.expr(_IVM_INS_PRED)).withColumn("op", F.lit("I"))
-        .unionByName(
-            orders.where((~F.expr(_DELTA_PRED)) & F.expr(_IVM_DEL_PRED))
-            .withColumn("op", F.lit("D"))
-        )
-    )
-    for j, part in ((1, b1), (2, b2)):
-        w = f"{root}/w{j}"
-        part.coalesce(1).write.parquet(w)
-        shutil.copy(next(Path(w).glob("part-*.parquet")),
-                    f"{src_dir}/{j}.parquet")
-    stream = (
-        spark.readStream
-        .schema("o_orderkey bigint, o_custkey bigint, "
-                "o_totalprice double, op string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    cdc_ivm_view_sink(stream, customer, view, f"{root}/ckpt") \
-        .awaitTermination()
-    n_batches = len(_batch_dirs(spark, view))
-    if n_batches != 2:
-        raise AssertionError(
-            f"expected 2 streamed CDC batches, got {n_batches}"
-        )
-    _CDC_STREAM_CACHE[key] = view
-    return view
+
+    return shared(spark, ("streamed_cdc_view", sf_dir), build)
 
 
 def orders_ivm_cdc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:

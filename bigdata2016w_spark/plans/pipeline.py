@@ -43,6 +43,11 @@ from bigdata2016w_spark.operators.similarity import (
     knn_lsh,
 )
 from bigdata2016w_spark.registry import QuerySpec, register
+from bigdata2016w_spark.shared import (
+    scratch_dir,
+    shared,
+    stream_two_batches,
+)
 from bigdata2016w_spark.sources.catalog import load_table
 
 JACCARD_THRESHOLD = 0.5
@@ -52,47 +57,34 @@ KNN_K = 10
 # Three registered queries consume the same Jaccard near-dup pair set
 # (dedup_jaccard, corpus_curation, dedup_clusters). The PPJoin pipeline
 # behind it is the most expensive plan in the engine, so a suite run that
-# recomputes it per consumer pays ~3× for identical rows. Memoize the
+# recomputes it per consumer pays ~3× for identical rows. Share the
 # *result* DataFrame per (session, sf_dir, threshold) and localCheckpoint
 # it: the first consumer materializes, the rest reuse the checkpointed
 # partitions. At cluster scale the same pattern is "write the pairs table
 # once, read it from each downstream job".
-_JACCARD_PAIRS_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-_SHINGLES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def shared_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized 3-gram shingle table for the documents corpus — the most
+    """Shared 3-gram shingle table for the documents corpus — the most
     expression-heavy per-row transform in the engine, consumed by four
     registered queries (Jaccard, MinHash-LSH, contamination, dup-spans).
     At cluster scale this is "write the shingle table once, read it from
     each dedup/curation job"; locally it is one localCheckpoint shared
     per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SHINGLES_CACHE.get(key)
-    if df is None:
-        df = shingle_sets(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=False)
-        _SHINGLES_CACHE[key] = df
-    return df
+    return shared(spark, ("shingles", sf_dir), lambda: shingle_sets(
+        load_table(spark, sf_dir, "documents")
+    ).localCheckpoint(eager=False))
 
 
 def _shared_jaccard_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
-    # keyed by applicationId: a checkpointed RDD dies with its context, so
-    # a restarted session must never see a stale cache entry
-    key = (spark.sparkContext.applicationId, sf_dir, threshold)
-    df = _JACCARD_PAIRS_CACHE.get(key)
-    if df is None:
-        df = jaccard_near_dupes(
+    def build() -> DataFrame:
+        return jaccard_near_dupes(
             load_table(spark, sf_dir, "documents"),
             threshold,
             shingled=shared_shingle_sets(spark, sf_dir),
         ).localCheckpoint(eager=False)
-        _JACCARD_PAIRS_CACHE[key] = df
-    return df
+
+    return shared(spark, ("jaccard_pairs", sf_dir, threshold), build)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1097,11 +1089,7 @@ register(QuerySpec("ann_ivf_lloyd", ann_ivf_lloyd, _ANN_IVF_LLOYD_SQL,
 
 # The trained-codebook literal is shared by ann_pq_adc and ann_ivf_pq —
 # same (sample, init, one Lloyd step) model either way, so train it once
-# per (session, sf_dir); a literal DataFrame carries no checkpoint state,
-# only the keying-by-applicationId convention matters for staleness.
-_PQ_CB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# per (session, sf_dir).
 def _shared_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata2016w_spark.operators.similarity import (
         PQ_CODES,
@@ -1109,15 +1097,11 @@ def _shared_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_codebook_literal,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cb = _PQ_CB_CACHE.get(key)
-    if cb is None:
-        cb = _pq_codebook_literal(
-            _shared_valid_embeddings(spark, sf_dir), PQ_CODES, PQ_SUBSPACES,
-            64, validated=True,
-        )
-        _PQ_CB_CACHE[key] = cb
-    return cb
+    return shared(spark, ("pq_codebook", sf_dir),
+                  lambda: _pq_codebook_literal(
+                      _shared_valid_embeddings(spark, sf_dir), PQ_CODES,
+                      PQ_SUBSPACES, 64, validated=True,
+                  ))
 
 
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1314,15 +1298,10 @@ register(QuerySpec("ann_ivf_pq", ann_ivf_pq, _ANN_IVF_PQ_SQL,
 
 # The residual tier's two models — the Lloyd coarse centroids and the
 # residual codebook (trained on r = x − centroid(cell(x))) — are
-# distinct from the global-PQ codebook, so each gets its own memo keyed
-# the same way. Caching the centroids matters most: the Lloyd fit is
-# the one corpus-sized training pass, and the codebook trainer, the
-# encoder and the probe all consume the same literals.
-_LLOYD_CENT_CACHE: dict[tuple[str, str], list] = {}
-_PQ_RES_CB_CACHE: dict[tuple[str, str], DataFrame] = {}
-_VALID_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# distinct from the global-PQ codebook, so each is shared under its own
+# key. Sharing the centroids matters most: the Lloyd fit is the one
+# corpus-sized training pass, and the codebook trainer, the encoder and
+# the probe all consume the same literals.
 def _shared_valid_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The validate-once corpus projection the ANN tiers share
     (operators/similarity.validated_embeddings): the length guard is a
@@ -1333,42 +1312,30 @@ def _shared_valid_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared_shingle_sets pattern applied to the embedding corpus."""
     from bigdata2016w_spark.operators.similarity import validated_embeddings
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    emb = _VALID_EMB_CACHE.get(key)
-    if emb is None:
-        emb = validated_embeddings(load_table(spark, sf_dir, "embeddings"))
-        _VALID_EMB_CACHE[key] = emb
-    return emb
+    return shared(spark, ("valid_embeddings", sf_dir), lambda:
+                  validated_embeddings(
+                      load_table(spark, sf_dir, "embeddings")))
 
 
 def _shared_lloyd_centroids(spark: SparkSession, sf_dir: str) -> list:
     from bigdata2016w_spark.operators.similarity import lloyd_centroids
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cent = _LLOYD_CENT_CACHE.get(key)
-    if cent is None:
-        cent = lloyd_centroids(
-            _shared_valid_embeddings(spark, sf_dir),
-            n_cells=_IVF_CELLS, n_iter=_LLOYD_ITERS, validated=True,
-        )
-        _LLOYD_CENT_CACHE[key] = cent
-    return cent
+    return shared(spark, ("lloyd_centroids", sf_dir), lambda: lloyd_centroids(
+        _shared_valid_embeddings(spark, sf_dir),
+        n_cells=_IVF_CELLS, n_iter=_LLOYD_ITERS, validated=True,
+    ))
 
 
 def _shared_residual_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata2016w_spark.operators.similarity import residual_pq_codebook
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cb = _PQ_RES_CB_CACHE.get(key)
-    if cb is None:
-        cb = residual_pq_codebook(
-            _shared_valid_embeddings(spark, sf_dir), n_cells=_IVF_CELLS,
-            n_iter=_LLOYD_ITERS,
-            centroids=_shared_lloyd_centroids(spark, sf_dir),
-            validated=True,
-        )
-        _PQ_RES_CB_CACHE[key] = cb
-    return cb
+    return shared(spark, ("residual_pq_codebook", sf_dir), lambda:
+                  residual_pq_codebook(
+                      _shared_valid_embeddings(spark, sf_dir),
+                      n_cells=_IVF_CELLS, n_iter=_LLOYD_ITERS,
+                      centroids=_shared_lloyd_centroids(spark, sf_dir),
+                      validated=True,
+                  ))
 
 
 def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1515,50 +1482,25 @@ register(QuerySpec(
 # on the base sub-corpus only (write_ivfpq_index froze them before the
 # appends), every vector encoded against those frozen models (base codes at
 # write time, streamed codes by ivfpq_append_sink), probes searching the
-# union. Temp index dirs are built once per (session, sf_dir).
-_STREAMED_IDX_CACHE: dict[tuple[str, str], str] = {}
-
-
+# union. The index dir is built once per (session, sf_dir).
 def _streamed_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from bigdata2016w_spark.sources.sinks import write_ivfpq_index
     from bigdata2016w_spark.streaming.index_sink import ivfpq_append_sink
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _STREAMED_IDX_CACHE.get(key)
-    if idx is not None:
-        return idx
-    root = tempfile.mkdtemp(prefix="bigdata2016w_ivfpq_stream_")
-    idx = f"{root}/idx"
-    emb = _shared_valid_embeddings(spark, sf_dir)
-    write_ivfpq_index(emb.where(F.col("vec_id") % 2 == 0), idx)
-    src_dir = f"{root}/in"
-    os.makedirs(src_dir)
-    # two single-file inputs + maxFilesPerTrigger=1 → exactly two
-    # micro-batches under the availableNow trigger
-    for j, m in ((1, 1), (2, 3)):
-        w = f"{root}/w{j}"
-        emb.where(F.col("vec_id") % 4 == m).coalesce(1).write.parquet(w)
-        shutil.copy(next(Path(w).glob("part-*.parquet")),
-                    f"{src_dir}/{j}.parquet")
-    stream = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    ivfpq_append_sink(stream, idx, f"{root}/ckpt").awaitTermination()
-    n_batches = len(_batch_dirs(spark, f"{idx}/codes_stream"))
-    if n_batches != 2:
-        raise AssertionError(
-            f"expected 2 streamed batches, got {n_batches}"
+    def build() -> str:
+        root = scratch_dir("bigdata2016w_ivfpq_stream_")
+        idx = f"{root}/idx"
+        emb = _shared_valid_embeddings(spark, sf_dir)
+        write_ivfpq_index(emb.where(F.col("vec_id") % 2 == 0), idx)
+        stream_two_batches(
+            spark, root,
+            [emb.where(F.col("vec_id") % 4 == m) for m in (1, 3)],
+            lambda stream, ckpt: ivfpq_append_sink(stream, idx, ckpt),
+            f"{idx}/codes_stream",
         )
-    _STREAMED_IDX_CACHE[key] = idx
-    return idx
+        return idx
+
+    return shared(spark, ("streamed_ivfpq_index", sf_dir), build)
 
 
 def ann_ivfpq_streamed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2241,53 +2183,25 @@ register(QuerySpec(
 # documents stream, returning the per-batch admission ledger. The oracle
 # replays both batches statically with the O(n²) Jaccard formulation the
 # PPJoin is provably equal to.
-_JACCARD_ADMIT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _streamed_jaccard_corpus(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-    import tempfile
-    import time
-    from pathlib import Path
+    from bigdata2016w_spark.streaming.ingest import dedup_admission_sink
 
-    from bigdata2016w_spark.streaming.ingest import (
-        _batch_dirs,
-        dedup_admission_sink,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    acc = _JACCARD_ADMIT_CACHE.get(key)
-    if acc is not None:
+    def build() -> str:
+        root = scratch_dir("bigdata2016w_jaccard_admit_")
+        acc = f"{root}/accepted"
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        # admission is ORDER-DEPENDENT (batch 0's survivors gate batch
+        # 1): stream_two_batches pins the even half as batch 0
+        stream_two_batches(
+            spark, root,
+            [docs.where(F.col("doc_id") % 2 == m) for m in (0, 1)],
+            lambda stream, ckpt: dedup_admission_sink(
+                stream, acc, ckpt, threshold=JACCARD_THRESHOLD),
+            acc,
+        )
         return acc
-    root = tempfile.mkdtemp(prefix="bigdata2016w_jaccard_admit_")
-    acc = f"{root}/accepted"
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src_dir = f"{root}/in"
-    os.makedirs(src_dir)
-    # admission is ORDER-DEPENDENT (batch 0's survivors gate batch 1):
-    # pin the file-source processing order via explicit mtimes, the
-    # plans/sketches._streamed_winnow_corpus convention
-    now = time.time()
-    for j, m, age in ((1, 0, 200), (2, 1, 100)):
-        w = f"{root}/w{j}"
-        docs.where(F.col("doc_id") % 2 == m).coalesce(1).write.parquet(w)
-        dst = f"{src_dir}/{j}.parquet"
-        shutil.copy(next(Path(w).glob("part-*.parquet")), dst)
-        os.utime(dst, (now - age, now - age))
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    dedup_admission_sink(
-        stream, acc, f"{root}/ckpt", threshold=JACCARD_THRESHOLD
-    ).awaitTermination()
-    dirs = _batch_dirs(spark, acc)
-    if len(dirs) != 2:
-        raise AssertionError(f"expected 2 admission batches, got {dirs}")
-    _JACCARD_ADMIT_CACHE[key] = acc
-    return acc
+
+    return shared(spark, ("streamed_jaccard_corpus", sf_dir), build)
 
 
 def documents_jaccard_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2302,20 +2216,12 @@ def documents_jaccard_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay-safe layout. At 100 TB the accepted corpus is bucketed by its
     prefix-index keys and each micro-batch probes only matching buckets;
     see streaming/ingest.admit_batch."""
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.ingest import read_admission_ledger
 
-    acc = _streamed_jaccard_corpus(spark, sf_dir)
-    parts = []
-    for d in sorted(_batch_dirs(spark, acc)):
-        bid = int(d.rstrip("/").rsplit("batch=", 1)[1])
-        parts.append(
-            spark.read.schema("doc_id bigint, text string").parquet(d)
-            .select(F.lit(bid).cast("long").alias("batch"), "doc_id")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("batch", "doc_id")
+    return read_admission_ledger(
+        spark, _streamed_jaccard_corpus(spark, sf_dir),
+        "doc_id bigint, text string", "doc_id",
+    )
 
 
 def _jaccard_admit_sql() -> str:
@@ -2392,55 +2298,27 @@ register(QuerySpec("documents_jaccard_admission",
 # this query certifies their COMPOSITION under the streaming machinery —
 # in-batch cosine dedup → cross-corpus multiprobe gate, batch-stamped
 # replay-safe subdirs — by replaying both batches statically in SQL.
-_EMB_ADMIT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _streamed_embedding_corpus(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-    import tempfile
-    import time
-    from pathlib import Path
+    from bigdata2016w_spark.streaming.ingest import embedding_admission_sink
 
-    from bigdata2016w_spark.streaming.ingest import (
-        _batch_dirs,
-        embedding_admission_sink,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    acc = _EMB_ADMIT_CACHE.get(key)
-    if acc is not None:
+    def build() -> str:
+        root = scratch_dir("bigdata2016w_emb_admit_")
+        acc = f"{root}/accepted"
+        vecs = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        # admission is ORDER-DEPENDENT (batch 0's survivors gate batch
+        # 1): stream_two_batches pins the even half as batch 0
+        stream_two_batches(
+            spark, root,
+            [vecs.where(F.col("vec_id") % 2 == m) for m in (0, 1)],
+            lambda stream, ckpt: embedding_admission_sink(
+                stream, acc, ckpt, threshold=SEMDEDUP_THRESHOLD),
+            acc,
+        )
         return acc
-    root = tempfile.mkdtemp(prefix="bigdata2016w_emb_admit_")
-    acc = f"{root}/accepted"
-    vecs = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    src_dir = f"{root}/in"
-    os.makedirs(src_dir)
-    # admission is ORDER-DEPENDENT (batch 0's survivors gate batch 1):
-    # pin the file-source processing order via explicit mtimes, the
-    # plans/sketches._streamed_winnow_corpus convention
-    now = time.time()
-    for j, m, age in ((1, 0, 200), (2, 1, 100)):
-        w = f"{root}/w{j}"
-        vecs.where(F.col("vec_id") % 2 == m).coalesce(1).write.parquet(w)
-        dst = f"{src_dir}/{j}.parquet"
-        shutil.copy(next(Path(w).glob("part-*.parquet")), dst)
-        os.utime(dst, (now - age, now - age))
-    stream = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    embedding_admission_sink(
-        stream, acc, f"{root}/ckpt", threshold=SEMDEDUP_THRESHOLD
-    ).awaitTermination()
-    dirs = _batch_dirs(spark, acc)
-    if len(dirs) != 2:
-        raise AssertionError(f"expected 2 admission batches, got {dirs}")
-    _EMB_ADMIT_CACHE[key] = acc
-    return acc
+
+    return shared(spark, ("streamed_embedding_corpus", sf_dir), build)
 
 
 def embeddings_semdedup_admission(
@@ -2459,21 +2337,12 @@ def embeddings_semdedup_admission(
     batch-stamped replay-safe layout. At 100 TB the accepted corpus is
     bucketed by plane signature and each micro-batch probes only its
     P+1 buckets; see streaming/ingest.admit_embedding_batch."""
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.ingest import read_admission_ledger
 
-    acc = _streamed_embedding_corpus(spark, sf_dir)
-    parts = []
-    for d in sorted(_batch_dirs(spark, acc)):
-        bid = int(d.rstrip("/").rsplit("batch=", 1)[1])
-        parts.append(
-            spark.read.schema("vec_id bigint, embedding array<float>")
-            .parquet(d)
-            .select(F.lit(bid).cast("long").alias("batch"), "vec_id")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("batch", "vec_id")
+    return read_admission_ledger(
+        spark, _streamed_embedding_corpus(spark, sf_dir),
+        "vec_id bigint, embedding array<float>", "vec_id",
+    )
 
 
 def _emb_admit_sql() -> str:
@@ -2548,25 +2417,18 @@ register(QuerySpec("embeddings_semdedup_admission",
 # predicate pushed into the sidecar's parquet scan — the production
 # "filtered vector search" pattern (in-tenant / in-language top-k) at
 # its disk-bounded cost: selectivity x probed-fraction of the corpus.
-_FILTERED_IDX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _filtered_serve_index(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from bigdata2016w_spark.sources.sinks import write_ivfpq_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _FILTERED_IDX_CACHE.get(key)
-    if idx is not None:
+    def build() -> str:
+        idx = scratch_dir("bigdata2016w_filtered_idx_") + "/idx"
+        write_ivfpq_index(
+            load_table(spark, sf_dir, "embeddings"), idx,
+            meta_cols=("label",),
+        )
         return idx
-    idx = tempfile.mkdtemp(prefix="bigdata2016w_filtered_idx_") + "/idx"
-    write_ivfpq_index(
-        load_table(spark, sf_dir, "embeddings"), idx,
-        meta_cols=("label",),
-    )
-    _FILTERED_IDX_CACHE[key] = idx
-    return idx
+
+    return shared(spark, ("filtered_serve_index", sf_dir), build)
 
 
 def ann_ivfpq_filtered_serve(spark: SparkSession, sf_dir: str) -> DataFrame:

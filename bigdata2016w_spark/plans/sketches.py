@@ -41,6 +41,7 @@ from bigdata2016w_spark.operators.sketches import (
     winnow_fingerprints,
 )
 from bigdata2016w_spark.registry import QuerySpec, register
+from bigdata2016w_spark.shared import scratch_dir, shared, stream_two_batches
 from bigdata2016w_spark.sources.catalog import load_table
 
 _TOK = tokenize_sql("text")
@@ -769,53 +770,25 @@ register(QuerySpec("orders_winsorized_mean", orders_winsorized_mean,
 # streaming machinery — exact-text dedup → in-batch long-span dedup →
 # accepted-text drop → cross-corpus fingerprint gate, batch-stamped
 # replay-safe subdirs — by replaying both batches statically in SQL.
-_WINNOW_ADMIT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _streamed_winnow_corpus(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-    import tempfile
-    import time
-    from pathlib import Path
+    from bigdata2016w_spark.streaming.ingest import winnow_admission_sink
 
-    from bigdata2016w_spark.streaming.ingest import (
-        _batch_dirs,
-        winnow_admission_sink,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    acc = _WINNOW_ADMIT_CACHE.get(key)
-    if acc is not None:
+    def build() -> str:
+        root = scratch_dir("bigdata2016w_winnow_admit_")
+        acc = f"{root}/accepted"
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        # unlike the IVM view (commutative merge), admission is
+        # ORDER-DEPENDENT — batch 0's survivors gate batch 1 — so the
+        # even half must be batch 0, which stream_two_batches pins
+        stream_two_batches(
+            spark, root,
+            [docs.where(F.col("doc_id") % 2 == m) for m in (0, 1)],
+            lambda stream, ckpt: winnow_admission_sink(stream, acc, ckpt),
+            acc,
+        )
         return acc
-    root = tempfile.mkdtemp(prefix="bigdata2016w_winnow_admit_")
-    acc = f"{root}/accepted"
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src_dir = f"{root}/in"
-    os.makedirs(src_dir)
-    # two single-file inputs + maxFilesPerTrigger=1 → exactly two
-    # micro-batches. Unlike the IVM view (commutative merge), admission
-    # is ORDER-DEPENDENT — batch 0's survivors gate batch 1 — so the
-    # file-source processing order is pinned via explicit mtimes
-    # (FileStreamSource takes oldest-first under latestFirst=false).
-    now = time.time()
-    for j, m, age in ((1, 0, 200), (2, 1, 100)):
-        w = f"{root}/w{j}"
-        docs.where(F.col("doc_id") % 2 == m).coalesce(1).write.parquet(w)
-        dst = f"{src_dir}/{j}.parquet"
-        shutil.copy(next(Path(w).glob("part-*.parquet")), dst)
-        os.utime(dst, (now - age, now - age))
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    winnow_admission_sink(stream, acc, f"{root}/ckpt").awaitTermination()
-    dirs = _batch_dirs(spark, acc)
-    if len(dirs) != 2:
-        raise AssertionError(f"expected 2 admission batches, got {dirs}")
-    _WINNOW_ADMIT_CACHE[key] = acc
-    return acc
+
+    return shared(spark, ("streamed_winnow_corpus", sf_dir), build)
 
 
 def documents_winnow_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -830,20 +803,12 @@ def documents_winnow_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the accepted corpus is bucketed by fingerprint and each
     micro-batch probes only the buckets it hashes to; see
     streaming/ingest.admit_winnow_batch."""
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.ingest import read_admission_ledger
 
-    acc = _streamed_winnow_corpus(spark, sf_dir)
-    parts = []
-    for d in sorted(_batch_dirs(spark, acc)):
-        bid = int(d.rstrip("/").rsplit("batch=", 1)[1])
-        parts.append(
-            spark.read.schema("doc_id bigint, text string").parquet(d)
-            .select(F.lit(bid).cast("long").alias("batch"), "doc_id")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("batch", "doc_id")
+    return read_admission_ledger(
+        spark, _streamed_winnow_corpus(spark, sf_dir),
+        "doc_id bigint, text string", "doc_id",
+    )
 
 
 def _winnow_admit_sql() -> str:
@@ -930,51 +895,28 @@ register(QuerySpec("documents_winnow_admission", documents_winnow_admission,
 # combined sketch state. The oracle recomputes both sketches from the
 # events table directly — a MATCH certifies that the streamed partial
 # layout + algebraic merge equals the one-shot sketch, externally.
-_SKETCH_STREAM_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _streamed_sketch_dir(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
     from bigdata2016w_spark.streaming.sketch_sink import (
         sketch_maintenance_sink,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tgt = _SKETCH_STREAM_CACHE.get(key)
-    if tgt is not None:
+    def build() -> str:
+        root = scratch_dir("bigdata2016w_sketch_stream_")
+        tgt = f"{root}/sketches"
+        ev = load_table(spark, sf_dir, "events").select("user_id")
+        # the merge is commutative (add/max), so batch order is
+        # immaterial
+        stream_two_batches(
+            spark, root,
+            [ev.where(F.pmod(F.col("user_id"), F.lit(2)) == m)
+             for m in (0, 1)],
+            lambda stream, ckpt: sketch_maintenance_sink(
+                stream, tgt, ckpt, col="user_id"),
+            tgt,
+        )
         return tgt
-    root = tempfile.mkdtemp(prefix="bigdata2016w_sketch_stream_")
-    tgt = f"{root}/sketches"
-    ev = load_table(spark, sf_dir, "events").select("user_id")
-    src = f"{root}/in"
-    os.makedirs(src)
-    # two single-file inputs + maxFilesPerTrigger=1 → exactly two
-    # micro-batches; the merge is commutative (add/max), so batch order
-    # is immaterial — only the count is asserted, so the query always
-    # exercises a real multi-batch merge
-    for j, m in ((1, 0), (2, 1)):
-        w = f"{root}/w{j}"
-        ev.where(F.pmod(F.col("user_id"), F.lit(2)) == m).coalesce(1) \
-            .write.parquet(w)
-        shutil.copy(next(Path(w).glob("part-*.parquet")),
-                    f"{src}/{j}.parquet")
-    stream = (
-        spark.readStream.schema("user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    sketch_maintenance_sink(stream, tgt, f"{root}/ckpt",
-                            col="user_id").awaitTermination()
-    n = len(_batch_dirs(spark, tgt))
-    if n != 2:
-        raise AssertionError(f"expected 2 sketch batches, got {n}")
-    _SKETCH_STREAM_CACHE[key] = tgt
-    return tgt
+
+    return shared(spark, ("streamed_sketch_dir", sf_dir), build)
 
 
 def events_streamed_sketch_state(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -257,15 +257,13 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
     )
 
     spark = embeddings.sparkSession
-    # (re)writing the models: drop any session-cached copy for this path
+    # (re)writing the models: drop any session-shared copy for this path
     # (normalized key — a trailing-slash or relative alias must not
     # leave a stale entry behind)
-    from bigdata2016w_spark.operators.similarity import (
-        _INDEX_MODELS_CACHE,
-        _index_cache_key,
-    )
+    from bigdata2016w_spark.operators.similarity import _index_cache_key
+    from bigdata2016w_spark.shared import forget
 
-    _INDEX_MODELS_CACHE.pop(_index_cache_key(spark, path), None)
+    forget(spark, _index_cache_key(path))
     e = embeddings.where(F.col("embedding").isNotNull())
     row = e.select("embedding").first()
     if row is None:  # empty (or all-NULL) corpus: a valid, empty index
@@ -284,9 +282,9 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
                 .write.mode(mode).partitionBy("cell")
                 .parquet(f"{path}/meta")
             )
-        # pop again AFTER the write: a concurrent probe may have
+        # forget again AFTER the write: a concurrent probe may have
         # re-filled the entry from the half-written index in between
-        _INDEX_MODELS_CACHE.pop(_index_cache_key(spark, path), None)
+        forget(spark, _index_cache_key(path))
         return
     dim = len(row["embedding"])
     cent_lit = lloyd_centroids(e, n_cells, n_iter, dim)
@@ -323,9 +321,9 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
         # sidecar behind: filtered probes would silently semi-join the
         # new codes against the OLD corpus's (vec_id, cell) assignments
         _delete_meta_sidecar(spark, path)
-    # pop again AFTER a successful write: a concurrent probe may have
+    # forget again AFTER a successful write: a concurrent probe may have
     # re-filled the entry from the half-written index in between
-    _INDEX_MODELS_CACHE.pop(_index_cache_key(spark, path), None)
+    forget(spark, _index_cache_key(path))
 
 
 def _meta_sidecar_path(spark, index_path: str):

@@ -18,6 +18,8 @@ buckets its probe shingles hash to; the micro-batch logic is unchanged.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,6 +68,23 @@ def _accepted(
     if not dirs:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*dirs)
+
+
+def read_admission_ledger(
+    spark, target_dir: str, schema, id_col: str
+) -> DataFrame:
+    """The admission ledger (batch, ``id_col``) of an admission sink's
+    output: every admitted id stamped with the micro-batch that admitted
+    it, ordered by (batch, ``id_col``)."""
+    parts = [
+        spark.read.schema(schema).parquet(d).select(
+            F.lit(int(d.rstrip("/").rsplit("batch=", 1)[1]))
+            .cast("long").alias("batch"),
+            id_col,
+        )
+        for d in sorted(_batch_dirs(spark, target_dir))
+    ]
+    return reduce(DataFrame.unionAll, parts).orderBy("batch", id_col)
 
 
 def admit_batch(

@@ -85,7 +85,8 @@ def synth_docs_distributed(spark, n: int):
     index at 1M docs (driver maxResultSize abort). Parquet-backed input
     is also what production corpora look like, so the smoke exercises
     the operators under honest planner statistics."""
-    import tempfile
+    from bigdata2016w_spark.shared import scratch_dir
+
     def word(t):
         return F.concat(
             F.translate(t.cast("string"), "0123456789", "abcdefghij"),
@@ -114,19 +115,13 @@ def synth_docs_distributed(spark, n: int):
             " ",
         ).alias("text"),
     )
-    root = tempfile.mkdtemp(prefix="bigdata2016w_decade_")
-    _DECADE_TMP_ROOTS.append(root)
-    out = f"{root}/docs"
+    # under Spark's per-application root: spark.stop() in decade()'s
+    # finally deletes the multi-GB 1M-doc tier with it
+    out = f"{scratch_dir('bigdata2016w_decade_')}/docs"
     docs.repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     ).write.parquet(out)
     return spark.read.parquet(out)
-
-
-# temp parquet roots created by synth_docs_distributed, removed at the
-# end of decade() — a 1M-doc run otherwise leaves multi-GB dirs behind
-# per invocation
-_DECADE_TMP_ROOTS: list[str] = []
 
 
 def decade(base_n: int = 100_000) -> None:
@@ -144,11 +139,6 @@ def decade(base_n: int = 100_000) -> None:
         _decade_measure(spark, base_n)
     finally:
         spark.stop()
-        # a 1M-doc tier leaves multi-GB temp parquet behind otherwise
-        import shutil
-
-        while _DECADE_TMP_ROOTS:
-            shutil.rmtree(_DECADE_TMP_ROOTS.pop(), ignore_errors=True)
 
 
 def _decade_measure(spark, base_n: int) -> None:

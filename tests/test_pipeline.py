@@ -1437,18 +1437,18 @@ def test_adc_lut_driver_raises_on_zero_norm():
 
 
 def test_index_models_cache_alias_invalidation(spark, sf_dir, tmp_path):
-    """The session model cache keys on a NORMALIZED path: an entry
-    filled through a trailing-slash (or relative) alias of the index
-    path must be invalidated by a rewrite addressed with the plain
+    """The session-shared index models are keyed on a NORMALIZED path:
+    an entry filled through a trailing-slash (or relative) alias of the
+    index path must be invalidated by a rewrite addressed with the plain
     path — otherwise every subsequent probe silently serves the stale
     centroids/codebook."""
     from pyspark.sql import functions as F
 
     from bigdata2016w_spark.operators.similarity import (
-        _INDEX_MODELS_CACHE,
         _index_cache_key,
         _index_models,
     )
+    from bigdata2016w_spark.shared import _entries
     from bigdata2016w_spark.sources.catalog import load_table
     from bigdata2016w_spark.sources.sinks import write_ivfpq_index
 
@@ -1458,15 +1458,15 @@ def test_index_models_cache_alias_invalidation(spark, sf_dir, tmp_path):
                       n_cells=4)
     # fill the cache through a trailing-slash ALIAS of the same path
     _, cents_v1 = _index_models(spark, path + "/")
-    assert _index_cache_key(spark, path + "/") == \
-        _index_cache_key(spark, path)
+    assert _index_cache_key(path + "/") == _index_cache_key(path)
+    assert _index_cache_key(path) in _entries(spark)
     # rewrite through the plain path with a different corpus slice
     # (both slices contain vec_ids 0..n_cells-1 — the seed-centroid
     # convention — but Lloyd refines over different corpora, so the
     # refined centroids differ)
     write_ivfpq_index(emb.where(F.col("vec_id") < 128), path,
                       n_cells=4)
-    assert _index_cache_key(spark, path) not in _INDEX_MODELS_CACHE
+    assert _index_cache_key(path) not in _entries(spark)
     _, cents_v2 = _index_models(spark, path)
     assert cents_v1 != cents_v2
 

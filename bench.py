@@ -283,14 +283,12 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from bigdata2016w_spark.operators.similarity import (
-        knn_ivfpq_from_index,
-        knn_ivfpq_rerank_from_index,
-    )
+    from bigdata2016w_spark.operators.similarity import knn_from_index
     from bigdata2016w_spark.plans.pipeline import (
         _IVF_PROBE,
         KNN_K,
         KNN_QUERY_IDS,
+        RERANK_FACTOR,
         _shared_valid_embeddings,
     )
     from bigdata2016w_spark.sources.sinks import write_ivfpq_index
@@ -306,12 +304,14 @@ def main() -> None:
         ann_serve["ann_ivfpq_index_build"] = round(
             time.perf_counter() - t0, 3)
         for name, fn in (
-            ("ann_ivfpq_from_index_serve", lambda: knn_ivfpq_from_index(
-                spark, f"{idx_root}/idx", queries_df, KNN_K, _IVF_PROBE)),
+            ("ann_ivfpq_from_index_serve", lambda: knn_from_index(
+                spark, f"{idx_root}/idx", queries_df, KNN_K,
+                n_probe=_IVF_PROBE)),
             ("ann_ivfpq_rerank_from_index_serve",
-             lambda: knn_ivfpq_rerank_from_index(
-                 spark, f"{idx_root}/idx", queries_df, emb, KNN_K,
-                 n_probe=_IVF_PROBE)),
+             lambda: knn_from_index(
+                 spark, f"{idx_root}/idx", queries_df, KNN_K,
+                 n_probe=_IVF_PROBE, rerank=RERANK_FACTOR,
+                 embeddings=emb)),
         ):
             best = float("inf")
             for _ in range(3):

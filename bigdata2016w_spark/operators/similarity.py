@@ -1,14 +1,11 @@
 """Similarity search over embedding columns — pipeline extension.
 
-Brute-force cosine top-k is the exact baseline: broadcast the (small) query
-set, one pass over the corpus, per-query window top-k — no shuffle of the
-corpus itself beyond the final top-k, so it scales to arbitrarily large
-embedding tables (cost is a scan, the classic exact-kNN lower bound).
-
-The scale path is random-hyperplane LSH: 64-dim sign-bucket signatures
-computed JVM-side from fixed literal hyperplanes (seeded NumPy, baked at
-plan-build time — deterministic across runs); search compares only
-same-bucket (or ≤1-bit-distant bucket) candidates.
+Every kNN variant is one pipeline of shared stages (see the section at
+the end of this module): queries → optional coarse quantizer (LSH sign
+buckets, MLlib KMeans, seed or exact Lloyd centroids) → probe → score
+(exact cosine, global PQ, or residual PQ) → two-stage top-k → optional
+exact rerank. ``knn`` runs it over an in-memory corpus, ``knn_from_index``
+over a persisted index.
 
 All arithmetic is float→double promoted, left-fold summed, so results are
 bit-identical to a DuckDB oracle using the same fold order.
@@ -74,47 +71,21 @@ def cosine_with_norms(a, na, b, nb) -> Column:
     return dot(_as_double(a), _as_double(b)) / (na * nb)
 
 
-def knn_bruteforce(
-    embeddings: DataFrame, query_ids: list[int], k: int = 10,
-    candidate_filter=None,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query id.
-
-    Returns (query_id, vec_id, cosine), k rows per query, self excluded;
-    ties broken by vec_id so selection is deterministic.
-    ``candidate_filter`` (optional Column predicate over the metadata
-    columns) restricts the CANDIDATE side before ranking; queries
-    resolve against the unfiltered corpus.
-
-    r12: the per-pair cosine runs in the Arrow/NumPy pair kernel (guide
-    §4.2) instead of interpreted HOF folds — same bits (the kernel's
-    3-dot cosine equals the previous precomputed-norm form: identical
-    left-fold values, identical division), NULL embeddings still yield
-    NULL cosines that sort last.
-    """
-    q = embeddings.where(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    cand = (embeddings if candidate_filter is None
-            else embeddings.where(candidate_filter))
-    joined = (
-        broadcast(q)
-        .crossJoin(cand)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "q_emb", "embedding")
-    )
+def _pair_cosine(joined: DataFrame, a_col: str, b_col: str,
+                 keep) -> DataFrame:
+    """(*keep, cosine) over an already-joined pair frame, evaluated by
+    the Arrow/NumPy pair kernel (``np_kernels.pair_cosine_fn``) instead
+    of interpreted HOF folds — same bits as :func:`cosine` (left-fold
+    dots, IEEE sqrt/division), a NULL or length-mismatched pair yields a
+    NULL cosine that sorts last, a zero denominator raises (ANSI). The
+    pass is map-side-only, so it runs right after the join that made the
+    pairs."""
+    keep = list(keep)
     schema = T.StructType(
-        [joined.schema[c] for c in ("query_id", "vec_id")]
+        [joined.schema[c] for c in keep]
         + [T.StructField("cosine", T.DoubleType())]
     )
-    pairs = joined.mapInPandas(
-        np_pair_cosine_fn("q_emb", "embedding", ["query_id", "vec_id"]),
-        schema,
-    )
-    return topk_per_group(
-        pairs, ["query_id"], [F.desc("cosine"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "cosine")
+    return joined.mapInPandas(np_pair_cosine_fn(a_col, b_col, keep), schema)
 
 
 def hard_negatives(
@@ -124,8 +95,8 @@ def hard_negatives(
     top-k most-cosine-similar vectors with a DIFFERENT label — the
     negatives most likely to confuse a classifier.
 
-    Same scan shape as :func:`knn_bruteforce` (broadcast anchors, one
-    corpus pass, two-stage top-k; the corpus never shuffles), plus the
+    Same scan shape as exact :func:`knn` (broadcast anchors, one corpus
+    pass, two-stage top-k; the corpus never shuffles), plus the
     label-inequality predicate evaluated in the scan. Returns
     (query_id, anchor_label, vec_id, neg_label, cosine).
     """
@@ -143,14 +114,8 @@ def hard_negatives(
             F.col("label").alias("neg_label"), "q_emb", "embedding",
         )
     )
-    keep = ["query_id", "anchor_label", "vec_id", "neg_label"]
-    schema = T.StructType(
-        [joined.schema[c] for c in keep]
-        + [T.StructField("cosine", T.DoubleType())]
-    )
-    pairs = joined.mapInPandas(
-        np_pair_cosine_fn("q_emb", "embedding", keep), schema
-    )
+    pairs = _pair_cosine(joined, "q_emb", "embedding",
+                         ["query_id", "anchor_label", "vec_id", "neg_label"])
     return topk_per_group(
         pairs, ["query_id"], [F.desc("cosine"), F.asc("vec_id")], k
     ).select("query_id", "anchor_label", "vec_id", "neg_label", "cosine")
@@ -195,292 +160,14 @@ def _lsh_bucketed(
     return src.mapInPandas(lsh_bucket_fn(planes, cols, alias), schema)
 
 
-def knn_lsh(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    dim: int = 64,
-    num_planes: int = LSH_PLANES,
-) -> DataFrame:
-    """Approximate top-k: candidates share the query's hyperplane bucket or
-    differ in exactly one sign bit (multi-probe — recall insurance against
-    boundary flips), ranked by exact cosine within candidates."""
-    planes = _planes(dim, num_planes)
-    emb_b = _lsh_bucketed(embeddings, planes, ["vec_id", "embedding"])
-    q = emb_b.where(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << i))
-                    for i in range(num_planes)
-                ],
-            )
-        ).alias("bucket"),
-    )
-    joined = (
-        broadcast(q)
-        .join(emb_b, "bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "q_emb", "embedding")
-    )
-    schema = T.StructType(
-        [joined.schema[c] for c in ("query_id", "vec_id")]
-        + [T.StructField("cosine", T.DoubleType())]
-    )
-    pairs = joined.mapInPandas(
-        np_pair_cosine_fn("q_emb", "embedding", ["query_id", "vec_id"]),
-        schema,
-    ).distinct()
-    return topk_per_group(
-        pairs, ["query_id"], [F.desc("cosine"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "cosine")
-
-
-def knn_ivf(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    seed: int = LSH_SEED,
-) -> DataFrame:
-    """IVF (inverted-file) approximate kNN: a KMeans coarse quantizer
-    assigns every vector to a cell; each query scans only its ``n_probe``
-    nearest cells, ranked by exact cosine.
-
-    The scale path for clustered embedding tables: scan fraction ≈
-    n_probe/n_cells. Deterministic given the seed. The cell table is the
-    'inverted file' — at 100 TB it would be written bucketed by cell so a
-    probe reads only its buckets.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # NULL embeddings would abort the KMeans fit (same contract as the
-    # closed-form quantizers: _seed_centroid_literals filters them there)
-    embeddings = embeddings.where(F.col("embedding").isNotNull())
-    feat = embeddings.select(
-        "vec_id",
-        "embedding",
-        array_to_vector(_as_double(F.col("embedding"))).alias("f"),
-    ).cache()  # KMeans iterates; uncached it re-scans parquet per iteration
-    # random init: a coarse quantizer needs spread, not kmeans||'s extra
-    # O(iterations) init jobs — measured 6.2 s → 1.5 s on the fit with
-    # recall unchanged (gated by test_ann_ivf_recall)
-    model = KMeans(
-        k=n_cells, seed=seed, maxIter=10, initMode="random",
-        featuresCol="f", predictionCol="cell",
-    ).fit(feat)
-    assigned = (
-        model.transform(feat)
-        .select("vec_id", "embedding", "cell")
-        .localCheckpoint(eager=True)  # consumed twice (probe + scan join)
-    )
-    feat.unpersist()
-
-    # centroid table: n_cells rows, broadcast everywhere
-    spark = embeddings.sparkSession
-    cent = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, centroid array<double>",
-    )
-    return _ivf_probe_search(assigned, cent, query_ids, k, n_probe)
-
-
-def _probe_candidates(
-    assigned: DataFrame,
-    cent: DataFrame,
-    query_ids: list[int],
-    n_probe: int,
-    corpus: DataFrame | None = None,
-) -> DataFrame:
-    """(query_id, vec_id, pr, cosine): the shared IVF probe pipeline —
-    rank centroids per query by exact cosine, keep the best ``n_probe``
-    cells WITH their probe rank, join candidates inside probed cells.
-    Query and probe tables are broadcast; the assigned corpus is only
-    ever the build (non-shuffled) side of the cell equi-join. ``pr`` is
-    unique per (query, candidate) because a vector lives in exactly one
-    cell — the property the probe sweep's threshold slicing relies on.
-    ``corpus`` (default: ``assigned`` itself) is the candidate side of
-    the join — the filtered-search tier passes a predicate-restricted
-    view of ``assigned`` here while queries still resolve against the
-    UNfiltered frame (a query need not satisfy its own filter)."""
-    if corpus is None:
-        corpus = assigned
-    q = assigned.where(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("cell")
-    )
-    probes = (
-        broadcast(q)
-        .crossJoin(broadcast(cent))
-        .select(
-            "query_id", "q_emb", "cell",
-            cosine(F.col("q_emb"), F.col("centroid")).alias("c_cos"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .where(F.col("pr") <= n_probe)
-        .select("query_id", "q_emb", "cell", "pr")
-    )
-    pairs = (
-        broadcast(probes)
-        .join(corpus, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "pr", "q_emb", "embedding")
-    )
-    # candidate ranking cosine via the Arrow/NumPy pair kernel (r12,
-    # guide §4.2) instead of the interpreted 3-fold HOF cosine — same
-    # bits (left-fold dots, IEEE sqrt/div), NULL-poisoned pairs stay
-    # NULL; still evaluated map-side right after the broadcast join
-    schema = T.StructType(
-        [pairs.schema[c] for c in ("query_id", "vec_id", "pr")]
-        + [T.StructField("cosine", T.DoubleType())]
-    )
-    return pairs.mapInPandas(
-        np_pair_cosine_fn("q_emb", "embedding", ["query_id", "vec_id", "pr"]),
-        schema,
-    )
-
-
-def _ivf_probe_search(
-    assigned: DataFrame,
-    cent: DataFrame,
-    query_ids: list[int],
-    k: int,
-    n_probe: int,
-    corpus: DataFrame | None = None,
-) -> DataFrame:
-    """Shared IVF search half (knn_ivf, knn_ivf_flat, knn_ivf_filtered):
-    probe the best ``n_probe`` cells (:func:`_probe_candidates`),
-    two-stage top-k over the candidates. ``corpus`` is the (possibly
-    predicate-restricted) candidate side; queries always come from the
-    unfiltered ``assigned``."""
-    pairs = (
-        _probe_candidates(assigned, cent, query_ids, n_probe,
-                          corpus=corpus)
-        .select("query_id", "vec_id", "cosine")
-        .distinct()
-    )
-    return topk_per_group(
-        pairs, ["query_id"], [F.desc("cosine"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "cosine")
-
-
-def knn_ivf_flat(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF-Flat with a deterministic seed-centroid quantizer: the
-    ``n_cells`` lowest-vec_id embeddings ARE the centroids (no training
-    pass), every vector takes its max-cosine centroid's cell, queries
-    probe their ``n_probe`` best cells by exact cosine.
-
-    Cell assignment is genuinely map-side: the centroids are collected
-    once at plan build (n_cells driver rows, like fetching a trained
-    model) and baked into the plan as literal arrays, so assignment is a
-    pure projection — an in-expression argmax over n_cells cosines with
-    NO shuffle and NO row expansion of the corpus (at 100 TB the cell
-    table is then written bucketed by cell so a probe reads only its
-    buckets). Ties pick the lowest cell via struct-ordered
-    ``array_max((cos, -cell))``, matching the oracle's
-    ``ORDER BY a_cos DESC, cell ASC``. With no iterative fit the whole
-    pipeline is closed-form and a DuckDB oracle replays it exactly;
-    KMeans-trained :func:`knn_ivf` remains the recall-quality path.
-    """
-    spark = embeddings.sparkSession
-    embeddings = embeddings.where(F.col("embedding").isNotNull())
-    cent_lit = _seed_centroid_literals(embeddings, n_cells)
-    if not cent_lit:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, cosine double"
-        )
-    # checkpoint: the assignment kernel output feeds both the query
-    # side and the candidate side of the probe join (r12)
-    assigned = _assign_to_literal_centroids(
-        embeddings, cent_lit
-    ).localCheckpoint(eager=False)
-    cent = spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
-    return _ivf_probe_search(assigned, cent, query_ids, k, n_probe)
-
-
-def knn_bruteforce_filtered(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    candidate_filter,
-    k: int = 10,
-) -> DataFrame:
-    """Exact FILTERED top-k: :func:`knn_bruteforce` with its candidate
-    side restricted to rows satisfying ``candidate_filter``. The
-    ground-truth tier for filtered vector search (the
-    metadata-restricted ANN every production retrieval stack needs:
-    "nearest English docs", "nearest in-tenant vectors"); the predicate
-    applies BEFORE ranking, so recall@k is against the true filtered
-    neighborhood, never a post-filtered shortlist that can come up
-    short. One corpus pass, broadcast queries — linear."""
-    return knn_bruteforce(embeddings, query_ids, k,
-                          candidate_filter=candidate_filter)
-
-
-def knn_ivf_filtered(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    candidate_filter,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    keep: tuple[str, ...] = ("label",),
-) -> DataFrame:
-    """Filtered IVF-Flat: :func:`knn_ivf_flat`'s seed-centroid index
-    searched under a candidate predicate — the PRE-FILTER strategy
-    (restrict the probed-cell scan, then rank), never post-filter (rank
-    top-k, then drop non-matching rows and return fewer than k).
-
-    The index is built once over the FULL corpus (centroids and cell
-    assignment ignore the filter — filters vary per query, indexes
-    don't), and the predicate lands on the candidate side of the
-    cell-probe join: at 100 TB the cell table carries its filterable
-    metadata columns (``keep``) next to the vectors, so the predicate
-    pushes into the probed buckets' scan and candidate cost is
-    (selectivity × probed fraction) of the corpus. Queries resolve
-    against the unfiltered assignment — a query need not satisfy its
-    own filter. Recall caveat shared with every IVF pre-filter: the
-    probed cells are chosen by query-centroid cosine over the FULL
-    index geometry, so a highly selective filter inside unprobed cells
-    needs a larger ``n_probe`` (the ivf_probe_recall_sweep knob), not a
-    different algorithm."""
-    spark = embeddings.sparkSession
-    embeddings = embeddings.where(F.col("embedding").isNotNull())
-    cent_lit = _seed_centroid_literals(embeddings, n_cells)
-    if not cent_lit:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, cosine double"
-        )
-    # checkpoint: queries resolve against the unfiltered assignment and
-    # candidates against the filtered view — one kernel pass, not two
-    assigned = _assign_to_literal_centroids(
-        embeddings, cent_lit, keep=keep
-    ).localCheckpoint(eager=False)
-    cent = spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
-    return _ivf_probe_search(assigned, cent, query_ids, k, n_probe,
-                             corpus=assigned.where(candidate_filter))
-
-
 def _assign_to_literal_centroids(
     embeddings: DataFrame,
     cent_lit: list[tuple[int, list[float]]],
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Map-side max-cosine cell assignment against a broadcast centroid
-    matrix — the shared quantizer half of :func:`knn_ivf_flat` and
-    :func:`knn_ivf_lloyd`.
+    matrix — the assignment half of the ``"seed"`` and ``"lloyd"``
+    coarse stages (see :func:`_coarse`).
 
     Centroid norms are folded in Python (same left-fold double order →
     bit-identical to the oracle's sqrt(list_reduce)) and the row's own
@@ -518,46 +205,20 @@ def _lloyd_centroid_literals(
     emb: DataFrame,
     cent_lit: list[tuple[int, list[float]]],
     n_iter: int,
-    dim: int,
 ) -> list[tuple[int, list[float]]]:
     """``n_iter`` exact-arithmetic Lloyd rounds over ``emb``, returning
     the refined centroid literals (empty cells drop out). Each round:
     map-side max-cosine assignment against the literal matrix, then ONE
-    (cell, dim) hash agg whose per-dimension sums run over 2^24-quantized
-    int64 components — associative, partitioning-independent and
-    engine-portable (mirrors label_centroids), so the DuckDB oracles
-    replay the fit as unrolled CTE rounds. n_cells × dim rows per round
-    cross the driver: the model-fetch sync, same O(1)-per-round class as
-    PageRank's dangling mass. Shared by :func:`knn_ivf_lloyd` (full
+    (cell, dim) hash agg of quantized means (:func:`_quantized_means`,
+    the label_centroids formula), so the DuckDB oracles replay the fit
+    as unrolled CTE rounds. n_cells × dim rows per round cross the
+    driver: the model-fetch sync, same O(1)-per-round class as
+    PageRank's dangling mass. Shared by :func:`lloyd_centroids` (full
     corpus, caller checkpoints) and the residual-PQ coarse trainer
     (bounded sample)."""
     for _ in range(n_iter):
-        assigned = _assign_to_literal_centroids(emb, cent_lit)
-        # centroid recompute in the label_centroids shape: posexplode →
-        # one generic (cell, dim) hash agg — a 2-column plan Catalyst
-        # analyzes in O(1), where the dim-wide sum-per-column formulation
-        # was a 64-expression codegen unit per round.
-        q = F.round(
-            F.col("x").cast("double") * CENTROID_QUANT
-        ).cast("bigint")
-        rows = (
-            assigned.select("cell", F.posexplode("embedding").alias("dim", "x"))
-            .groupBy("cell", "dim")
-            .agg(F.sum(q).alias("s"), F.count("*").alias("n"))
-            .select(
-                "cell", "dim",
-                F.round(
-                    F.col("s").cast("double") / F.col("n") / CENTROID_QUANT, 6
-                ).alias("c"),
-            )
-            .collect()
-        )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cell.setdefault(int(r["cell"]), {})[int(r["dim"])] = float(r["c"])
-        cent_lit = sorted(
-            (cell, [vals[d] for d in range(dim)])
-            for cell, vals in by_cell.items()
+        cent_lit = _mean_literals(
+            _assign_to_literal_centroids(emb, cent_lit), "cell"
         )
     return cent_lit
 
@@ -583,64 +244,6 @@ def validated_embeddings(embeddings: DataFrame, dim: int = 64) -> DataFrame:
         .select("vec_id", _guard_embedding_dim(dim).alias("embedding"))
         .localCheckpoint(eager=True)
     )
-
-
-def knn_ivf_lloyd(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    n_iter: int = 2,
-    dim: int = 64,
-    validated: bool = False,
-) -> DataFrame:
-    """IVF whose coarse quantizer is a distributed Lloyd (KMeans) fit in
-    EXACT arithmetic — the DuckDB-oracle-verified twin of the MLlib-backed
-    :func:`knn_ivf`, the way sgd_score_closed_form twins sgd_scores.
-
-    Init seeds the ``n_cells`` lowest-vec_id embeddings; each round does
-    (a) map-side max-cosine assignment against a literal centroid matrix
-    (no corpus shuffle, no row expansion) and (b) a single hash-agg
-    centroid recompute whose per-dimension sums run over 2^24-quantized
-    int64 components, so the means are associative, partitioning-
-    independent and engine-portable (mirrors label_centroids); empty
-    cells drop out. Each round syncs ``n_cells`` driver rows — the same
-    O(1)-rows-per-iteration model-fetch pattern as PageRank's dangling
-    mass. Because every step is closed-form, the oracle replays the full
-    fit as ``n_iter`` unrolled CTE rounds (the PageRank oracle trick) and
-    the probe search bit-matches. Ref semantics: the inverted-file probe
-    of ann_ivf (SURVEY §2 similarity tier) with the training pass made
-    verifiable.
-    """
-    spark = embeddings.sparkSession
-    # same in-plan length guard as the PQ tiers: a short non-NULL
-    # embedding would otherwise skew the quantized centroid sums silently
-    # (zip over mismatched lengths NULL-pads) instead of failing loudly.
-    # ``validated`` callers pass the validate-once materialization of
-    # :func:`validated_embeddings` — guard and checkpoint already paid.
-    if not validated:
-        embeddings = embeddings.where(F.col("embedding").isNotNull()).select(
-            "vec_id", _guard_embedding_dim(dim).alias("embedding")
-        )
-    cent_lit = _seed_centroid_literals(embeddings, n_cells)
-    if not cent_lit:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, cosine double"
-        )
-    # n_iter assignment jobs + the probe all re-read the corpus: pin it
-    # once (at cluster scale: cache/shuffle-file reuse across iterations,
-    # the same reason PageRank checkpoints its rank table)
-    emb = (embeddings if validated
-           else embeddings.select("vec_id", "embedding")
-           .localCheckpoint(eager=True))
-    cent_lit = _lloyd_centroid_literals(emb, cent_lit, n_iter, dim)
-    # checkpoint: the final assignment feeds both probe-join sides (r12)
-    assigned = _assign_to_literal_centroids(
-        emb, cent_lit
-    ).localCheckpoint(eager=False)
-    cent = spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
-    return _ivf_probe_search(assigned, cent, query_ids, k, n_probe)
 
 
 # embedding_near_dupes blocking geometry: target per-bucket occupancy (B),
@@ -737,14 +340,8 @@ def embedding_near_dupes(embeddings: DataFrame, threshold: float = 0.4,
             F.col("y.embedding").alias("b_emb"),
         )
     )
-    schema = T.StructType(
-        [joined.schema[c] for c in ("vec_a", "vec_b")]
-        + [T.StructField("cosine", T.DoubleType())]
-    )
     return (
-        joined.mapInPandas(
-            np_pair_cosine_fn("a_emb", "b_emb", ["vec_a", "vec_b"]), schema
-        )
+        _pair_cosine(joined, "a_emb", "b_emb", ["vec_a", "vec_b"])
         .where(F.col("cosine") >= threshold)
         .distinct()
     )
@@ -756,33 +353,55 @@ def embedding_near_dupes(embeddings: DataFrame, threshold: float = 0.4,
 CENTROID_QUANT = 1 << 24
 
 
+def _quantized_means(
+    df: DataFrame, keys: list[str], vec: str, pos: str = "dim",
+    mean: str = "c", n: str = "n",
+) -> DataFrame:
+    """(*keys, pos, mean, n): the per-key, per-dimension mean of the
+    array column ``vec`` — posexplode, sum of components quantized to
+    int64 at CENTROID_QUANT, one hash aggregate with map-side combine,
+    rounded to 6 decimals. Quantization before the sum makes the mean
+    bit-identical across partitionings and engines (a raw float sum is
+    neither associative nor portable), which is what lets the DuckDB
+    oracles replay every centroid and codeword fit exactly. Output
+    cardinality is keys × dims regardless of corpus size."""
+    q = F.round(F.col("x").cast("double") * CENTROID_QUANT).cast("bigint")
+    return (
+        df.select(*keys, F.posexplode(vec).alias(pos, "x"))
+        .groupBy(*keys, pos)
+        .agg(F.sum(q).alias("s"), F.count("*").alias(n))
+        .select(
+            *keys, pos,
+            F.round(
+                F.col("s").cast("double") / F.col(n) / CENTROID_QUANT, 6
+            ).alias(mean),
+            n,
+        )
+    )
+
+
+def _mean_literals(
+    df: DataFrame, key: str, vec: str = "embedding"
+) -> list[tuple[int, list[float]]]:
+    """Sorted ``[(key, mean vector)]`` literals of the quantized means of
+    ``vec`` per ``key`` — keys × dims rows fetched to the driver (a
+    model fetch)."""
+    by_key: dict[int, dict[int, float]] = {}
+    for r in _quantized_means(df, [key], vec).collect():
+        by_key.setdefault(int(r[key]), {})[int(r["dim"])] = float(r["c"])
+    return sorted(
+        (cell, [vals[d] for d in range(len(vals))])
+        for cell, vals in by_key.items()
+    )
+
+
 def label_centroids(embeddings: DataFrame) -> DataFrame:
     """Per-label centroid of the embedding column as (label, dim,
     centroid, n_vectors) rows — the class-prototype operator behind
-    nearest-centroid classification and per-class drift monitoring.
-
-    posexplode → per-(label, dim) sum of integer-quantized components →
-    single hash aggregate with map-side combine; output cardinality is
-    labels × dims regardless of corpus size. Quantization before the sum
-    makes the result bit-identical across partitionings and engines (a
-    raw float sum is neither associative nor portable)."""
-    ex = embeddings.select(
-        "label", F.posexplode("embedding").alias("dim", "x")
-    )
-    q = F.round(F.col("x").cast("double") * CENTROID_QUANT).cast("bigint")
-    return (
-        ex.groupBy("label", "dim")
-        .agg(F.sum(q).alias("s"), F.count("*").alias("n_vectors"))
-        .select(
-            "label",
-            "dim",
-            F.round(
-                F.col("s").cast("double") / F.col("n_vectors") / CENTROID_QUANT,
-                6,
-            ).alias("centroid"),
-            "n_vectors",
-        )
-    )
+    nearest-centroid classification and per-class drift monitoring;
+    the quantized mean of :func:`_quantized_means` per (label, dim)."""
+    return _quantized_means(embeddings, ["label"], "embedding",
+                            mean="centroid", n="n_vectors")
 
 
 def nearest_centroid_confusion(embeddings: DataFrame) -> DataFrame:
@@ -823,47 +442,6 @@ def nearest_centroid_confusion(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def knn_ivf_from_index(
-    spark,
-    index_path: str,
-    query_ids: list[int],
-    k: int = 10,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Probe a PERSISTED inverted file (``sources.sinks.write_ivf_index``):
-    centroids are recovered as the per-cell integer-quantized means (the
-    label_centroids formula — n_cells × dim rows, a model fetch), each
-    query ranks them exactly, and the candidate scan reads ONLY the
-    probed cell partitions — Spark's dynamic partition pruning turns the
-    probes⋈index join on the partition column into a directory-level
-    skip, so the scan fraction ≈ n_probe/n_cells holds on disk, not just
-    in memory (asserted on the physical plan in
-    tests/test_plan_properties.py)."""
-    idx = spark.read.parquet(index_path)
-    ex = idx.select("cell", F.posexplode("embedding").alias("dim", "x"))
-    q = F.round(F.col("x").cast("double") * CENTROID_QUANT).cast("bigint")
-    rows = (
-        ex.groupBy("cell", "dim")
-        .agg(F.sum(q).alias("s"), F.count("*").alias("n"))
-        .select(
-            "cell", "dim",
-            F.round(
-                F.col("s").cast("double") / F.col("n") / CENTROID_QUANT, 6
-            ).alias("c"),
-        )
-        .collect()
-    )
-    by_cell: dict[int, dict[int, float]] = {}
-    for r in rows:
-        by_cell.setdefault(int(r["cell"]), {})[int(r["dim"])] = float(r["c"])
-    cent = spark.createDataFrame(
-        [(cell, [vals[d] for d in range(len(vals))])
-         for cell, vals in sorted(by_cell.items())],
-        "cell int, centroid array<double>",
-    )
-    return _ivf_probe_search(idx, cent, query_ids, k, n_probe)
-
-
 # --- Product quantization (the IVF-PQ compression path) ---------------------
 #
 # PQ stores each vector as M sub-space code ids instead of raw floats —
@@ -874,7 +452,7 @@ def knn_ivf_from_index(
 # lookup table, and the corpus scan touches only the codes.
 #
 # Everything is deterministic and engine-portable: codebooks initialize
-# from the K lowest vec_ids (the seed convention of knn_ivf_flat) and take
+# from the K lowest vec_ids (the ``"seed"`` coarse convention) and take
 # ONE Lloyd refinement step with the CENTROID_QUANT integer-mean formula,
 # and every squared-L2 is summed over int64-quantized per-dimension terms,
 # so a DuckDB oracle replays codebook, codes, and ADC ranks bit-exactly.
@@ -1047,7 +625,6 @@ def pq_codebook(
         "m", (F.col("vec_id") - init_offset).alias("code"),
         F.col("sv").alias("cv"),
     )
-    q = F.round(F.col("x").cast("double") * CENTROID_QUANT).cast("bigint")
     for _ in range(n_steps):
         cur_g = cur.groupBy("m").agg(
             F.sort_array(F.collect_list(F.struct("code", "cv"))).alias("cws")
@@ -1057,17 +634,7 @@ def pq_codebook(
             _argmin_code(F.col("cws"), F.col("sv")).alias("code"),
             "sv",
         )
-        per_dim = (
-            assigned.select("m", "code", F.posexplode("sv").alias("d", "x"))
-            .groupBy("m", "code", "d")
-            .agg(F.sum(q).alias("s"), F.count("*").alias("n"))
-            .select(
-                "m", "code", "d",
-                F.round(
-                    F.col("s").cast("double") / F.col("n") / CENTROID_QUANT, 6
-                ).alias("c"),
-            )
-        )
+        per_dim = _quantized_means(assigned, ["m", "code"], "sv", pos="d")
         cur = per_dim.groupBy("m", "code").agg(
             F.transform(
                 F.sort_array(F.collect_list(F.struct("d", "c"))),
@@ -1089,7 +656,7 @@ def pq_encode(
     map-side argmin against the frozen codebook, zero corpus shuffle.
     This is the table a 100-TB deployment persists instead of raw
     embeddings. ``keep`` lets a caller thread extra per-vector columns
-    (knn_ivf_pq's cell) through the one corpus pass.
+    (the IVF-PQ index's cell) through the one corpus pass.
 
     r12 optimization (guide §4.2): the subvector-explode + broadcast
     codebook join + interpreted transform/array_min argmin is replaced
@@ -1127,45 +694,6 @@ def pq_encode(
     )
 
 
-def knn_pq_adc(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_codes: int = PQ_CODES,
-    n_subspaces: int = PQ_SUBSPACES,
-    dim: int = 64,
-    codebook: DataFrame | None = None,
-    validated: bool = False,
-) -> DataFrame:
-    """Approximate top-k by PQ asymmetric distance: (query_id, vec_id,
-    adc_d2), k rows per query, smallest reconstructed squared-L2 first,
-    self excluded, ties → lowest vec_id.
-
-    The LUT (query × subspace × codeword distances, exact queries vs
-    codewords) has |Q|·M·K rows — broadcast. The scan joins the codes
-    table against it map-side; the per-(query, vector) M-term sum
-    combines map-side too (codes of one vector share a partition by
-    construction), so the only shuffle is |Q|·n skinny partial rows into
-    the final agg + the two-stage top-k. With a large query batch,
-    pivot the LUT to a per-query map keyed by m·K+code and fold codes
-    per row to drop even that shuffle.
-
-    The codebook is fetched to the driver once (M·K rows — a model
-    fetch, like the IVF centroid syncs) and re-shipped as a literal
-    broadcast table; inlining its multi-stage plan instead would
-    re-execute the codebook build once per broadcast consumer.
-    """
-    cb = codebook if codebook is not None else _pq_codebook_literal(
-        embeddings, n_codes, n_subspaces, dim, validated=validated
-    )
-    codes = pq_encode(embeddings, cb, n_subspaces, dim, validated=validated)
-    qsub = _pq_subvectors(
-        embeddings.where(F.col("vec_id").isin(*query_ids)), n_subspaces, dim,
-        validated=validated,
-    ).select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qsv"))
-    return _pq_adc_search(codes, cb, qsub, k)
-
-
 def _pq_codebook_literal(
     embeddings: DataFrame, n_codes: int, n_subspaces: int, dim: int,
     init_offset: int = 0, n_steps: int = 1, validated: bool = False,
@@ -1183,26 +711,6 @@ def _pq_codebook_literal(
          for r in cb_rows],
         "m int, code bigint, cv array<double>",
     )
-
-
-def _pq_adc_search(
-    codes: DataFrame, cb: DataFrame, qsub: DataFrame, k: int
-) -> DataFrame:
-    """ADC tail shared by the in-memory and persisted-index paths:
-    broadcast LUT build, map-side codes⋈LUT join with combinable
-    per-(query, vector) sums, two-stage top-k."""
-    lut = qsub.join(broadcast(cb), "m").select(
-        "query_id", "m", "code", pq_d2(F.col("qsv"), F.col("cv")).alias("lut_d2")
-    )
-    adc = (
-        codes.join(broadcast(lut), ["m", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("lut_d2").alias("adc_d2"))
-    )
-    return topk_per_group(
-        adc, ["query_id"], [F.asc("adc_d2"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "adc_d2")
 
 
 def pack_pq_codes(
@@ -1230,50 +738,10 @@ def unpack_pq_codes(packed: DataFrame) -> DataFrame:
     ).select("vec_id", "m", F.col("code").cast("bigint").alias("code"))
 
 
-def knn_pq_from_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """ADC search against a PERSISTED PQ index
-    (``sources.sinks.write_pq_index``): the codebook is read back (M·K
-    rows — broadcast), the corpus scan reads ONLY the packed codes table
-    (M bytes/vector instead of the raw embeddings), and ``queries``
-    (vec_id, embedding) stay exact. Bit-identical to :func:`knn_pq_adc`
-    on the same corpus because codebook, codes, and int64 LUT distances
-    round-trip parquet exactly.
-
-    The index is self-describing: subspace count and width are derived
-    from the stored codebook (M = max(m)+1, subdim = len(cv)) rather
-    than trusted as caller parameters — a geometry mismatch between
-    caller defaults and the index would otherwise NULL out every LUT
-    distance and return k arbitrary rows with NULL adc_d2. EVERY query
-    row's embedding length is checked against the index geometry by the
-    in-plan ``raise_error`` guard shared by all PQ entry points
-    (``_pq_subvectors``; a driver-side check of the first row would let
-    later mismatched rows slip through silently)."""
-    cb = spark.read.parquet(f"{index_path}/codebook")
-    meta = cb.agg(F.max("m").alias("mm"), F.max(F.size("cv")).alias("sd")
-                  ).first()
-    if meta["mm"] is None:  # empty index (empty corpus at write time)
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, adc_d2 long"
-        )
-    n_subspaces, sd = int(meta["mm"]) + 1, int(meta["sd"])
-    dim = n_subspaces * sd
-    codes = unpack_pq_codes(spark.read.parquet(f"{index_path}/codes"))
-    qsub = _pq_subvectors(queries, n_subspaces, dim).select(
-        F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qsv")
-    )
-    return _pq_adc_search(codes, cb, qsub, k)
-
-
 def _seed_centroid_literals(
     embeddings: DataFrame, n_cells: int
 ) -> list[tuple[int, list[float]]]:
-    """The deterministic seed-centroid convention shared by the NEW
-    cell-blocked operators (semdedup_drop_list, knn_ivf_pq): the
+    """The ``"seed"`` coarse quantizer (:func:`_coarse`): the
     ``n_cells`` lowest vec_ids with a non-NULL embedding, collected once
     (an O(n_cells)-row model fetch) and sorted by id. A NULL embedding
     can never become a centroid — its cosine would be NULL against every
@@ -1307,9 +775,9 @@ def semdedup_drop_list(
     Cross-cluster near-dups are deliberately out of scope (that lossless
     tier is :func:`embedding_near_dupes`).
 
-    Shape: cell assignment is the map-side literal-centroid argmax of
-    :func:`knn_ivf_flat` (seed centroids = the n_cells lowest vec_ids —
-    an O(n_cells)-row model fetch, no training shuffle); the pair search
+    Shape: cell assignment is the ``"seed"`` coarse stage of :func:`knn`
+    (the n_cells lowest vec_ids — an O(n_cells)-row model fetch, no
+    training shuffle); the pair search
     is a self-equi-join on cell, so candidate count is Σ|cell|² — at
     100 TB, n_cells scales with the corpus to hold |cell| roughly
     constant and the join keys stay well-distributed. The witness argmax
@@ -1318,22 +786,13 @@ def semdedup_drop_list(
     and spillable, and the partial max runs map-side before the
     exchange) — not a window over an unbounded partition.
     """
-    spark = embeddings.sparkSession
-    embeddings = embeddings.where(F.col("embedding").isNotNull())
-    cent_lit = _seed_centroid_literals(embeddings, n_cells)
+    e = embeddings.where(F.col("embedding").isNotNull())
+    cent_lit = _seed_centroid_literals(e, n_cells)
     if not cent_lit:
-        return spark.createDataFrame(
+        return e.sparkSession.createDataFrame(
             [], "dropped_id long, cell int, witness_id long, cosine double"
         )
-    # the assignment (the HOF-heavy argmax over the centroid matrix) feeds
-    # BOTH sides of the pair self-join — checkpoint it so it is computed
-    # once, not once per join side (the shared-intermediate convention of
-    # plans.pipeline._shared_jaccard_pairs; at cluster scale: write the
-    # cell table once, read it twice)
-    assigned = (
-        _assign_to_literal_centroids(embeddings, cent_lit)
-        .localCheckpoint(eager=False)
-    )
+    assigned = _assigned(e, cent_lit)
     a = assigned.select(
         "cell",
         F.col("vec_id").alias("witness_id"),
@@ -1349,18 +808,10 @@ def semdedup_drop_list(
         .where(F.col("witness_id") < F.col("dropped_id"))
         .select("dropped_id", "cell", "witness_id", "w_emb", "d_emb")
     )
-    # in-cell verification cosine via the Arrow/NumPy pair kernel (r12,
-    # guide §4.2; same bits as the precomputed-norm HOF form — identical
-    # left-fold values, identical division); the ≥ threshold filter
-    # stays in Spark so NULL/NaN comparison semantics are unchanged
-    schema = T.StructType(
-        [joined.schema[c] for c in ("dropped_id", "cell", "witness_id")]
-        + [T.StructField("cosine", T.DoubleType())]
-    )
-    pairs = joined.mapInPandas(
-        np_pair_cosine_fn("w_emb", "d_emb",
-                          ["dropped_id", "cell", "witness_id"]),
-        schema,
+    # the ≥ threshold filter stays in Spark so NULL/NaN comparison
+    # semantics are unchanged
+    pairs = _pair_cosine(
+        joined, "w_emb", "d_emb", ["dropped_id", "cell", "witness_id"]
     ).where(F.col("cosine") >= threshold)
     best = F.max(
         F.struct(F.col("cosine"), (-F.col("witness_id")).alias("nw"))
@@ -1410,92 +861,6 @@ def _fused_assign_encode(
     )
 
 
-def knn_ivf_pq(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    n_codes: int = PQ_CODES,
-    n_subspaces: int = PQ_SUBSPACES,
-    dim: int = 64,
-    codebook: DataFrame | None = None,
-    validated: bool = False,
-) -> DataFrame:
-    """IVF-PQ: the production ANN shape — a coarse inverted file bounds
-    the scan FRACTION (n_probe/n_cells of cells touched) while product
-    quantization bounds the scan FOOTPRINT (M byte codes per candidate
-    instead of the float vector). Queries rank the seed centroids by
-    exact cosine, probe their best cells, and rank ONLY probed-cell
-    candidates by ADC distance. Returns (query_id, vec_id, adc_d2), ties
-    → lowest vec_id; codes come from the globally trained codebook (no
-    per-cell residual re-encoding — the faiss-style residual refinement
-    is documented out of scope, everything here stays closed-form and
-    oracle-replayable).
-
-    Shape: cell assignment and PQ encoding happen in ONE map-side pass
-    over the corpus (literal centroid matrix + broadcast codebook — a
-    codes⋈cells join on vec_id would shuffle the corpus twice); probes
-    and LUT are broadcast; the per-candidate M-term sums combine
-    map-side, so the only shuffle is |Q|·(probed candidates) skinny
-    partial rows plus the two-stage top-k."""
-    spark = embeddings.sparkSession
-    if not validated:
-        embeddings = embeddings.where(F.col("embedding").isNotNull())
-    cent_lit = _seed_centroid_literals(embeddings, n_cells)
-    if not cent_lit:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, adc_d2 long"
-        )
-    cent = spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
-
-    # one-pass cell + code projection, fused into a single Arrow/NumPy
-    # corpus kernel (r12, guide §4.2): assignment and encoding share one
-    # scan AND one Python crossing; all M rows of a vector are emitted
-    # by the producing task, so the ADC partial agg still combines
-    # map-side
-    cb = codebook if codebook is not None else _pq_codebook_literal(
-        embeddings, n_codes, n_subspaces, dim, validated=validated
-    )
-    codes = _fused_assign_encode(embeddings, cent_lit, cb, n_subspaces,
-                                 dim, residual=False)
-
-    q = embeddings.where(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("cell")
-    )
-    probes = (
-        broadcast(q)
-        .crossJoin(broadcast(cent))
-        .select(
-            "query_id", "q_emb", "cell",
-            cosine(F.col("q_emb"), F.col("centroid")).alias("c_cos"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .where(F.col("pr") <= n_probe)
-        .select("query_id", "cell")
-    )
-    qsub = _pq_subvectors(
-        embeddings.where(F.col("vec_id").isin(*query_ids)), n_subspaces, dim,
-        validated=validated,
-    ).select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qsv"))
-    lut = qsub.join(broadcast(cb), "m").select(
-        "query_id", "m", "code", pq_d2(F.col("qsv"), F.col("cv")).alias("lut_d2")
-    )
-    adc = (
-        codes.join(broadcast(probes), "cell")
-        .join(broadcast(lut), ["query_id", "m", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("lut_d2").alias("adc_d2"))
-    )
-    return topk_per_group(
-        adc, ["query_id"], [F.asc("adc_d2"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "adc_d2")
-
-
 def _ivf_residual_frame(
     assigned: DataFrame, cent: DataFrame, dim: int,
     validated: bool = False,
@@ -1528,6 +893,10 @@ def _ivf_residual_frame(
     )
 
 
+_DIM_ERROR = (" does not match the PQ geometry (dim = {dim}) "
+              "or the vector carries NULL elements")
+
+
 def _guard_embedding_dim(dim: int, col: str = "embedding"):
     """In-plan per-row validity check for an embedding column: pass NULL
     through (callers drop it), raise on a length mismatch OR a NULL
@@ -1553,10 +922,7 @@ def _guard_embedding_dim(dim: int, col: str = "embedding"):
             F.concat(
                 F.lit("embedding length "),
                 F.size(col).cast("string"),
-                F.lit(
-                    f" does not match the PQ geometry (dim = {dim}) "
-                    "or the vector carries NULL elements"
-                ),
+                F.lit(_DIM_ERROR.format(dim=dim)),
             )
         )
     )
@@ -1569,9 +935,18 @@ def lloyd_centroids(
     dim: int = 64,
     validated: bool = False,
 ) -> list[tuple[int, list[float]]]:
-    """Seed centroids Lloyd-refined over the (NULL-filtered) corpus —
-    the exact-arithmetic coarse quantizer of :func:`knn_ivf_lloyd`,
-    exposed as a model literal so the residual-PQ tier can train, encode
+    """Seed centroids Lloyd-refined over the (NULL-filtered) corpus in
+    EXACT arithmetic — the ``"lloyd"`` coarse stage of :func:`knn`, the
+    DuckDB-oracle-verified twin of the MLlib ``"kmeans"`` stage (the way
+    sgd_score_closed_form twins sgd_scores). Init seeds the ``n_cells``
+    lowest-vec_id embeddings; each of ``n_iter`` rounds is a map-side
+    max-cosine assignment against the literal centroid matrix (no corpus
+    shuffle, no row expansion) plus one hash agg of quantized means, and
+    empty cells drop out. Because every step is closed-form, the oracle
+    replays the fit as ``n_iter`` unrolled CTE rounds (the PageRank
+    oracle trick) and the probe search bit-matches.
+
+    Exposed as a model literal so the residual-PQ tier can train, encode
     and probe against the SAME centroids without re-fitting per
     consumer. Refinement matters for the residual formulation
     specifically: a seed centroid is an arbitrary member of its cell, so
@@ -1580,11 +955,10 @@ def lloyd_centroids(
     would quantize worse than global PQ — measured on the synthetic
     fixtures before this trainer existed. Against the Lloyd cell MEAN,
     residual variance is the within-cell variance — strictly the part
-    the coarse quantizer didn't explain. Same scale contract as
-    knn_ivf_lloyd: n_iter × (map-side assignment + one hash agg),
-    n_cells·dim driver rows per round, corpus checkpointed once; a
-    production deployment persists the result (write_ivf_index) instead
-    of re-fitting per query."""
+    the coarse quantizer didn't explain. Scale: n_iter × (map-side
+    assignment + one hash agg), n_cells·dim driver rows per round,
+    corpus checkpointed once; a production deployment persists the
+    result (write_ivfpq_index) instead of re-fitting per query."""
     # shared PQ length guard, applied BEFORE the fit: a short non-NULL
     # embedding silently skews the quantized centroid means (and an
     # all-short cell only surfaces as a later driver-side KeyError).
@@ -1601,7 +975,7 @@ def lloyd_centroids(
         return []
     if not validated:
         emb = e.select("vec_id", "embedding").localCheckpoint(eager=True)
-    return _lloyd_centroid_literals(emb, seed, n_iter, dim)
+    return _lloyd_centroid_literals(emb, seed, n_iter)
 
 
 PQ_RES_STEPS = 2  # codebook Lloyd steps for the residual tier (see below)
@@ -1619,7 +993,7 @@ def residual_pq_codebook(
     n_steps: int = PQ_RES_STEPS,
     validated: bool = False,
 ) -> DataFrame | None:
-    """Train the residual PQ codebook (the knn_ivf_pq_residual model) as
+    """Train the residual PQ codebook (the ``"residual_pq"`` model) as
     a literal DataFrame, or None on an empty corpus. The codebook
     training itself reads ONLY vec_id < train_n (the filter pushes below
     the assignment map to the scan) — O(train_n·M·K·n_steps) at any
@@ -1641,12 +1015,10 @@ def residual_pq_codebook(
                                      validated=validated))
     if not cent_lit:
         return None
-    cent = e.sparkSession.createDataFrame(
-        cent_lit, "cell int, centroid array<double>"
-    )
     bounded = e.where(F.col("vec_id") < train_n)
     res = _ivf_residual_frame(
-        _assign_to_literal_centroids(bounded, cent_lit), cent, dim,
+        _assign_to_literal_centroids(bounded, cent_lit),
+        _centroid_frame(e.sparkSession, cent_lit), dim,
         validated=validated,
     )
     # res rows are structurally dim-length (guard ran before the zip)
@@ -1654,164 +1026,6 @@ def residual_pq_codebook(
         res, n_codes, n_subspaces, dim, init_offset=n_cells,
         n_steps=n_steps, validated=True,
     )
-
-
-def knn_ivf_pq_residual(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    n_codes: int = PQ_CODES,
-    n_subspaces: int = PQ_SUBSPACES,
-    dim: int = 64,
-    codebook: DataFrame | None = None,
-    n_iter: int = 2,
-    centroids: list[tuple[int, list[float]]] | None = None,
-    validated: bool = False,
-) -> DataFrame:
-    """Residual-aware IVF-PQ — the standard IVFPQ formulation (Jégou et
-    al., TPAMI'11 §III): the coarse quantizer is the exact-arithmetic
-    Lloyd fit of :func:`lloyd_centroids` (pass ``centroids`` to reuse an
-    existing fit), vectors are PQ-encoded as residuals against their
-    assigned centroid instead of raw values, and each query builds a
-    PER-PROBED-CELL LUT from its own residual q − centroid(c). Residuals
-    against the cell MEAN carry only the within-cell variance, so the
-    same M×K code budget spends its resolution on exactly what the
-    coarse quantizer didn't explain — recall at least the global-
-    codebook :func:`knn_ivf_pq`'s at the same scan fraction and
-    footprint (the comparison is pinned in tests at every fixture SF).
-    Returns (query_id, vec_id, adc_d2), ties → lowest vec_id.
-
-    Shape vs knn_ivf_pq: identical scan story — cell assignment and
-    residual encoding in ONE map-side corpus pass (broadcast centroid
-    matrix + broadcast codebook), LUT is |Q|·n_probe·M·K rows broadcast,
-    per-candidate sums combine map-side. The extra training cost is the
-    Lloyd coarse fit (the knn_ivf_lloyd trainer: O(1) driver rows per
-    round, corpus checkpointed once — a production deployment persists
-    it via write_ivf_index instead of re-fitting per query); everything
-    stays closed-form and oracle-replayable (the oracle unrolls both the
-    Lloyd rounds and the codebook steps as CTEs, the PageRank trick)."""
-    spark = embeddings.sparkSession
-    if not validated:
-        embeddings = embeddings.where(F.col("embedding").isNotNull())
-    cent_lit = (centroids if centroids is not None
-                else lloyd_centroids(embeddings, n_cells, n_iter, dim,
-                                     validated=validated))
-    if not cent_lit:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, adc_d2 long"
-        )
-    cent = spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
-    if codebook is None:
-        codebook = residual_pq_codebook(
-            embeddings, n_cells, n_codes, n_subspaces, dim, n_iter=n_iter,
-            centroids=cent_lit, validated=validated,
-        )
-    # assignment + residual shift + encode fused into one Arrow/NumPy
-    # corpus pass (r12, guide §4.2) — see _fused_assign_encode
-    codes = _fused_assign_encode(embeddings, cent_lit, codebook,
-                                 n_subspaces, dim, residual=True)
-
-    q = embeddings.where(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("cell")
-    )
-    probes = (
-        broadcast(q)
-        .crossJoin(broadcast(cent))
-        .select(
-            "query_id", "q_emb", "cell", "centroid",
-            cosine(F.col("q_emb"), F.col("centroid")).alias("c_cos"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .where(F.col("pr") <= n_probe)
-    )
-    # per-(query, probed cell) residual: the LUT distances are against
-    # q − centroid(cell), so the LUT key gains the cell column. The
-    # length guard runs before the zip_with for the same reason as in
-    # _ivf_residual_frame (zip_with would NULL-pad a short query).
-    qres = probes.select(
-        "query_id", "cell",
-        F.zip_with(
-            _guard_embedding_dim(dim, "q_emb"),
-            F.col("centroid"),
-            lambda x, c: x.cast("double") - c,
-        ).alias("embedding"),
-    )
-    # qres rows are structurally dim-length (q_emb guard ran pre-zip)
-    qsub = _pq_subvectors(qres, n_subspaces, dim,
-                          keep=("query_id", "cell"), validated=True)
-    lut = qsub.join(broadcast(codebook), "m").select(
-        "query_id", "cell", "m", "code",
-        pq_d2(F.col("sv"), F.col("cv")).alias("lut_d2"),
-    )
-    adc = (
-        codes.join(broadcast(lut), ["cell", "m", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("lut_d2").alias("adc_d2"))
-    )
-    return topk_per_group(
-        adc, ["query_id"], [F.asc("adc_d2"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "adc_d2")
-
-
-def knn_ivf_pq_rerank(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    rerank_factor: int = 3,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    n_codes: int = PQ_CODES,
-    n_subspaces: int = PQ_SUBSPACES,
-    dim: int = 64,
-    codebook: DataFrame | None = None,
-    n_iter: int = 2,
-    centroids: list[tuple[int, list[float]]] | None = None,
-    validated: bool = False,
-) -> DataFrame:
-    """Two-stage ANN — the standard production refinement (Jégou et al.
-    §V-C): :func:`knn_ivf_pq_residual` produces a k·``rerank_factor``
-    ADC shortlist from code bytes alone, then ONLY those shortlist rows
-    are re-ranked by exact cosine against the raw embeddings. Returns
-    (query_id, vec_id, cosine) — directly comparable to knn_bruteforce —
-    k rows per query, ties → lowest vec_id.
-
-    Scan story: stage 1 keeps the IVF-PQ bounds (probe fraction × M
-    bytes/vector); stage 2 touches raw floats for |Q|·k·factor rows via
-    a BROADCAST of the shortlist against the (vec_id, embedding)
-    projection — the refinement reads a column-pruned corpus pass here,
-    where a production deployment would point-look-up the shortlist ids
-    in a keyed store; either way the exact-distance work is shortlist-
-    sized, which is the point. Recall strictly improves on the ADC-only
-    ranking whenever quantization reordered true neighbors inside the
-    shortlist (pinned ≥ in tests at every fixture SF)."""
-    short = knn_ivf_pq_residual(
-        embeddings, query_ids, k * rerank_factor, n_cells, n_probe,
-        n_codes, n_subspaces, dim, codebook, n_iter, centroids,
-        validated=validated,
-    ).select("query_id", "vec_id")
-    e = (embeddings if validated
-         else embeddings.where(F.col("embedding").isNotNull())
-         ).select("vec_id", "embedding")
-    q = e.where(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    rer = (
-        e.join(broadcast(short), "vec_id")
-        .join(broadcast(q), "query_id")
-        .select(
-            "query_id", "vec_id",
-            cosine(F.col("qe"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        rer, ["query_id"], [F.desc("cosine"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "cosine")
 
 
 # Frozen model artifacts of a persisted IVF-PQ index, fetched ONCE per
@@ -1859,7 +1073,8 @@ def _index_models(spark, index_path: str) -> tuple[list, list]:
 
 def _adc_lut_driver(q_rows, cent_rows, cb_rows, n_probe: int,
                     n_subspaces: int, sd: int, dim: int) -> list:
-    """Driver-side twin of the former in-plan probe/LUT computation:
+    """Driver-side twin of the ``"residual_pq"`` stage's in-plan probe
+    and LUT (:func:`knn`), used by :func:`knn_from_index`:
     (query_id, cell, m, code, lut_d2) rows for every query × probed cell
     × codeword — |Q|·n_probe·M·K rows of MODEL-sized work (microseconds
     of float math), never corpus-sized. Exists because building the
@@ -1869,7 +1084,7 @@ def _adc_lut_driver(q_rows, cent_rows, cb_rows, n_probe: int,
     itself — which dominated the serve path.
 
     Bit-parity contract with the in-plan arithmetic (pinned by
-    test_ivfpq_index_roundtrip_matches_inmemory and the driver gate):
+    test_index_roundtrip_matches_inmemory[ivfpq] and the driver gate):
     every float op replays Spark's exact expression order — left-fold
     dot products, cosine as one division of the dot by the product of
     the two sqrt'd norms (a zero denominator RAISES, replicating ANSI
@@ -1882,7 +1097,9 @@ def _adc_lut_driver(q_rows, cent_rows, cb_rows, n_probe: int,
     Double.toString both emit round-trip decimal strings of the same
     double, and distinct doubles sit ≥1 ulp from any representable
     n+0.5 boundary while repr stays within half an ulp, so the integer
-    rounding can never diverge."""
+    rounding can never diverge. A query of the wrong length or with a
+    NULL element raises the in-plan guard's error text
+    (:func:`_guard_embedding_dim`), checked here on the driver."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -1917,10 +1134,10 @@ def _adc_lut_driver(q_rows, cent_rows, cb_rows, n_probe: int,
         qid, emb = r["vec_id"], r["embedding"]
         if emb is None:  # NULL embeddings pass through and are dropped
             continue
-        if len(emb) != dim:  # the _guard_embedding_dim contract
+        if len(emb) != dim or any(x is None for x in emb):
+            # the _guard_embedding_dim contract and error text
             raise ValueError(
-                f"embedding length {len(emb)} does not match the PQ "
-                f"geometry (dim = {dim})"
+                f"embedding length {len(emb)}{_DIM_ERROR.format(dim=dim)}"
             )
         qe = [float(x) for x in emb]
         nq = math.sqrt(fdot(qe, qe))
@@ -1947,174 +1164,6 @@ def _adc_lut_driver(q_rows, cent_rows, cb_rows, n_probe: int,
     return out
 
 
-def knn_ivfpq_from_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 4,
-    include_streamed: bool = False,
-    candidate_filter=None,
-) -> DataFrame:
-    """ADC search against a PERSISTED residual IVF-PQ index
-    (``sources.sinks.write_ivfpq_index``): centroids and codebook come
-    from the session model cache (one bounded fetch per index), queries
-    are ranked against the centroids exactly, and the candidate scan
-    reads ONLY the probed cell partitions of the codes table — a STATIC
-    partition filter (the probed cells are known at planning time from
-    the driver-materialized LUT), M bytes per candidate from
-    n_probe/n_cells of the directories, the fully-bounded disk path.
-    Bit-identical to :func:`knn_ivf_pq_residual` on the same corpus:
-    centroid/codebook doubles, byte codes, and int64 LUT distances all
-    round-trip parquet exactly. Geometry (M, subdim) is derived from
-    the stored codebook; every query row's embedding length is checked
-    in-plan against it (shared `_guard_embedding_dim` raise_error —
-    NULL embeddings pass through and are dropped).
-
-    ``include_streamed`` also searches the codes appended by the
-    streaming maintenance sink (``streaming.index_sink``), whose
-    batch-stamped dirs are likewise cell-partitioned; each side is
-    pruned to the probed cells BEFORE the union so the streamed tail
-    never widens the base scan.
-
-    ``candidate_filter`` (a Column predicate over the index's metadata
-    sidecar, written via ``write_ivfpq_index(meta_cols=...)``) restricts
-    candidates BEFORE ADC ranking — filtered vector search served from
-    disk: the sidecar scan is pruned to the same probed cells, the
-    predicate pushes into its parquet scan, and the surviving
-    (vec_id, cell) keys semi-join the codes. Mutually exclusive with
-    ``include_streamed`` (appended codes have no sidecar rows; silently
-    excluding them would be a correctness trap, so the combination
-    raises)."""
-    if candidate_filter is not None and include_streamed:
-        raise ValueError(
-            "candidate_filter with include_streamed is not supported: "
-            "streamed-appended codes carry no metadata sidecar rows and "
-            "would be silently excluded from a filtered search"
-        )
-    cb_rows, cent_rows = _index_models(spark, index_path)
-    if not cb_rows:  # empty index (empty corpus at write time)
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, adc_d2 long"
-        )
-    n_subspaces = cb_rows[-1][0] + 1
-    sd = max(len(r[2]) for r in cb_rows)
-    dim = n_subspaces * sd
-    packed = spark.read.parquet(f"{index_path}/codes")
-
-    # Probe ranking + ADC LUT computed DRIVER-SIDE (_adc_lut_driver):
-    # queries are a broadcast-sized frame by contract (the knn_bruteforce
-    # convention), so fetching them is a bounded model-sized collect, and
-    # the |Q|·n_probe·M·K LUT costs microseconds of float math vs ~2 s of
-    # per-call Catalyst construction+analysis for the equivalent in-plan
-    # expression tree. This collapses the serve plan to ONE big-side job
-    # (scan → broadcast join → agg → top-k) and, because the probed cells
-    # are now known at PLANNING time, upgrades the partition pruning from
-    # a runtime DPP subquery to a static partition filter on the hive
-    # `cell` column — the scan never even lists unprobed dirs.
-    q_rows = queries.select("vec_id", "embedding").collect()
-    lut_rows = _adc_lut_driver(q_rows, cent_rows, cb_rows, n_probe,
-                               n_subspaces, sd, dim)
-    if not lut_rows:  # no valid queries
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, adc_d2 long"
-        )
-    lut_local = spark.createDataFrame(
-        lut_rows, "query_id bigint, cell int, m int, code bigint, "
-                  "lut_d2 bigint")
-    probe_cells = sorted({r[1] for r in lut_rows})
-    pruned = packed.where(F.col("cell").isin(probe_cells))
-    if include_streamed:
-        from bigdata2016w_spark.streaming.index_sink import (
-            read_streamed_codes,
-        )
-
-        # prune the streamed scan separately (a filter above a Union
-        # still pushes into both parquet scans, but keep the sides
-        # explicit for plan readability), then union
-        pruned = pruned.unionByName(
-            read_streamed_codes(spark, index_path)
-            .where(F.col("cell").isin(probe_cells))
-            .select(*pruned.columns)
-        )
-    if candidate_filter is not None:
-        # pruned sidecar scan → predicate pushdown → semi-join the codes
-        # on (vec_id, cell): the code rows never widen past the filter
-        allowed = (
-            spark.read.parquet(f"{index_path}/meta")
-            .where(F.col("cell").isin(probe_cells))
-            .where(candidate_filter)
-            .select("vec_id", "cell")
-        )
-        pruned = pruned.join(allowed, ["vec_id", "cell"], "left_semi")
-    codes = pruned.select(
-        "vec_id", "cell", F.posexplode("codes").alias("m", "code")
-    ).select("vec_id", "cell", "m",
-             F.col("code").cast("bigint").alias("code"))
-    adc = (
-        codes.join(broadcast(lut_local), ["cell", "m", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("lut_d2").alias("adc_d2"))
-    )
-    return topk_per_group(
-        adc, ["query_id"], [F.asc("adc_d2"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "adc_d2")
-
-
-def knn_ivfpq_rerank_from_index(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    embeddings: DataFrame,
-    k: int = 10,
-    rerank_factor: int = 3,
-    n_probe: int = 4,
-    include_streamed: bool = False,
-    candidate_filter=None,
-) -> DataFrame:
-    """Two-stage ANN served from the PERSISTED index — the production
-    composition of :func:`knn_ivfpq_from_index` (stage 1: ADC shortlist
-    of k·``rerank_factor`` candidates from code bytes in the probed cell
-    directories, optionally including the streaming sink's appended
-    codes) and :func:`knn_ivf_pq_rerank`'s refinement (stage 2: exact
-    cosine over ONLY the shortlist rows, broadcast against the raw
-    ``embeddings`` table — |Q|·k·factor rows of float traffic at any
-    corpus size; a production deployment would point-look-up the
-    shortlist ids in a keyed store). Returns (query_id, vec_id, cosine),
-    k rows per query, ties → lowest vec_id — bit-identical to
-    :func:`knn_ivf_pq_rerank` under the same frozen models (pinned in
-    tests), because the persisted code bytes and LUT arithmetic
-    round-trip parquet exactly.
-
-    ``candidate_filter`` threads through to the stage-1 shortlist (the
-    sidecar semi-join of :func:`knn_ivfpq_from_index`), so the exact
-    rerank only ever sees predicate-satisfying rows — filtered
-    two-stage search at the same |Q|·k·factor stage-2 cost."""
-    short = knn_ivfpq_from_index(
-        spark, index_path, queries, k * rerank_factor, n_probe,
-        include_streamed=include_streamed,
-        candidate_filter=candidate_filter,
-    ).select("query_id", "vec_id")
-    e = embeddings.where(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding"
-    )
-    q = queries.where(F.col("embedding").isNotNull()).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    rer = (
-        e.join(broadcast(short), "vec_id")
-        .join(broadcast(q), "query_id")
-        .select(
-            "query_id", "vec_id",
-            cosine(F.col("qe"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        rer, ["query_id"], [F.desc("cosine"), F.asc("vec_id")], k
-    ).select("query_id", "vec_id", "cosine")
-
-
 def embedding_cross_near_dupes(
     index: DataFrame,
     probe: DataFrame,
@@ -2130,7 +1179,7 @@ def embedding_cross_near_dupes(
 
     Blocking is the same fixed-hyperplane sign bucketing as
     :func:`embedding_near_dupes`, with 1-bit multiprobe on the PROBE
-    side (the knn_lsh recall insurance — a boundary flip between two
+    side (:func:`_multiprobe` — a boundary flip between two
     near-identical vectors otherwise hides the pair): candidates =
     index rows in any of the probe's P+1 buckets. Plane count is sized
     off the INDEX cardinality (adaptive_num_planes) so per-bucket
@@ -2155,26 +1204,13 @@ def embedding_cross_near_dupes(
     ).select(
         F.col("vec_id").alias("probe_id"),
         F.col("embedding").alias("p_emb"),
-        F.explode(
-            F.array(
-                F.col("__b"),
-                *[F.col("__b").bitwiseXOR(F.lit(1 << i))
-                  for i in range(num_planes)],
-            )
-        ).alias("bucket"),
+        F.explode(_multiprobe(F.col("__b"), num_planes)).alias("bucket"),
     )
     joined = pb.join(ix, "bucket").select(
         "probe_id", "index_id", "p_emb", "i_emb"
     )
-    schema = T.StructType(
-        [joined.schema[c] for c in ("probe_id", "index_id")]
-        + [T.StructField("cosine", T.DoubleType())]
-    )
     return (
-        joined.mapInPandas(
-            np_pair_cosine_fn("p_emb", "i_emb", ["probe_id", "index_id"]),
-            schema,
-        )
+        _pair_cosine(joined, "p_emb", "i_emb", ["probe_id", "index_id"])
         .where(F.col("cosine") >= threshold)
         .distinct()
     )
@@ -2188,7 +1224,7 @@ def ivf_probe_recall_sweep(
     probes: tuple[int, ...] = (1, 2, 4, 8),
 ) -> DataFrame:
     """(n_probe, n_queries, total_hits, avg_recall): recall@k of the
-    seed-centroid IVF (:func:`knn_ivf_flat`) at several probe depths in
+    seed-centroid IVF (``knn(coarse="seed")``) at several probe depths in
     ONE candidate pass — the tuning curve that picks n_probe for a
     recall target, at roughly the cost of a single search.
 
@@ -2201,22 +1237,18 @@ def ivf_probe_recall_sweep(
     exact int64 counts."""
     max_p = max(probes)
     spark = embeddings.sparkSession
-    embeddings = embeddings.where(F.col("embedding").isNotNull())
-    cent_lit = _seed_centroid_literals(embeddings, n_cells)
+    e = embeddings.where(F.col("embedding").isNotNull())
+    cent_lit = _seed_centroid_literals(e, n_cells)
     if not cent_lit:
         return spark.createDataFrame(
             [], "n_probe int, n_queries bigint, total_hits bigint,"
                 " avg_recall double"
         )
-    # checkpoint: the assignment kernel feeds both the query side and
-    # the candidate side of the probe join (r12, the semdedup
-    # shared-intermediate convention); the ground truth below likewise
-    # feeds the hit join and the |Q| aggregate
-    assigned = _assign_to_literal_centroids(
-        embeddings, cent_lit
-    ).localCheckpoint(eager=False)
-    cent = spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
-    cands = _probe_candidates(assigned, cent, query_ids, max_p)
+    assigned = _assigned(e, cent_lit)
+    cands = _flat_scores(
+        broadcast(_probe(_queries(assigned, query_ids), cent_lit, max_p)),
+        assigned, "cell", ("pr",),
+    )
     thresholds = spark.createDataFrame(
         [(t,) for t in sorted(probes)], "n_probe int"
     )
@@ -2228,7 +1260,8 @@ def ivf_probe_recall_sweep(
         [F.desc("cosine"), F.asc("vec_id")], k,
     ).select("n_probe", "query_id", "vec_id")
 
-    truth = knn_bruteforce(embeddings, query_ids, k).select(
+    # checkpoint: the ground truth feeds the hit join and the |Q| aggregate
+    truth = knn(e, query_ids, k).select(
         "query_id", "vec_id"
     ).localCheckpoint(eager=False)
     hits = ranked.join(truth, ["query_id", "vec_id"]).groupBy(
@@ -2253,3 +1286,508 @@ def ivf_probe_recall_sweep(
         )
         .orderBy("n_probe")
     )
+
+
+# --- The kNN pipeline -----------------------------------------------------
+#
+# queries → [coarse quantizer] → probe → score → top-k → [exact rerank].
+# Each stage below has one implementation; ``knn`` composes them over an
+# in-memory corpus and ``knn_from_index`` over a persisted index. Every
+# stage keeps the query set broadcast and the corpus on the build side
+# of its joins, so no stage shuffles the corpus itself: the only
+# exchanges are the skinny per-candidate rows into the two-stage top-k
+# (REPOSE-style prune-then-verify, the pruning done by cell or bucket).
+
+
+def _queries(df: DataFrame, query_ids: list[int] | None = None,
+             *extra) -> DataFrame:
+    """(query_id, q_emb, *extra): the query rows of ``df`` (all of them
+    when ``query_ids`` is None). Queries resolve against the UNfiltered
+    corpus — a query need not satisfy a candidate filter."""
+    if query_ids is not None:
+        df = df.where(F.col("vec_id").isin(*query_ids))
+    return df.select(F.col("vec_id").alias("query_id"),
+                     F.col("embedding").alias("q_emb"), *extra)
+
+
+def _empty(spark, score: str) -> DataFrame:
+    """The typed empty result of a search over an empty corpus/index."""
+    typ = "double" if score == "cosine" else "long"
+    return spark.createDataFrame(
+        [], f"query_id long, vec_id long, {score} {typ}")
+
+
+def _centroid_frame(spark, cent_lit) -> DataFrame:
+    """(cell, centroid): the n_cells-row literal centroid table."""
+    return spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
+
+
+def _multiprobe(bucket: Column, num_planes: int) -> Column:
+    """The bucket plus every bucket one sign bit away — the 1-bit
+    multiprobe that insures LSH recall against boundary flips."""
+    return F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << i))
+                             for i in range(num_planes)])
+
+
+def _kmeans_assigned(e: DataFrame, n_cells: int):
+    """The ``"kmeans"`` coarse stage: (assigned, centroid literals) from an
+    MLlib KMeans fit, keeping ``model.transform``'s assignment — the
+    recall-quality quantizer; ``"lloyd"`` is its oracle-replayable twin.
+    Random init: a coarse quantizer needs spread, not kmeans||'s extra
+    O(iterations) init jobs — measured 6.2 s → 1.5 s on the fit with
+    recall unchanged (gated by test_ann_ivf_recall)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feat = e.select(
+        "vec_id", "embedding",
+        array_to_vector(_as_double(F.col("embedding"))).alias("f"),
+    ).cache()  # KMeans iterates; uncached it re-scans parquet per iteration
+    model = KMeans(
+        k=n_cells, seed=LSH_SEED, maxIter=10, initMode="random",
+        featuresCol="f", predictionCol="cell",
+    ).fit(feat)
+    assigned = (
+        model.transform(feat)
+        .select("vec_id", "embedding", "cell")
+        .localCheckpoint(eager=True)  # consumed twice (probe + scan join)
+    )
+    feat.unpersist()
+    return assigned, [(i, [float(x) for x in c])
+                      for i, c in enumerate(model.clusterCenters())]
+
+
+def _coarse(e: DataFrame, coarse: str, n_cells: int, n_iter: int, dim: int,
+            centroids, validated: bool) -> list[tuple[int, list[float]]]:
+    """Centroid literals of the closed-form coarse stages: ``"seed"``
+    (the n_cells lowest vec_ids, no training pass) or ``"lloyd"``
+    (:func:`lloyd_centroids`); ``centroids`` reuses an existing fit.
+    Empty on an empty corpus. Both are collected once at plan build —
+    n_cells driver rows, like fetching a trained model — so assignment
+    (:func:`_assigned`) is a pure projection with the matrix baked in,
+    and a DuckDB oracle replays the whole pipeline exactly."""
+    if centroids is not None:
+        return centroids
+    if coarse == "lloyd":
+        return lloyd_centroids(e, n_cells, n_iter, dim, validated=validated)
+    return _seed_centroid_literals(e, n_cells)
+
+
+def _assigned(e: DataFrame, cent_lit, keep: tuple[str, ...] = ()) -> DataFrame:
+    """(vec_id, embedding, *keep, cell): the inverted file — every vector
+    in its max-cosine cell (ties → lowest cell, the oracle's
+    ``ORDER BY a_cos DESC, cell ASC``), map-side, NO shuffle and NO row
+    expansion of the corpus. At 100 TB it is written bucketed by cell
+    (``sources.sinks.write_ivf_index``) so a probe reads only its
+    buckets. Checkpointed because it feeds both the query side and the
+    candidate side of the probe join (or both sides of a self-join):
+    computed once, read twice."""
+    return _assign_to_literal_centroids(e, cent_lit, keep).localCheckpoint(
+        eager=False
+    )
+
+
+def _probe(q: DataFrame, cent_lit, n_probe: int, *cols: str) -> DataFrame:
+    """(query_id, q_emb, cell, pr, *cols): each query's ``n_probe``
+    nearest cells by exact cosine to the centroid, with their probe rank
+    ``pr`` (ties → lowest cell). ``pr`` is unique per (query, candidate)
+    because a vector lives in exactly one cell — the property the probe
+    sweep's threshold slicing relies on. ``cols`` carries centroid
+    columns (the residual stage's ``centroid``). The query × centroid
+    table is broadcast-sized; scan fraction ≈ n_probe/n_cells."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("c_cos"), F.asc("cell"))
+    cent = _centroid_frame(q.sparkSession, cent_lit)
+    return (
+        broadcast(q)
+        .crossJoin(broadcast(cent))
+        .select(
+            "query_id", "q_emb", "cell", *cols,
+            cosine(F.col("q_emb"), F.col("centroid")).alias("c_cos"),
+        )
+        .withColumn("pr", F.row_number().over(w))
+        .where(F.col("pr") <= n_probe)
+        .select("query_id", "q_emb", "cell", "pr", *cols)
+    )
+
+
+def _flat_scores(q: DataFrame, cand: DataFrame, on: str | None = None,
+                 extra: tuple[str, ...] = ()) -> DataFrame:
+    """(query_id, vec_id, *extra, cosine): the ``"flat"`` score stage —
+    exact cosine of every (query, candidate) pair of the broadcast query
+    frame ``q`` joined to the corpus side ``cand`` (cross join, or an
+    equi-join on the bucket/cell column ``on``), self excluded."""
+    joined = q.crossJoin(cand) if on is None else q.join(cand, on)
+    return _pair_cosine(
+        joined.where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", *extra, "q_emb", "embedding"),
+        "q_emb", "embedding", ["query_id", "vec_id", *extra],
+    )
+
+
+def _topk(pairs: DataFrame, score: str, k: int) -> DataFrame:
+    """(query_id, vec_id, score): the two-stage top-k per query — highest
+    cosine or smallest ADC distance first, ties → lowest vec_id."""
+    order = F.desc(score) if score == "cosine" else F.asc(score)
+    return topk_per_group(
+        pairs, ["query_id"], [order, F.asc("vec_id")], k
+    ).select("query_id", "vec_id", score)
+
+
+def _ivf_search(assigned: DataFrame, cent_lit, q: DataFrame, k: int,
+                n_probe: int, corpus: DataFrame | None = None) -> DataFrame:
+    """Probe → flat score → top-k over an inverted file. ``corpus`` (by
+    default ``assigned``) is the candidate side of the cell join — the
+    filtered tier passes a predicate-restricted view here."""
+    pairs = _flat_scores(
+        broadcast(_probe(q, cent_lit, n_probe)),
+        assigned if corpus is None else corpus, "cell", ("pr",),
+    )
+    return _topk(pairs.select("query_id", "vec_id", "cosine").distinct(),
+                 "cosine", k)
+
+
+def _lut(qsub: DataFrame, cb: DataFrame, *keys) -> DataFrame:
+    """(*keys, m, code, lut_d2): the ADC lookup table — exact query
+    sub-vectors against every codeword of their subspace, integer-exact
+    :func:`pq_d2`. |Q|·M·K rows (× n_probe for the residual stage): the
+    broadcast side of the ADC join."""
+    return qsub.join(broadcast(cb), "m").select(
+        *keys, "m", "code", pq_d2(F.col("sv"), F.col("cv")).alias("lut_d2")
+    )
+
+
+def _adc_topk(codes: DataFrame, lut: DataFrame, on: list[str],
+              k: int) -> DataFrame:
+    """The ``"pq"``/``"residual_pq"`` score stage + top-k: the codes
+    scan joins the broadcast LUT map-side and the per-(query, vector)
+    M-term sum combines map-side too (all M code rows of a vector come
+    from the producing task), so the only shuffle is skinny partial rows
+    into the final agg + the two-stage top-k. With a large query batch,
+    pivot the LUT to a per-query map keyed by m·K+code and fold codes
+    per row to drop even that shuffle."""
+    adc = (
+        codes.join(broadcast(lut), on)
+        .where(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("lut_d2").alias("adc_d2"))
+    )
+    return _topk(adc, "adc_d2", k)
+
+
+def _rerank(short: DataFrame, e: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine rerank of a k·factor shortlist (Jégou et al. §V-C):
+    the shortlist is broadcast against the (vec_id, embedding)
+    projection, so the exact-distance work is |Q|·k·factor rows at any
+    corpus size (a production deployment would point-look-up the
+    shortlist ids in a keyed store). Recall strictly improves on the ADC
+    ranking whenever quantization reordered true neighbors inside the
+    shortlist (pinned ≥ in tests at every fixture SF)."""
+    rer = (
+        e.join(broadcast(short), "vec_id")
+        .join(broadcast(q), "query_id")
+        .select(
+            "query_id", "vec_id",
+            cosine(F.col("q_emb"), F.col("embedding")).alias("cosine"),
+        )
+    )
+    return _topk(rer, "cosine", k)
+
+
+def knn(
+    embeddings: DataFrame,
+    query_ids: list[int],
+    k: int = 10,
+    *,
+    coarse: str | None = None,
+    code: str = "flat",
+    rerank: int | None = None,
+    candidate_filter=None,
+    n_cells: int = 16,
+    n_probe: int = 4,
+    n_iter: int = 2,
+    centroids: list[tuple[int, list[float]]] | None = None,
+    codebook: DataFrame | None = None,
+    keep: tuple[str, ...] = (),
+    dim: int = 64,
+    n_codes: int = PQ_CODES,
+    n_subspaces: int = PQ_SUBSPACES,
+    validated: bool = False,
+) -> DataFrame:
+    """Top-k neighbors of each query id: (query_id, vec_id, cosine) for
+    ``code="flat"`` or a rerank, (query_id, vec_id, adc_d2) for PQ codes;
+    k rows per query, self excluded, ties → lowest vec_id.
+
+    ``coarse`` picks the candidate generator:
+
+    - None: exact — every corpus row is a candidate (broadcast queries,
+      one corpus pass; the exact-kNN lower bound, and the ground truth
+      the approximate stages are measured against);
+    - ``"lsh"``: candidates share the query's random-hyperplane sign
+      bucket or differ in one bit (:func:`_lsh_bucketed`,
+      :func:`_multiprobe`);
+    - ``"kmeans"`` / ``"seed"`` / ``"lloyd"``: an inverted file over
+      ``n_cells`` cells, each query scanning its ``n_probe`` nearest
+      (:func:`_kmeans_assigned`, :func:`_coarse`, :func:`_probe`).
+
+    ``code`` picks the score: ``"flat"`` exact cosine, ``"pq"`` ADC
+    against a global codebook (``codebook`` reuses a trained one),
+    ``"residual_pq"`` ADC of residuals against their cell centroid with
+    a per-(query, probed cell) LUT (Jégou et al., TPAMI'11 §III —
+    residuals against the cell MEAN carry only the within-cell variance,
+    so the same M×K code budget spends its resolution on what the coarse
+    quantizer didn't explain). PQ codes bound the scan FOOTPRINT (M byte
+    codes per candidate instead of the float vector) as the inverted
+    file bounds the scan FRACTION; with a coarse stage, cell assignment
+    and encoding are ONE map-side corpus pass (:func:`_fused_assign_encode`).
+    ``rerank=factor`` re-ranks a k·factor shortlist by exact cosine
+    (:func:`_rerank`).
+
+    ``candidate_filter`` (a Column predicate) restricts the CANDIDATE
+    side before ranking — the pre-filter strategy, never post-filter
+    (rank, then drop, and return fewer than k). With an inverted file
+    the index is built over the FULL corpus (filters vary per query,
+    indexes don't) and the predicate lands on the probed cells' scan;
+    ``keep`` threads the predicate's columns through the assignment. A
+    highly selective filter inside unprobed cells needs a larger
+    ``n_probe`` (the ivf_probe_recall_sweep knob), not another
+    algorithm. ``validated`` callers pass :func:`validated_embeddings`'
+    output, so the length guard is not re-paid per stage.
+
+    Every closed-form combination (no coarse stage, ``"seed"``,
+    ``"lloyd"``; any code) is replayed bit-exactly by a DuckDB oracle.
+    """
+    spark = embeddings.sparkSession
+    e = (embeddings if validated
+         else embeddings.where(F.col("embedding").isNotNull()))
+    if rerank:
+        short = knn(
+            embeddings, query_ids, k * rerank, coarse=coarse, code=code,
+            candidate_filter=candidate_filter, n_cells=n_cells,
+            n_probe=n_probe, n_iter=n_iter, centroids=centroids,
+            codebook=codebook, keep=keep, dim=dim, n_codes=n_codes,
+            n_subspaces=n_subspaces, validated=validated,
+        ).select("query_id", "vec_id")
+        e = e.select("vec_id", "embedding")
+        return _rerank(short, e, _queries(e, query_ids), k)
+    if coarse is None and code == "flat":
+        cand = (embeddings if candidate_filter is None
+                else embeddings.where(candidate_filter))
+        return _topk(
+            _flat_scores(broadcast(_queries(embeddings, query_ids)), cand),
+            "cosine", k,
+        )
+    if coarse == "lsh":
+        emb_b = _lsh_bucketed(embeddings, _planes(dim),
+                              ["vec_id", "embedding"])
+        q = _queries(emb_b, query_ids, F.explode(
+            _multiprobe(F.col("bucket"), LSH_PLANES)).alias("bucket"))
+        return _topk(
+            _flat_scores(broadcast(q), emb_b, "bucket").distinct(),
+            "cosine", k,
+        )
+    if code == "pq" and coarse is None:
+        cb = codebook if codebook is not None else _pq_codebook_literal(
+            e, n_codes, n_subspaces, dim, validated=validated)
+        qsub = _pq_subvectors(e.where(F.col("vec_id").isin(*query_ids)),
+                              n_subspaces, dim, validated=validated)
+        return _adc_topk(
+            pq_encode(e, cb, n_subspaces, dim, validated=validated),
+            _lut(qsub, cb, F.col("vec_id").alias("query_id")),
+            ["m", "code"], k,
+        )
+
+    if coarse == "kmeans":
+        assigned, cent_lit = _kmeans_assigned(e, n_cells)
+    else:
+        cent_lit = _coarse(e, coarse, n_cells, n_iter, dim, centroids,
+                           validated)
+        if not cent_lit:
+            return _empty(spark, "cosine" if code == "flat" else "adc_d2")
+        if code == "flat":
+            assigned = _assigned(e, cent_lit, keep)
+    if code == "flat":
+        return _ivf_search(
+            assigned, cent_lit, _queries(assigned, query_ids), k, n_probe,
+            corpus=(None if candidate_filter is None
+                    else assigned.where(candidate_filter)),
+        )
+
+    residual = code == "residual_pq"
+    if codebook is None:
+        codebook = (
+            residual_pq_codebook(e, n_cells, n_codes, n_subspaces, dim,
+                                 n_iter=n_iter, centroids=cent_lit,
+                                 validated=validated)
+            if residual else
+            _pq_codebook_literal(e, n_codes, n_subspaces, dim,
+                                 validated=validated)
+        )
+    codes = _fused_assign_encode(e, cent_lit, codebook, n_subspaces, dim,
+                                 residual=residual)
+    q = _queries(e, query_ids)
+    if not residual:
+        probes = _probe(q, cent_lit, n_probe).select("query_id", "cell")
+        qsub = _pq_subvectors(e.where(F.col("vec_id").isin(*query_ids)),
+                              n_subspaces, dim, validated=validated)
+        return _adc_topk(
+            codes.join(broadcast(probes), "cell"),
+            _lut(qsub, codebook, F.col("vec_id").alias("query_id")),
+            ["query_id", "m", "code"], k,
+        )
+    # per-(query, probed cell) residual q − centroid(cell): the LUT key
+    # gains the cell column. The length guard runs before the zip_with
+    # for the same reason as in _ivf_residual_frame (zip_with would
+    # NULL-pad a short query); the residual rows are then structurally
+    # dim-length.
+    qres = _probe(q, cent_lit, n_probe, "centroid").select(
+        "query_id", "cell",
+        F.zip_with(
+            _guard_embedding_dim(dim, "q_emb"), F.col("centroid"),
+            lambda x, c: x.cast("double") - c,
+        ).alias("embedding"),
+    )
+    qsub = _pq_subvectors(qres, n_subspaces, dim,
+                          keep=("query_id", "cell"), validated=True)
+    return _adc_topk(codes, _lut(qsub, codebook, "query_id", "cell"),
+                     ["cell", "m", "code"], k)
+
+
+def _index_layout(spark, index_path: str) -> str:
+    """``"ivfpq"`` (``centroids/`` + ``codebook/`` + ``codes/``), ``"pq"``
+    (``codebook/`` + ``codes/``) or ``"ivf_flat"`` (a cell-partitioned
+    embedding table) — read from the directory layout the writers in
+    ``sources.sinks`` produce."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jvm_path(index_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    for layout, sub in (("ivfpq", "centroids"), ("pq", "codebook")):
+        if fs.exists(jvm_path(f"{index_path}/{sub}")):
+            return layout
+    return "ivf_flat"
+
+
+def knn_from_index(
+    spark,
+    index_path: str,
+    queries: DataFrame,
+    k: int = 10,
+    *,
+    n_probe: int = 4,
+    rerank: int | None = None,
+    embeddings: DataFrame | None = None,
+    include_streamed: bool = False,
+    candidate_filter=None,
+) -> DataFrame:
+    """:func:`knn` served from a PERSISTED index: the same stages, with
+    the models read back instead of trained and ``queries`` a
+    (vec_id, embedding) frame. The index kind comes from its layout
+    (:func:`_index_layout`), one per writer in ``sources.sinks``:
+
+    - IVF-flat (``write_ivf_index``): centroids are recovered as the
+      per-cell quantized means (:func:`_mean_literals`, n_cells × dim
+      rows), and the candidate scan reads ONLY the probed cell
+      partitions — dynamic partition pruning turns the probes⋈index
+      join on the partition column into a directory-level skip;
+    - PQ (``write_pq_index``): geometry (M = max(m)+1, subdim = len(cv))
+      is derived from the stored codebook rather than trusted from the
+      caller — a mismatch would NULL out every LUT distance — and the
+      scan reads only the packed codes (M bytes/vector); every query
+      row's length is checked in-plan by :func:`_pq_subvectors`;
+    - residual IVF-PQ (``write_ivfpq_index``): centroids and codebook
+      come from the session model cache (one bounded fetch per index),
+      and probe ranking + LUT are computed on the DRIVER
+      (:func:`_adc_lut_driver`, which also checks every query's length):
+      |Q|·n_probe·M·K rows cost microseconds of float math against ~2 s
+      of per-call Catalyst construction for the in-plan twin. Because
+      the probed cells are then known at planning time, the codes scan
+      gets a STATIC partition filter on ``cell`` — it never lists
+      unprobed directories — and the serve plan is ONE big-side job.
+
+    PQ and IVF-PQ results are bit-identical to the in-memory ``knn`` on
+    the same corpus: codebook/centroid doubles, byte codes and int64 LUT
+    distances all round-trip parquet exactly.
+
+    IVF-PQ only: ``include_streamed`` also searches the codes appended
+    by the streaming maintenance sink (``streaming.index_sink``), each
+    side pruned to the probed cells BEFORE the union so the streamed
+    tail never widens the base scan; ``candidate_filter`` (a predicate
+    over the ``write_ivfpq_index(meta_cols=...)`` sidecar) restricts
+    candidates BEFORE ranking — the sidecar scan is pruned to the same
+    cells, the predicate pushes into it, and the surviving (vec_id,
+    cell) keys semi-join the codes. The two are mutually exclusive
+    (appended codes have no sidecar rows and would be silently
+    excluded). ``rerank=factor`` re-ranks a k·factor shortlist by exact
+    cosine against the raw ``embeddings`` (:func:`_rerank`); a filter
+    threads through to the shortlist."""
+    if rerank:
+        short = knn_from_index(
+            spark, index_path, queries, k * rerank, n_probe=n_probe,
+            include_streamed=include_streamed,
+            candidate_filter=candidate_filter,
+        ).select("query_id", "vec_id")
+        e = embeddings.where(F.col("embedding").isNotNull()).select(
+            "vec_id", "embedding")
+        q = _queries(queries.where(F.col("embedding").isNotNull()))
+        return _rerank(short, e, q, k)
+    layout = _index_layout(spark, index_path)
+    if layout == "ivf_flat":
+        idx = spark.read.parquet(index_path)
+        return _ivf_search(idx, _mean_literals(idx, "cell"),
+                           _queries(queries), k, n_probe)
+    if layout == "pq":
+        cb = spark.read.parquet(f"{index_path}/codebook")
+        meta = cb.agg(F.max("m").alias("mm"),
+                      F.max(F.size("cv")).alias("sd")).first()
+        if meta["mm"] is None:  # empty index (empty corpus at write time)
+            return _empty(spark, "adc_d2")
+        n_subspaces = int(meta["mm"]) + 1
+        qsub = _pq_subvectors(queries, n_subspaces,
+                              n_subspaces * int(meta["sd"]))
+        codes = unpack_pq_codes(spark.read.parquet(f"{index_path}/codes"))
+        return _adc_topk(codes, _lut(qsub, cb, F.col("vec_id").alias(
+            "query_id")), ["m", "code"], k)
+
+    if candidate_filter is not None and include_streamed:
+        raise ValueError(
+            "candidate_filter with include_streamed is not supported: "
+            "streamed-appended codes carry no metadata sidecar rows and "
+            "would be silently excluded from a filtered search"
+        )
+    cb_rows, cent_rows = _index_models(spark, index_path)
+    if not cb_rows:  # empty index (empty corpus at write time)
+        return _empty(spark, "adc_d2")
+    n_subspaces = cb_rows[-1][0] + 1
+    sd = max(len(r[2]) for r in cb_rows)
+    lut_rows = _adc_lut_driver(
+        queries.select("vec_id", "embedding").collect(), cent_rows,
+        cb_rows, n_probe, n_subspaces, sd, n_subspaces * sd,
+    )
+    if not lut_rows:  # no valid queries
+        return _empty(spark, "adc_d2")
+    lut = spark.createDataFrame(
+        lut_rows, "query_id bigint, cell int, m int, code bigint, "
+                  "lut_d2 bigint")
+    probe_cells = sorted({r[1] for r in lut_rows})
+    pruned = spark.read.parquet(f"{index_path}/codes").where(
+        F.col("cell").isin(probe_cells))
+    if include_streamed:
+        from bigdata2016w_spark.streaming.index_sink import (
+            read_streamed_codes,
+        )
+
+        pruned = pruned.unionByName(
+            read_streamed_codes(spark, index_path)
+            .where(F.col("cell").isin(probe_cells))
+            .select(*pruned.columns)
+        )
+    if candidate_filter is not None:
+        allowed = (
+            spark.read.parquet(f"{index_path}/meta")
+            .where(F.col("cell").isin(probe_cells))
+            .where(candidate_filter)
+            .select("vec_id", "cell")
+        )
+        pruned = pruned.join(allowed, ["vec_id", "cell"], "left_semi")
+    codes = pruned.select(
+        "vec_id", "cell", F.posexplode("codes").alias("m", "code")
+    ).select("vec_id", "cell", "m", F.col("code").cast("bigint").alias("code"))
+    return _adc_topk(codes, lut, ["cell", "m", "code"], k)

@@ -35,43 +35,10 @@ def bfs_hops(
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """→ (id, dist) for every node reachable from ``source`` within
-    ``max_hops`` directed hops (dist = minimum hop count; source = 0)."""
-    spark = edges.sparkSession
-    par = num_partitions or spark.sparkContext.defaultParallelism
-    edges = edges.repartition(par, "src").localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(par, "id")
-        .localCheckpoint(eager=True)
-    )
-    dist = nodes.select(
-        "id",
-        F.when(F.col("id") == F.lit(source), F.lit(0).cast("long")).alias("dist"),
-    ).localCheckpoint(eager=True)
-
-    for it in range(max_hops):
-        relaxed = (
-            edges.join(dist, edges.src == dist.id)
-            .where(F.col("dist").isNotNull())
-            .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
-        )
-        # bare groupBy: map-side partial min-combine + AQE-sized exchange.
-        # The alternative (explicit repartition(par, id) to co-partition
-        # every round with the edge join key) was A/B-measured SLOWER on
-        # local[32] (1.80 s vs 1.68 s; same result for the equivalent
-        # PageRank change, 4.17 s vs 3.21 s) — the extra full-row
-        # exchange costs more than AQE's handling of the mismatch.
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if (it + 1) % checkpoint_every == 0 or it == max_hops - 1:
-            dist = dist.localCheckpoint(eager=True)
-
-    return dist.where(F.col("dist").isNotNull()).select("id", "dist")
+    ``max_hops`` directed hops (dist = minimum hop count; source = 0):
+    :func:`sssp_weighted` with every edge weight 1."""
+    return sssp_weighted(edges.withColumn("w", F.lit(1)), source, max_hops,
+                         num_partitions, checkpoint_every)
 
 
 def kcore_peel(
@@ -202,13 +169,12 @@ def sssp_weighted(
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """→ (id, dist) minimum WEIGHTED distance from ``source`` using at
-    most ``rounds`` edges per path — bounded-round Bellman-Ford, the
-    weighted sibling of :func:`bfs_hops`.
+    most ``rounds`` edges per path — bounded-round Bellman-Ford;
+    :func:`bfs_hops` is the w = 1 case.
 
-    Same Pregel min-combine shape: each round relaxes every edge out of
-    the current frontier (dist + w) and folds with a bare groupBy min
-    (map-side partial combine; the explicit co-partition alternative
-    was A/B-measured slower — see bfs_hops). All arithmetic is exact
+    Pregel min-combine shape: each round relaxes every edge out of the
+    current frontier (dist + w) and folds with a bare groupBy min
+    (map-side partial combine). All arithmetic is exact
     integer, so the unrolled-CTE oracle replays every round with no
     float caveat; ``rounds`` bounds path length exactly as the driver
     loop does, making the oracle equality total, not asymptotic.
@@ -236,6 +202,12 @@ def sssp_weighted(
             .select(F.col("dst").alias("id"),
                     (F.col("dist") + F.col("w")).alias("dist"))
         )
+        # bare groupBy: map-side partial min-combine + AQE-sized exchange.
+        # The alternative (explicit repartition(par, id) to co-partition
+        # every round with the edge join key) was A/B-measured SLOWER on
+        # local[32] (1.80 s vs 1.68 s; same result for the equivalent
+        # PageRank change, 4.17 s vs 3.21 s) — the extra full-row
+        # exchange costs more than AQE's handling of the mismatch.
         dist = (
             dist.unionByName(relaxed)
             .groupBy("id")

@@ -730,7 +730,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composes the engine's existing retrievers: ``bm25_rank`` (postings
     point-lookups, in-plan broadcast corpus stats, TakeOrdered top-k)
-    and ``knn_bruteforce`` (broadcast query vector, corpus never
+    and exact ``knn`` (broadcast query vector, corpus never
     shuffled, two-stage top-k). Each side returns ``HYBRID_CAND_K``
     candidates; ranking windows run over those bounded candidate sets
     only (≤50 rows), never the corpus. ``doc_id == vec_id`` is the
@@ -738,7 +738,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     are single IEEE expressions of exact integer ranks — bit-stable.
     """
     from bigdata2016w_spark.operators.retrieval import bm25_rank
-    from bigdata2016w_spark.operators.similarity import knn_bruteforce
+    from bigdata2016w_spark.operators.similarity import knn
     from bigdata2016w_spark.plans.retrieval import BM25_TERMS
 
     docs = load_table(spark, sf_dir, "documents")
@@ -749,7 +749,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.desc("score"), F.asc("docid")))
         .alias("r_lex"),
     )
-    vec = knn_bruteforce(emb, [HYBRID_QUERY_VEC], HYBRID_CAND_K).select(
+    vec = knn(emb, [HYBRID_QUERY_VEC], HYBRID_CAND_K).select(
         F.col("vec_id"),
         F.row_number()
         .over(Window.orderBy(F.desc("cosine"), F.asc("vec_id")))

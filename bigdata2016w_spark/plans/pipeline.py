@@ -38,9 +38,8 @@ from bigdata2016w_spark.operators.dedup import (
 from bigdata2016w_spark.operators.similarity import (
     _planes,
     embedding_near_dupes,
-    knn_bruteforce,
-    knn_ivf,
-    knn_lsh,
+    knn,
+    knn_from_index,
 )
 from bigdata2016w_spark.registry import QuerySpec, register
 from bigdata2016w_spark.shared import (
@@ -114,17 +113,34 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return knn_bruteforce(
-        load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K
-    )
+    """Exact top-k cosine neighbors for each query id: (query_id,
+    vec_id, cosine), k rows per query, self excluded, ties broken by
+    vec_id. Broadcast the (small) query set, one pass over the corpus,
+    per-query two-stage top-k — the corpus itself never shuffles, so it
+    scales to arbitrarily large embedding tables (a scan, the exact-kNN
+    lower bound); see operators/similarity.knn."""
+    return knn(load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K)
 
 
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return knn_lsh(load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K)
+    """Approximate top-k by random-hyperplane LSH: sign buckets from
+    fixed seeded hyperplanes (deterministic across runs); candidates
+    share the query's bucket or differ in exactly one sign bit
+    (multi-probe — recall insurance against boundary flips), ranked by
+    exact cosine; see operators/similarity.knn(coarse="lsh")."""
+    return knn(load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K,
+               coarse="lsh")
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return knn_ivf(load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K)
+    """IVF (inverted-file) approximate kNN: an MLlib KMeans coarse
+    quantizer assigns every vector to one of 16 cells; each query scans
+    only its 4 nearest cells, ranked by exact cosine — scan fraction ≈
+    n_probe/n_cells, deterministic given the seed. No oracle (the fit is
+    iterative); the exact-arithmetic twin is ann_ivf_lloyd. See
+    operators/similarity.knn(coarse="kmeans")."""
+    return knn(load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K,
+               coarse="kmeans")
 
 
 def emb_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,9 +461,9 @@ register(QuerySpec("dedup_minhash_lsh", dedup_minhash, _DEDUP_MINHASH_SQL,
 register(QuerySpec("dedup_simhash", dedup_simhash, _DEDUP_SIMHASH_SQL,
                    doc=simhash_near_dupes.__doc__))
 register(QuerySpec("ann_bruteforce", ann_bruteforce, _ANN_SQL,
-                   doc=knn_bruteforce.__doc__))
-register(QuerySpec("ann_lsh", ann_lsh, _ANN_LSH_SQL, doc=knn_lsh.__doc__))
-register(QuerySpec("ann_ivf", ann_ivf, None, doc=knn_ivf.__doc__))
+                   doc=ann_bruteforce.__doc__))
+register(QuerySpec("ann_lsh", ann_lsh, _ANN_LSH_SQL, doc=ann_lsh.__doc__))
+register(QuerySpec("ann_ivf", ann_ivf, None, doc=ann_ivf.__doc__))
 register(QuerySpec("doc_stats", doc_stats, _DOC_STATS_SQL, doc=doc_stats.__doc__))
 register(QuerySpec("doc_lang_id", doc_lang_id, _LANG_ID_SQL,
                    doc=doc_lang_id.__doc__))
@@ -840,11 +856,8 @@ register(QuerySpec("embedding_nearest_centroid", embedding_nearest_centroid,
 
 
 def ann_ivf_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_ivf_flat
-
-    return knn_ivf_flat(
-        load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K
-    )
+    return knn(load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K,
+               coarse="seed")
 
 
 _IVF_CELLS, _IVF_PROBE = 16, 4
@@ -900,7 +913,7 @@ SELECT query_id, vec_id, cosine FROM ranked WHERE rn <= {KNN_K}
 
 register(QuerySpec("ann_ivf_flat", ann_ivf_flat, _ANN_IVF_FLAT_SQL,
                    doc="Deterministic seed-centroid IVF-Flat; see "
-                       "operators/similarity.knn_ivf_flat."))
+                       "operators/similarity.knn(coarse=\"seed\")."))
 
 
 # metadata-filtered vector search: the candidate predicate of the
@@ -910,12 +923,11 @@ ANN_FILTER_LABELS = (1, 3)
 
 
 def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_ivf_filtered
-
-    return knn_ivf_filtered(
-        load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS,
-        F.col("label").isin(*ANN_FILTER_LABELS), KNN_K,
-        n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
+    return knn(
+        load_table(spark, sf_dir, "embeddings"), KNN_QUERY_IDS, KNN_K,
+        coarse="seed",
+        candidate_filter=F.col("label").isin(*ANN_FILTER_LABELS),
+        keep=("label",), n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
     )
 
 
@@ -977,16 +989,14 @@ register(QuerySpec(
     "ann_ivf_filtered", ann_ivf_filtered, _ANN_IVF_FILTERED_SQL,
     doc="Metadata-filtered IVF vector search (pre-filter on the "
         "candidate side of the probe join); see "
-        "operators/similarity.knn_ivf_filtered."))
+        "operators/similarity.knn(candidate_filter)."))
 
 
 def ann_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_ivf_lloyd
-
-    return knn_ivf_lloyd(
+    return knn(
         _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, KNN_K,
-        n_cells=_IVF_CELLS, n_probe=_IVF_PROBE, n_iter=_LLOYD_ITERS,
-        validated=True,
+        coarse="lloyd", n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
+        n_iter=_LLOYD_ITERS, validated=True,
     )
 
 
@@ -1084,7 +1094,7 @@ SELECT query_id, vec_id, cosine FROM ranked WHERE rn <= {KNN_K}
 register(QuerySpec("ann_ivf_lloyd", ann_ivf_lloyd, _ANN_IVF_LLOYD_SQL,
                    doc="Exact-arithmetic distributed Lloyd IVF — the "
                        "oracle-verified twin of the MLlib-backed ann_ivf; "
-                       "see operators/similarity.knn_ivf_lloyd."))
+                       "see operators/similarity.lloyd_centroids."))
 
 
 # The trained-codebook literal is shared by ann_pq_adc and ann_ivf_pq —
@@ -1105,11 +1115,10 @@ def _shared_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_pq_adc
-
-    return knn_pq_adc(
+    return knn(
         _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, KNN_K,
-        codebook=_shared_pq_codebook(spark, sf_dir), validated=True,
+        code="pq", codebook=_shared_pq_codebook(spark, sf_dir),
+        validated=True,
     )
 
 
@@ -1224,15 +1233,13 @@ SELECT query_id, vec_id, adc_d2 FROM (
 register(QuerySpec("ann_pq_adc", ann_pq_adc, _ANN_PQ_ADC_SQL,
                    doc="Product-quantization ADC search — 4-byte codes "
                        "instead of 256-byte vectors at scan time; see "
-                       "operators/similarity.knn_pq_adc."))
+                       "operators/similarity.knn(code=\"pq\")."))
 
 
 def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_ivf_pq
-
-    return knn_ivf_pq(
+    return knn(
         _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, KNN_K,
-        n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
+        coarse="seed", code="pq", n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         codebook=_shared_pq_codebook(spark, sf_dir), validated=True,
     )
 
@@ -1293,7 +1300,7 @@ SELECT query_id, vec_id, adc_d2 FROM (
 
 register(QuerySpec("ann_ivf_pq", ann_ivf_pq, _ANN_IVF_PQ_SQL,
                    doc="IVF-PQ: probe-bounded scan fraction × PQ-bounded "
-                       "scan footprint; see operators/similarity.knn_ivf_pq."))
+                       "scan footprint; see operators/similarity.knn."))
 
 
 # The residual tier's two models — the Lloyd coarse centroids and the
@@ -1339,15 +1346,17 @@ def _shared_residual_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_ivf_pq_residual
+    return _residual_knn(spark, sf_dir, KNN_K)
 
-    return knn_ivf_pq_residual(
-        _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, KNN_K,
-        n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
+
+def _residual_knn(spark: SparkSession, sf_dir: str, k: int,
+                  rerank: int | None = None) -> DataFrame:
+    return knn(
+        _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, k,
+        coarse="lloyd", code="residual_pq", rerank=rerank,
+        n_cells=_IVF_CELLS, n_probe=_IVF_PROBE, n_iter=_LLOYD_ITERS,
         codebook=_shared_residual_pq_codebook(spark, sf_dir),
-        n_iter=_LLOYD_ITERS,
-        centroids=_shared_lloyd_centroids(spark, sf_dir),
-        validated=True,
+        centroids=_shared_lloyd_centroids(spark, sf_dir), validated=True,
     )
 
 
@@ -1470,7 +1479,8 @@ register(QuerySpec(
     doc="Residual-aware IVF-PQ (Jégou et al., TPAMI'11): codes quantize "
         "x − centroid(cell), the LUT is per-(query, probed cell); higher "
         "recall than the global-codebook ann_ivf_pq at the same scan "
-        "fraction/footprint; see operators/similarity.knn_ivf_pq_residual."))
+        "fraction/footprint; see "
+        "operators/similarity.knn(code=\"residual_pq\")."))
 
 
 # --- streamed-index probe: base codes + streaming-sink appends -------------
@@ -1504,14 +1514,12 @@ def _streamed_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
 
 
 def ann_ivfpq_streamed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_ivfpq_from_index
-
     idx = _streamed_ivfpq_index(spark, sf_dir)
     queries = _shared_valid_embeddings(spark, sf_dir).where(
         F.col("vec_id").isin(*KNN_QUERY_IDS)
     )
-    return knn_ivfpq_from_index(
-        spark, idx, queries, k=KNN_K, n_probe=_IVF_PROBE,
+    return knn_from_index(
+        spark, idx, queries, KNN_K, n_probe=_IVF_PROBE,
         include_streamed=True,
     )
 
@@ -1533,7 +1541,7 @@ register(QuerySpec(
         "appended codes (odd half), both sides pruned to the probed "
         "cells; the oracle replays the fit on the base sub-corpus and "
         "the frozen-model encode of every vector statically; see "
-        "operators/similarity.knn_ivfpq_from_index and "
+        "operators/similarity.knn_from_index and "
         "streaming/index_sink.ivfpq_append_sink."))
 
 
@@ -1541,17 +1549,7 @@ RERANK_FACTOR = 3
 
 
 def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_ivf_pq_rerank
-
-    return knn_ivf_pq_rerank(
-        _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, KNN_K,
-        rerank_factor=RERANK_FACTOR,
-        n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
-        codebook=_shared_residual_pq_codebook(spark, sf_dir),
-        n_iter=_LLOYD_ITERS,
-        centroids=_shared_lloyd_centroids(spark, sf_dir),
-        validated=True,
-    )
+    return _residual_knn(spark, sf_dir, KNN_K, rerank=RERANK_FACTOR)
 
 
 _ANN_IVF_PQ_RERANK_SQL = f"""
@@ -1582,7 +1580,7 @@ register(QuerySpec(
     doc="Two-stage ANN: residual IVF-PQ ADC shortlist (k×3 candidates "
         "from code bytes only) exactly re-ranked by true cosine over "
         "just the shortlist rows — the standard production refinement "
-        "step; see operators/similarity.knn_ivf_pq_rerank."))
+        "step; see operators/similarity.knn(rerank)."))
 
 
 SEMDEDUP_THRESHOLD = 0.4  # same bar as embedding_near_dupes
@@ -1815,17 +1813,16 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides are the registered operators (same plans as ann_bruteforce /
     ann_ivf_flat); the comparison is one k-row-per-query equi-join, so
     the eval costs the two searches plus epsilon."""
-    from bigdata2016w_spark.operators.similarity import knn_ivf_flat
-
     emb = load_table(spark, sf_dir, "embeddings")
     # checkpoint the ground truth: it feeds BOTH the hit join and the
     # per-query base, and uncheckpointed the whole brute-force subplan
     # executed once per consumer (r12; the semdedup shared-intermediate
     # convention — rows are identical, the subtree just runs once)
-    bf = knn_bruteforce(emb, KNN_QUERY_IDS, KNN_K).select(
+    bf = knn(emb, KNN_QUERY_IDS, KNN_K).select(
         "query_id", "vec_id"
     ).localCheckpoint(eager=False)
-    iv = knn_ivf_flat(emb, KNN_QUERY_IDS, KNN_K).select("query_id", "vec_id")
+    iv = knn(emb, KNN_QUERY_IDS, KNN_K, coarse="seed").select(
+        "query_id", "vec_id")
     hits = bf.join(iv, ["query_id", "vec_id"]).groupBy("query_id").agg(
         F.count("*").alias("n_hits")
     )
@@ -1866,7 +1863,7 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    nn = knn_bruteforce(emb, KNN_QUERY_IDS, KNN_K)
+    nn = knn(emb, KNN_QUERY_IDS, KNN_K)
     # a NULL label is not a vote — and keeping it would diverge the
     # engines at the tie-break (Spark ASC sorts NULLs first, DuckDB's
     # default sorts them last)
@@ -2008,15 +2005,15 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth — the Matryoshka/truncation eval that decides whether a
     4x cheaper scan (and 4x smaller index) keeps enough neighborhood
     structure. Same two-search + k-row-join shape as ann_recall_eval;
-    the truncated side is the same knn_bruteforce plan over a sliced
+    the truncated side is the same exact knn plan over a sliced
     embedding column, so the scan still never shuffles."""
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
     )
-    full = knn_bruteforce(emb, KNN_QUERY_IDS, KNN_K).select(
+    full = knn(emb, KNN_QUERY_IDS, KNN_K).select(
         "query_id", "vec_id"
     )
-    trunc = knn_bruteforce(
+    trunc = knn(
         emb.select(
             "vec_id", F.slice("embedding", 1, TRUNC_DIMS).alias("embedding")
         ),
@@ -2432,14 +2429,12 @@ def _filtered_serve_index(spark: SparkSession, sf_dir: str) -> str:
 
 
 def ann_ivfpq_filtered_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata2016w_spark.operators.similarity import knn_ivfpq_from_index
-
     idx = _filtered_serve_index(spark, sf_dir)
     queries = _shared_valid_embeddings(spark, sf_dir).where(
         F.col("vec_id").isin(*KNN_QUERY_IDS)
     )
-    return knn_ivfpq_from_index(
-        spark, idx, queries, KNN_K, _IVF_PROBE,
+    return knn_from_index(
+        spark, idx, queries, KNN_K, n_probe=_IVF_PROBE,
         candidate_filter=F.col("label").isin(*ANN_FILTER_LABELS),
     )
 
@@ -2463,5 +2458,5 @@ register(QuerySpec(
     _ANN_IVFPQ_FILTERED_SQL,
     doc="Metadata-filtered ADC search served from the persisted "
         "IVF-PQ index via its cell-partitioned label sidecar; see "
-        "operators/similarity.knn_ivfpq_from_index(candidate_filter) "
+        "operators/similarity.knn_from_index(candidate_filter) "
         "and sources/sinks.write_ivfpq_index(meta_cols)."))

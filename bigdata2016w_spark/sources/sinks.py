@@ -186,7 +186,7 @@ def write_pq_index(embeddings: DataFrame, path: str,
     """Persist a product-quantization index: ``{path}/codebook`` (M·K
     codeword rows — the model artifact) and ``{path}/codes`` (one row
     per vector: M byte-sized code ids packed positionally). Downstream
-    ADC search (``operators.similarity.knn_pq_from_index``) scans ONLY
+    ADC search (``operators.similarity.knn_from_index``) scans ONLY
     the codes table — M bytes per vector instead of 4·dim — which is
     what makes a 100 TB embedding corpus searchable from disk without
     rehydrating the floats. Training cost is bounded by the codebook's
@@ -229,7 +229,7 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
     (the residual PQ codewords, M·K rows), and ``{path}/codes``
     (hive-partitioned by cell: vec_id + M positionally-packed byte
     codes of the vector's RESIDUAL against its cell centroid). A probe
-    (``operators.similarity.knn_ivfpq_from_index``) reads n_probe cell
+    (``operators.similarity.knn_from_index``) reads n_probe cell
     DIRECTORIES of M-byte rows — scan fraction × scan footprint both
     enforced by the filesystem, which is what lets a 100 TB embedding
     corpus re-fit NOTHING at query time: both models are train-once
@@ -239,7 +239,7 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
     ``meta_cols`` additionally persists ``{path}/meta`` — an attribute
     SIDECAR (vec_id + the named metadata columns from the input frame),
     hive-partitioned by the same ``cell`` as the codes — so a
-    metadata-filtered probe (candidate_filter in knn_ivfpq_from_index)
+    metadata-filtered probe (candidate_filter in knn_from_index)
     prunes BOTH scans to the probed cells and pushes the predicate into
     the sidecar's parquet scan; candidate cost stays selectivity ×
     probed-fraction of the corpus. Costs one extra assignment pass at

@@ -12,7 +12,7 @@ batch N's packed codes land under ``{index}/codes_stream/batch=N``,
 hive-partitioned by cell inside the batch dir, so a replayed batch
 overwrites its own subdir instead of doubling. Probes union the base
 ``codes`` partitions with the streamed ones
-(``knn_ivfpq_from_index(include_streamed=True)``); both sides prune to
+(``knn_from_index(include_streamed=True)``); both sides prune to
 the probed cells BEFORE the union, so the scan stays n_probe cell
 directories of M-byte rows on each side.
 
@@ -117,7 +117,7 @@ def ivfpq_index_compact(spark: SparkSession, index_path: str) -> int:
     if not dirs:
         return 0
     # streamed batch dirs carry NO metadata-sidecar rows — filtered
-    # search over them already raises (knn_ivfpq_from_index's
+    # search over them already raises (knn_from_index's
     # include_streamed guard). Folding them into the base codes would
     # strip that guard: the rows become base rows that every filtered
     # probe silently excludes. Refuse rather than silently corrupt the

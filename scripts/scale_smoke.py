@@ -418,7 +418,7 @@ def main() -> None:
     from bigdata2016w_spark.operators.similarity import (
         _assign_to_literal_centroids,
         _ivf_residual_frame,
-        knn_ivf_pq_residual,
+        knn,
         lloyd_centroids,
         residual_pq_codebook,
     )
@@ -456,14 +456,14 @@ def main() -> None:
     qids = list(range(n_cells, n_cells + 5))
     k, factor = 10, 3
     t0 = time.perf_counter()
-    sl_full = knn_ivf_pq_residual(
-        emb, qids, k * factor, n_cells, dim=dim, codebook=rcb,
-        centroids=cents,
+    sl_full = knn(
+        emb, qids, k * factor, coarse="lloyd", code="residual_pq",
+        n_cells=n_cells, dim=dim, codebook=rcb, centroids=cents,
     ).count()
     wall_sl = time.perf_counter() - t0
-    sl_half = knn_ivf_pq_residual(
-        half_emb, qids, k * factor, n_cells, dim=dim, codebook=rcb,
-        centroids=cents,
+    sl_half = knn(
+        half_emb, qids, k * factor, coarse="lloyd", code="residual_pq",
+        n_cells=n_cells, dim=dim, codebook=rcb, centroids=cents,
     ).count()
     print(f"rerank shortlist rows: {wall_sl:.1f}s, {sl_half} @ "
           f"{n_vecs // 2} -> {sl_full} @ {n_vecs} (|Q|·k·factor = "
@@ -548,7 +548,7 @@ def main() -> None:
     import shutil
     from pathlib import Path
 
-    from bigdata2016w_spark.operators.similarity import knn_ivfpq_from_index
+    from bigdata2016w_spark.operators.similarity import knn_from_index
     from bigdata2016w_spark.sources.sinks import write_ivfpq_index
     from bigdata2016w_spark.streaming.index_sink import (
         ivfpq_append_sink,
@@ -580,13 +580,13 @@ def main() -> None:
         ivfpq_append_sink(stream, idx, f"{tmp}/ck{n}").awaitTermination()
         queries = e.where(F.col("vec_id").isin(list(range(16, 21))))
         pre_fan = len(_batch_dirs(spark, f"{idx}/codes_stream"))
-        pre = sorted(map(tuple, knn_ivfpq_from_index(
+        pre = sorted(map(tuple, knn_from_index(
             spark, idx, queries, include_streamed=True).collect()))
         t0 = time.perf_counter()
         folded = ivfpq_index_compact(spark, idx)
         wall = time.perf_counter() - t0
         post_fan = len(_batch_dirs(spark, f"{idx}/codes_stream"))
-        post = sorted(map(tuple, knn_ivfpq_from_index(
+        post = sorted(map(tuple, knn_from_index(
             spark, idx, queries, include_streamed=True).collect()))
         assert pre == post, "index compaction changed probe results"
         assert post_fan == 0 and folded > 0

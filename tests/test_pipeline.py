@@ -481,7 +481,8 @@ def test_ivf_persisted_index_probe(spark, sf_dir, tmp_path):
     from bigdata2016w_spark.operators.similarity import (
         CENTROID_QUANT,
         _assign_to_literal_centroids,
-        knn_ivf_from_index,
+        _index_layout,
+        knn_from_index,
     )
     from bigdata2016w_spark.sources.catalog import load_table
     from bigdata2016w_spark.sources.sinks import write_ivf_index
@@ -496,8 +497,10 @@ def test_ivf_persisted_index_probe(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivf")
     write_ivf_index(assigned, path)
 
+    assert _index_layout(spark, path) == "ivf_flat"
     k, n_probe = 10, 4
-    out = knn_ivf_from_index(spark, path, [0, 1, 2], k=k, n_probe=n_probe)
+    queries = emb.where(F.col("vec_id").isin(0, 1, 2))
+    out = knn_from_index(spark, path, queries, k=k, n_probe=n_probe)
     got = {}
     for r in out.collect():
         got.setdefault(r.query_id, []).append((r.vec_id, r.cosine))
@@ -534,7 +537,7 @@ def test_ivf_persisted_index_probe(spark, sf_dir, tmp_path):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        knn_ivf_from_index(spark, path, [0, 1, 2]).explain("formatted")
+        knn_from_index(spark, path, queries).explain("formatted")
     plan = buf.getvalue()
     assert "dynamicpruning" in plan
 
@@ -746,7 +749,7 @@ def test_pq_adc_exact_on_codebook_points(spark):
     codeword, so the Lloyd mean reproduces it (values at 6 dp), encoding
     is exact, and each query's nearest ADC neighbor is its duplicate at
     adc_d2 == 0."""
-    from bigdata2016w_spark.operators.similarity import knn_pq_adc
+    from bigdata2016w_spark.operators.similarity import knn
 
     base = [
         [1.0, 0.0, 0.5, 0.25, -1.0, 2.0, 0.125, 0.5],
@@ -757,8 +760,7 @@ def test_pq_adc_exact_on_codebook_points(spark):
     rows = [(i, v) for i, v in enumerate(base)]
     rows += [(i + 4, v) for i, v in enumerate(base)]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = knn_pq_adc(emb, [0, 1], k=1, n_codes=4, n_subspaces=4, dim=8,
-                     )
+    out = knn(emb, [0, 1], k=1, code="pq", n_codes=4, n_subspaces=4, dim=8)
     got = {r.query_id: (r.vec_id, r.adc_d2) for r in out.collect()}
     assert got == {0: (4, 0), 1: (5, 0)}
 
@@ -773,7 +775,7 @@ def test_pq_length_guard_shared_by_all_entry_points(spark):
     import pytest
 
     from bigdata2016w_spark.operators.similarity import (
-        knn_pq_adc, pq_codebook, pq_encode,
+        knn, pq_codebook, pq_encode,
     )
 
     base = [
@@ -794,22 +796,20 @@ def test_pq_length_guard_shared_by_all_entry_points(spark):
     with pytest.raises(Exception, match="does not match the PQ geometry"):
         pq_encode(dirty, cb, n_subspaces=4, dim=8).collect()
     with pytest.raises(Exception, match="does not match the PQ geometry"):
-        knn_pq_adc(dirty, [0, 1], k=1, n_codes=4, n_subspaces=4, dim=8,
-                   codebook=cb).collect()
+        knn(dirty, [0, 1], k=1, code="pq", n_codes=4, n_subspaces=4,
+            dim=8, codebook=cb).collect()
     # the RESIDUAL path must raise too — its zip_with against the
     # centroid NULL-pads a short vector to full length, so without its
     # own pre-zip guard the shared _pq_subvectors check never fires
-    from bigdata2016w_spark.operators.similarity import knn_ivf_pq_residual
-
     with pytest.raises(Exception, match="does not match the PQ geometry"):
-        knn_ivf_pq_residual(dirty, [0, 1], k=1, n_cells=4, n_probe=2,
-                            n_codes=4, n_subspaces=4, dim=8).collect()
+        knn(dirty, [0, 1], k=1, coarse="lloyd", code="residual_pq",
+            n_cells=4, n_probe=2, n_codes=4, n_subspaces=4, dim=8).collect()
     # NULL embedding alone: dropped, not raised — the clean answers hold
     with_null = clean.union(spark.createDataFrame(
         [(9, None)], "vec_id bigint, embedding array<float>"))
     got = {r.query_id: (r.vec_id, r.adc_d2) for r in
-           knn_pq_adc(with_null, [0, 1], k=1, n_codes=4, n_subspaces=4,
-                      dim=8, codebook=cb).collect()}
+           knn(with_null, [0, 1], k=1, code="pq", n_codes=4, n_subspaces=4,
+               dim=8, codebook=cb).collect()}
     assert got == {0: (4, 0), 1: (5, 0)}
 
 
@@ -843,7 +843,7 @@ def test_lloyd_entry_points_share_embedding_dim_guard(spark):
     import pytest
 
     from bigdata2016w_spark.operators.similarity import (
-        knn_ivf_lloyd, lloyd_centroids,
+        knn, lloyd_centroids,
     )
 
     base = [
@@ -861,8 +861,8 @@ def test_lloyd_entry_points_share_embedding_dim_guard(spark):
         "vec_id bigint, embedding array<float>",
     ))
     with pytest.raises(Exception, match="does not match the PQ geometry"):
-        knn_ivf_lloyd(dirty, [0, 1], k=1, n_cells=4, n_probe=2,
-                      n_iter=1, dim=8).collect()
+        knn(dirty, [0, 1], k=1, coarse="lloyd", n_cells=4, n_probe=2,
+            n_iter=1, dim=8).collect()
     with pytest.raises(Exception, match="does not match the PQ geometry"):
         lloyd_centroids(dirty, n_cells=4, n_iter=1, dim=8)
     # NULL embedding alone: dropped, not raised; the fit still returns
@@ -911,33 +911,46 @@ def ivfpq_full_index(spark, sf_dir, tmp_path_factory):
     return path
 
 
-def test_ivfpq_index_roundtrip_matches_inmemory(spark, sf_dir,
-                                                ivfpq_full_index):
-    """write_ivfpq_index → knn_ivfpq_from_index must reproduce
-    knn_ivf_pq_residual bit-exactly (Lloyd centroids, residual codebook
-    doubles, byte codes, and int64 LUT distances all round-trip
-    parquet), the persisted codes must be materially smaller than the
-    raw embeddings, and the probe scan must be statically
-    partition-pruned so only probed cell directories are read."""
+@pytest.mark.parametrize("layout", ["pq", "ivfpq"])
+def test_index_roundtrip_matches_inmemory(spark, sf_dir, tmp_path, request,
+                                          layout):
+    """Each persisted PQ layout → knn_from_index must reproduce its
+    in-memory knn twin bit-exactly (codebook/centroid doubles, byte
+    codes, and int64 LUT distances all round-trip parquet), knn_from_index
+    must detect the layout from the directory alone, and the persisted
+    codes must be materially smaller than the raw embeddings. The IVF-PQ
+    probe scan must also be statically partition-pruned so only probed
+    cell directories are read. (The IVF-flat layout's twin is a NumPy
+    recomputation: test_ivf_persisted_index_probe.)"""
+    import contextlib
+    import io
     import os
+    import re
 
     from bigdata2016w_spark.operators.similarity import (
-        knn_ivf_pq_residual,
-        knn_ivfpq_from_index,
+        _index_layout,
+        knn,
+        knn_from_index,
     )
     from bigdata2016w_spark.sources.catalog import load_table
+    from bigdata2016w_spark.sources.sinks import write_pq_index
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = ivfpq_full_index
+    if layout == "pq":
+        path = str(tmp_path / "pq_index")
+        write_pq_index(emb, path)
+        twin = {"code": "pq"}
+    else:
+        path = request.getfixturevalue("ivfpq_full_index")
+        twin = {"coarse": "lloyd", "code": "residual_pq", "n_cells": 16,
+                "n_probe": 4}
+    assert _index_layout(spark, path) == layout
     qids = [0, 1, 2, 3, 4]
     queries = emb.where(emb.vec_id.isin(qids)).select("vec_id", "embedding")
-    from_index = knn_ivfpq_from_index(
-        spark, path, queries, k=10, n_probe=4
-    ).collect()
-    in_memory = knn_ivf_pq_residual(
-        emb, qids, k=10, n_cells=16, n_probe=4
-    ).collect()
-    assert sorted(map(tuple, from_index)) == sorted(map(tuple, in_memory))
+    from_index = knn_from_index(spark, path, queries, k=10, n_probe=4)
+    in_memory = knn(emb, qids, k=10, **twin).collect()
+    assert sorted(map(tuple, from_index.collect())) == \
+        sorted(map(tuple, in_memory))
 
     def _bytes(d):
         if os.path.isfile(d):
@@ -948,27 +961,39 @@ def test_ivfpq_index_roundtrip_matches_inmemory(spark, sf_dir,
 
     assert _bytes(f"{path}/codes") < _bytes(f"{sf_dir}/embeddings.parquet") / 3
 
-    # physical proof: the codes scan is partition-pruned STATICALLY —
-    # the probed cells are known at planning time (driver-materialized
-    # LUT), so the hive `cell` filter lands in PartitionFilters and the
-    # scan never lists unprobed directories (stronger than the previous
-    # runtime-DPP-subquery formulation)
-    import contextlib
-    import io
-    import re
+    if layout == "ivfpq":
+        # physical proof: the codes scan is partition-pruned STATICALLY —
+        # the probed cells are known at planning time (driver-materialized
+        # LUT), so the hive `cell` filter lands in PartitionFilters and
+        # the scan never lists unprobed directories
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            from_index.explain("formatted")
+        plan = buf.getvalue()
+        m = re.search(r"PartitionFilters: \[([^\]]*cell[^\]]*)\]", plan)
+        assert m and "IN" in m.group(1).upper(), plan[:2000]
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        knn_ivfpq_from_index(spark, path, queries).explain("formatted")
-    plan = buf.getvalue()
-    m = re.search(r"PartitionFilters: \[([^\]]*cell[^\]]*)\]", plan)
-    assert m and "IN" in m.group(1).upper(), plan[:2000]
+
+def test_similarity_has_two_knn_entry_points():
+    """operators/similarity.py exposes kNN search as ONE pipeline: its
+    only public ``knn*`` functions are ``knn`` and ``knn_from_index``
+    (every variant is a stage choice, not another entry point)."""
+    import ast
+    from pathlib import Path
+
+    import bigdata2016w_spark.operators.similarity as sim
+
+    tree = ast.parse(Path(sim.__file__).read_text())
+    names = sorted(n.name for n in tree.body
+                   if isinstance(n, ast.FunctionDef)
+                   and n.name.startswith("knn"))
+    assert names == ["knn", "knn_from_index"]
 
 
 def test_ivfpq_rerank_from_index_matches_inmemory(spark, sf_dir, tmp_path,
                                                   ivfpq_full_index):
     """The persisted two-stage path (index ADC shortlist → exact cosine
-    re-rank) must reproduce knn_ivf_pq_rerank bit-exactly on the same
+    re-rank) must reproduce the in-memory rerank bit-exactly on the same
     corpus — and stay bit-exact when half the corpus arrives through the
     STREAMING append sink and the shortlist reads base + streamed codes
     (include_streamed), versus the in-memory pipeline under the same
@@ -977,8 +1002,8 @@ def test_ivfpq_rerank_from_index_matches_inmemory(spark, sf_dir, tmp_path,
     import shutil
 
     from bigdata2016w_spark.operators.similarity import (
-        knn_ivf_pq_rerank,
-        knn_ivfpq_rerank_from_index,
+        knn,
+        knn_from_index,
         lloyd_centroids,
         residual_pq_codebook,
     )
@@ -993,11 +1018,11 @@ def test_ivfpq_rerank_from_index_matches_inmemory(spark, sf_dir, tmp_path,
     # full-corpus index: same deterministic training as the in-memory op
     # (shared module fixture — training is deterministic)
     path = ivfpq_full_index
-    got = knn_ivfpq_rerank_from_index(
-        spark, path, queries, emb, k=10, n_probe=4
+    got = knn_from_index(
+        spark, path, queries, k=10, n_probe=4, rerank=3, embeddings=emb
     ).collect()
-    want = knn_ivf_pq_rerank(emb, qids, k=10, n_cells=16, n_probe=4
-                             ).collect()
+    want = knn(emb, qids, k=10, coarse="lloyd", code="residual_pq",
+               rerank=3, n_cells=16, n_probe=4).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     # half-trained index + streamed other half == in-memory rerank over
@@ -1017,14 +1042,15 @@ def test_ivfpq_rerank_from_index_matches_inmemory(spark, sf_dir, tmp_path,
         .parquet(str(sdir))
     )
     ivfpq_append_sink(src, grow, str(tmp_path / "ckpt")).awaitTermination()
-    got2 = knn_ivfpq_rerank_from_index(
-        spark, grow, queries, emb, k=10, n_probe=4, include_streamed=True
+    got2 = knn_from_index(
+        spark, grow, queries, k=10, n_probe=4, rerank=3, embeddings=emb,
+        include_streamed=True,
     ).collect()
     cent = lloyd_centroids(first.where(first.embedding.isNotNull()))
     cb = residual_pq_codebook(first, centroids=cent)
-    want2 = knn_ivf_pq_rerank(
-        emb, qids, k=10, n_cells=16, n_probe=4, codebook=cb,
-        centroids=cent,
+    want2 = knn(
+        emb, qids, k=10, coarse="lloyd", code="residual_pq", rerank=3,
+        n_cells=16, n_probe=4, codebook=cb, centroids=cent,
     ).collect()
     assert sorted(map(tuple, got2)) == sorted(map(tuple, want2))
 
@@ -1039,8 +1065,8 @@ def test_ivfpq_index_append_matches_full_inmemory(spark, sf_dir, tmp_path):
     import pytest
 
     from bigdata2016w_spark.operators.similarity import (
-        knn_ivf_pq_residual,
-        knn_ivfpq_from_index,
+        knn,
+        knn_from_index,
         lloyd_centroids,
         residual_pq_codebook,
     )
@@ -1059,14 +1085,14 @@ def test_ivfpq_index_append_matches_full_inmemory(spark, sf_dir, tmp_path):
 
     qids = [0, 1, 2, 3, 4]
     queries = emb.where(emb.vec_id.isin(qids)).select("vec_id", "embedding")
-    from_index = knn_ivfpq_from_index(
+    from_index = knn_from_index(
         spark, path, queries, k=10, n_probe=4
     ).collect()
     cent = lloyd_centroids(first.where(first.embedding.isNotNull()))
     cb = residual_pq_codebook(first, centroids=cent)
-    in_memory = knn_ivf_pq_residual(
-        emb, qids, k=10, n_cells=16, n_probe=4, codebook=cb,
-        centroids=cent,
+    in_memory = knn(
+        emb, qids, k=10, coarse="lloyd", code="residual_pq", n_cells=16,
+        n_probe=4, codebook=cb, centroids=cent,
     ).collect()
     assert sorted(map(tuple, from_index)) == sorted(map(tuple, in_memory))
 
@@ -1082,7 +1108,7 @@ def test_ivfpq_index_append_matches_full_inmemory(spark, sf_dir, tmp_path):
 def test_ivfpq_index_empty_corpus(spark, tmp_path):
     """An empty (or all-NULL-embedding) corpus writes a valid, empty
     index and the probe returns an empty typed frame."""
-    from bigdata2016w_spark.operators.similarity import knn_ivfpq_from_index
+    from bigdata2016w_spark.operators.similarity import knn_from_index
     from bigdata2016w_spark.sources.sinks import write_ivfpq_index
 
     emb = spark.createDataFrame(
@@ -1090,7 +1116,7 @@ def test_ivfpq_index_empty_corpus(spark, tmp_path):
     )
     path = str(tmp_path / "ivfpq_empty")
     write_ivfpq_index(emb, path)
-    out = knn_ivfpq_from_index(spark, path, emb)
+    out = knn_from_index(spark, path, emb)
     assert out.collect() == []
     assert [f.name for f in out.schema.fields] == \
         ["query_id", "vec_id", "adc_d2"]
@@ -1128,39 +1154,6 @@ def test_semantic_dedup_planted_duplicates(spark):
     assert out[16].witness_id == 3 and out[16].cosine > 0.999
     assert out[17].witness_id == 9 and out[17].cosine > 0.999
     assert out[16].cell == 3 and out[17].cell == 9
-
-
-def test_pq_index_roundtrip_matches_inmemory(spark, sf_dir, tmp_path):
-    """write_pq_index → knn_pq_from_index must reproduce knn_pq_adc
-    bit-exactly (codebook doubles, byte codes, and int64 LUT distances
-    all round-trip parquet), and the persisted codes file must be
-    materially smaller than the raw embeddings it stands in for."""
-    import os
-
-    from bigdata2016w_spark.operators.similarity import (
-        knn_pq_adc, knn_pq_from_index,
-    )
-    from bigdata2016w_spark.sources.catalog import load_table
-    from bigdata2016w_spark.sources.sinks import write_pq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "pq_index")
-    write_pq_index(emb, path)
-    qids = [0, 1, 2, 3, 4]
-    queries = emb.where(emb.vec_id.isin(qids)).select("vec_id", "embedding")
-    from_index = knn_pq_from_index(spark, path, queries, k=10).collect()
-    in_memory = knn_pq_adc(emb, qids, k=10).collect()
-    assert sorted(map(tuple, from_index)) == sorted(map(tuple, in_memory))
-
-    def _bytes(d):
-        if os.path.isfile(d):
-            return os.path.getsize(d)
-        return sum(os.path.getsize(os.path.join(r, f))
-                   for r, _, fs in os.walk(d) for f in fs
-                   if f.endswith(".parquet"))
-
-    emb_dir = f"{sf_dir}/embeddings.parquet"
-    assert _bytes(f"{path}/codes") < _bytes(emb_dir) / 3
 
 
 def test_ann_ivf_pq_oracle_and_recall(spark, sf_dir, duck):
@@ -1240,10 +1233,7 @@ def test_validated_embeddings_validate_once_path(spark):
     import pytest
 
     from bigdata2016w_spark.operators.similarity import (
-        knn_ivf_lloyd,
-        knn_ivf_pq,
-        knn_ivf_pq_rerank,
-        knn_pq_adc,
+        knn,
         lloyd_centroids,
         validated_embeddings,
     )
@@ -1276,24 +1266,17 @@ def test_validated_embeddings_validate_once_path(spark):
     assert lloyd_centroids(valid, n_cells=4, n_iter=1, dim=8,
                            validated=True) == \
         lloyd_centroids(with_null, n_cells=4, n_iter=1, dim=8)
-    assert rows(knn_ivf_lloyd(valid, [0, 1], k=2, n_cells=4, n_probe=2,
-                              n_iter=1, dim=8, validated=True)) == \
-        rows(knn_ivf_lloyd(with_null, [0, 1], k=2, n_cells=4, n_probe=2,
-                           n_iter=1, dim=8))
-    assert rows(knn_pq_adc(valid, [0, 1], k=2, n_codes=4, n_subspaces=4,
-                           dim=8, validated=True)) == \
-        rows(knn_pq_adc(with_null, [0, 1], k=2, n_codes=4, n_subspaces=4,
-                        dim=8))
-    assert rows(knn_ivf_pq(valid, [0, 1], k=2, n_cells=4, n_probe=2,
-                           n_codes=4, n_subspaces=4, dim=8,
-                           validated=True)) == \
-        rows(knn_ivf_pq(with_null, [0, 1], k=2, n_cells=4, n_probe=2,
-                        n_codes=4, n_subspaces=4, dim=8))
-    assert rows(knn_ivf_pq_rerank(valid, [0, 1], k=2, n_cells=4, n_probe=2,
-                                  n_codes=4, n_subspaces=4, dim=8,
-                                  validated=True)) == \
-        rows(knn_ivf_pq_rerank(with_null, [0, 1], k=2, n_cells=4,
-                               n_probe=2, n_codes=4, n_subspaces=4, dim=8))
+    for mode in (
+        {"coarse": "lloyd", "n_cells": 4, "n_probe": 2, "n_iter": 1},
+        {"code": "pq", "n_codes": 4, "n_subspaces": 4},
+        {"coarse": "seed", "code": "pq", "n_cells": 4, "n_probe": 2,
+         "n_codes": 4, "n_subspaces": 4},
+        {"coarse": "lloyd", "code": "residual_pq", "rerank": 3,
+         "n_cells": 4, "n_probe": 2, "n_codes": 4, "n_subspaces": 4},
+    ):
+        assert rows(knn(valid, [0, 1], k=2, dim=8, validated=True,
+                        **mode)) == \
+            rows(knn(with_null, [0, 1], k=2, dim=8, **mode))
 
 
 def test_ivf_probe_sweep_oracle(spark, duck, sf_dir):
@@ -1487,26 +1470,24 @@ def test_filtered_search_semantics(spark, sf_dir):
         results (queries resolve against the unfiltered corpus)."""
     from pyspark.sql import functions as F
 
-    from bigdata2016w_spark.operators.similarity import (
-        knn_bruteforce_filtered,
-        knn_ivf_filtered,
-    )
+    from bigdata2016w_spark.operators.similarity import knn
     from bigdata2016w_spark.plans.pipeline import ANN_FILTER_LABELS
     from bigdata2016w_spark.sources.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     pred = F.col("label").isin(*ANN_FILTER_LABELS)
     qids = [0, 1, 2, 3, 4]
-    got = knn_ivf_filtered(emb, qids, pred, 10, n_cells=16, n_probe=4)
+    ivf = {"coarse": "seed", "candidate_filter": pred, "keep": ("label",),
+           "n_cells": 16}
+    got = knn(emb, qids, 10, n_probe=4, **ivf)
     labels = {
         r.label for r in got.join(
             emb.select("vec_id", "label"), "vec_id").collect()
     }
     assert labels and labels <= set(ANN_FILTER_LABELS)
 
-    truth = knn_bruteforce_filtered(emb, qids, pred, 10)
-    full_probe = knn_ivf_filtered(emb, qids, pred, 10,
-                                  n_cells=16, n_probe=16)
+    truth = knn(emb, qids, 10, candidate_filter=pred)
+    full_probe = knn(emb, qids, 10, n_probe=16, **ivf)
     assert sorted(map(tuple, full_probe.collect())) == \
         sorted(map(tuple, truth.collect()))
 
@@ -1519,8 +1500,9 @@ def test_filtered_search_semantics(spark, sf_dir):
     q0_label = emb.where(F.col("vec_id") == 0).collect()[0].label
     out = [lab for lab in range(10)
            if lab != q0_label][:2]
-    res = knn_ivf_filtered(emb, [0], F.col("label").isin(*out), 5,
-                           n_cells=16, n_probe=16).collect()
+    res = knn(emb, [0], 5, coarse="seed",
+              candidate_filter=F.col("label").isin(*out), keep=("label",),
+              n_cells=16, n_probe=16).collect()
     assert len(res) == 5
 
 
@@ -1544,9 +1526,7 @@ def test_filtered_serve_parity_and_pruning(spark, sf_dir, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from bigdata2016w_spark.operators.similarity import (
-        knn_ivfpq_from_index,
-    )
+    from bigdata2016w_spark.operators.similarity import knn_from_index
     from bigdata2016w_spark.plans.pipeline import ANN_FILTER_LABELS
     from bigdata2016w_spark.sources.catalog import load_table
     from bigdata2016w_spark.sources.sinks import write_ivfpq_index
@@ -1557,13 +1537,13 @@ def test_filtered_serve_parity_and_pruning(spark, sf_dir, tmp_path):
                       meta_cols=("label",))
     queries = emb.where(emb.vec_id.isin([0, 1, 2]))
     pred = F.col("label").isin(*ANN_FILTER_LABELS)
-    got = knn_ivfpq_from_index(spark, path, queries, k=5, n_probe=4,
-                               candidate_filter=pred)
+    got = knn_from_index(spark, path, queries, k=5, n_probe=4,
+                         candidate_filter=pred)
 
     # (a) parity vs the unfiltered ADC ranking with the same predicate
     # applied to the FULL candidate list before top-k: take a huge k on
     # the unfiltered path (no truncation), filter, re-rank, cut to 5
-    full = knn_ivfpq_from_index(spark, path, queries, k=10_000, n_probe=4)
+    full = knn_from_index(spark, path, queries, k=10_000, n_probe=4)
     lab = emb.select("vec_id", "label")
     from pyspark.sql.window import Window
     w = Window.partitionBy("query_id").orderBy(
@@ -1588,8 +1568,8 @@ def test_filtered_serve_parity_and_pruning(spark, sf_dir, tmp_path):
 
     # (c) the unsupported combination raises
     with _pytest.raises(ValueError, match="include_streamed"):
-        knn_ivfpq_from_index(spark, path, queries, k=5,
-                             candidate_filter=pred, include_streamed=True)
+        knn_from_index(spark, path, queries, k=5,
+                       candidate_filter=pred, include_streamed=True)
 
 
 def test_filtered_rerank_from_index(spark, sf_dir, tmp_path):
@@ -1601,8 +1581,7 @@ def test_filtered_rerank_from_index(spark, sf_dir, tmp_path):
 
     from bigdata2016w_spark.operators.similarity import (
         cosine,
-        knn_ivfpq_from_index,
-        knn_ivfpq_rerank_from_index,
+        knn_from_index,
     )
     from bigdata2016w_spark.operators.topk import topk_per_group
     from bigdata2016w_spark.plans.pipeline import ANN_FILTER_LABELS
@@ -1615,8 +1594,8 @@ def test_filtered_rerank_from_index(spark, sf_dir, tmp_path):
                       meta_cols=("label",))
     queries = emb.where(emb.vec_id.isin([0, 1]))
     pred = F.col("label").isin(*ANN_FILTER_LABELS)
-    got = knn_ivfpq_rerank_from_index(
-        spark, path, queries, emb, k=5, rerank_factor=3, n_probe=4,
+    got = knn_from_index(
+        spark, path, queries, k=5, n_probe=4, rerank=3, embeddings=emb,
         candidate_filter=pred,
     )
     lab = {r.vec_id: r.label for r in
@@ -1624,7 +1603,7 @@ def test_filtered_rerank_from_index(spark, sf_dir, tmp_path):
     rows = got.collect()
     assert rows and all(lab[r.vec_id] in ANN_FILTER_LABELS for r in rows)
     # replicate: filtered stage-1 shortlist -> exact cosine -> top-5
-    short = knn_ivfpq_from_index(
+    short = knn_from_index(
         spark, path, queries, k=15, n_probe=4, candidate_filter=pred,
     ).select("query_id", "vec_id")
     e = emb.select("vec_id", "embedding")
@@ -1652,9 +1631,7 @@ def test_sidecar_lockstep_guards(spark, sf_dir, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from bigdata2016w_spark.operators.similarity import (
-        knn_ivfpq_from_index,
-    )
+    from bigdata2016w_spark.operators.similarity import knn_from_index
     from bigdata2016w_spark.plans.pipeline import ANN_FILTER_LABELS
     from bigdata2016w_spark.sources.catalog import load_table
     from bigdata2016w_spark.sources.sinks import (
@@ -1675,8 +1652,8 @@ def test_sidecar_lockstep_guards(spark, sf_dir, tmp_path):
     ivfpq_index_append(spark, path, batch)
     pred = F.col("label").isin(*ANN_FILTER_LABELS)
     queries = emb.where(emb.vec_id.isin([0, 1, 2]))
-    got = knn_ivfpq_from_index(spark, path, queries, k=300, n_probe=16,
-                               candidate_filter=pred)
+    got = knn_from_index(spark, path, queries, k=300, n_probe=16,
+                         candidate_filter=pred)
     appended_match = {
         r.vec_id for r in batch.where(pred).select("vec_id").collect()
     }

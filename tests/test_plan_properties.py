@@ -592,7 +592,7 @@ def test_ivfpq_streamed_probe_prunes_both_scan_sides(spark, sf_dir, tmp_path):
     import os
     import shutil
 
-    from bigdata2016w_spark.operators.similarity import knn_ivfpq_from_index
+    from bigdata2016w_spark.operators.similarity import knn_from_index
     from bigdata2016w_spark.sources.catalog import load_table
     from bigdata2016w_spark.sources.sinks import write_ivfpq_index
     from bigdata2016w_spark.streaming.index_sink import ivfpq_append_sink
@@ -616,7 +616,7 @@ def test_ivfpq_streamed_probe_prunes_both_scan_sides(spark, sf_dir, tmp_path):
         "vec_id", "embedding"
     )
     plan = _formatted_plan(
-        knn_ivfpq_from_index(spark, idx, queries, include_streamed=True)
+        knn_from_index(spark, idx, queries, include_streamed=True)
     )
     pruned_scans = [
         seg for seg in plan.split("\n\n")

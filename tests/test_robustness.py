@@ -365,6 +365,19 @@ def test_validated_embeddings_raises_on_null_element(spark):
         validated_embeddings(df)  # eager localCheckpoint evaluates guard
 
 
+def test_serve_lut_raises_named_error_on_null_element():
+    """The serve path's driver-side LUT must reject a query vector with
+    a NULL element with the in-plan guard's error, not a bare TypeError
+    from float(None)."""
+    from bigdata2016w_spark.operators.similarity import _adc_lut_driver
+
+    q = [{"vec_id": 1, "embedding": [1.0, None] + [0.0] * 62}]
+    cent = [(0, [1.0] * 64)]
+    cb = [(m, 0, [0.0] * 8) for m in range(8)]
+    with pytest.raises(ValueError, match="NULL elements"):
+        _adc_lut_driver(q, cent, cb, n_probe=1, n_subspaces=8, sd=8, dim=64)
+
+
 def test_validated_embeddings_still_drops_null_rows(spark):
     from bigdata2016w_spark.operators.similarity import validated_embeddings
 

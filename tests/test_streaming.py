@@ -901,7 +901,7 @@ def test_ivfpq_append_sink_bit_exact_and_replay_safe(spark, sf_dir, tmp_path):
 
     import pytest as _pytest
 
-    from bigdata2016w_spark.operators.similarity import knn_ivfpq_from_index
+    from bigdata2016w_spark.operators.similarity import knn_from_index
     from bigdata2016w_spark.sources.catalog import load_table
     from bigdata2016w_spark.sources.sinks import (
         ivfpq_index_append,
@@ -950,10 +950,10 @@ def test_ivfpq_append_sink_bit_exact_and_replay_safe(spark, sf_dir, tmp_path):
 
     qids = [0, 1, 2, 3, 4]
     queries = emb.where(emb.vec_id.isin(qids)).select("vec_id", "embedding")
-    got = knn_ivfpq_from_index(spark, idx_stream, queries, k=10, n_probe=4,
-                               include_streamed=True).collect()
-    want = knn_ivfpq_from_index(spark, idx_batch, queries, k=10,
-                                n_probe=4).collect()
+    got = knn_from_index(spark, idx_stream, queries, k=10, n_probe=4,
+                         include_streamed=True).collect()
+    want = knn_from_index(spark, idx_batch, queries, k=10,
+                          n_probe=4).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     # restart under the same checkpoint, no new data: idempotent
@@ -997,7 +997,7 @@ def test_ivfpq_index_compact_folds_stream_into_base(spark, sf_dir, tmp_path):
 
     import pytest as _pytest
 
-    from bigdata2016w_spark.operators.similarity import knn_ivfpq_from_index
+    from bigdata2016w_spark.operators.similarity import knn_from_index
     from bigdata2016w_spark.sources.catalog import load_table
     from bigdata2016w_spark.sources.sinks import (
         ivfpq_index_append,
@@ -1044,10 +1044,10 @@ def test_ivfpq_index_compact_folds_stream_into_base(spark, sf_dir, tmp_path):
 
     qids = [0, 1, 2, 3, 4]
     queries = emb.where(emb.vec_id.isin(qids)).select("vec_id", "embedding")
-    got = knn_ivfpq_from_index(spark, idx, queries, k=10, n_probe=4
-                               ).collect()  # base-only read, post-fold
-    want = knn_ivfpq_from_index(spark, idx_ref, queries, k=10, n_probe=4
-                                ).collect()
+    got = knn_from_index(spark, idx, queries, k=10, n_probe=4
+                         ).collect()  # base-only read, post-fold
+    want = knn_from_index(spark, idx_ref, queries, k=10, n_probe=4
+                          ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     # tombstone: the batch dirs are gone, but a FRESH checkpoint must
@@ -1087,8 +1087,8 @@ def test_ivfpq_index_compact_folds_stream_into_base(spark, sf_dir, tmp_path):
         ivfpq_append_sink(src4, idx2, str(tmp_path / "ckpt3"))
     assert ivfpq_index_compact(spark, idx2) == n2
     assert spark.read.parquet(f"{idx2}/codes").count() == b2 + n2
-    got2 = knn_ivfpq_from_index(spark, idx2, queries, k=10, n_probe=4
-                                ).collect()
+    got2 = knn_from_index(spark, idx2, queries, k=10, n_probe=4
+                          ).collect()
     assert sorted(map(tuple, got2)) == sorted(map(tuple, want))
 
     # CRASH 3: a partially-committed append (counts match neither state)

@@ -1,7 +1,8 @@
 """Connected components — the clustering step a dedup pipeline needs
 after pair detection (near-dup PAIRS → duplicate GROUPS → one survivor
-per group). No reference counterpart; the distributed pattern is the same
-driver-loop-over-joins shape as PageRank (SURVEY §2.9).
+per group). No reference counterpart; both variants run on PageRank's
+driver loop (``operators/_loop.py``, SURVEY §2.9), one Spark action per
+round with the convergence probe observed on it.
 
 Algorithm: iterative min-label propagation. Each node's label starts as
 its own id; every round each node takes the min of its label and its
@@ -10,29 +11,18 @@ graph diameter — small for dedup clusters (near-dups chain shallowly).
 For adversarial long-path graphs at 100 TB you'd switch to
 large-star/small-star (Kiveris et al.) which converges in O(log n)
 rounds; min-propagation is the right tool for the shallow-cluster shape.
-
-Both variants run each round as ONE Spark action: the convergence probe
-is an ``Observation`` on the round's eager ``localCheckpoint``, not a
-separate count/collect job (per-action cost dominates dedup-sized graphs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpoint(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
-    """Eagerly ``localCheckpoint`` ``df`` and return it with ``metrics``
-    (aggregates over its rows) observed during that same job."""
-    obs = Observation()
-    out = df.observe(obs, *metrics).localCheckpoint(eager=True)
-    return out, obs.get
+from bigdata2016w_spark.operators._loop import checkpoint, iterate, node_set
 
 
-def connected_components_star(
-    edges: DataFrame, max_rounds: int = 50
-) -> DataFrame:
+def connected_components_star(edges: DataFrame,
+                              max_rounds: int = 50) -> DataFrame:
     """edges(src, dst) undirected → (id, component) via alternating
     large-star/small-star (Kiveris et al., "Connected Components in
     MapReduce and Beyond"). Converges in O(log n) rounds regardless of
@@ -40,10 +30,9 @@ def connected_components_star(
     docstring promises for adversarial long-path graphs at scale.
 
     Each round is two (groupBy + join) shuffles over the current edge
-    set, materialized by one eager checkpoint. The convergence probe —
-    an order-independent ``(n, hash-sum)`` signature of the edge set, so
-    "unchanged" costs no distributed set-difference — is an
-    ``Observation`` on that checkpoint, not a separate collect."""
+    set. The convergence probe is an order-independent ``(n, hash-sum)``
+    signature of the edge set, so "unchanged" costs no distributed
+    set-difference."""
 
     def _canon(e: DataFrame) -> DataFrame:
         return e.select(
@@ -52,9 +41,7 @@ def connected_components_star(
 
     def _large_star(e: DataFrame) -> DataFrame:
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
+        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
         return (
             sym.join(m, "u")
             .where(F.col("v") > F.col("u"))
@@ -83,27 +70,19 @@ def connected_components_star(
             F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(2147483648))), F.lit(0)
         ).alias("h"),
     )
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e, sig = _checkpoint(_canon(
+    nodes = node_set(edges).localCheckpoint(eager=True)
+    first = checkpoint(_canon(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     ), *sig_of)
-    for _ in range(max_rounds):
-        e, new_sig = _checkpoint(_canon(_small_star(_large_star(e))), *sig_of)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        # an unconverged edge set is not a valid star forest — a node could
-        # carry multiple or non-minimal labels; refuse to return it
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} "
-            "rounds (O(log n) expected); raise max_rounds"
-        )
+    # an unconverged edge set is not a valid star forest — a node could
+    # carry multiple or non-minimal labels; refuse to return it
+    e = iterate(
+        first[0], lambda e, _r: _canon(_small_star(_large_star(e))),
+        max_rounds, probe=sig_of,
+        stop=lambda last, cut: (last or first)[1] == cut[1],
+        unconverged=f"connected_components_star did not converge in "
+        f"{max_rounds} rounds (O(log n) expected); raise max_rounds",
+    )
     # converged star: every child points straight at its component root
     child = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
     roots = nodes.join(
@@ -112,9 +91,7 @@ def connected_components_star(
     return child.union(roots)
 
 
-def connected_components(
-    edges: DataFrame, max_iters: int = 20
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     """edges(src, dst) undirected → (id, component) with component = min
     node id reachable. Converges early when a round is a no-op.
 
@@ -128,25 +105,27 @@ def connected_components(
     sym = sym.union(sym.select("b", "a")).union(sym.select("a", "a")).union(
         sym.select("b", "b")
     ).distinct().localCheckpoint(eager=True)
-    labeled = sym.withColumn("component", F.col("b"))
-    for _ in range(max_iters):
-        labels, probe = _checkpoint(
-            labeled.groupBy(F.col("a").alias("id")).agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("a") == F.col("b"), F.col("component")))
-                .alias("prev"),
-            ),
-            F.count_if(F.col("component") != F.col("prev")).alias("changed"),
+
+    def propagate(labels: DataFrame | None, _r: int) -> DataFrame:
+        if labels is None:
+            labeled = sym.withColumn("component", F.col("b"))
+        else:
+            labeled = sym.join(
+                labels.select(F.col("id").alias("b"), "component"), "b"
+            )
+        return labeled.groupBy(F.col("a").alias("id")).agg(
+            F.min("component").alias("component"),
+            F.min(F.when(F.col("a") == F.col("b"), F.col("component")))
+            .alias("prev"),
         )
-        if probe["changed"] == 0:
-            break
-        labeled = sym.join(
-            labels.select(F.col("id").alias("b"), "component"), "b"
-        )
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            "(rounds needed = graph diameter); raise max_iters or use "
-            "connected_components_star"
-        )
+
+    labels = iterate(
+        None, propagate, max_iters,
+        probe=(F.count_if(F.col("component") != F.col("prev"))
+               .alias("changed"),),
+        stop=lambda _, cut: cut[1]["changed"] == 0,
+        unconverged=f"connected_components did not converge in {max_iters} "
+        "rounds (rounds needed = graph diameter); raise max_iters or use "
+        "connected_components_star",
+    )
     return labels.select("id", "component")

@@ -67,10 +67,6 @@ def norm(a) -> Column:
     return F.sqrt(dot(ad, ad))
 
 
-def cosine_with_norms(a, na, b, nb) -> Column:
-    return dot(_as_double(a), _as_double(b)) / (na * nb)
-
-
 def _pair_cosine(joined: DataFrame, a_col: str, b_col: str,
                  keep) -> DataFrame:
     """(*keep, cosine) over an already-joined pair frame, evaluated by

@@ -1,24 +1,16 @@
-"""Iterative graph traversal: BFS hop distances (single-source shortest
-path on unweighted directed edges).
+"""Iterative graph traversal: bounded-round SSSP (BFS is its w = 1 case),
+k-core peeling and label propagation.
 
 The reference's graph family is Pregel-style message passing (PPR,
-``JAVA/assignment4/RunPersonalizedPageRankBasic.java:160-259``); BFS is
-the same shape with min-combine instead of sum-combine, so the engine
-expresses one frontier round as:
+``JAVA/assignment4/RunPersonalizedPageRankBasic.java:160-259``); SSSP is
+the same shape with min-combine instead of sum-combine:
 
-    dist' = groupBy(id).min( dist  ∪  (edges ⋈ dist).select(dst, d+1) )
+    dist' = groupBy(id).min( dist  ∪  (edges ⋈ dist).select(dst, d + w) )
 
-A fixed iteration count caps the result at ``max_hops`` deterministically
-(no convergence probe needed for the registered query — unreached nodes
-simply stay NULL-distance and are dropped), which also lets the whole
-computation unroll into chained SQL CTEs for the DuckDB oracle
-(``plans/graph._sssp_sql``), the same trick as PageRank's oracle.
-
-Scale shape: each round shuffles the frontier-expanded table once on id
-with map-side partial min-combine; exchange sizing is left to AQE
-(explicit per-round co-partitioning with the edge key was A/B-measured
-slower — see the in-loop comment); ``localCheckpoint`` every few rounds
-truncates the growing lineage exactly as the PageRank loop does.
+A fixed round count makes each result closed-form (unreached nodes stay
+NULL-distance and are dropped), so every oracle unrolls the rounds into
+chained SQL CTEs (``plans/traversal.py``), the same trick as PageRank's.
+All three loops run on ``operators/_loop.py``.
 """
 
 from __future__ import annotations
@@ -26,14 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata2016w_spark.operators._loop import graph, iterate
 
-def bfs_hops(
-    edges: DataFrame,
-    source: int,
-    max_hops: int = 8,
-    num_partitions: int | None = None,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+
+def bfs_hops(edges: DataFrame, source: int, max_hops: int = 8,
+             num_partitions: int | None = None,
+             checkpoint_every: int = 2) -> DataFrame:
     """→ (id, dist) for every node reachable from ``source`` within
     ``max_hops`` directed hops (dist = minimum hop count; source = 0):
     :func:`sssp_weighted` with every edge weight 1."""
@@ -41,12 +31,8 @@ def bfs_hops(
                          num_partitions, checkpoint_every)
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int = 3,
-    rounds: int = 6,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6,
+               num_partitions: int | None = None) -> DataFrame:
     """→ (id, core_degree): the subgraph surviving ``rounds`` rounds of
     k-core peeling (repeatedly remove nodes of undirected degree < k),
     with each survivor's degree inside the surviving subgraph.
@@ -58,42 +44,26 @@ def kcore_peel(
     fixpoint). Each round is one hash-agg degree count plus two
     semi-joins against the ≤|V|-row survivor set — at 100 TB the edge
     table shuffles once up front (partitioned by src) and each round's
-    survivor list is broadcastable long before the edge table is.
-    Per-round ``localCheckpoint`` caps lineage exactly like PageRank's
-    iteration (operators/pagerank.py)."""
-    spark = edges.sparkSession
-    par = num_partitions or spark.sparkContext.defaultParallelism
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"),
-                            F.col("src").alias("dst")))
-        .distinct()
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        keep = (
-            und.groupBy("src").agg(F.count("*").alias("d"))
-            .where(F.col("d") >= k)
-            .select(F.col("src").alias("id"))
-        )
-        und = (
+    survivor list is broadcastable long before the edge table is."""
+    und, _, par = graph(edges, num_partitions, symmetric=True)
+
+    def peel(und: DataFrame, _r: int) -> DataFrame:
+        keep = und.groupBy("src").agg(F.count("*").alias("d"))
+        keep = keep.where(F.col("d") >= k).select(F.col("src").alias("id"))
+        return (
             und.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .select("src", "dst")
             .repartition(par, "src")
-            .localCheckpoint(eager=True)
         )
-    return und.groupBy(F.col("src").alias("id")).agg(
+
+    return iterate(und, peel, rounds).groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("core_degree")
     )
 
 
-def lpa_communities(
-    edges: DataFrame,
-    rounds: int = 4,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def lpa_communities(edges: DataFrame, rounds: int = 4,
+                    num_partitions: int | None = None) -> DataFrame:
     """→ (id, label): community detection by synchronous label
     propagation (Raghavan et al. 2007, Phys. Rev. E 76) over the
     undirected graph, made fully deterministic: every node starts
@@ -106,47 +76,25 @@ def lpa_communities(
     edge swaps labels with period 2 — pinned in tests) and lets the
     oracle unroll the rounds into chained CTEs.
 
-    Scale shape: the symmetrized edge table shuffles once up front
-    (partitioned by src, checkpointed); each round is ONE hash agg over
-    (node, neighbor-label) — map-side combinable, ≤ 2|E| input rows —
-    plus an argmax expressed as max(struct(count, −label)) so no window
-    function touches the per-node groups (struct buffers plan as a
-    partial+final SortAggregate pair — per-partition spillable sorts,
-    still map-side combinable; see _lpa_round). The label table
-    (≤ |V| rows) is the only per-round state and is localCheckpoint'ed
-    each round, exactly like PageRank's rank table."""
-    spark = edges.sparkSession
-    par = num_partitions or spark.sparkContext.defaultParallelism
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"),
-                            F.col("src").alias("dst")))
-        .distinct()
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
-    # after symmetrization every node appears as a src
-    labels = (
-        und.select(F.col("src").alias("id")).distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        labels = _lpa_round(und, labels).localCheckpoint(eager=True)
-    return labels
+    Scale shape: the symmetrized edge table shuffles once up front; each
+    round is one join and two map-side-combinable aggregates over ≤ 2|E|
+    rows, never a window (see _lpa_round). The label table (≤ |V| rows)
+    is the only per-round state."""
+    und, nodes, _ = graph(edges, num_partitions, symmetric=True)
+    labels = nodes.select("id", F.col("id").alias("label"))
+    labels = labels.localCheckpoint(eager=True)
+    return iterate(labels, lambda labels, _r: _lpa_round(und, labels), rounds)
 
 
 def _lpa_round(und: DataFrame, labels: DataFrame) -> DataFrame:
-    """One synchronous LPA round, un-checkpointed: neighbor labels via
-    one join on the symmetrized edges, then the most-frequent-label
-    argmax as TWO partial+final agg pairs — a hash agg for the
-    (id, label) counts, then max(struct(count, −label)) per id, which
-    Spark plans as a SortAggregate pair (struct buffers aren't
-    hash-aggregable) whose sorts are per-partition and spillable, with
-    the partial max BEFORE the exchange. Deliberately NOT a window over
-    the per-node groups (a hub node's full neighbor list would
-    sort-buffer inside one task, and windows ship every row through the
-    exchange — no map-side combine); the plan shape is pinned in
+    """One synchronous LPA round: neighbor labels via one join on the
+    symmetrized edges, then the most-frequent-label argmax as TWO
+    partial+final agg pairs — a hash agg for the (id, label) counts, then
+    max(struct(count, −label)) per id, a SortAggregate pair (struct
+    buffers aren't hash-aggregable) with the partial max BEFORE the
+    exchange. Deliberately NOT a window over the per-node groups: a hub's
+    full neighbor list would sort-buffer inside one task, and every row
+    would cross the exchange uncombined. Plan shape pinned in
     tests/test_plan_properties.py."""
     nb = und.join(
         labels.withColumnRenamed("id", "dst"), "dst"
@@ -161,13 +109,9 @@ def _lpa_round(und: DataFrame, labels: DataFrame) -> DataFrame:
     return best.select("id", (-F.col("b.nl")).alias("label"))
 
 
-def sssp_weighted(
-    edges: DataFrame,
-    source: int,
-    rounds: int = 8,
-    num_partitions: int | None = None,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def sssp_weighted(edges: DataFrame, source: int, rounds: int = 8,
+                  num_partitions: int | None = None,
+                  checkpoint_every: int = 2) -> DataFrame:
     """→ (id, dist) minimum WEIGHTED distance from ``source`` using at
     most ``rounds`` edges per path — bounded-round Bellman-Ford;
     :func:`bfs_hops` is the w = 1 case.
@@ -179,23 +123,14 @@ def sssp_weighted(
     float caveat; ``rounds`` bounds path length exactly as the driver
     loop does, making the oracle equality total, not asymptotic.
     ``edges`` must carry an integer ``w`` column."""
-    spark = edges.sparkSession
-    par = num_partitions or spark.sparkContext.defaultParallelism
-    edges = edges.repartition(par, "src").localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(par, "id")
-        .localCheckpoint(eager=True)
-    )
+    edges, nodes, _ = graph(edges, num_partitions)
     dist = nodes.select(
         "id",
         F.when(F.col("id") == F.lit(source), F.lit(0).cast("long"))
         .alias("dist"),
     ).localCheckpoint(eager=True)
 
-    for it in range(rounds):
+    def relax(dist: DataFrame, _r: int) -> DataFrame:
         relaxed = (
             edges.join(dist, edges.src == dist.id)
             .where(F.col("dist").isNotNull())
@@ -208,12 +143,11 @@ def sssp_weighted(
         # local[32] (1.80 s vs 1.68 s; same result for the equivalent
         # PageRank change, 4.17 s vs 3.21 s) — the extra full-row
         # exchange costs more than AQE's handling of the mismatch.
-        dist = (
+        return (
             dist.unionByName(relaxed)
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
         )
-        if (it + 1) % checkpoint_every == 0 or it == rounds - 1:
-            dist = dist.localCheckpoint(eager=True)
 
+    dist = iterate(dist, relax, rounds, every=checkpoint_every)
     return dist.where(F.col("dist").isNotNull()).select("id", "dist")

@@ -33,7 +33,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -43,6 +43,7 @@ from bigdata2016w_spark.functions.tokenizer import (
     tokenize_letters_sql,
     tokenize_sql,
 )
+from bigdata2016w_spark.operators._loop import iterate
 from bigdata2016w_spark.operators.topk import topk_per_group
 from bigdata2016w_spark.plans.sampling import KNUTH
 from bigdata2016w_spark.registry import QuerySpec, register
@@ -428,6 +429,17 @@ def _merge_fold(left: str, right: str) -> str:
     )
 
 
+def _bpe_vocab(docs: DataFrame, tokens: Column) -> DataFrame:
+    """(freq, sym): each distinct word's count and its characters."""
+    return (
+        docs.select(F.explode(tokens).alias("word"))
+        .groupBy("word")
+        .agg(F.count("*").alias("freq"))
+        .select("freq", F.expr("transform(sequence(1, length(word)),"
+                               " i -> substring(word, i, 1))").alias("sym"))
+    )
+
+
 def bpe_learn(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     """Byte-pair-encoding vocabulary induction over the corpus — the
     tokenizer-training step of an LLM data pipeline (Sennrich et al.
@@ -446,7 +458,8 @@ def bpe_learn(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
          in the loop).
     The per-round driver transfer is ONE row (the winning pair) — the
     same O(1)-rows-per-round class as PageRank's convergence probe.
-    Lineage is truncated by ``localCheckpoint`` every 3 rounds.
+    The rounds run on the shared driver loop (``operators/_loop.py``),
+    checkpointed every 3 rounds.
 
     No SQL oracle (iterative, data-dependent driver decisions — same
     rows-only class as sequential SGD); pytest replays a pure-Python
@@ -454,23 +467,11 @@ def bpe_learn(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
 
     Returns (round, left, right, pair_freq) — the learned merge table.
     """
-    words = (
-        docs.select(F.explode(tokenize("text")).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .select(
-            "freq",
-            F.expr(
-                "transform(sequence(1, length(word)),"
-                " i -> substring(word, i, 1))"
-            ).alias("sym"),
-        )
-        # materialize the vocab ONCE — every round reads this table, and
-        # without an eager cut each round's two actions would re-scan and
-        # re-tokenize the whole corpus (measured 16 s/round → <1 s/round
-        # on the 100k-doc scale smoke)
-        .localCheckpoint(eager=True)
-    )
+    # materialize the vocab ONCE — every round reads this table, and
+    # without an eager cut each round's two actions would re-scan and
+    # re-tokenize the whole corpus (measured 16 s/round → <1 s/round
+    # on the 100k-doc scale smoke)
+    words = _bpe_vocab(docs, tokenize("text")).localCheckpoint(eager=True)
     # size the iteration's partition count to the VOCAB, not the corpus:
     # a 10-round loop over a small vocabulary otherwise pays 32 tasks
     # per job purely in scheduling (measured 11 s → ~3 s at sf0.1)
@@ -479,33 +480,24 @@ def bpe_learn(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     if parts != words.rdd.getNumPartitions():
         words = words.repartition(parts).localCheckpoint(eager=True)
     merges = []
-    for r in range(1, n_merges + 1):
-        pairs = (
-            words.where(F.size("sym") >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(sym) - 1),"
-                        " i -> struct(element_at(sym, i) as l,"
-                        "             element_at(sym, i + 1) as r))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("pf"))
-        )
+
+    def merge_top_pair(words: DataFrame, r: int) -> DataFrame | None:
+        pairs = words.where(F.size("sym") >= 2).select("freq", F.explode(
+            F.expr("transform(sequence(1, size(sym) - 1),"
+                   " i -> struct(element_at(sym, i) as l,"
+                   "             element_at(sym, i + 1) as r))")
+        ).alias("p")).groupBy("p.l", "p.r").agg(F.sum("freq").alias("pf"))
         top = pairs.orderBy(F.desc("pf"), F.asc("l"), F.asc("r")).limit(1)
         row = top.collect()
         if not row:
-            break
-        left, right, pf = row[0].l, row[0].r, int(row[0].pf)
-        merges.append((r, left, right, pf))
-        words = words.select(
-            "freq", F.expr(_merge_fold(left, right)).alias("sym")
-        )
-        if r % 3 == 0:
-            words = words.localCheckpoint(eager=True)
+            return None
+        left, right = row[0].l, row[0].r
+        merges.append((r, left, right, int(row[0].pf)))
+        return words.select("freq",
+                            F.expr(_merge_fold(left, right)).alias("sym"))
+
+    # the vocabulary after the last merge is never read: no final cut
+    iterate(words, merge_top_pair, n_merges, every=3, final=False)
     spark = docs.sparkSession
     return spark.createDataFrame(
         merges, "round int, left string, right string, pair_freq bigint"
@@ -547,18 +539,7 @@ def bpe_apply_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LLM-pipeline extension tier.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(F.explode(tokenize_letters("text")).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .select(
-            "freq",
-            F.expr(
-                "transform(sequence(1, length(word)),"
-                " i -> substring(word, i, 1))"
-            ).alias("sym"),
-        )
-    )
+    words = _bpe_vocab(docs, tokenize_letters("text"))
     for left, right in BPE_FIXED_MERGES:
         words = words.select(
             "freq", F.expr(_merge_fold(left, right)).alias("sym")

@@ -42,6 +42,17 @@ def order_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# DuckDB twins of order_graph_edges and of its node set, as the first CTEs
+# of every unrolled-loop oracle
+EDGES_CTE = f"""e AS MATERIALIZED (
+  SELECT DISTINCT o_custkey % {PR_MOD} AS src, o_orderkey % {PR_MOD} AS dst
+  FROM orders WHERE o_custkey % {PR_MOD} <> o_orderkey % {PR_MOD}
+)"""
+NODES_CTE = (
+    "nodes AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e)"
+)
+
+
 def pagerank_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 personalized PageRank per source over the orders-derived
     graph (sources 0 and 1, 10 iterations, α=0.15)."""
@@ -55,20 +66,17 @@ def pagerank_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pagerank_sql(sources: list[int], iters: int, k: int = 10) -> str:
-    """Unroll the exact engine iteration (operators/pagerank.py:99-141)
-    into chained CTEs: link = Σ_in rank/deg, miss = 1 − Σ link, rank' =
-    (1−α)·(link + miss·[id=s]) + α·[id=s]."""
+    """Unroll the exact engine iteration (``iteration`` in
+    operators/pagerank.py) into chained CTEs: link = Σ_in rank/deg,
+    miss = 1 − Σ link, rank' = (1−α)·(link + miss·[id=s]) + α·[id=s]."""
     # every CTE is MATERIALIZED: each iteration references the previous
     # one from two places, so inlining (DuckDB's default for single-ref
     # CTEs and older versions) would expand the 10-level chain into 2^10
     # plan copies
     rcols = list(range(len(sources)))
     parts = [f"""
-e AS MATERIALIZED (
-  SELECT DISTINCT o_custkey % {PR_MOD} AS src, o_orderkey % {PR_MOD} AS dst
-  FROM orders WHERE o_custkey % {PR_MOD} <> o_orderkey % {PR_MOD}
-),
-nodes AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
+{EDGES_CTE},
+{NODES_CTE},
 deg AS MATERIALIZED (SELECT src, count(*) AS d FROM e GROUP BY src),
 i0 AS MATERIALIZED (
   SELECT id, {', '.join(

@@ -25,6 +25,10 @@ from bigdata2016w_spark.functions.textstats import (
     quality_sql,
 )
 from bigdata2016w_spark.functions.tokenizer import tokenize, tokenize_sql
+from bigdata2016w_spark.operators.components import (
+    connected_components,
+    connected_components_star,
+)
 from bigdata2016w_spark.operators.dedup import (
     MH_PRIME,
     exact_dedup_groups,
@@ -561,18 +565,21 @@ register(QuerySpec("documents_rejection_audit", documents_rejection_audit,
                    doc=documents_rejection_audit.__doc__))
 
 
+def _dup_clusters(spark: SparkSession, sf_dir: str,
+                  components) -> DataFrame:
+    """(doc_id, cluster_rep): ``components`` over the shared Jaccard pairs."""
+    pairs = _shared_jaccard_pairs(spark, sf_dir).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    return components(pairs).select(F.col("id").alias("doc_id"),
+                                    F.col("component").alias("cluster_rep"))
+
+
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs → duplicate clusters via connected components:
     (doc_id, cluster_rep = min doc_id in the component). Only docs that
     participate in ≥1 near-dup pair appear."""
-    from bigdata2016w_spark.operators.components import connected_components
-
-    pairs = _shared_jaccard_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    cc = connected_components(pairs)
-    return cc.select(F.col("id").alias("doc_id"),
-                     F.col("component").alias("cluster_rep"))
+    return _dup_clusters(spark, sf_dir, connected_components)
 
 
 _CLUSTERS_SQL = f"""
@@ -609,16 +616,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-chain dup graphs at 100 TB (rounds bounded by log n, not
     diameter). Shares the cached Jaccard pair set and the recursive-CTE
     oracle with ``dedup_clusters``; both must agree exactly."""
-    from bigdata2016w_spark.operators.components import (
-        connected_components_star,
-    )
-
-    pairs = _shared_jaccard_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    cc = connected_components_star(pairs)
-    return cc.select(F.col("id").alias("doc_id"),
-                     F.col("component").alias("cluster_rep"))
+    return _dup_clusters(spark, sf_dir, connected_components_star)
 
 
 register(QuerySpec("dedup_clusters_star", dedup_clusters_star, _CLUSTERS_SQL,
@@ -716,20 +714,13 @@ def documents_leakage_safe_split(
     full per-doc assignment, so the no-straddle property is
     row-checkable by the oracle rather than asserted.
 
-    100-TB shape: reuses the session-cached PPJoin pair set and the
-    O(log n) connected components; the split itself adds one broadcast-
+    100-TB shape: reuses ``dedup_clusters`` over the session-cached
+    PPJoin pair set; the split itself adds one broadcast-
     sized left join (components table ≪ corpus: only docs in ≥1 dup
     pair) plus a map-side hash — no new shuffle of the corpus. Oracle:
     recursive-CTE components + the same md5 bucket arithmetic."""
-    from bigdata2016w_spark.operators.components import connected_components
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = _shared_jaccard_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    cc = connected_components(pairs).select(
-        F.col("id").alias("doc_id"), F.col("component").alias("rep")
-    )
+    cc = dedup_clusters(spark, sf_dir).withColumnRenamed("cluster_rep", "rep")
     assigned = docs.join(cc, "doc_id", "left").select(
         "doc_id", F.coalesce("rep", "doc_id").alias("cluster_rep")
     )

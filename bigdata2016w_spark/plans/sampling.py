@@ -30,17 +30,11 @@ def hash_bucket(key: Column, buckets: int = 100) -> Column:
     runnable at all on large ids; (k mod m)·h ≡ k·h (mod m) keeps the
     bucket value identical for keys < 2^31). Bucket quality over a
     keyspace wider than 2^31 degrades to the low-31-bits distribution;
-    for genuinely unbounded adversarial keyspaces use the xxhash64
-    variant below — it trades away the DuckDB oracle.
+    for unbounded adversarial keyspaces ``pmod(xxhash64(key), buckets)``
+    avalanches fully but trades away the DuckDB oracle.
     """
     return (((key % F.lit(2147483648)) * F.lit(KNUTH))
             % F.lit(2147483648)) % F.lit(buckets)
-
-
-def hash_bucket_xx(key: Column, buckets: int = 100) -> Column:
-    """Deterministic bucket via xxhash64 — full-avalanche over arbitrary
-    int64 keys (the 100 TB keyspace-safe variant; not oracle-portable)."""
-    return F.pmod(F.xxhash64(key), F.lit(buckets))
 
 
 def doc_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:

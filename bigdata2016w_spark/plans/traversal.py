@@ -22,7 +22,12 @@ from bigdata2016w_spark.operators.traversal import (
     kcore_peel,
     sssp_weighted,
 )
-from bigdata2016w_spark.plans.graph import PR_MOD, order_graph_edges
+from bigdata2016w_spark.plans.graph import (
+    EDGES_CTE,
+    NODES_CTE,
+    PR_MOD,
+    order_graph_edges,
+)
 from bigdata2016w_spark.registry import QuerySpec, register
 
 SSSP_SOURCE = 0
@@ -37,31 +42,31 @@ def graph_sssp_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bfs_hops(edges, SSSP_SOURCE, SSSP_HOPS, num_partitions=4)
 
 
-def _sssp_sql(source: int, hops: int) -> str:
+def _sssp_sql(source: int, rounds: int, e_cte: str = EDGES_CTE,
+              w: str = "1") -> str:
+    """Unrolled bounded-round Bellman-Ford over the edge CTE ``e_cte``;
+    each relaxation adds the weight expression ``w``."""
     parts = [f"""
-e AS MATERIALIZED (
-  SELECT DISTINCT o_custkey % {PR_MOD} AS src, o_orderkey % {PR_MOD} AS dst
-  FROM orders WHERE o_custkey % {PR_MOD} <> o_orderkey % {PR_MOD}
-),
-nodes AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
+{e_cte},
+{NODES_CTE},
 d0 AS MATERIALIZED (
   SELECT id, CASE WHEN id = {source} THEN CAST(0 AS BIGINT) END AS dist
   FROM nodes
 )"""]
-    for t in range(1, hops + 1):
+    for t in range(1, rounds + 1):
         parts.append(f"""
 d{t} AS MATERIALIZED (
   SELECT id, min(dist) AS dist FROM (
     SELECT id, dist FROM d{t - 1}
     UNION ALL
-    SELECT e.dst AS id, p.dist + 1 AS dist
+    SELECT e.dst AS id, p.dist + {w} AS dist
     FROM e JOIN d{t - 1} p ON e.src = p.id
     WHERE p.dist IS NOT NULL
   ) u GROUP BY id
 )""")
     return (
         "WITH " + ",".join(parts)
-        + f"\nSELECT id, dist FROM d{hops} WHERE dist IS NOT NULL"
+        + f"\nSELECT id, dist FROM d{rounds} WHERE dist IS NOT NULL"
     )
 
 
@@ -89,10 +94,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kcore_sql(k: int, rounds: int) -> str:
     parts = [f"""
-e AS MATERIALIZED (
-  SELECT DISTINCT o_custkey % {PR_MOD} AS src, o_orderkey % {PR_MOD} AS dst
-  FROM orders WHERE o_custkey % {PR_MOD} <> o_orderkey % {PR_MOD}
-),
+{EDGES_CTE},
 u0 AS MATERIALIZED (
   SELECT src, dst FROM e UNION SELECT dst AS src, src AS dst FROM e
 )"""]
@@ -137,10 +139,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lpa_sql(rounds: int) -> str:
     parts = [f"""
-e AS MATERIALIZED (
-  SELECT DISTINCT o_custkey % {PR_MOD} AS src, o_orderkey % {PR_MOD} AS dst
-  FROM orders WHERE o_custkey % {PR_MOD} <> o_orderkey % {PR_MOD}
-),
+{EDGES_CTE},
 u AS MATERIALIZED (
   SELECT src, dst FROM e UNION SELECT dst AS src, src AS dst FROM e
 ),
@@ -185,36 +184,16 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sssp_weighted(edges, SSSP_SOURCE, SSSP_HOPS, num_partitions=4)
 
 
-def _sssp_weighted_sql(source: int, rounds: int) -> str:
-    parts = [f"""
-e AS MATERIALIZED (
+# the weighted edge CTE wraps the plain DISTINCT in a weight projection
+_WEIGHTED_EDGES_CTE = f"""e AS MATERIALIZED (
   SELECT src, dst, {_W_EXPR} AS w FROM (
     SELECT DISTINCT o_custkey % {PR_MOD} AS src, o_orderkey % {PR_MOD} AS dst
     FROM orders WHERE o_custkey % {PR_MOD} <> o_orderkey % {PR_MOD}
   )
-),
-nodes AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-d0 AS MATERIALIZED (
-  SELECT id, CASE WHEN id = {source} THEN CAST(0 AS BIGINT) END AS dist
-  FROM nodes
-)"""]
-    for t in range(1, rounds + 1):
-        parts.append(f"""
-d{t} AS MATERIALIZED (
-  SELECT id, min(dist) AS dist FROM (
-    SELECT id, dist FROM d{t - 1}
-    UNION ALL
-    SELECT e.dst AS id, p.dist + e.w AS dist
-    FROM e JOIN d{t - 1} p ON e.src = p.id
-    WHERE p.dist IS NOT NULL
-  ) u GROUP BY id
-)""")
-    return (
-        "WITH " + ",".join(parts)
-        + f"\nSELECT id, dist FROM d{rounds} WHERE dist IS NOT NULL"
-    )
+)"""
 
 
 register(QuerySpec("graph_sssp_weighted", graph_sssp_weighted,
-                   _sssp_weighted_sql(SSSP_SOURCE, SSSP_HOPS),
+                   _sssp_sql(SSSP_SOURCE, SSSP_HOPS, _WEIGHTED_EDGES_CTE,
+                             "e.w"),
                    doc=graph_sssp_weighted.__doc__))

@@ -71,23 +71,6 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # r13: REVERTED to Spark's default (prefer sort-merge). The r12
-        # session-global preferSortMergeJoin=false flip was re-adjudicated
-        # with a 4-session ABAB A/B on a quiet host
-        # (scripts/ab_joinpref.py, 18 join-heavy queries incl. the whole
-        # Jaccard/shingle tier): per-query SMJ/SHJ ratios scattered
-        # 0.75-1.21 with inconsistent signs and the SMJ sessions' totals
-        # came out ~2% FASTER — the r12 "~8%" win does not reproduce
-        # (its cited q9 example had identical plans both ways, per the
-        # r12 verdict). With zero measured benefit, the default should
-        # be the spill-safe strategy: at 100 TB a shuffled-hash build
-        # side on a Zipfian key (shingle prefixes) can OOM where
-        # sort-merge degrades gracefully (guide §3.1). Env-overridable
-        # for deployments that measure an SHJ win on their data.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/bigdata2016w-warehouse"),

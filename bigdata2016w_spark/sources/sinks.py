@@ -249,6 +249,7 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
     from bigdata2016w_spark.operators.similarity import (
         PQ_SUBSPACES,
         _assign_to_literal_centroids,
+        _centroid_frame,
         _ivf_residual_frame,
         lloyd_centroids,
         pack_pq_codes,
@@ -267,8 +268,8 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
     e = embeddings.where(F.col("embedding").isNotNull())
     row = e.select("embedding").first()
     if row is None:  # empty (or all-NULL) corpus: a valid, empty index
-        spark.createDataFrame([], "cell int, centroid array<double>"
-                              ).write.mode(mode).parquet(f"{path}/centroids")
+        _centroid_frame(spark, []).write.mode(mode).parquet(
+            f"{path}/centroids")
         spark.createDataFrame([], "m int, code bigint, cv array<double>"
                               ).write.mode(mode).parquet(f"{path}/codebook")
         spark.createDataFrame(
@@ -288,7 +289,7 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
         return
     dim = len(row["embedding"])
     cent_lit = lloyd_centroids(e, n_cells, n_iter, dim)
-    cent = spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
+    cent = _centroid_frame(spark, cent_lit)
     cb = residual_pq_codebook(e, n_cells, dim=dim, n_iter=n_iter,
                               centroids=cent_lit)
     res = _ivf_residual_frame(
@@ -357,7 +358,10 @@ def _ivfpq_frozen_models(spark, index_path: str):
     streaming ``streaming.index_sink.ivfpq_append_sink``. Model rows
     come from the session-scoped ``_index_models`` cache (coherent under
     the train-once contract; invalidated by :func:`write_ivfpq_index`)."""
-    from bigdata2016w_spark.operators.similarity import _index_models
+    from bigdata2016w_spark.operators.similarity import (
+        _centroid_frame,
+        _index_models,
+    )
 
     cb_rows, cent_lit = _index_models(spark, index_path)
     if not cent_lit:
@@ -369,8 +373,7 @@ def _ivfpq_frozen_models(spark, index_path: str):
     n_subspaces = cb_rows[-1][0] + 1
     sd = max(len(r[2]) for r in cb_rows)
     cb = spark.createDataFrame(cb_rows, "m int, code bigint, cv array<double>")
-    cent = spark.createDataFrame(cent_lit, "cell int, centroid array<double>")
-    return cent_lit, cent, cb, n_subspaces, n_subspaces * sd
+    return cent_lit, _centroid_frame(spark, cent_lit), cb, n_subspaces, n_subspaces * sd
 
 
 def ivfpq_encode_packed(new_embeddings: DataFrame, cent_lit, cent: DataFrame,

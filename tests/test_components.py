@@ -5,42 +5,11 @@ import pytest
 from bigdata2016w_spark.registry import all_specs
 from tests.oracle import compare_spark_duckdb
 
-# components: {1,2,3,4} (path), {10,11}, {20,21,22} (triangle)
+# components: {1,2,3,4} (path), {10,11}, {20,21,22} (triangle); both CC
+# variants are checked against KNOWN_COMPONENTS in tests/test_loop.py
 KNOWN_EDGES = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)]
-
-
-def test_cc_known_graph(spark):
-    from bigdata2016w_spark.operators.components import connected_components
-
-    edges = spark.createDataFrame(KNOWN_EDGES, ["src", "dst"])
-    got = {r.id: r.component for r in connected_components(edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
-                   20: 20, 21: 20, 22: 20}
-
-
-def test_cc_round_is_one_action(spark):
-    """Each min-label round is one checkpoint job chain with the changed-
-    label count observed on it — no separate count()/join probe job. The
-    7-edge graph has diameter 3, so it takes 4 rounds (the last a no-op);
-    a separate probe costs ~5.5 more jobs per round."""
-    import uuid
-
-    from bigdata2016w_spark.operators.components import connected_components
-
-    edges = spark.createDataFrame(KNOWN_EDGES, ["src", "dst"])
-    sc = spark.sparkContext
-    group = f"cc-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "connected_components job-count pin")
-    try:
-        got = {r.id: r.component
-               for r in connected_components(edges).collect()}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert got[4] == 1 and got[22] == 20
-    rounds = 4
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < jobs <= 6 * rounds, jobs
+KNOWN_COMPONENTS = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
+                    20: 20, 21: 20, 22: 20}
 
 
 def test_cc_long_path_converges(spark):
@@ -83,18 +52,6 @@ def test_cluster_reps_are_members(spark, sf_dir):
     rows = out.collect()
     ids = {r.doc_id for r in rows}
     assert all(r.cluster_rep in ids and r.cluster_rep <= r.doc_id for r in rows)
-
-
-def test_star_cc_known_graph(spark):
-    from bigdata2016w_spark.operators.components import (
-        connected_components_star,
-    )
-
-    edges = spark.createDataFrame(KNOWN_EDGES, ["src", "dst"])
-    got = {r.id: r.component
-           for r in connected_components_star(edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
-                   20: 20, 21: 20, 22: 20}
 
 
 def test_star_cc_long_path(spark):

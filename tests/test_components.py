@@ -5,11 +5,44 @@ import pytest
 from bigdata2016w_spark.registry import all_specs
 from tests.oracle import compare_spark_duckdb
 
-# components: {1,2,3,4} (path), {10,11}, {20,21,22} (triangle); both CC
-# variants are checked against KNOWN_COMPONENTS in tests/test_loop.py
+# components: {1,2,3,4} (path), {10,11}, {20,21,22} (triangle); the star
+# variant is checked against KNOWN_COMPONENTS in tests/test_loop.py
 KNOWN_EDGES = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)]
 KNOWN_COMPONENTS = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
                     20: 20, 21: 20, 22: 20}
+
+
+def test_cc_known_graph(spark):
+    from bigdata2016w_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(KNOWN_EDGES, ["src", "dst"])
+    got = {r.id: r.component for r in connected_components(edges).collect()}
+    assert got == KNOWN_COMPONENTS
+
+
+def test_cc_round_is_one_action(spark):
+    """Each min-label round is one checkpoint job chain with the changed-
+    label count observed on it — no separate count()/join probe job. The
+    7-edge graph has diameter 3, so it takes 4 rounds (the last a no-op);
+    a separate probe costs ~5.5 more jobs per round."""
+    import uuid
+
+    from bigdata2016w_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(KNOWN_EDGES, ["src", "dst"])
+    sc = spark.sparkContext
+    group = f"cc-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "connected_components job-count pin")
+    try:
+        got = {r.id: r.component
+               for r in connected_components(edges).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got[4] == 1 and got[22] == 20
+    rounds = 4
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 6 * rounds, jobs
 
 
 def test_cc_long_path_converges(spark):

@@ -40,20 +40,24 @@ def _ops(spark, sf_dir):
     }
 
 
-# Jobs per call (final collect included, local[4]) when each op still ran
-# its own hand-written loop. Few rounds keep the test quick; every cadence
-# path still runs: unchecked rounds, the final cut, the tol stop hook
-# (pagerank), an observed probe (both CC variants) and BPE's cut-free last
-# round. The star variant's first call in a session takes 34 (32 warm).
+# Jobs per call (final collect included, local[4], AQE off) when each op
+# still ran its own hand-written loop. With AQE on, a call's job count
+# also holds one job per adaptive query stage, and how many of those run
+# depends on which shuffle stage finishes first (PageRank measured 40-42
+# per call on the hand-written loop, 39-41 on the shared one); with AQE
+# off it is the actions plus broadcasts, the same on every call. Few
+# rounds keep the test quick; every cadence path still runs: unchecked
+# rounds, the final cut, the tol stop hook (pagerank), an observed probe
+# (both CC variants) and BPE's cut-free last round.
 PARENT_JOBS = {
-    "personalized_pagerank": 40,
-    "sssp_weighted": 21,
-    "bfs_hops": 16,
-    "kcore_peel": 17,
-    "lpa_communities": 18,
-    "connected_components": 20,
-    "connected_components_star": 34,
-    "bpe_learn": 14,
+    "personalized_pagerank": 10,
+    "sssp_weighted": 6,
+    "bfs_hops": 5,
+    "kcore_peel": 4,
+    "lpa_communities": 5,
+    "connected_components": 6,
+    "connected_components_star": 6,
+    "bpe_learn": 9,
 }
 
 
@@ -66,12 +70,15 @@ def test_loop_job_budget(spark, sf_dir, op):
     build = _ops(spark, sf_dir)[op]
     sc = spark.sparkContext
     group = f"loop-jobs-{uuid.uuid4().hex}"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup(group, f"{op} job-count pin")
     try:
         rows = build().collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert rows
     if op.startswith("connected_components"):
         assert {r.id: r.component for r in rows} == KNOWN_COMPONENTS

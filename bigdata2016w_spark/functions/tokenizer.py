@@ -44,6 +44,13 @@ _STRIP = r"(^[^a-z]+|[^a-z]+$)"
 _A2_PAT = r"(?:^|(?<=\s))[^a-z\s]*([a-z](?:[^\s]*[a-z])?)"
 
 
+def sql_escape(s: str) -> str:
+    """Escape ``s`` for the body of a Spark SQL ``'...'`` literal:
+    backslashes first (the parser processes \\-escapes), then doubled
+    single quotes."""
+    return s.replace("\\", "\\\\").replace("'", "''")
+
+
 def tokenize(col: Column | str) -> Column:
     """a2-style tokens: array<string> of non-empty cleaned tokens."""
     col = F.col(col) if isinstance(col, str) else col

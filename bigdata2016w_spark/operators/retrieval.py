@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdata2016w_spark.functions.tokenizer import tokenize
+from bigdata2016w_spark.functions.tokenizer import sql_escape, tokenize
 
 RPN_OPS = ("AND", "OR")
 
@@ -91,75 +91,62 @@ def eval_rpn(postings: DataFrame, query: str) -> DataFrame:
 
 def bm25_rank(docs: DataFrame, terms: list[str], k: int = 10,
               k1: float = 1.2, b: float = 0.75) -> DataFrame:
-    """Ranked retrieval: top-k docs by BM25 over the postings table — the
-    engine's extension past the reference's boolean-only retrieval
-    (BooleanRetrievalCompressed.java evaluates membership, never rank).
+    """Ranked retrieval: top-k docs by BM25 — the engine's extension past
+    the reference's boolean-only retrieval (BooleanRetrievalCompressed.java
+    evaluates membership, never rank).
 
     score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)),
     idf = ln((N − df + 0.5)/(df + 0.5) + 1).
 
-    Only tokens matching a query term are exploded and grouped into
-    (term, docid, tf); document lengths dl come from per-document token
-    counts (``size`` of the token array, docs with no tokens dropped), so
-    no (term, docid) aggregate of the whole corpus is built. Broadcast of
-    the tiny per-term df/idf table, one scoring aggregation. All counts
-    stay int64; ln is rounded at the edge (libm last-ulp).
-
-    Scale shape: N (corpus size) and avgdl are 1-row aggregates folded
-    into the plan as broadcast cross-joins — no separate driver-side
-    count job — and the final top-k is ``orderBy().limit(k)``, which
+    One tokenized pass: a per-doc aggregate over ``tokenize(text)`` gives
+    the document length dl and each query term's tf, counted as
+    ``size(t) − size(array_remove(t, term))`` — no explode, no lambda, no
+    postings table. A one-row aggregate over that same exchange gives N
+    (document rows), Σdl and the count of docs with tokens (for avgdl)
+    and each term's df; it is broadcast-cross-joined onto the docs that
+    hold a query term, and the top-k is ``orderBy().limit(k)``, which
     Catalyst plans as TakeOrderedAndProject (per-partition bounded heaps
     + driver merge of k×partitions rows), never a single-partition
-    global window.
+    global window. Per-term expressions are SQL text, so building the
+    plan takes a fixed number of Py4J calls whatever the query length.
+    All counts stay int64; ln is rounded at the edge (libm last-ulp).
     """
     from pyspark.sql.functions import broadcast
 
-    toks = docs.select(F.col("doc_id").alias("docid"),
-                       tokenize("text").alias("t"))
-    nd = docs.agg(F.count("*").alias("n_docs"))
-    # filter the aggregate, not the rows: a row filter on size(t) would
-    # be pushed below the projection and run the tokenizer twice
-    dl = (toks.groupBy("docid").agg(F.sum(F.size("t")).alias("dl"))
-          .where(F.col("dl") > 0))
-    avgdl = dl.agg(F.sum("dl").alias("s"), F.count("*").alias("c"))
-    hits = (
-        toks.select("docid", F.explode("t").alias("term"))
-        .where(F.col("term").isin(*terms))
-        .groupBy("term", "docid")
-        .agg(F.count("*").alias("tf"))
-    )
-    df_t = hits.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        hits.join(broadcast(df_t), "term")
-        .join(dl, "docid")
-        .crossJoin(broadcast(avgdl))
-        .crossJoin(broadcast(nd))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("n_docs").cast("double") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * (F.col("tf") * (1.0 + k1))
-            / (
-                F.col("tf")
-                + k1
-                * (1.0 - b + b * F.col("dl")
-                   / (F.col("s").cast("double") / F.col("c")))
-            ),
-        )
+    qs = list(dict.fromkeys(terms))
+    tf = "".join(f", sum(size(t) - size(array_remove(t, '{sql_escape(q)}')))"
+                 for q in qs)
+    # c = [rows, dl, tf of each term]: one column, so column pruning
+    # leaves the same aggregate under both consumers and they share its
+    # exchange
+    per_doc = (
+        docs.select(F.col("doc_id").alias("docid"),
+                    tokenize("text").alias("t"))
         .groupBy("docid")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
+        .agg(F.expr(f"array(count(*), sum(size(t)){tf}) AS c"))
     )
+    tfs = [f"c[{i + 2}]" for i in range(len(qs))]
+    stats = per_doc.selectExpr(
+        "CAST(sum(c[0]) AS DOUBLE) AS n",
+        "CAST(sum(if(c[1] > 0, c[1], NULL)) AS DOUBLE) / count_if(c[1] > 0)"
+        " AS avgdl",
+        "array({}) AS df".format(", ".join(f"count_if({t} > 0)" for t in tfs)),
+    )
+    score = " + ".join(
+        f"if({t} > 0, ln((n - df[{i}] + 0.5D) / (df[{i}] + 0.5D) + 1.0D)"
+        f" * ({t} * {1.0 + k1!r}D)"
+        f" / ({t} + {k1!r}D * ({1.0 - b!r}D + {b!r}D * c[1] / avgdl)), 0.0D)"
+        for i, t in enumerate(tfs)
+    )
+    # a NULL doc_id counts in N, avgdl and df but is never ranked; tested
+    # inside the tf predicate, it is not pushed below the aggregate, which
+    # would give the two consumers different exchanges
     return (
-        scored.orderBy(F.desc("score"), F.asc("docid"))
+        per_doc.where(f"nvl2(docid, array_max(slice(c, 3, {len(qs)})), 0) > 0")
+        .crossJoin(broadcast(stats))
+        .selectExpr("docid", f"round({score or '0.0D'}, 6) AS score")
+        .orderBy(F.desc("score"), "docid")
         .limit(k)
-        .select("docid", "score")
     )
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdata2016w_spark.functions.tokenizer import (
+    sql_escape,
     tokenize,
     tokenize_letters,
     tokenize_letters_sql,
@@ -395,12 +396,6 @@ register(QuerySpec("media_audio_features", media_audio_features,
 BPE_MERGES = 10
 
 
-def _bpe_lit(s: str) -> str:
-    """Escape for a Spark SQL string literal: backslashes first (the
-    parser processes \\-escapes), then doubled single quotes."""
-    return s.replace("\\", "\\\\").replace("'", "''")
-
-
 def _merge_fold(left: str, right: str) -> str:
     """The BPE merge rewrite as ONE JVM-side left-to-right ``aggregate``
     fold over a symbol array (the standard greedy non-overlapping merge
@@ -411,7 +406,7 @@ def _merge_fold(left: str, right: str) -> str:
     ``element_at(sym, 0)`` — an ANSI error (caught by the hypothesis
     property test, not reachable from the tokenizer paths whose tokens
     are always non-empty)."""
-    lq, rq = _bpe_lit(left), _bpe_lit(right)
+    lq, rq = sql_escape(left), sql_escape(right)
     return (
         "if(size(sym) = 0, sym, "
         "aggregate(sequence(1, size(sym)),"
@@ -709,12 +704,12 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     modern search-stack shape (BM25 candidates ∪ vector-kNN candidates,
     fused by RRF: Σ 1/(60+rank)).
 
-    Composes the engine's existing retrievers: ``bm25_rank`` (postings
-    point-lookups, in-plan broadcast corpus stats, TakeOrdered top-k)
-    and exact ``knn`` (broadcast query vector, corpus never
-    shuffled, two-stage top-k). Each side returns ``HYBRID_CAND_K``
-    candidates; ranking windows run over those bounded candidate sets
-    only (≤50 rows), never the corpus. ``doc_id == vec_id`` is the
+    Composes the engine's existing retrievers: ``bm25_rank`` (one
+    tokenized per-doc pass for dl and the query terms' tf, its one-row
+    corpus stats broadcast, TakeOrdered top-k) and exact ``knn``
+    (broadcast query vector, corpus never shuffled, two-stage top-k).
+    Each side returns ``HYBRID_CAND_K`` candidates; ranking windows run
+    over those bounded candidate sets only (≤50 rows), never the corpus. ``doc_id == vec_id`` is the
     linking convention of the synthetic tables (TESTDATA.md). RRF scores
     are single IEEE expressions of exact integer ranks — bit-stable.
     """

@@ -47,6 +47,7 @@ from bigdata2016w_spark.operators.similarity import (
 )
 from bigdata2016w_spark.registry import QuerySpec, register
 from bigdata2016w_spark.shared import (
+    forget,
     scratch_dir,
     shared,
     stream_two_batches,
@@ -567,18 +568,40 @@ register(QuerySpec("documents_rejection_audit", documents_rejection_audit,
 
 def _dup_clusters(spark: SparkSession, sf_dir: str,
                   components) -> DataFrame:
-    """(doc_id, cluster_rep): ``components`` over the shared Jaccard pairs."""
-    pairs = _shared_jaccard_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    return components(pairs).select(F.col("id").alias("doc_id"),
-                                    F.col("component").alias("cluster_rep"))
+    """(doc_id, cluster_rep): ``components`` over the shared Jaccard pairs,
+    labeled once per session and read back by every consumer."""
+    def build() -> DataFrame:
+        pairs = _shared_jaccard_pairs(spark, sf_dir).select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+        )
+        return components(pairs).select(
+            F.col("id").alias("doc_id"),
+            F.col("component").alias("cluster_rep"),
+        )
+
+    return shared(spark, _dup_clusters_key(sf_dir, components), build)
+
+
+def _dup_clusters_key(sf_dir: str, components) -> tuple:
+    return ("dup_clusters", sf_dir, JACCARD_THRESHOLD, components.__name__)
+
+
+def forget_jaccard_pairs(spark: SparkSession, sf_dir: str) -> None:
+    """Drop the shared shingles and Jaccard pairs and both dup-cluster
+    labelings built from them, so the next consumer rebuilds all of
+    them: a labeling never outlives the pairs it was computed from."""
+    for components in (connected_components, connected_components_star):
+        forget(spark, _dup_clusters_key(sf_dir, components))
+    forget(spark, ("jaccard_pairs", sf_dir, JACCARD_THRESHOLD))
+    forget(spark, ("shingles", sf_dir))
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs → duplicate clusters via connected components:
     (doc_id, cluster_rep = min doc_id in the component). Only docs that
-    participate in ≥1 near-dup pair appear."""
+    participate in ≥1 near-dup pair appear. The labeling is built once
+    per session and shared with ``dedup_keep_best`` and
+    ``documents_leakage_safe_split``."""
     return _dup_clusters(spark, sf_dir, connected_components)
 
 
@@ -615,7 +638,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation — the variant that survives adversarial
     long-chain dup graphs at 100 TB (rounds bounded by log n, not
     diameter). Shares the cached Jaccard pair set and the recursive-CTE
-    oracle with ``dedup_clusters``; both must agree exactly."""
+    oracle with ``dedup_clusters``, but keeps its own session labeling,
+    so it always runs the star rounds; both must agree exactly."""
     return _dup_clusters(spark, sf_dir, connected_components_star)
 
 
@@ -633,8 +657,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the cluster table (near-dup participants only — tiny vs the
     corpus) joins doc quality, then ONE window partitioned by cluster_rep
     ranks members; partitions are bounded by cluster size, never
-    corpus-sized, so there is no skew funnel at 100 TB. Shares the cached
-    Jaccard pair set with dedup_clusters.
+    corpus-sized, so there is no skew funnel at 100 TB. Reads the
+    session's dup-cluster labeling, which ``dedup_clusters`` shares: the
+    components loop runs once per session for all of its consumers.
     """
     from pyspark.sql.window import Window
 
@@ -714,11 +739,11 @@ def documents_leakage_safe_split(
     full per-doc assignment, so the no-straddle property is
     row-checkable by the oracle rather than asserted.
 
-    100-TB shape: reuses ``dedup_clusters`` over the session-cached
-    PPJoin pair set; the split itself adds one broadcast-
-    sized left join (components table ≪ corpus: only docs in ≥1 dup
-    pair) plus a map-side hash — no new shuffle of the corpus. Oracle:
-    recursive-CTE components + the same md5 bucket arithmetic."""
+    100-TB shape: reads the session's ``dedup_clusters`` labeling
+    (built once over the shared PPJoin pair set); the split itself adds
+    one broadcast-sized left join (components table ≪ corpus: only docs
+    in ≥1 dup pair) plus a map-side hash — no new shuffle of the corpus.
+    Oracle: recursive-CTE components + the same md5 bucket arithmetic."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     cc = dedup_clusters(spark, sf_dir).withColumnRenamed("cluster_rep", "rep")
     assigned = docs.join(cc, "doc_id", "left").select(

@@ -65,9 +65,10 @@ def get_spark(
         # be drowned by stage progress bars (BENCH_r03 was truncated to
         # an unparseable tail by exactly this)
         .config("spark.ui.showConsoleProgress", "false")
-        # events.parquet stores TIMESTAMP(NANOS); Spark has no ns timestamp
-        # type, so read as long and convert in the loader (ns → µs floor,
-        # matching DuckDB's internal µs truncation)
+        # fallback for an events.parquet written as TIMESTAMP(NANOS): Spark
+        # has no ns timestamp type, so such a file reads as long and the
+        # loader converts it (ns → µs floor, matching DuckDB's internal µs
+        # truncation); the testdata's µs timestamps read as TIMESTAMP_NTZ
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))

@@ -2,13 +2,14 @@
 
 The reference's job chains write an intermediate once to HDFS ``temp/``
 and every downstream job reads it back (PairsPMI.java:178-208). Here the
-same pattern covers the PPJoin pairs, the ANN models and the streamed
-corpora that several registered queries consume. Every such value lives
-in one map keyed by the SparkContext's applicationId: PySpark runs one
-live context per process, and a stopped context's checkpoints and temp
-dirs are gone, so the first call under a new application drops every
-entry of the old one. Keys are tuples whose first element names the
-intermediate, so two builders can never collide.
+same pattern covers the PPJoin pairs, the dup-cluster labeling built on
+them (one components loop per session, not one per consumer), the ANN
+models and the streamed corpora that several registered queries
+consume. Every such value lives in one map keyed by the SparkContext's
+applicationId: PySpark runs one live context per process, and a stopped
+context's checkpoints and temp dirs are gone, so the first call under a
+new application drops every entry of the old one. Keys are tuples whose
+first element names the intermediate, so two builders can never collide.
 
 Temp dirs come from :func:`scratch_dir`, which places them under Spark's
 per-application root; Spark deletes that root on ``spark.stop()``.

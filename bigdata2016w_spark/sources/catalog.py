@@ -19,9 +19,10 @@ _S = T.StringType()
 _I = T.IntegerType()
 _L = T.LongType()
 _D = T.DoubleType()
-# parquet timestamps in the testdata are naive (isAdjustedToUTC=false);
-# Spark 4 reads them as TIMESTAMP_NTZ — declare the same so text-format
-# ingestion (read_tbl) produces identical schemas
+# every parquet timestamp in the testdata (events.ts included) is INT64
+# µs with isAdjustedToUTC=false; Spark 4 reads those as TIMESTAMP_NTZ —
+# declare the same so text-format ingestion (read_tbl, read_jsonl)
+# produces the schema load_table returns
 _TS = T.TimestampNTZType()
 
 
@@ -53,10 +54,8 @@ SCHEMAS: dict[str, T.StructType] = {
         ("l_discount", _D), ("l_tax", _D), ("l_returnflag", _S),
         ("l_linestatus", _S), ("l_shipdate", _TS),
     ),
-    # events.ts is TIMESTAMP(NANOS) on disk; the loader converts the raw
-    # long to a (session-tz UTC) timestamp via timestamp_micros
     "events": _st(
-        ("event_id", _L), ("ts", T.TimestampType()), ("user_id", _L),
+        ("event_id", _L), ("ts", _TS), ("user_id", _L),
         ("event_type", _S), ("value", _D), ("props", _S),
     ),
     "documents": _st(
@@ -81,7 +80,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     spark.conf.set("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
     if name == "events":
-        # events.ts is TIMESTAMP(NANOS): readable only with nanosAsLong.
+        # fallback for an events file written as TIMESTAMP(NANOS), which
+        # Spark reads only with nanosAsLong (the testdata's is µs).
         # Sessions not built by session.get_spark (e.g. an external
         # harness) lack the conf; it is runtime-settable, so set it here.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -29,13 +29,13 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (schema from catalog —
     streaming sources require a declared schema).
 
-    The file stores TIMESTAMP(NANOS), which Spark represents differently
-    across versions/confs: either a raw-nanos long (legacy
-    ``nanosAsLong``) or a µs-truncated timestamp (native ns support).
-    Rather than hard-code one, probe the batch reader's resolved dtype
-    under this session — the file stream source resolves the footer the
-    same way — and declare the matching schema, so batch/stream parity
-    holds bit-for-bit on any session."""
+    The testdata's file stores naive µs timestamps (TIMESTAMP_NTZ); a
+    file written as TIMESTAMP(NANOS) would read as a raw-nanos long
+    (legacy ``nanosAsLong``) or, with native ns support, as a
+    µs-truncated timestamp. Rather than hard-code one, probe the batch
+    reader's resolved dtype under this session — the file stream source
+    resolves the footer the same way — and declare the matching schema,
+    so batch/stream parity holds bit-for-bit on any session."""
     # ensure the session carries the same events-read confs as the batch
     # loader, then inspect the raw (pre-conversion) footer resolution
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -130,3 +130,59 @@ def test_dedup_clusters_star_matches_oracle(spark, sf_dir, duck):
     spec = all_specs()["dedup_clusters_star"]
     out = spec.fn(spark, sf_dir)
     compare_spark_duckdb(out, duck, spec.oracle)
+
+
+def test_dup_cluster_labeling_is_built_once_per_session(spark, tmp_path,
+                                                        monkeypatch):
+    """After one ``dedup_clusters`` call, ``dedup_keep_best`` and
+    ``documents_leakage_safe_split`` read the session's labeling and run
+    no components round. ``dedup_clusters_star`` keeps a labeling of its
+    own, so its first call still runs the star algorithm. Forgetting the
+    shared pairs forgets the labelings built from them."""
+    import functools
+
+    from bigdata2016w_spark.plans import pipeline
+
+    loops: list[str] = []
+    for name in ("connected_components", "connected_components_star"):
+        def counted(edges, _cc=getattr(pipeline, name)):
+            loops.append(_cc.__name__)
+            return _cc(edges)
+
+        monkeypatch.setattr(pipeline, name,
+                            functools.wraps(getattr(pipeline, name))(counted))
+
+    text = ("the quick brown fox jumps over the lazy dog while rain falls "
+            "on green hills and birds sing {} songs at dawn today")
+    spark.createDataFrame(
+        [(1, text.format("happy"), "en", "s", 1),
+         (2, text.format("sad"), "en", "s", 1),
+         (3, "completely unrelated text about spark shuffles and joins "
+             "nothing shared with the others at all in any window", "en",
+          "s", 1)],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    d = str(tmp_path)
+
+    clusters = {(r.doc_id, r.cluster_rep)
+                for r in pipeline.dedup_clusters(spark, d).collect()}
+    assert clusters == {(1, 1), (2, 1)}
+    assert loops == ["connected_components"]
+    [best] = pipeline.dedup_keep_best(spark, d).collect()
+    assert (best.cluster_rep, best.n_members) == (1, 2)
+    split = {r.doc_id: r.cluster_rep for r in
+             pipeline.documents_leakage_safe_split(spark, d).collect()}
+    assert split == {1: 1, 2: 1, 3: 3}
+    assert pipeline.dedup_clusters(spark, d).collect()
+    assert loops == ["connected_components"]
+
+    star = {(r.doc_id, r.cluster_rep)
+            for r in pipeline.dedup_clusters_star(spark, d).collect()}
+    assert star == clusters
+    assert loops == ["connected_components", "connected_components_star"]
+
+    pipeline.forget_jaccard_pairs(spark, d)
+    pipeline.dedup_keep_best(spark, d).collect()
+    pipeline.dedup_clusters_star(spark, d).collect()
+    assert loops == ["connected_components", "connected_components_star"] * 2

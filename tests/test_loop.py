@@ -40,13 +40,10 @@ def _ops(spark, sf_dir):
     }
 
 
-# Jobs per call (final collect included, local[4], AQE off) when each op
-# still ran its own hand-written loop. With AQE on, a call's job count
-# also holds one job per adaptive query stage, and how many of those run
-# depends on which shuffle stage finishes first (PageRank measured 40-42
-# per call on the hand-written loop, 39-41 on the shared one); with AQE
-# off it is the actions plus broadcasts, the same on every call. Few
-# rounds keep the test quick; every cadence path still runs: unchecked
+# Jobs per call (final collect included, local[4], AQE off: see
+# collect_counting_jobs; with AQE on PageRank measured 40-42 per call on
+# the hand-written loop, 39-41 on the shared one) when each op still ran
+# its own hand-written loop. Few rounds keep the test quick; every cadence path still runs: unchecked
 # rounds, the final cut, the tol stop hook (pagerank), an observed probe
 # (both CC variants) and BPE's cut-free last round.
 PARENT_JOBS = {
@@ -61,28 +58,37 @@ PARENT_JOBS = {
 }
 
 
-@pytest.mark.parametrize("op", list(PARENT_JOBS))
-def test_loop_job_budget(spark, sf_dir, op):
-    """No loop op runs more Spark jobs per call than its hand-written
-    loop did: the shared loop adds no action to any round. CC's
-    changed-label probe, for one, rides on the round's checkpoint job.
-    Both CC variants must also label the known graph exactly."""
-    build = _ops(spark, sf_dir)[op]
+def collect_counting_jobs(spark, build) -> tuple[list, int]:
+    """``build().collect()`` with AQE off for the call → (rows, the
+    number of Spark jobs the build and the collect ran). With AQE on, a
+    call's job count also holds one job per adaptive query stage, and
+    how many of those run depends on which shuffle stage finishes first;
+    with AQE off it is the actions plus broadcasts, the same on every
+    call."""
     sc = spark.sparkContext
-    group = f"loop-jobs-{uuid.uuid4().hex}"
+    group = f"job-count-{uuid.uuid4().hex}"
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup(group, f"{op} job-count pin")
+    sc.setJobGroup(group, "job-count pin")
     try:
         rows = build().collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("op", list(PARENT_JOBS))
+def test_loop_job_budget(spark, sf_dir, op):
+    """No loop op runs more Spark jobs per call than its hand-written
+    loop did: the shared loop adds no action to any round. CC's
+    changed-label probe, for one, rides on the round's checkpoint job.
+    Both CC variants must also label the known graph exactly."""
+    rows, jobs = collect_counting_jobs(spark, _ops(spark, sf_dir)[op])
     assert rows
     if op.startswith("connected_components"):
         assert {r.id: r.component for r in rows} == KNOWN_COMPONENTS
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= PARENT_JOBS[op], jobs
 
 

@@ -99,27 +99,31 @@ def test_bm25_topk_is_take_ordered_no_window(spark, sf_dir):
 
 
 def test_bm25_aggregates_only_query_term_tokens(spark, sf_dir):
-    """BM25 needs tf only for the query terms: every (term, docid)
-    aggregate must sit above the ``term IN (...)`` filter, never over the
-    whole exploded corpus. Document lengths come from per-doc token
-    counts instead of summing a full postings table."""
+    """BM25 needs tf only for the query terms, and counts each inside the
+    per-doc token array (``size`` minus ``size`` after ``array_remove``):
+    no token of the corpus becomes a row, so the optimized plan holds no
+    Generate at all, and no aggregate is keyed by term. The corpus
+    statistics read the per-doc aggregate's exchange instead of scanning
+    documents again."""
     import re
 
     from bigdata2016w_spark.plans.retrieval import retrieval_bm25
 
-    lines = (retrieval_bm25(spark, sf_dir)._jdf.queryExecution()
-             .optimizedPlan().toString().splitlines())
-    aggs = [i for i, line in enumerate(lines)
-            if re.search(r"Aggregate \[term#\d+, docid#\d+L?\]", line)]
-    assert aggs
-    for i in aggs:
-        below = []
-        for line in lines[i + 1:]:
-            if "Generate explode" in line:
-                break
-            below.append(line)
-        assert any("Filter" in ln and " IN (" in ln for ln in below), (
-            lines[i])
+    qe = retrieval_bm25(spark, sf_dir)._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    assert "Generate" not in plan
+    keys = re.findall(r"Aggregate \[([^\]]*)\]", plan)
+    assert any(re.fullmatch(r"docid#\d+L?", k) for k in keys), keys
+    assert not any("term" in k for k in keys), keys
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        physical = (retrieval_bm25(spark, sf_dir)._jdf.queryExecution()
+                    .executedPlan().toString())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert physical.count("FileScan") == 1, physical
+    assert "ReusedExchange" in physical, physical
 
 
 def test_knn_topk_is_two_stage(spark, sf_dir):

@@ -58,6 +58,25 @@ def test_bm25_matches_oracle(spark, sf_dir, duck):
     compare_spark_duckdb(spec.fn(spark, sf_dir), duck, spec.oracle)
 
 
+# Jobs per call (final collect included, local[4], AQE off): the
+# one-row corpus stats' broadcast, which runs the per-doc aggregate's
+# shuffle, and the top-k; hybrid adds its kNN side. Scanning documents
+# once per statistic ran 6 and 8.
+BM25_JOBS = {"retrieval_bm25": 3, "hybrid_search_rrf": 5}
+
+
+@pytest.mark.parametrize("name", list(BM25_JOBS))
+def test_bm25_job_budget(spark, sf_dir, name):
+    """BM25 reads documents in one tokenized pass: the corpus statistics
+    come from the same exchange as dl and tf, not from extra scans."""
+    from tests.test_loop import collect_counting_jobs
+
+    fn = all_specs()[name].fn
+    rows, jobs = collect_counting_jobs(spark, lambda: fn(spark, sf_dir))
+    assert rows
+    assert 0 < jobs <= BM25_JOBS[name], jobs
+
+
 def test_bm25_ranks_term_rich_docs_first(spark):
     from bigdata2016w_spark.operators.retrieval import bm25_rank
 

@@ -2,7 +2,30 @@
 re-ingest with read_tbl, run a real query on it — proving a reference user
 can point their existing pipe-delimited dumps at this engine."""
 
+from pathlib import Path
+
 import pyspark.sql.functions as F
+import pytest
+
+from bigdata2016w_spark.sources.catalog import SCHEMAS
+
+PERFBENCH_SF = str(Path(__file__).resolve().parent.parent
+                   / "perfbench" / "data" / "sf0.01")
+
+
+@pytest.mark.parametrize("table", list(SCHEMAS))
+@pytest.mark.parametrize("data", ["test", "perfbench"])
+def test_load_table_returns_declared_schema(spark, sf_dir, data, table):
+    """The parquet path and the declared-schema readers (read_tbl,
+    read_jsonl, read_csv_table) agree on every column type: what
+    load_table returns is exactly what SCHEMAS declares, on the test
+    tables and on the benchmark's."""
+    from bigdata2016w_spark.sources.catalog import load_table
+
+    d = sf_dir if data == "test" else PERFBENCH_SF
+    declared = [(f.name, f.dataType.simpleString())
+                for f in SCHEMAS[table].fields]
+    assert load_table(spark, d, table).dtypes == declared
 
 
 def test_tbl_roundtrip_q1(spark, sf_dir, tmp_path):

@@ -303,11 +303,11 @@ def main(argv: list[str] | None = None) -> int:
             threshold=args.threshold,
         )
         q.awaitTermination()
-        from bigdata2016w_spark.streaming.ingest import _accepted
+        from bigdata2016w_spark.streaming.batches import read_batches
 
-        # _accepted handles the no-batch-ever-committed case (empty input
-        # stream) by returning an empty frame instead of PATH_NOT_FOUND
-        n = _accepted(spark, args.output, schema).count()
+        # an empty frame, not PATH_NOT_FOUND, when no batch ever committed
+        # (empty input stream)
+        n = read_batches(spark, args.output, schema).count()
         print(f"accepted corpus: {n} docs in {args.output}")
         return 0
 

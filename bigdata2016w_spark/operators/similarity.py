@@ -31,6 +31,7 @@ from bigdata2016w_spark.operators.np_kernels import (
 )
 from bigdata2016w_spark.operators.topk import topk_per_group
 from bigdata2016w_spark.shared import shared
+from bigdata2016w_spark.streaming.batches import exists
 
 LSH_SEED = 42
 # 4 planes = 16 buckets; with 1-bit multiprobe a query scans ~5/16 of the
@@ -1653,10 +1654,8 @@ def _index_layout(spark, index_path: str) -> str:
     (``codebook/`` + ``codes/``) or ``"ivf_flat"`` (a cell-partitioned
     embedding table) — read from the directory layout the writers in
     ``sources.sinks`` produce."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jvm_path(index_path).getFileSystem(spark._jsc.hadoopConfiguration())
     for layout, sub in (("ivfpq", "centroids"), ("pq", "codebook")):
-        if fs.exists(jvm_path(f"{index_path}/{sub}")):
+        if exists(spark, f"{index_path}/{sub}"):
             return layout
     return "ivf_flat"
 

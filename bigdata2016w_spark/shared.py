@@ -81,7 +81,7 @@ def stream_two_batches(
     query, which runs until it terminates. The batch count under
     ``target`` is then asserted, so the caller always exercises a real
     multi-batch merge, never a degenerate single-batch read."""
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.batches import batch_dirs
 
     src = f"{root}/in"
     os.makedirs(src)
@@ -99,7 +99,7 @@ def stream_two_batches(
         .parquet(src)
     )
     start(stream, f"{root}/ckpt").awaitTermination()
-    dirs = _batch_dirs(spark, target)
+    dirs = batch_dirs(spark, target)
     if len(dirs) != len(parts):
         raise AssertionError(
             f"expected {len(parts)} streamed batches, got {dirs}"

@@ -16,6 +16,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from bigdata2016w_spark.streaming.batches import (
+    exists,
+    fs_path,
+    refuse_while_compacting,
+)
+
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None,
                   mode: str = "overwrite") -> None:
@@ -81,15 +87,12 @@ def compact_parquet(
     """
     import math
 
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    target = HPath(path)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
+    target, fs = fs_path(spark, path)
     total = fs.getContentSummary(target).getLength()
     n_files = max(1, math.ceil(total / target_file_bytes))
 
     df = spark.read.parquet(path)
-    staging = HPath(path + ".compact-staging")
+    staging, _ = fs_path(spark, path + ".compact-staging")
     df.coalesce(n_files).write.mode("overwrite").parquet(str(staging.toUri()))
     fs.delete(target, True)
     if not fs.rename(staging, target):
@@ -327,13 +330,8 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
     forget(spark, _index_cache_key(path))
 
 
-def _meta_sidecar_path(spark, index_path: str):
-    p = spark._jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta")
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def _delete_meta_sidecar(spark, index_path: str) -> None:
-    p, fs = _meta_sidecar_path(spark, index_path)
+    p, fs = fs_path(spark, f"{index_path}/meta")
     if fs.exists(p):
         fs.delete(p, True)
 
@@ -343,8 +341,7 @@ def index_meta_cols(spark, index_path: str) -> tuple[str, ...]:
     index has no sidecar) — read from the parquet schema, a metadata
     operation. The sidecar's own layout columns (vec_id + the hive
     ``cell``) are excluded."""
-    p, fs = _meta_sidecar_path(spark, index_path)
-    if not fs.exists(p):
+    if not exists(spark, f"{index_path}/meta"):
         return ()
     cols = spark.read.parquet(f"{index_path}/meta").columns
     return tuple(c for c in cols if c not in ("vec_id", "cell"))
@@ -416,22 +413,16 @@ def ivfpq_index_append(spark, index_path: str,
     uses ``streaming.index_sink.ivfpq_append_sink``, whose batch-stamped
     overwrite layout makes each micro-batch's append idempotent.
 
-    Refuses while a crashed compaction's ``_COMPACTING`` marker stands
-    (same guard as the streaming sink): an append into ``codes`` would
-    shift the base row count the marker recorded, so recovery could no
-    longer classify the crash point — at worst (batch size exactly equal
-    to the unfolded streamed rows) it would mis-read the fold as landed
-    and delete unfolded batch dirs. Run ``ivfpq_index_compact`` to
-    auto-recover first."""
-    from bigdata2016w_spark.streaming.index_sink import _marker_path
+    Refuses while a crashed compaction's marker stands (same guard as
+    the streaming sink): an append into ``codes`` would shift the base
+    row count the marker recorded, so recovery could no longer classify
+    the crash point — at worst (batch size exactly equal to the unfolded
+    streamed rows) it would mis-read the fold as landed and delete
+    unfolded batch dirs. Run ``ivfpq_index_compact`` to auto-recover
+    first."""
+    from bigdata2016w_spark.streaming.index_sink import _stream_dir
 
-    marker, fs = _marker_path(spark, index_path)
-    if fs.exists(marker):
-        raise ValueError(
-            f"compaction marker {marker} exists — run "
-            "ivfpq_index_compact(spark, index_path) to auto-recover the "
-            "crashed compaction before appending."
-        )
+    refuse_while_compacting(spark, _stream_dir(index_path))
     cent_lit, cent, cb, n_subspaces, dim = _ivfpq_frozen_models(
         spark, index_path
     )

@@ -6,11 +6,10 @@ FROZEN model artifacts (centroids + codebook) in one map-side pass, but
 its ``mode('append')`` write is not replay-safe: a micro-batch whose
 parquet write succeeded but whose checkpoint commit did not would append
 its rows AGAIN on replay. This sink keeps the one-pass frozen-model
-encode and swaps the landing zone for the family's batch-stamped
-overwrite layout (``streaming.ingest`` / ``streaming.sketch_sink``):
-batch N's packed codes land under ``{index}/codes_stream/batch=N``,
-hive-partitioned by cell inside the batch dir, so a replayed batch
-overwrites its own subdir instead of doubling. Probes union the base
+encode and swaps the landing zone for the replay-safe layout of
+``streaming.batches``: batch N's packed codes land under
+``{index}/codes_stream/batch=N``, hive-partitioned by cell inside the
+batch dir. Probes union the base
 ``codes`` partitions with the streamed ones
 (``knn_from_index(include_streamed=True)``); both sides prune to
 the probed cells BEFORE the union, so the scan stays n_probe cell
@@ -27,9 +26,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdata2016w_spark.streaming.ingest import (
-    _batch_dirs,
-    _checkpoint_started,
+from bigdata2016w_spark.streaming.batches import (
+    batch_dirs,
+    clear_marker,
+    fs_path,
+    leave_tombstone,
+    read_marker,
+    refuse_while_compacting,
+    start_batches,
+    write_marker,
 )
 
 CODES_SCHEMA = "vec_id bigint, codes array<tinyint>, cell int"
@@ -39,35 +44,13 @@ def _stream_dir(index_path: str) -> str:
     return f"{index_path}/codes_stream"
 
 
-def _fs_path(spark: SparkSession, path: str):
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _marker_path(spark: SparkSession, index_path: str):
-    return _fs_path(spark, f"{_stream_dir(index_path)}/_COMPACTING")
-
-
-def _tombstone_path(spark: SparkSession, index_path: str):
-    return _fs_path(spark, f"{_stream_dir(index_path)}/_COMPACTED")
-
-
 def read_streamed_codes(spark: SparkSession, index_path: str) -> DataFrame:
-    """(vec_id, codes, cell): every committed micro-batch's packed codes,
-    via the Hadoop batch-dir listing (never a glob — an in-flight batch's
-    partial files must not leak in). No batches yet → empty typed frame.
+    """(vec_id, codes, cell): every committed micro-batch's packed codes
+    (see ``streaming.batches``). No batches yet → empty typed frame.
     Each batch dir is itself hive-partitioned by cell, so a cell filter
     on this frame still prunes directories at the scan."""
-    marker, fs = _marker_path(spark, index_path)
-    if fs.exists(marker):
-        raise ValueError(
-            f"compaction marker {marker} exists — a compaction died "
-            "mid-way, so the surviving batch= dirs may or may not "
-            "already be folded into the base codes; run "
-            "ivfpq_index_compact(spark, index_path) to auto-recover, "
-            "then read again."
-        )
-    dirs = _batch_dirs(spark, _stream_dir(index_path))
+    refuse_while_compacting(spark, _stream_dir(index_path))
+    dirs = batch_dirs(spark, _stream_dir(index_path))
     if not dirs:
         return spark.createDataFrame([], CODES_SCHEMA)
     # basePath anchors partition discovery at the stream root so each
@@ -95,8 +78,9 @@ def ivfpq_index_compact(spark: SparkSession, index_path: str) -> int:
     afterwards — a fresh checkpoint would
     re-process every input file and re-encode vectors that now live in
     the base partitions. The sink enforces that even after the batch
-    dirs are gone: compaction leaves a permanent ``_COMPACTED``
-    tombstone that keeps the fresh-checkpoint guard armed.
+    dirs are gone: compaction leaves a permanent tombstone
+    (``streaming.batches.leave_tombstone``) that keeps the
+    fresh-checkpoint guard armed.
 
     Crash safety: before the base append, a marker records the base and
     streamed row counts. The append itself only ever ADDS rows, so on
@@ -108,12 +92,10 @@ def ivfpq_index_compact(spark: SparkSession, index_path: str) -> int:
     and never "fixed" by deleting data. Recovery is AUTOMATIC: calling
     this function again performs it; nothing in the protocol asks an
     operator to remove files by hand."""
-    import json
-
-    marker, fs = _marker_path(spark, index_path)
-    if fs.exists(marker):
-        return _recover_crashed_compaction(spark, index_path)
-    dirs = _batch_dirs(spark, _stream_dir(index_path))
+    info = read_marker(spark, _stream_dir(index_path))
+    if info is not None:
+        return _recover_crashed_compaction(spark, index_path, info)
+    dirs = batch_dirs(spark, _stream_dir(index_path))
     if not dirs:
         return 0
     # streamed batch dirs carry NO metadata-sidecar rows — filtered
@@ -140,11 +122,8 @@ def ivfpq_index_compact(spark: SparkSession, index_path: str) -> int:
     )
     n = streamed.count()
     base_rows = spark.read.parquet(f"{index_path}/codes").count()
-    out = fs.create(marker, True)
-    out.write(bytearray(json.dumps(
-        {"base_rows": base_rows, "streamed_rows": n}
-    ).encode()))
-    out.close()
+    write_marker(spark, _stream_dir(index_path),
+                 {"base_rows": base_rows, "streamed_rows": n})
     (
         streamed.repartition("cell")
         .write.mode("append")
@@ -160,54 +139,33 @@ def _finish_compaction_cleanup(spark, index_path: str, dirs) -> None:
     leave the permanent tombstone (keeps the sink's fresh-checkpoint
     guard armed forever — the checkpoint lives and dies with the index),
     then clear the marker."""
-    jvm = spark._jvm
-    marker, fs = _marker_path(spark, index_path)
     for d in dirs:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-    tomb, _ = _tombstone_path(spark, index_path)
-    if not fs.exists(tomb):
-        fs.create(tomb, True).close()
-    fs.delete(marker, False)
+        p, fs = fs_path(spark, d)
+        fs.delete(p, True)
+    leave_tombstone(spark, _stream_dir(index_path))
+    clear_marker(spark, _stream_dir(index_path))
 
 
-def _recover_crashed_compaction(spark, index_path: str) -> int:
+def _recover_crashed_compaction(spark, index_path: str, info) -> int:
     """Finish (or safely restart) a compaction whose marker survived a
-    crash, using the row counts the marker recorded — see
+    crash, using the row counts the marker recorded (``info``) — see
     :func:`ivfpq_index_compact`'s crash-safety note."""
-    import json
-
-    marker, fs = _marker_path(spark, index_path)
-    stream = fs.open(marker)
-    try:
-        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    try:
-        info = json.loads(raw or "{}")
-    except json.JSONDecodeError:
-        # torn marker write (crash mid-write left partial JSON): same
-        # classification as the missing-key case below — close() never
-        # completed, so the append that strictly follows it cannot have
-        # run; recovery is clear-and-refold, never an unhandled parse
-        # error (the 'recovery is automatic' contract)
-        info = {}
     if "base_rows" not in info:
-        # crash between marker creation and its single write: the append
-        # (which strictly follows the close) cannot have run
-        fs.delete(marker, False)
+        # crash between marker creation and its single write, or a torn
+        # write: the append (which strictly follows the close) cannot
+        # have run
+        clear_marker(spark, _stream_dir(index_path))
         return ivfpq_index_compact(spark, index_path)
     base, n = int(info["base_rows"]), int(info["streamed_rows"])
     cur = spark.read.parquet(f"{index_path}/codes").count()
     if cur == base:
         # the append never landed: clear the marker and redo the fold
-        fs.delete(marker, False)
+        clear_marker(spark, _stream_dir(index_path))
         return ivfpq_index_compact(spark, index_path)
     if cur == base + n:
         # the append landed: only the cleanup remains
         _finish_compaction_cleanup(
-            spark, index_path, _batch_dirs(spark, _stream_dir(index_path))
+            spark, index_path, batch_dirs(spark, _stream_dir(index_path))
         )
         return n
     raise ValueError(
@@ -233,56 +191,32 @@ def ivfpq_append_sink(
     Returns the StreamingQuery.
 
     Raises up front when the index is empty (no model to encode against,
-    the batch append's contract) and on the family's fresh-checkpoint-
-    vs-populated-target mismatch: a fresh checkpoint restarts batch ids
-    at 0 and would overwrite existing streamed batches — or, after a
-    compaction emptied codes_stream, silently re-encode every
-    already-folded input file (the ``_COMPACTED`` tombstone keeps this
-    guard armed once the batch dirs are gone)."""
+    the batch append's contract), and on a fresh checkpoint pointed at
+    a populated codes_stream (``streaming.batches.start_batches``):
+    after a compaction emptied codes_stream, that checkpoint would
+    silently re-encode every already-folded input file, so the
+    compaction's tombstone keeps the refusal armed."""
     from bigdata2016w_spark.sources.sinks import (
         _ivfpq_frozen_models,
         ivfpq_encode_packed,
     )
 
     spark = emb_stream.sparkSession
-    marker, fs = _marker_path(spark, index_path)
-    if fs.exists(marker):
-        raise ValueError(
-            f"compaction marker {marker} exists — run "
-            "ivfpq_index_compact(spark, index_path) to auto-recover the "
-            "crashed compaction before appending."
-        )
-    if not _checkpoint_started(spark, checkpoint_dir):
-        tomb, _ = _tombstone_path(spark, index_path)
-        if _batch_dirs(spark, _stream_dir(index_path)) or fs.exists(tomb):
-            raise ValueError(
-                f"index at {index_path!r} already received streamed "
-                "appends (live batch= subdirs and/or a _COMPACTED "
-                f"tombstone) but checkpoint_dir {checkpoint_dir!r} is "
-                "fresh — batch ids would restart at 0 and re-encode "
-                "already-ingested input (duplicate code rows per "
-                "vec_id). Reuse the original checkpoint; it lives and "
-                "dies with the index."
-            )
     # frozen at sink start: every batch encodes against the SAME models,
     # so a replay of batch N is bit-identical to its first run
     cent_lit, cent, cb, n_subspaces, dim = _ivfpq_frozen_models(
         spark, index_path
     )
 
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
+    def _append(batch_df: DataFrame, bid: int) -> None:
         (
             ivfpq_encode_packed(batch_df, cent_lit, cent, cb,
                                 n_subspaces, dim)
             .repartition("cell")
             .write.mode("overwrite")
             .partitionBy("cell")
-            .parquet(f"{_stream_dir(index_path)}/batch={batch_id}")
+            .parquet(f"{_stream_dir(index_path)}/batch={bid}")
         )
 
-    return (
-        emb_stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(emb_stream, _stream_dir(index_path),
+                         checkpoint_dir, _append)

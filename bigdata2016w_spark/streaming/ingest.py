@@ -5,11 +5,11 @@ accepted, and only the survivors land in the corpus.
 
 ``foreachBatch`` because the admission decision needs a batch-vs-table
 join (the cross-corpus PPJoin of ``operators.dedup``), which stock
-streaming aggregation cannot express. Exactly-once per batch id on
-retries: each batch's survivors go to a batch-stamped subdirectory with
-``overwrite`` — a replayed batch rewrites the same subdir instead of
-appending twice (the idempotence convention of
-``streaming.stateful.upsert_sink``).
+streaming aggregation cannot express. Survivors of batch N land in
+``{target_dir}/batch=N``: the replay-safe layout of
+``streaming.batches``, which also refuses a fresh checkpoint pointed at a
+populated target. What is this module's own: a replayed batch reads the
+accepted corpus only BEFORE its own id (:func:`_accepted`).
 
 At 100 TB the accepted corpus is the same parquet layout bucketed by its
 prefix-index keys, and the per-batch cross PPJoin reads only the index
@@ -23,31 +23,12 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _batch_dirs(
-    spark, target_dir: str, before_batch: int | None = None
-) -> list[str]:
-    """Committed ``batch=`` subdirectory paths under ``target_dir`` via
-    the Hadoop FileSystem API (a metadata listing, works on any DFS) —
-    NEVER a glob, which could swallow an in-flight batch's partial
-    files. ``before_batch`` excludes that id and later (the replaying
-    writer passes its own batch id; see :func:`_accepted`). Shared by
-    the admission sinks and ``streaming.sketch_sink``."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(target_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    dirs = []
-    if fs.exists(path):
-        for st in fs.listStatus(path):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("batch=")):
-                continue
-            try:
-                bid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if before_batch is None or bid < before_batch:
-                dirs.append(st.getPath().toString())
-    return dirs
+from bigdata2016w_spark.streaming.batches import (
+    batch_dirs,
+    batch_id,
+    read_batches,
+    start_batches,
+)
 
 
 def _accepted(
@@ -61,13 +42,8 @@ def _accepted(
     batch whose parquet write succeeded but whose checkpoint commit did not
     would anti-join the batch against its OWN prior output, classify every
     doc as already-accepted, and overwrite ``batch=N`` with an empty set:
-    silent permanent loss. Subdirs are enumerated via :func:`_batch_dirs`
-    (Hadoop listing, never a glob that could swallow the in-flight
-    batch)."""
-    dirs = _batch_dirs(spark, target_dir, before_batch)
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
+    silent permanent loss."""
+    return read_batches(spark, target_dir, schema, before_batch)
 
 
 def read_admission_ledger(
@@ -78,11 +54,9 @@ def read_admission_ledger(
     it, ordered by (batch, ``id_col``)."""
     parts = [
         spark.read.schema(schema).parquet(d).select(
-            F.lit(int(d.rstrip("/").rsplit("batch=", 1)[1]))
-            .cast("long").alias("batch"),
-            id_col,
+            F.lit(batch_id(d)).cast("long").alias("batch"), id_col,
         )
-        for d in sorted(_batch_dirs(spark, target_dir))
+        for d in batch_dirs(spark, target_dir)
     ]
     return reduce(DataFrame.unionAll, parts).orderBy("batch", id_col)
 
@@ -116,33 +90,20 @@ def admit_batch(
     return b.join(near, "doc_id", "left_anti").select(*batch_df.columns)
 
 
-def _checkpoint_started(spark, checkpoint_dir: str) -> bool:
-    """True iff the checkpoint has logged at least one offset — i.e. this
-    query has run before under this checkpoint (even if no batch ever
-    committed)."""
-    offsets = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{checkpoint_dir}/offsets"
-    )
-    fs = offsets.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(offsets)) and len(fs.listStatus(offsets)) > 0
+def _start_admission(stream: DataFrame, target_dir: str,
+                     checkpoint_dir: str, admit):
+    """Start an admission stream: batch N's survivors,
+    ``admit(batch_df, accepted, N)``, overwrite ``{target_dir}/batch=N``,
+    where ``accepted`` is every batch admitted before N."""
 
+    def _admit(batch_df: DataFrame, bid: int) -> None:
+        accepted = _accepted(batch_df.sparkSession, target_dir,
+                             batch_df.schema, before_batch=bid)
+        admit(batch_df, accepted, bid).write.mode("overwrite").parquet(
+            f"{target_dir}/batch={bid}"
+        )
 
-def _guard_fresh_checkpoint(spark, target_dir: str, checkpoint_dir: str,
-                            schema) -> None:
-    """Fail fast when a FRESH checkpoint (batch ids restart at 0) points
-    at a target that already holds ``batch=`` subdirs — the mismatch
-    would silently exclude every existing batch from dedup and then
-    overwrite them one by one as the new run advances."""
-    if not _checkpoint_started(spark, checkpoint_dir):
-        existing = _accepted(spark, target_dir, schema).inputFiles()
-        if existing:
-            raise ValueError(
-                f"target_dir {target_dir!r} already holds batch= subdirs "
-                f"but checkpoint_dir {checkpoint_dir!r} is fresh — batch "
-                "ids would restart at 0 and overwrite accepted batches. "
-                "Reuse the original checkpoint, or point the stream at an "
-                "empty target."
-            )
+    return start_batches(stream, target_dir, checkpoint_dir, _admit)
 
 
 def dedup_admission_sink(
@@ -152,33 +113,11 @@ def dedup_admission_sink(
     threshold: float = 0.5,
 ):
     """Start the admission stream: returns the StreamingQuery. Survivors
-    of batch N land in ``{target_dir}/batch=N``.
-
-    ``target_dir`` and ``checkpoint_dir`` live and die together: batch ids
-    are the replay-safety keys, so a FRESH checkpoint (ids restart at 0)
-    pointed at a target that already holds ``batch=`` subdirs would treat
-    every existing batch as "later than me" — silently excluded from dedup,
-    then overwritten one by one as the new run advances. Fail fast instead
-    of losing the old corpus."""
-    spark = docs_stream.sparkSession
-    _guard_fresh_checkpoint(spark, target_dir, checkpoint_dir,
-                            docs_stream.schema)
-
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        accepted = _accepted(
-            spark, target_dir, batch_df.schema, before_batch=batch_id
-        )
-        survivors = admit_batch(batch_df, accepted, threshold)
-        survivors.write.mode("overwrite").parquet(
-            f"{target_dir}/batch={batch_id}"
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    of batch N (:func:`admit_batch`) land in ``{target_dir}/batch=N``."""
+    return _start_admission(
+        docs_stream, target_dir, checkpoint_dir,
+        lambda batch_df, accepted, _: admit_batch(
+            batch_df, accepted, threshold),
     )
 
 
@@ -204,7 +143,7 @@ def _accepted_count(spark, target_dir: str,
 
     return sum(
         dir_row_count(d)
-        for d in _batch_dirs(spark, target_dir, before_batch)
+        for d in batch_dirs(spark, target_dir, before_batch)
     )
 
 
@@ -281,31 +220,12 @@ def winnow_admission_sink(
     min_shared: int = 1,
 ):
     """Streaming winnow-fingerprint admission gate: the long-span-dup
-    analogue of :func:`dedup_admission_sink`, sharing its replay-safety
-    machinery — batch-stamped overwrite subdirs, the
-    ``_accepted(before_batch=…)`` listing that keeps a replayed batch
-    from anti-joining against its own half-committed output, and the
-    fresh-checkpoint-vs-populated-target fail-fast guard. Survivors of
-    batch N land in ``{target_dir}/batch=N``."""
-    spark = docs_stream.sparkSession
-    _guard_fresh_checkpoint(spark, target_dir, checkpoint_dir,
-                            docs_stream.schema)
-
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        accepted = _accepted(
-            spark, target_dir, batch_df.schema, before_batch=batch_id
-        )
-        survivors = admit_winnow_batch(batch_df, accepted, min_shared)
-        survivors.write.mode("overwrite").parquet(
-            f"{target_dir}/batch={batch_id}"
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    analogue of :func:`dedup_admission_sink`. Survivors of batch N
+    (:func:`admit_winnow_batch`) land in ``{target_dir}/batch=N``."""
+    return _start_admission(
+        docs_stream, target_dir, checkpoint_dir,
+        lambda batch_df, accepted, _: admit_winnow_batch(
+            batch_df, accepted, min_shared),
     )
 
 
@@ -317,33 +237,14 @@ def embedding_admission_sink(
     dim: int = 64,
 ):
     """Streaming embedding-admission gate: the vector analogue of
-    :func:`dedup_admission_sink`, sharing its replay-safety machinery —
-    batch-stamped overwrite subdirs, the ``_accepted(before_batch=…)``
-    listing that keeps a replayed batch from anti-joining against its
-    own half-committed output, and the fresh-checkpoint-vs-populated-
-    target fail-fast guard. Survivors of batch N land in
-    ``{target_dir}/batch=N``."""
-    spark = vec_stream.sparkSession
-    _guard_fresh_checkpoint(spark, target_dir, checkpoint_dir,
-                            vec_stream.schema)
-
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        accepted = _accepted(
-            spark, target_dir, batch_df.schema, before_batch=batch_id
-        )
-        survivors = admit_embedding_batch(
+    :func:`dedup_admission_sink`. Survivors of batch N
+    (:func:`admit_embedding_batch`, its LSH planes sized by the accepted
+    corpus's footer row count) land in ``{target_dir}/batch=N``."""
+    return _start_admission(
+        vec_stream, target_dir, checkpoint_dir,
+        lambda batch_df, accepted, bid: admit_embedding_batch(
             batch_df, accepted, threshold, dim,
-            n_accepted=_accepted_count(spark, target_dir,
-                                       before_batch=batch_id),
-        )
-        survivors.write.mode("overwrite").parquet(
-            f"{target_dir}/batch={batch_id}"
-        )
-
-    return (
-        vec_stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+            n_accepted=_accepted_count(batch_df.sparkSession, target_dir,
+                                       before_batch=bid),
+        ),
     )

@@ -3,15 +3,13 @@ join-aggregate view of ``plans/maintenance.orders_ivm_nation_revenue``,
 maintained by a stream of order batches instead of a one-shot delta.
 
 Each micro-batch computes its own ΔV (batch ⋈ broadcast dim →
-group-by-key partial aggregate, DECIMAL money math) and lands it in a
-batch-stamped subdirectory with ``overwrite`` — the replay-safety
-convention shared with ``streaming.ingest`` / ``streaming.index_sink``:
-a batch replayed after a lost checkpoint commit REWRITES its own delta
-instead of double-applying it, so the merged view is exactly-once per
-batch id with no transactional store underneath. ``read_view`` merges
-the deltas at read time (sum is associative/commutative, so merge order
-is irrelevant and the DECIMAL totals are bit-equal to a from-scratch
-batch rebuild — pinned in tests/test_streaming.py).
+group-by-key partial aggregate, DECIMAL money math) and lands it in
+``batch=N``, the replay-safe layout of ``streaming.batches``: a replayed
+batch REWRITES its own delta instead of double-applying it.
+``read_view`` merges the deltas at read time (sum is
+associative/commutative, so merge order is irrelevant and the DECIMAL
+totals are bit-equal to a from-scratch batch rebuild — pinned in
+tests/test_streaming.py).
 
 At 100 TB the delta dirs are keys × batches rows of METADATA (25
 nations here), so merge-on-read costs nothing; a fold into a single
@@ -24,10 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata2016w_spark.streaming.ingest import (
-    _batch_dirs,
-    _guard_fresh_checkpoint,
-)
+from bigdata2016w_spark.streaming.batches import read_batches, start_batches
 
 _DELTA_SCHEMA = ("c_nationkey int, revenue decimal(18,2), "
                  "n_orders bigint")
@@ -55,23 +50,11 @@ def ivm_view_sink(
     checkpoint_dir: str,
 ):
     """Start the view-maintenance stream (availableNow); returns the
-    StreamingQuery. view_dir and checkpoint_dir live and die together —
-    same fresh-checkpoint guard (and reasoning) as the admission sinks."""
-    spark = orders_stream.sparkSession
-    # guard with the DELTA schema — view_dir holds delta batches, not
-    # order rows; inputFiles() never reads data today, but a guard that
-    # ever evaluates the frame must see the schema actually on disk
-    _guard_fresh_checkpoint(spark, view_dir, checkpoint_dir, _DELTA_SCHEMA)
+    StreamingQuery. view_dir and checkpoint_dir live and die together."""
     dim = dim.select("c_custkey", "c_nationkey")
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_ivm_batch(batch_df, batch_id, dim, view_dir)
-
-    return (
-        orders_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        orders_stream, view_dir, checkpoint_dir,
+        lambda batch_df, bid: apply_ivm_batch(batch_df, bid, dim, view_dir),
     )
 
 
@@ -84,11 +67,8 @@ def read_view(
     ≤ 0 — a fully-retracted key leaves the view instead of lingering
     as a (key, 0.00, 0) tombstone; insert-only views never produce
     one, so their read is unchanged."""
-    dirs = _batch_dirs(spark, view_dir)
-    if not dirs:
-        return spark.createDataFrame([], _DELTA_SCHEMA)
     merged = (
-        spark.read.schema(_DELTA_SCHEMA).parquet(*dirs)
+        read_batches(spark, view_dir, _DELTA_SCHEMA)
         .groupBy("c_nationkey")
         .agg(
             F.sum("revenue").cast("decimal(18,2)").alias("revenue"),
@@ -141,16 +121,9 @@ def cdc_ivm_view_sink(
     Read the maintained view back with ``read_view(...,
     drop_empty=True)`` — groups whose inserts have all been retracted
     must LEAVE the view, not linger as zero-count tombstones."""
-    spark = cdc_stream.sparkSession
-    _guard_fresh_checkpoint(spark, view_dir, checkpoint_dir, _DELTA_SCHEMA)
     dim = dim.select("c_custkey", "c_nationkey")
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cdc_ivm_batch(batch_df, batch_id, dim, view_dir)
-
-    return (
-        cdc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        cdc_stream, view_dir, checkpoint_dir,
+        lambda batch_df, bid: apply_cdc_ivm_batch(
+            batch_df, bid, dim, view_dir),
     )

@@ -3,13 +3,13 @@ register partials, merged on read.
 
 Sketches are ALGEBRAIC aggregates (counters add, registers max), so the
 streaming design writes each micro-batch's d·w-row / 2^p-row partial to
-a batch-stamped subdirectory and merges at read time: the write side
-needs no read-modify-write (a replayed batch overwrites its own subdir —
-the exactly-once-per-batch-id convention of ``streaming.ingest``), and
-the read side folds a few hundred tiny rows per batch. A read-modify-
-write counter table would instead double-count on every replay unless
-it re-derived which batches were already folded in — exactly the state
-this layout keeps in the directory structure for free.
+``batch=N/{cms,hll,qsk}`` (the replay-safe layout of
+``streaming.batches``) and merges at read time: the write side needs no
+read-modify-write, and the read side folds a few hundred tiny rows per
+batch. A read-modify-write counter table would instead double-count on
+every replay unless it re-derived which batches were already folded in
+— exactly the state this layout keeps in the directory structure for
+free.
 
 At 100 TB the per-batch partial is STILL d·w / 2^p rows — the whole
 point of maintaining sketches instead of exact aggregates on a stream.
@@ -27,9 +27,16 @@ from bigdata2016w_spark.operators.sketches import (
     hash_sample_rows,
     hll_registers,
 )
-from bigdata2016w_spark.streaming.ingest import (
-    _batch_dirs,
-    _checkpoint_started,
+from bigdata2016w_spark.streaming.batches import (
+    batch_dirs,
+    batch_id,
+    clear_marker,
+    exists,
+    fs_path,
+    read_marker,
+    refuse_while_compacting,
+    start_batches,
+    write_marker,
 )
 
 CMS_SCHEMA = "j int, slot int, cnt bigint"
@@ -52,38 +59,10 @@ def sketch_maintenance_sink(
     must then identify rows uniquely) additionally lands in
     ``batch=N/qsk`` — the quantile member of the family, whose merge
     (k smallest of the union) is just as algebraic as counter-add and
-    register-max. Returns the StreamingQuery.
+    register-max. Returns the StreamingQuery."""
 
-    Same fresh-checkpoint-vs-populated-target fail-fast as the admission
-    sinks (batch ids are the replay-safety keys here too), implemented
-    against THIS sink's nested layout — the admission sinks' guard
-    checks via a flat parquet read, which would silently pass on these
-    ``batch=N/cms|hll`` subtrees."""
-    spark = keys_stream.sparkSession
-    marker = _compaction_marker(spark, target_dir)
-    if marker.getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    ).exists(marker):
-        raise ValueError(
-            f"compaction marker {marker} exists — batches written now "
-            "would be swept up by the crashed compaction's recovery; "
-            "run compact_sketch_batches(spark, target_dir) to "
-            "auto-recover before restarting the stream."
-        )
-    if not _checkpoint_started(spark, checkpoint_dir):
-        existing = _batch_dirs(spark, target_dir)
-        if existing:
-            raise ValueError(
-                f"target_dir {target_dir!r} already holds batch= subdirs "
-                f"but checkpoint_dir {checkpoint_dir!r} is fresh — batch "
-                "ids would restart at 0 and overwrite existing sketch "
-                "partials while stale ones kept merging in. Reuse the "
-                "original checkpoint, or point the stream at an empty "
-                "target."
-            )
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        base = f"{target_dir}/batch={batch_id}"
+    def _write(batch_df: DataFrame, bid: int) -> None:
+        base = f"{target_dir}/batch={bid}"
         cms_counters(batch_df, col).write.mode("overwrite").parquet(
             f"{base}/cms"
         )
@@ -95,23 +74,16 @@ def sketch_maintenance_sink(
                 "overwrite"
             ).parquet(f"{base}/qsk")
 
-    return (
-        keys_stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(keys_stream, target_dir, checkpoint_dir, _write)
 
 
 def _read_partials(
     spark: SparkSession, target_dir: str, sub: str, schema: str,
     strict: bool = False,
 ) -> DataFrame:
-    """All batches' ``{sub}`` partials, via the Hadoop batch-dir listing
-    (``streaming.ingest._batch_dirs`` — never a glob, which would both
-    swallow an in-flight batch's partial files and throw PATH_NOT_FOUND
-    before the first commit). No batches yet → empty typed frame, so a
-    reader sees cardinality 0, not an AnalysisException.
+    """All batches' ``{sub}`` partials (see ``streaming.batches``); no
+    batches yet → empty typed frame, so a reader sees cardinality 0, not
+    an AnalysisException.
 
     ``strict`` raises when SOME batches have the partial and some don't —
     the mixed-mode signature of a stream restarted WITH ``value_col``
@@ -120,30 +92,19 @@ def _read_partials(
     if it covered all of it. (cms/hll stay lenient: they are written
     unconditionally, so a missing half there is an in-flight batch whose
     replay will overwrite the whole ``batch=N`` dir.)"""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    marker = _compaction_marker(spark, target_dir)
-    if marker.getFileSystem(hconf).exists(marker):
-        raise ValueError(
-            f"compaction marker {marker} exists — a compaction died "
-            "mid-way, so merging now could double-count; run "
-            "compact_sketch_batches(spark, target_dir) to auto-recover, "
-            "then read again."
-        )
-    batch_dirs = _batch_dirs(spark, target_dir)
+    refuse_while_compacting(spark, target_dir)
+    dirs = batch_dirs(spark, target_dir)
     paths = []
     missing = []
-    for d in batch_dirs:
-        p = jvm.org.apache.hadoop.fs.Path(f"{d}/{sub}")
+    for d in dirs:
         # a crash between the sink's writes can leave batch=N with only
         # some partials; skip the missing half instead of failing
-        if p.getFileSystem(hconf).exists(p):
+        if exists(spark, f"{d}/{sub}"):
             paths.append(f"{d}/{sub}")
         else:
             missing.append(d)
     if strict and paths and missing:
-        newest = max(batch_dirs,
-                     key=lambda d: int(d.rsplit("batch=", 1)[1]))
+        newest = dirs[-1]
         if missing == [newest]:
             # the sink writes this partial LAST, so a gap in only the
             # newest batch is the signature of an in-flight/crashed
@@ -156,7 +117,7 @@ def _read_partials(
                 "again."
             )
         raise ValueError(
-            f"{len(missing)} of {len(batch_dirs)} batch dirs under "
+            f"{len(missing)} of {len(dirs)} batch dirs under "
             f"{target_dir!r} lack a {sub!r} partial (e.g. {missing[0]!r})"
             " — the stream ran batches without this sketch enabled, and "
             "those batches' samples are gone (they were never taken); "
@@ -191,15 +152,12 @@ def compact_sketch_batches(spark: SparkSession, target_dir: str) -> int:
     the remaining originals and renames, losing nothing. No step ever
     asks an operator to remove data by hand. Mixed-mode quantile
     layouts fail fast via the strict read BEFORE anything is written."""
-    import json
-
     from pyspark.sql import functions as F
 
-    marker = _compaction_marker(spark, target_dir)
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(marker):
-        return _recover_sketch_compaction(spark, target_dir)
-    dirs = _batch_dirs(spark, target_dir)
+    info = read_marker(spark, target_dir)
+    if info is not None:
+        return _recover_sketch_compaction(spark, target_dir, info)
+    dirs = batch_dirs(spark, target_dir)
     if len(dirs) < 2:
         return 0
     # strict qsk read first: raise on mixed-mode BEFORE any rewrite
@@ -218,15 +176,8 @@ def compact_sketch_batches(spark: SparkSession, target_dir: str) -> int:
     # dirs everywhere, and omitting the folded one would make a later
     # strict read see batch=<low_id> as mode-less next to newer batches
     # and raise the mixed-mode error on a stream that never mixed modes
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    had_qsk = any(
-        (lambda p: p.getFileSystem(hconf).exists(p))(
-            jvm.org.apache.hadoop.fs.Path(f"{d}/qsk")
-        )
-        for d in dirs
-    )
-    low_id = min(int(d.rsplit("batch=", 1)[1]) for d in dirs)
+    had_qsk = any(exists(spark, f"{d}/qsk") for d in dirs)
+    low_id = batch_id(dirs[0])
     fold = f"{target_dir}/_fold"
     spark.createDataFrame(
         [tuple(r) for r in cms] or [], CMS_SCHEMA
@@ -238,9 +189,7 @@ def compact_sketch_batches(spark: SparkSession, target_dir: str) -> int:
         spark.createDataFrame(
             [tuple(r) for r in qsk_rows] or [], QSK_SCHEMA
         ).coalesce(1).write.mode("overwrite").parquet(f"{fold}/qsk")
-    out = fs.create(marker, True)
-    out.write(bytearray(json.dumps({"low_id": low_id}).encode()))
-    out.close()
+    write_marker(spark, target_dir, {"low_id": low_id})
     _finish_sketch_fold(spark, target_dir, low_id, dirs)
     return len(dirs) - 1
 
@@ -255,63 +204,33 @@ def _finish_sketch_fold(spark, target_dir: str, low_id: int,
     happened before the crash — ``batch=<low_id>`` IS the folded result
     and must survive; only stragglers with other ids (there should be
     none) are dropped."""
-    jvm = spark._jvm
-    marker = _compaction_marker(spark, target_dir)
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    fold = jvm.org.apache.hadoop.fs.Path(f"{target_dir}/_fold")
+    fold, fs = fs_path(spark, f"{target_dir}/_fold")
     fold_pending = fs.exists(fold)
     for d in (dirs if dirs is not None
-              else _batch_dirs(spark, target_dir)):
-        if not fold_pending and d.endswith(f"batch={low_id}"):
+              else batch_dirs(spark, target_dir)):
+        if not fold_pending and batch_id(d) == low_id:
             continue
-        p = jvm.org.apache.hadoop.fs.Path(d)
-        fs.delete(p, True)
+        fs.delete(fs_path(spark, d)[0], True)
     if fold_pending:
-        fs.rename(fold, jvm.org.apache.hadoop.fs.Path(
-            f"{target_dir}/batch={low_id}"
-        ))
-    fs.delete(marker, False)
+        fs.rename(fold, fs_path(spark, f"{target_dir}/batch={low_id}")[0])
+    clear_marker(spark, target_dir)
 
 
-def _recover_sketch_compaction(spark, target_dir: str) -> int:
-    """Finish a fold whose marker survived a crash: the marker is only
-    created once the ``_fold`` staging dir holds the COMPLETE merge, so
-    recovery just replays the cleanup/rename tail (idempotent — a crash
-    after the rename but before the marker delete leaves no ``_fold``
-    and the rename is skipped)."""
-    import json
-
-    marker = _compaction_marker(spark, target_dir)
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(marker)
-    try:
-        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    try:
-        info = json.loads(raw or "{}")
-    except json.JSONDecodeError:
-        # torn marker write (partial JSON): close() never completed, so
-        # the cleanup that strictly follows it cannot have run — same
-        # recovery as the missing-key case, not an unhandled parse error
-        info = {}
+def _recover_sketch_compaction(spark, target_dir: str, info) -> int:
+    """Finish a fold whose marker (recording ``info``) survived a crash:
+    the marker is only created once the ``_fold`` staging dir holds the
+    COMPLETE merge, so recovery just replays the cleanup/rename tail
+    (idempotent — a crash after the rename but before the marker delete
+    leaves no ``_fold`` and the rename is skipped)."""
     if "low_id" not in info:
         # crash between marker creation and its single write: the
         # cleanup (which strictly follows the close) cannot have run and
         # the originals are intact — clear the marker and fold normally
-        fs.delete(marker, False)
+        clear_marker(spark, target_dir)
         return compact_sketch_batches(spark, target_dir)
-    removed = len(_batch_dirs(spark, target_dir))
+    removed = len(batch_dirs(spark, target_dir))
     _finish_sketch_fold(spark, target_dir, int(info["low_id"]))
     return max(removed - 1, 0)
-
-
-def _compaction_marker(spark: SparkSession, target_dir: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(
-        f"{target_dir}/_COMPACTING"
-    )
 
 
 def read_merged_cms(spark: SparkSession, target_dir: str) -> DataFrame:

@@ -117,6 +117,7 @@ def stream_upsert_to_parquet(
     from pyspark.sql.window import Window
 
     from bigdata2016w_spark.operators.upsert import upsert
+    from bigdata2016w_spark.streaming.batches import fs_path, start_batches
 
     def _merge(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -130,11 +131,9 @@ def stream_upsert_to_parquet(
         else:
             batch_df = batch_df.dropDuplicates([key])
 
-        jvm = spark._jvm
-        HPath = jvm.org.apache.hadoop.fs.Path
-        target = HPath(target_dir)
-        fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-        matches = fs.globStatus(HPath(target_dir + ".staging-*")) or []
+        target, fs = fs_path(spark, target_dir)
+        matches = fs.globStatus(
+            fs_path(spark, target_dir + ".staging-*")[0]) or []
         stagings = sorted(
             (s.getPath() for s in matches),
             key=lambda p: int(p.getName().rsplit("-", 1)[1]),
@@ -154,7 +153,7 @@ def stream_upsert_to_parquet(
         # materialize (executor-side) before the swap: the merge plan
         # reads the directory tree it is about to rewrite
         merged = merged.localCheckpoint(eager=True)
-        staging = HPath(f"{target_dir}.staging-{batch_id}")
+        staging, _ = fs_path(spark, f"{target_dir}.staging-{batch_id}")
         merged.write.mode("overwrite").parquet(str(staging.toUri()))
         # the staging write is complete → safe to retire target + old stagings
         fs.delete(target, True)
@@ -166,12 +165,7 @@ def stream_upsert_to_parquet(
                 f"rename {staging} -> {target} failed; snapshot left in staging"
             )
 
-    return (
-        updates_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(updates_stream, target_dir, checkpoint_dir, _merge)
 
 
 ANOMALY_SCHEMA = T.StructType(

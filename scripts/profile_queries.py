@@ -1,123 +1,71 @@
-"""Per-query time-breakdown profiler (guide §1: measure first).
+"""Per-query time breakdown, layer by layer (measure first).
 
     python scripts/profile_queries.py [sf_dir] name [name ...]
 
-For each named registered query, runs it twice (bench protocol: best of 2,
-collect()) with a job description label, then parses the Spark event log
-to attribute wall-clock between:
+``sf_dir`` defaults to the benchmark's tables, ``perfbench/data/sf0.01``.
 
-- executor task time (sum over stages, per job group),
-- job wall (submission -> completion, per labelled job),
-- the residual = query wall - labelled job wall, which is driver-side
-  work: Py4J plan construction, analysis/optimization, model-fetch
-  collects are separately labelled.
-
-Prints one line per query: wall, n_jobs, job_wall, driver_residual, and
-the top stages by task time.
+Runs each named registered query twice under ``perfbench/tracing.Tracer``,
+the benchmark's own tracer, and prints both runs: the first pays the
+builds of session-shared intermediates, the second reads them. For each
+run it prints the self time of each layer (table loads, plan build,
+Catalyst planning, collect, sink writes, streaming micro-batches, and the
+residual no layer covers), then its jobs, stages, tasks, Py4J round trips
+and PPJoin counters. The first query of the session also pays JVM
+warm-up, so list a cheap query first when that matters.
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import tempfile
-import time
-from collections import defaultdict
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path[:0] = [str(ROOT), str(ROOT / "perfbench")]
 
 from bigdata2016w_spark import get_spark  # noqa: E402
 from bigdata2016w_spark.registry import all_specs  # noqa: E402
+from tracing import LAYER_METRIC, Tracer  # noqa: E402
+
+COUNTS = ("exec.jobs", "exec.stages", "exec.tasks", "driver.py4j_calls",
+          "ppjoin.shingle_rows", "ppjoin.candidates", "ppjoin.verified")
+
+
+def traced_run(tracer: Tracer, spark, sf_dir: str, name: str, fn,
+               run: int) -> dict:
+    """One op the way ``perfbench/worker.py`` traces it."""
+    with tracer.op(name, run) as op:
+        with tracer.span("plans.build"):
+            df = fn(spark, sf_dir)
+        with tracer.span("catalyst.plan") as plan:
+            qe = df._jdf.queryExecution()
+            qe.executedPlan()
+        tracer.catalyst_phases(plan, qe)
+        with tracer.span("exec.collect"):
+            df.collect()
+    return op
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    names = sys.argv[2:]
-    evt_dir = tempfile.mkdtemp(prefix="spark_events_")
-    spark = get_spark(
-        app_name="profile-queries",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": evt_dir,
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
+    names = sys.argv[1:]
     specs = all_specs()
-    walls: dict[str, list[float]] = {}
-    for name in names:
-        spec = specs[name]
-        for run in (0, 1):
-            label = f"{name}#{run}"
-            spark.sparkContext.setJobDescription(label)
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).collect()
-            walls.setdefault(name, []).append(time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
-    app_id = spark.sparkContext.applicationId
+    sf_dir = (names.pop(0) if names and names[0] not in specs
+              else str(ROOT / "perfbench" / "data" / "sf0.01"))
+    spark = get_spark(app_name="profile-queries")
+    spark.sparkContext.setLogLevel("ERROR")
+    tracer = Tracer(spark)
+    runs = {name: [traced_run(tracer, spark, sf_dir, name, specs[name].fn, r)
+                   for r in (0, 1)]
+            for name in names}
+    tracer.recount_ppjoin()
+    for name, ops in runs.items():
+        for label, op in zip(("cold", "warm"), ops):
+            c = op["counts"]
+            print(f"{name} {label}: wall={op['end'] - op['start']:.3f}s")
+            print("    self_s " + " ".join(
+                f"{metric.removesuffix('_s')}={c[metric]:.3f}"
+                for metric in LAYER_METRIC.values()))
+            print("    " + " ".join(f"{k}={int(c[k])}" for k in COUNTS))
     spark.stop()
-
-    # parse the event log
-    candidates = [p for p in Path(evt_dir).rglob("*")
-                  if p.is_file() and app_id in p.name
-                  and "appstatus" not in p.name]
-    log = max(candidates, key=lambda p: p.stat().st_size)
-    jobs: dict[int, dict] = {}
-    stage_task_time: dict[int, float] = defaultdict(float)
-    stage_names: dict[int, str] = {}
-    stage_to_label: dict[int, str] = {}
-    for line in log.open():
-        try:
-            e = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        ev = e.get("Event")
-        if ev == "SparkListenerJobStart":
-            label = e.get("Properties", {}).get(
-                "spark.job.description") or ""
-            jid = e["Job ID"]
-            jobs[jid] = {"label": label, "t0": e["Submission Time"],
-                         "stages": [s["Stage ID"]
-                                    for s in e["Stage Infos"]]}
-            for s in e["Stage Infos"]:
-                stage_to_label[s["Stage ID"]] = label
-                stage_names[s["Stage ID"]] = s["Stage Name"]
-        elif ev == "SparkListenerJobEnd":
-            j = jobs.get(e["Job ID"])
-            if j is not None:
-                j["t1"] = e["Completion Time"]
-        elif ev == "SparkListenerTaskEnd":
-            m = e.get("Task Metrics") or {}
-            stage_task_time[e["Stage ID"]] += (
-                m.get("Executor Run Time", 0) / 1e3)
-
-    for name in names:
-        per_run: dict[int, float] = defaultdict(float)
-        njobs: dict[int, int] = defaultdict(int)
-        for j in jobs.values():
-            lab = j["label"]
-            if lab.startswith(name + "#") and "t1" in j:
-                run = int(lab.split("#")[1])
-                per_run[run] += (j["t1"] - j["t0"]) / 1e3
-                njobs[run] += 1
-        # best run by wall
-        best = min(range(len(walls[name])), key=lambda r: walls[name][r])
-        wall = walls[name][best]
-        jw = per_run.get(best, 0.0)
-        print(f"{name}: wall={wall:.3f}s jobs={njobs.get(best, 0)} "
-              f"job_wall={jw:.3f}s driver_residual={wall - jw:.3f}s")
-        top = sorted(
-            ((sid, t) for sid, t in stage_task_time.items()
-             if stage_to_label.get(sid) == f"{name}#{best}"),
-            key=lambda kv: -kv[1])[:6]
-        for sid, t in top:
-            print(f"    stage {sid} task_time={t:.3f}s  "
-                  f"{stage_names.get(sid, '')[:90]}")
-    print(f"(event log: {log})")
 
 
 if __name__ == "__main__":

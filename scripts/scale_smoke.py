@@ -554,7 +554,7 @@ def main() -> None:
         ivfpq_append_sink,
         ivfpq_index_compact,
     )
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.batches import batch_dirs
     from bigdata2016w_spark.streaming.sketch_sink import (
         compact_sketch_batches,
         read_merged_cms,
@@ -579,13 +579,13 @@ def main() -> None:
         )
         ivfpq_append_sink(stream, idx, f"{tmp}/ck{n}").awaitTermination()
         queries = e.where(F.col("vec_id").isin(list(range(16, 21))))
-        pre_fan = len(_batch_dirs(spark, f"{idx}/codes_stream"))
+        pre_fan = len(batch_dirs(spark, f"{idx}/codes_stream"))
         pre = sorted(map(tuple, knn_from_index(
             spark, idx, queries, include_streamed=True).collect()))
         t0 = time.perf_counter()
         folded = ivfpq_index_compact(spark, idx)
         wall = time.perf_counter() - t0
-        post_fan = len(_batch_dirs(spark, f"{idx}/codes_stream"))
+        post_fan = len(batch_dirs(spark, f"{idx}/codes_stream"))
         post = sorted(map(tuple, knn_from_index(
             spark, idx, queries, include_streamed=True).collect()))
         assert pre == post, "index compaction changed probe results"
@@ -629,7 +629,7 @@ def main() -> None:
             t0 = time.perf_counter()
             removed = compact_sketch_batches(spark, target)
             wall = time.perf_counter() - t0
-            post_fan = len(_batch_dirs(spark, target))
+            post_fan = len(batch_dirs(spark, target))
             assert _merged(target) == pre, "sketch fold changed estimates"
             assert post_fan == 1 and removed == nb - 1
             print(f"sketch compaction @ {nb} batches: {wall:.1f}s, "

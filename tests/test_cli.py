@@ -155,7 +155,7 @@ def test_cli_admit(capsys, tmp_path, spark):
 def test_cli_compact_sketches(capsys, tmp_path, spark):
     """`compact sketches <dir>` must fold planted batch partials into
     one dir through the CLI verb, preserving the merged counters."""
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.batches import batch_dirs
     from bigdata2016w_spark.streaming.sketch_sink import read_merged_cms
 
     target = str(tmp_path / "sk")
@@ -170,7 +170,7 @@ def test_cli_compact_sketches(capsys, tmp_path, spark):
     p = _call(capsys, "compact", "sketches", target)
     assert p.returncode == 0, p.stderr[-500:]
     assert "removed 1 batch dirs" in p.stdout
-    assert len(_batch_dirs(spark, target)) == 1
+    assert len(batch_dirs(spark, target)) == 1
     assert sorted(map(tuple,
                       read_merged_cms(spark, target).collect())) == want
 

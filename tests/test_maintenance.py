@@ -249,7 +249,7 @@ def test_ivm_streamed_equals_batch_ivm_totals(spark, sf_dir):
         _streamed_ivm_view,
         orders_ivm_streamed,
     )
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.batches import batch_dirs
 
     got = {r["c_nationkey"]: (r["revenue"], r["n_orders"])
            for r in orders_ivm_streamed(spark, sf_dir).collect()}
@@ -257,7 +257,7 @@ def test_ivm_streamed_equals_batch_ivm_totals(spark, sf_dir):
             for r in orders_ivm_nation_revenue(spark, sf_dir).collect()}
     assert got == want and got
     view = _streamed_ivm_view(spark, sf_dir)
-    assert len(_batch_dirs(spark, view)) == 2
+    assert len(batch_dirs(spark, view)) == 2
 
 
 # ------------------------------------------------- ivm with retractions
@@ -307,7 +307,7 @@ def test_ivm_cdc_streamed_equals_batch_retractions(spark, sf_dir):
         orders_ivm_cdc_streamed,
         orders_ivm_retractions,
     )
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.batches import batch_dirs
 
     got = {r["c_nationkey"]: (r["revenue"], r["n_orders"])
            for r in orders_ivm_cdc_streamed(spark, sf_dir).collect()}
@@ -315,7 +315,7 @@ def test_ivm_cdc_streamed_equals_batch_retractions(spark, sf_dir):
             for r in orders_ivm_retractions(spark, sf_dir).collect()}
     assert got == want and got
     view = _streamed_cdc_view(spark, sf_dir)
-    assert len(_batch_dirs(spark, view)) == 2
+    assert len(batch_dirs(spark, view)) == 2
 
 
 def test_cdc_read_view_drops_fully_retracted_group(spark, tmp_path):

@@ -535,7 +535,7 @@ def test_streamed_sketch_state_equals_oneshot_sketch(spark, sf_dir):
         events_streamed_sketch_state,
     )
     from bigdata2016w_spark.sources.catalog import load_table
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.batches import batch_dirs
     from bigdata2016w_spark.operators.sketches import (
         cms_counters,
         hll_distinct,
@@ -550,4 +550,4 @@ def test_streamed_sketch_state_equals_oneshot_sketch(spark, sf_dir):
     cms = cms_counters(ev, "user_id").agg(
         F.count("*"), F.sum("cnt"), F.max("cnt")).collect()[0]
     assert (got["cms_nnz"], got["cms_total"], got["cms_max"]) == tuple(cms)
-    assert len(_batch_dirs(spark, _streamed_sketch_dir(spark, sf_dir))) == 2
+    assert len(batch_dirs(spark, _streamed_sketch_dir(spark, sf_dir))) == 2

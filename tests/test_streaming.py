@@ -1118,7 +1118,7 @@ def test_compact_sketch_batches_preserves_all_merges(spark, tmp_path):
 
     import pytest as _pytest
 
-    from bigdata2016w_spark.streaming.ingest import _batch_dirs
+    from bigdata2016w_spark.streaming.batches import batch_dirs
     from bigdata2016w_spark.streaming.sketch_sink import (
         compact_sketch_batches,
         read_merged_cms,
@@ -1154,7 +1154,7 @@ def test_compact_sketch_batches_preserves_all_merges(spark, tmp_path):
     want = _merged(target)
 
     assert compact_sketch_batches(spark, target) == 2
-    dirs = _batch_dirs(spark, target)
+    dirs = batch_dirs(spark, target)
     assert len(dirs) == 1 and dirs[0].endswith("batch=0")
     assert _merged(target) == want
     assert compact_sketch_batches(spark, target) == 0  # single dir: no-op

@@ -57,10 +57,14 @@ element to NaN before any pandas kernel can see it
 NULL element is indistinguishable from a genuine NaN here — the
 kernels apply NaN semantics (LSH bit set, NaN pair cosine, ANSI cast
 raise in encode) where the expression folds would NULL-poison. Every
-registered query path therefore feeds the kernels through
-``validated_embeddings``, whose guard raises on NULL elements at
-validation time (tests pin both the guard and this divergence note),
-so the divergence is unreachable from declared queries.
+entry of the geometry-bound tier (the assignment and encode kernels)
+therefore checks its input once on the way in
+(``similarity._checked``), whose guard raises on a NULL element or a
+wrong length before a kernel sees the row (tests pin both the guard
+and this divergence note). The kernels do not check again: a
+malformed row that reaches them anyway is NaN-filled (``_stack``) and
+fails the encode's ANSI bigint cast. The flat paths (LSH buckets, pair
+cosines) do not depend on a fixed ``dim`` and take vectors unchecked.
 """
 
 from __future__ import annotations
@@ -247,9 +251,8 @@ def assign_encode_fn(
     """Fused corpus pass of the IVF-PQ tiers, mapInPandas body:
     (vec_id, embedding) → (vec_id, cell, m, code) — max-cosine cell
     assignment, then (optionally residual-shifted) PQ encoding, one
-    Python crossing for the whole per-row pipeline. Validated input
-    contract: non-NULL, dim-length rows (a malformed row raises, like
-    the expression twins' raise_error guard)."""
+    Python crossing for the whole per-row pipeline. Input contract:
+    checked rows — non-NULL, dim-length, no NULL element."""
     sd = dim // n_subspaces
     cells = [int(c) for c, _ in cent_lit]
     C = np.array([v for _, v in cent_lit], dtype=np.float64)
@@ -262,11 +265,6 @@ def assign_encode_fn(
             if not len(pdf):
                 continue
             X, bad = _stack(pdf["embedding"], dim)
-            if bad.any():
-                raise ValueError(
-                    f"embedding does not match the PQ geometry "
-                    f"(dim = {dim})"
-                )
             cell = _assign_batch(X, cells, C, cn, bad)
             if residual:
                 rows = np.array([cell_row[int(c)] for c in cell])
@@ -292,8 +290,8 @@ def encode_pq_fn(
     keep: tuple[str, ...] = ("vec_id",),
 ):
     """mapInPandas body: (*keep, embedding) → (*keep, m, code) — plain
-    PQ encoding against a frozen codebook (no assignment). Validated
-    input contract as in :func:`assign_encode_fn`."""
+    PQ encoding against a frozen codebook (no assignment). Input
+    contract as in :func:`assign_encode_fn`."""
     sd = dim // n_subspaces
     cb = _cb_arrays(cb_rows)
 
@@ -301,12 +299,7 @@ def encode_pq_fn(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X, bad = _stack(pdf["embedding"], dim)
-            if bad.any():
-                raise ValueError(
-                    f"embedding does not match the PQ geometry "
-                    f"(dim = {dim})"
-                )
+            X, _ = _stack(pdf["embedding"], dim)
             codes = _encode_batch(X, cb, n_subspaces, sd)
             n = len(pdf)
             out = pd.DataFrame({

@@ -198,47 +198,42 @@ def _assign_to_literal_centroids(
     return src.mapInPandas(assign_cells_fn(cent_lit, keep), schema)
 
 
-def _lloyd_centroid_literals(
-    emb: DataFrame,
-    cent_lit: list[tuple[int, list[float]]],
-    n_iter: int,
+def _lloyd_fit(
+    e: DataFrame, n_cells: int, n_iter: int
 ) -> list[tuple[int, list[float]]]:
-    """``n_iter`` exact-arithmetic Lloyd rounds over ``emb``, returning
-    the refined centroid literals (empty cells drop out). Each round:
-    map-side max-cosine assignment against the literal matrix, then ONE
+    """The seed centroids of the checked corpus ``e`` (:func:`_checked`)
+    refined by ``n_iter`` exact-arithmetic Lloyd rounds (empty cells
+    drop out); empty on an empty corpus. Each round: map-side
+    max-cosine assignment against the literal matrix, then ONE
     (cell, dim) hash agg of quantized means (:func:`_quantized_means`,
     the label_centroids formula), so the DuckDB oracles replay the fit
     as unrolled CTE rounds. n_cells × dim rows per round cross the
     driver: the model-fetch sync, same O(1)-per-round class as
-    PageRank's dangling mass. Shared by :func:`lloyd_centroids` (full
-    corpus, caller checkpoints) and the residual-PQ coarse trainer
-    (bounded sample)."""
+    PageRank's dangling mass. Every round re-reads ``e``: a caller that
+    fits over a parquet scan and reuses the corpus afterwards passes
+    :func:`validated_embeddings`' materialization instead."""
+    cent_lit = _seed_centroid_literals(e, n_cells)
+    if not cent_lit:
+        return []
     for _ in range(n_iter):
         cent_lit = _mean_literals(
-            _assign_to_literal_centroids(emb, cent_lit), "cell"
+            _assign_to_literal_centroids(e, cent_lit), "cell"
         )
     return cent_lit
 
 
 def validated_embeddings(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     """The (vec_id, embedding) corpus projection, NULL-filtered and
-    length-GUARDED (``_guard_embedding_dim`` raise_error on any non-NULL
-    length mismatch), materialized ONCE via localCheckpoint.
+    checked (:func:`_checked`), materialized ONCE via localCheckpoint.
 
-    This is the validate-once entry point the ANN tiers share (pass the
-    result with ``validated=True``): the guard is a when/raise_error
-    expression, and Catalyst's projection collapse happily inlines it
-    into each consumer — inside the centroid-argmax fold it would be
-    re-evaluated per centroid per row, and every tier re-paid it on its
-    own corpus scan. Materializing the guarded projection evaluates it
-    exactly once per run; downstream plans see a plain column (and read
-    the corpus from checkpointed blocks instead of re-scanning parquet —
-    at cluster scale this is "validate + cache the corpus once per
-    pipeline run", the shared_shingle_sets pattern). A short row still
-    fails loudly — at validation time, where the error belongs."""
+    A pipeline that runs several ANN tiers over one corpus shares this
+    materialization (``plans.pipeline._shared_valid_embeddings``): every
+    tier then reads checkpointed blocks instead of re-scanning parquet,
+    and a bad row fails here, at validation time, where the error
+    belongs. Each tier's own entry check then passes every row."""
     return (
-        embeddings.where(F.col("embedding").isNotNull())
-        .select("vec_id", _guard_embedding_dim(dim).alias("embedding"))
+        _checked(embeddings, dim)
+        .select("vec_id", "embedding")
         .localCheckpoint(eager=True)
     )
 
@@ -481,31 +476,13 @@ def pq_d2(a, b) -> Column:
 def _pq_subvectors(
     embeddings: DataFrame, n_subspaces: int, dim: int,
     keep: tuple[str, ...] = ("vec_id",),
-    validated: bool = False,
 ) -> DataFrame:
-    """(*keep, m, sv): the M contiguous sub-vectors of each embedding —
-    one explode per input row, so all M rows of a vector stay in the
-    producing partition (downstream per-vector partial aggs combine
-    map-side). NULL embeddings are dropped up front (the DuckDB oracles
-    drop them structurally via unnest-over-len; without the filter they
-    would encode to the lowest codeword and surface as fake neighbors);
-    ``dim`` must split evenly — a remainder would silently vanish from
-    every distance. EVERY surviving row's embedding length is checked
-    against ``dim`` by an in-plan ``raise_error`` guard shared by all PQ
-    entry points (codebook / encode / ADC / IVF-PQ): a short vector's
-    ``slice`` yields short sub-vectors whose ``zip_with`` distance terms
-    are NULL, and struct ordering sorts the NULL d2 FIRST, so without
-    the guard the row would silently take the lowest codeword and
-    surface as a fake nearest neighbor. The NULL case rides inside the
-    ``when`` condition, not only the filter, because Catalyst may
-    collapse this projection with a consumer and evaluate it on
-    pre-filter rows.
-
-    ``validated`` callers already guaranteed non-NULL dim-length rows —
-    either :func:`validated_embeddings`' validate-once materialization
-    or a residual frame whose zip_with output is structurally
-    centroid-length — so the when/raise_error wrapper (which projection
-    collapse would inline into all M slice expressions) is skipped."""
+    """(*keep, m, sv): the M contiguous sub-vectors of each embedding of
+    a checked frame (:func:`_checked`, or a residual frame derived from
+    one) — one explode per input row, so all M rows of a vector stay in
+    the producing partition (downstream per-vector partial aggs combine
+    map-side). ``dim`` must split evenly — a remainder would silently
+    vanish from every distance."""
     if dim % n_subspaces:
         raise ValueError(
             f"dim={dim} not divisible by n_subspaces={n_subspaces} — "
@@ -513,28 +490,7 @@ def _pq_subvectors(
             "silently dropped from all PQ distances"
         )
     sd = dim // n_subspaces
-    if validated:
-        checked = embeddings.select(*keep, "embedding")
-    else:
-        checked = embeddings.where(F.col("embedding").isNotNull()).select(
-            *keep,
-            F.when(
-                F.col("embedding").isNull() | (F.size("embedding") == dim),
-                F.col("embedding"),
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("embedding length "),
-                        F.size("embedding").cast("string"),
-                        F.lit(
-                            f" does not match the PQ geometry "
-                            f"({n_subspaces} subspaces x {sd} dims = {dim})"
-                        ),
-                    )
-                )
-            ).alias("embedding"),
-        )
-    return checked.select(
+    return embeddings.select(
         *keep,
         F.explode(
             F.array(*[
@@ -575,9 +531,9 @@ def pq_codebook(
     train_n: int = PQ_TRAIN_N,
     init_offset: int = 0,
     n_steps: int = 1,
-    validated: bool = False,
 ) -> DataFrame:
-    """Per-subspace PQ codebook (m, code, cv array<double>).
+    """Per-subspace PQ codebook (m, code, cv array<double>) as a literal
+    DataFrame (see :func:`_pq_codebook_literal`).
 
     Trained on the ``train_n`` lowest vec_ids only — a bounded
     deterministic sample, the standard PQ practice (Jégou et al. train
@@ -606,15 +562,27 @@ def pq_codebook(
     codeword with the same zero vector would collapse the codebook to
     one live code. Codes stay 0..n_codes-1 (vec_id − init_offset).
     """
+    return _pq_codebook_literal(
+        _checked(embeddings, dim), n_codes, n_subspaces, dim, train_n,
+        init_offset, n_steps,
+    )
+
+
+def _pq_codebook_literal(
+    e: DataFrame, n_codes: int, n_subspaces: int, dim: int,
+    train_n: int = PQ_TRAIN_N, init_offset: int = 0, n_steps: int = 1,
+) -> DataFrame:
+    """:func:`pq_codebook` over the checked frame ``e``, trained and
+    re-shipped as a literal DataFrame: M·K rows fetched to the driver
+    once (a model fetch, like the IVF centroid syncs). Inlining the
+    multi-stage training plan instead would re-execute it once per
+    broadcast consumer."""
     if init_offset + n_codes > train_n:
         raise ValueError(
             f"init window [{init_offset}, {init_offset + n_codes}) exceeds "
             f"the training sample vec_id < {train_n}"
         )
-    sub = _pq_subvectors(
-        embeddings.where(F.col("vec_id") < train_n), n_subspaces, dim,
-        validated=validated,
-    )
+    sub = _pq_subvectors(e.where(F.col("vec_id") < train_n), n_subspaces, dim)
     cur = sub.where(
         (F.col("vec_id") >= init_offset)
         & (F.col("vec_id") < init_offset + n_codes)
@@ -638,7 +606,11 @@ def pq_codebook(
                 lambda t: t["c"],
             ).alias("cv")
         )
-    return cur
+    return e.sparkSession.createDataFrame(
+        [(int(r["m"]), int(r["code"]), [float(x) for x in r["cv"]])
+         for r in cur.collect()],
+        "m int, code bigint, cv array<double>",
+    )
 
 
 def pq_encode(
@@ -647,13 +619,21 @@ def pq_encode(
     n_subspaces: int = PQ_SUBSPACES,
     dim: int = 64,
     keep: tuple[str, ...] = ("vec_id",),
-    validated: bool = False,
 ) -> DataFrame:
     """(*keep, m, code): each vector's per-subspace nearest-codeword id —
     map-side argmin against the frozen codebook, zero corpus shuffle.
     This is the table a 100-TB deployment persists instead of raw
     embeddings. ``keep`` lets a caller thread extra per-vector columns
-    (the IVF-PQ index's cell) through the one corpus pass.
+    through the one corpus pass. See :func:`_pq_encode`."""
+    return _pq_encode(_checked(embeddings, dim), codebook, n_subspaces,
+                      dim, keep)
+
+
+def _pq_encode(
+    e: DataFrame, codebook: DataFrame, n_subspaces: int, dim: int,
+    keep: tuple[str, ...] = ("vec_id",),
+) -> DataFrame:
+    """:func:`pq_encode` over the checked frame ``e``.
 
     r12 optimization (guide §4.2): the subvector-explode + broadcast
     codebook join + interpreted transform/array_min argmin is replaced
@@ -676,10 +656,7 @@ def pq_encode(
         (int(r["m"]), int(r["code"]), [float(x) for x in r["cv"]])
         for r in codebook.collect()
     ]
-    src = (
-        embeddings if validated
-        else embeddings.where(F.col("embedding").isNotNull())
-    ).select(*keep, "embedding")
+    src = e.select(*keep, "embedding")
     code_t = codebook.schema["code"].dataType
     schema = T.StructType(
         [src.schema[c] for c in keep]
@@ -688,25 +665,6 @@ def pq_encode(
     )
     return src.mapInPandas(
         np_encode_pq_fn(cb_rows, n_subspaces, dim, keep), schema
-    )
-
-
-def _pq_codebook_literal(
-    embeddings: DataFrame, n_codes: int, n_subspaces: int, dim: int,
-    init_offset: int = 0, n_steps: int = 1, validated: bool = False,
-) -> DataFrame:
-    """Train the codebook and re-ship it as a literal DataFrame: M·K rows
-    fetched to the driver once (a model fetch, like the IVF centroid
-    syncs). Inlining the multi-stage training plan instead would
-    re-execute it once per broadcast consumer."""
-    cb_rows = pq_codebook(
-        embeddings, n_codes, n_subspaces, dim, init_offset=init_offset,
-        n_steps=n_steps, validated=validated,
-    ).collect()
-    return embeddings.sparkSession.createDataFrame(
-        [(int(r["m"]), int(r["code"]), [float(x) for x in r["cv"]])
-         for r in cb_rows],
-        "m int, code bigint, cv array<double>",
     )
 
 
@@ -825,27 +783,28 @@ def semdedup_drop_list(
 
 
 def _fused_assign_encode(
-    embeddings: DataFrame,
+    e: DataFrame,
     cent_lit: list[tuple[int, list[float]]],
     codebook: DataFrame,
     n_subspaces: int,
     dim: int,
     residual: bool,
 ) -> DataFrame:
-    """(vec_id, cell, m, code): the IVF-PQ tiers' whole per-row corpus
-    pipeline — max-cosine cell assignment, optional residual shift
-    against the assigned centroid, PQ nearest-codeword encoding — as ONE
-    Arrow-batched NumPy pass (np_kernels.assign_encode_fn). Replaces the
-    former three-operator chain (assignment projection → residual
-    zip_with join → encode explode/argmin), which crossed the corpus
-    through interpreted HOF evaluation three times. Map-side-only, so
-    nothing changes at scale; the two models ship in the closure (the
-    literal-broadcast convention)."""
+    """(vec_id, cell, m, code) of the checked frame ``e``: the IVF-PQ
+    tiers' whole per-row corpus pipeline — max-cosine cell assignment,
+    optional residual shift against the assigned centroid (the IVFPQ
+    decomposition, Jégou et al., TPAMI'11 §III), PQ nearest-codeword
+    encoding — as ONE Arrow-batched NumPy pass
+    (np_kernels.assign_encode_fn). The one producer of residual codes:
+    ``knn`` scores them in memory and the ``sources.sinks`` writers pack
+    and persist them. Map-side-only, so nothing changes at scale; the
+    two models ship in the closure (the literal-broadcast
+    convention)."""
     cb_rows = [
         (int(r["m"]), int(r["code"]), [float(x) for x in r["cv"]])
         for r in codebook.collect()
     ]
-    src = embeddings.select("vec_id", "embedding")
+    src = e.select("vec_id", "embedding")
     schema = T.StructType([
         src.schema["vec_id"],
         T.StructField("cell", T.IntegerType()),
@@ -858,38 +817,6 @@ def _fused_assign_encode(
     )
 
 
-def _ivf_residual_frame(
-    assigned: DataFrame, cent: DataFrame, dim: int,
-    validated: bool = False,
-) -> DataFrame:
-    """(vec_id, cell, embedding): each vector replaced by its residual
-    against its assigned cell's centroid — the IVFPQ decomposition
-    (Jégou et al., TPAMI'11 §III): residuals concentrate near the
-    origin, so the same code budget quantizes them with less error than
-    the raw vectors. Broadcast centroid join + one zip_with, map-side;
-    float→double per-dim subtraction is IEEE-exact on both engines.
-
-    The raise_error length guard must run HERE, before the zip_with —
-    zip_with pads a short embedding with NULLs up to centroid length,
-    so the residual of a short vector is full-length and would sail
-    through _pq_subvectors' shared guard, NULL out its pq_d2 terms, and
-    encode to the lowest codeword (the exact fake-neighbor failure the
-    guard exists to stop). ``validated`` callers already paid the guard
-    once (:func:`validated_embeddings`), so the zip reads a plain
-    column — keeping the raise_error expression out of the encode
-    argmin, where projection collapse would re-evaluate it per
-    codeword."""
-    emb_col = (F.col("embedding") if validated
-               else _guard_embedding_dim(dim))
-    return assigned.join(broadcast(cent), "cell").select(
-        "vec_id", "cell",
-        F.zip_with(
-            emb_col, F.col("centroid"),
-            lambda x, c: x.cast("double") - c,
-        ).alias("embedding"),
-    )
-
-
 _DIM_ERROR = (" does not match the PQ geometry (dim = {dim}) "
               "or the vector carries NULL elements")
 
@@ -899,14 +826,17 @@ def _guard_embedding_dim(dim: int, col: str = "embedding"):
     through (callers drop it), raise on a length mismatch OR a NULL
     element. The NULL case rides inside the when condition, not only an
     upstream filter, because Catalyst may collapse the projection with a
-    consumer and evaluate it on pre-filter rows (same note as
-    _pq_subvectors).
+    consumer and evaluate it on pre-filter rows.
 
-    The NULL-element raise is the kernel contract (np_kernels module
-    doc): Arrow turns a NULL list element into NaN before a pandas
-    kernel can see it, so NULL elements are indistinguishable from NaN
-    past this point — they must be rejected here, at validation time,
-    for the kernels' NULL/NaN parity claims to hold downstream."""
+    Without it a short vector fails silently: its ``slice`` sub-vectors
+    NULL out every PQ distance term and sort FIRST in the argmin, and a
+    residual ``zip_with`` NULL-pads it to full length, so it encodes to
+    the lowest codeword and surfaces as a fake neighbor; in a Lloyd fit
+    its missing dimensions drop out of the quantized means. The
+    NULL-element raise is the kernel contract (np_kernels module doc):
+    Arrow turns a NULL list element into NaN before a pandas kernel can
+    see it, so NULL elements are indistinguishable from NaN past this
+    point."""
     return F.when(
         F.col(col).isNull()
         | (
@@ -925,12 +855,21 @@ def _guard_embedding_dim(dim: int, col: str = "embedding"):
     )
 
 
+def _checked(embeddings: DataFrame, dim: int) -> DataFrame:
+    """``embeddings`` with NULL rows dropped (the DuckDB oracles drop
+    them structurally) and every other row passed through
+    :func:`_guard_embedding_dim` — the one check of the geometry-bound
+    tier, applied once where a public entry receives its frame. The
+    private stages take checked frames and never guard."""
+    return embeddings.where(F.col("embedding").isNotNull()).withColumn(
+        "embedding", _guard_embedding_dim(dim))
+
+
 def lloyd_centroids(
     embeddings: DataFrame,
     n_cells: int = 16,
     n_iter: int = 2,
     dim: int = 64,
-    validated: bool = False,
 ) -> list[tuple[int, list[float]]]:
     """Seed centroids Lloyd-refined over the (NULL-filtered) corpus in
     EXACT arithmetic — the ``"lloyd"`` coarse stage of :func:`knn`, the
@@ -939,9 +878,9 @@ def lloyd_centroids(
     lowest-vec_id embeddings; each of ``n_iter`` rounds is a map-side
     max-cosine assignment against the literal centroid matrix (no corpus
     shuffle, no row expansion) plus one hash agg of quantized means, and
-    empty cells drop out. Because every step is closed-form, the oracle
-    replays the fit as ``n_iter`` unrolled CTE rounds (the PageRank
-    oracle trick) and the probe search bit-matches.
+    empty cells drop out (:func:`_lloyd_fit`). Because every step is
+    closed-form, the oracle replays the fit as ``n_iter`` unrolled CTE
+    rounds (the PageRank oracle trick) and the probe search bit-matches.
 
     Exposed as a model literal so the residual-PQ tier can train, encode
     and probe against the SAME centroids without re-fitting per
@@ -953,26 +892,10 @@ def lloyd_centroids(
     fixtures before this trainer existed. Against the Lloyd cell MEAN,
     residual variance is the within-cell variance — strictly the part
     the coarse quantizer didn't explain. Scale: n_iter × (map-side
-    assignment + one hash agg), n_cells·dim driver rows per round,
-    corpus checkpointed once; a production deployment persists the
-    result (write_ivfpq_index) instead of re-fitting per query."""
-    # shared PQ length guard, applied BEFORE the fit: a short non-NULL
-    # embedding silently skews the quantized centroid means (and an
-    # all-short cell only surfaces as a later driver-side KeyError).
-    # ``validated`` callers pass :func:`validated_embeddings`' output —
-    # guard and checkpoint already paid once for the whole run.
-    if validated:
-        e = emb = embeddings
-    else:
-        e = embeddings.where(F.col("embedding").isNotNull()).select(
-            "vec_id", _guard_embedding_dim(dim).alias("embedding")
-        )
-    seed = _seed_centroid_literals(e, n_cells)
-    if not seed:
-        return []
-    if not validated:
-        emb = e.select("vec_id", "embedding").localCheckpoint(eager=True)
-    return _lloyd_centroid_literals(emb, seed, n_iter)
+    assignment + one hash agg), n_cells·dim driver rows per round; a
+    production deployment persists the result (write_ivfpq_index)
+    instead of re-fitting per query."""
+    return _lloyd_fit(_checked(embeddings, dim), n_cells, n_iter)
 
 
 PQ_RES_STEPS = 2  # codebook Lloyd steps for the residual tier (see below)
@@ -988,14 +911,32 @@ def residual_pq_codebook(
     n_iter: int = 2,
     centroids: list[tuple[int, list[float]]] | None = None,
     n_steps: int = PQ_RES_STEPS,
-    validated: bool = False,
 ) -> DataFrame | None:
     """Train the residual PQ codebook (the ``"residual_pq"`` model) as
-    a literal DataFrame, or None on an empty corpus. The codebook
-    training itself reads ONLY vec_id < train_n (the filter pushes below
-    the assignment map to the scan) — O(train_n·M·K·n_steps) at any
-    corpus size; the coarse :func:`lloyd_centroids` fit is the one
-    corpus-sized pass (pass ``centroids`` to reuse an existing fit).
+    a literal DataFrame, or None on an empty corpus. The coarse
+    :func:`lloyd_centroids` fit is the one corpus-sized pass (pass
+    ``centroids`` to reuse an existing fit); see
+    :func:`_residual_codebook` for the codebook itself."""
+    e = _checked(embeddings, dim)
+    cent_lit = (centroids if centroids is not None
+                else _lloyd_fit(e, n_cells, n_iter))
+    if not cent_lit:
+        return None
+    return _residual_codebook(e, cent_lit, n_cells, n_codes, n_subspaces,
+                              dim, train_n, n_steps)
+
+
+def _residual_codebook(
+    e: DataFrame, cent_lit, n_cells: int, n_codes: int, n_subspaces: int,
+    dim: int, train_n: int = PQ_TRAIN_N, n_steps: int = PQ_RES_STEPS,
+) -> DataFrame:
+    """:func:`residual_pq_codebook` of the checked frame ``e`` against
+    the centroid literals ``cent_lit``. The training reads ONLY
+    vec_id < train_n (the filter pushes below the assignment map to the
+    scan) — O(train_n·M·K·n_steps) at any corpus size. Each training
+    vector is replaced by its residual against its assigned cell's
+    centroid (broadcast centroid join + one zip_with, map-side;
+    float→double per-dim subtraction is IEEE-exact on both engines).
     Residual sub-vectors carry less structure than raw ones (the cluster
     component is already subtracted), so the codebook takes
     ``n_steps`` = 2 Lloyd steps where the global codebook converges
@@ -1005,24 +946,17 @@ def residual_pq_codebook(
     degenerate (n_iter=0) quantizer — whose seed-centroid residuals are
     all-zero vectors — can never seed every codeword identically (see
     pq_codebook's init_offset note)."""
-    e = (embeddings if validated
-         else embeddings.where(F.col("embedding").isNotNull()))
-    cent_lit = (centroids if centroids is not None
-                else lloyd_centroids(e, n_cells, n_iter, dim,
-                                     validated=validated))
-    if not cent_lit:
-        return None
     bounded = e.where(F.col("vec_id") < train_n)
-    res = _ivf_residual_frame(
-        _assign_to_literal_centroids(bounded, cent_lit),
-        _centroid_frame(e.sparkSession, cent_lit), dim,
-        validated=validated,
+    res = _assign_to_literal_centroids(bounded, cent_lit).join(
+        broadcast(_centroid_frame(e.sparkSession, cent_lit)), "cell"
+    ).select(
+        "vec_id", "cell",
+        F.zip_with(
+            "embedding", "centroid", lambda x, c: x.cast("double") - c,
+        ).alias("embedding"),
     )
-    # res rows are structurally dim-length (guard ran before the zip)
-    return _pq_codebook_literal(
-        res, n_codes, n_subspaces, dim, init_offset=n_cells,
-        n_steps=n_steps, validated=True,
-    )
+    return _pq_codebook_literal(res, n_codes, n_subspaces, dim,
+                                init_offset=n_cells, n_steps=n_steps)
 
 
 # Frozen model artifacts of a persisted IVF-PQ index, fetched ONCE per
@@ -1354,11 +1288,11 @@ def _kmeans_assigned(e: DataFrame, n_cells: int):
                       for i, c in enumerate(model.clusterCenters())]
 
 
-def _coarse(e: DataFrame, coarse: str, n_cells: int, n_iter: int, dim: int,
-            centroids, validated: bool) -> list[tuple[int, list[float]]]:
+def _coarse(e: DataFrame, coarse: str, n_cells: int, n_iter: int,
+            centroids) -> list[tuple[int, list[float]]]:
     """Centroid literals of the closed-form coarse stages: ``"seed"``
     (the n_cells lowest vec_ids, no training pass) or ``"lloyd"``
-    (:func:`lloyd_centroids`); ``centroids`` reuses an existing fit.
+    (:func:`_lloyd_fit`); ``centroids`` reuses an existing fit.
     Empty on an empty corpus. Both are collected once at plan build —
     n_cells driver rows, like fetching a trained model — so assignment
     (:func:`_assigned`) is a pure projection with the matrix baked in,
@@ -1366,7 +1300,7 @@ def _coarse(e: DataFrame, coarse: str, n_cells: int, n_iter: int, dim: int,
     if centroids is not None:
         return centroids
     if coarse == "lloyd":
-        return lloyd_centroids(e, n_cells, n_iter, dim, validated=validated)
+        return _lloyd_fit(e, n_cells, n_iter)
     return _seed_centroid_literals(e, n_cells)
 
 
@@ -1508,7 +1442,6 @@ def knn(
     dim: int = 64,
     n_codes: int = PQ_CODES,
     n_subspaces: int = PQ_SUBSPACES,
-    validated: bool = False,
 ) -> DataFrame:
     """Top-k neighbors of each query id: (query_id, vec_id, cosine) for
     ``code="flat"`` or a rerank, (query_id, vec_id, adc_d2) for PQ codes;
@@ -1547,24 +1480,28 @@ def knn(
     ``keep`` threads the predicate's columns through the assignment. A
     highly selective filter inside unprobed cells needs a larger
     ``n_probe`` (the ivf_probe_recall_sweep knob), not another
-    algorithm. ``validated`` callers pass :func:`validated_embeddings`'
-    output, so the length guard is not re-paid per stage.
+    algorithm.
+
+    Every path with a coarse stage or PQ codes depends on ``dim``, so it
+    checks the corpus once on entry (:func:`_checked`): a NULL row is
+    dropped, and a row of another length or with a NULL element raises.
+    The exact and ``"lsh"`` flat paths do not depend on ``dim`` and take
+    any equal-length vectors unchecked.
 
     Every closed-form combination (no coarse stage, ``"seed"``,
     ``"lloyd"``; any code) is replayed bit-exactly by a DuckDB oracle.
     """
     spark = embeddings.sparkSession
-    e = (embeddings if validated
-         else embeddings.where(F.col("embedding").isNotNull()))
     if rerank:
         short = knn(
             embeddings, query_ids, k * rerank, coarse=coarse, code=code,
             candidate_filter=candidate_filter, n_cells=n_cells,
             n_probe=n_probe, n_iter=n_iter, centroids=centroids,
             codebook=codebook, keep=keep, dim=dim, n_codes=n_codes,
-            n_subspaces=n_subspaces, validated=validated,
+            n_subspaces=n_subspaces,
         ).select("query_id", "vec_id")
-        e = e.select("vec_id", "embedding")
+        e = embeddings.where(F.col("embedding").isNotNull()).select(
+            "vec_id", "embedding")
         return _rerank(short, e, _queries(e, query_ids), k)
     if coarse is None and code == "flat":
         cand = (embeddings if candidate_filter is None
@@ -1582,13 +1519,14 @@ def knn(
             _flat_scores(broadcast(q), emb_b, "bucket").distinct(),
             "cosine", k,
         )
+    e = _checked(embeddings, dim)
     if code == "pq" and coarse is None:
         cb = codebook if codebook is not None else _pq_codebook_literal(
-            e, n_codes, n_subspaces, dim, validated=validated)
+            e, n_codes, n_subspaces, dim)
         qsub = _pq_subvectors(e.where(F.col("vec_id").isin(*query_ids)),
-                              n_subspaces, dim, validated=validated)
+                              n_subspaces, dim)
         return _adc_topk(
-            pq_encode(e, cb, n_subspaces, dim, validated=validated),
+            _pq_encode(e, cb, n_subspaces, dim),
             _lut(qsub, cb, F.col("vec_id").alias("query_id")),
             ["m", "code"], k,
         )
@@ -1596,8 +1534,7 @@ def knn(
     if coarse == "kmeans":
         assigned, cent_lit = _kmeans_assigned(e, n_cells)
     else:
-        cent_lit = _coarse(e, coarse, n_cells, n_iter, dim, centroids,
-                           validated)
+        cent_lit = _coarse(e, coarse, n_cells, n_iter, centroids)
         if not cent_lit:
             return _empty(spark, "cosine" if code == "flat" else "adc_d2")
         if code == "flat":
@@ -1612,12 +1549,10 @@ def knn(
     residual = code == "residual_pq"
     if codebook is None:
         codebook = (
-            residual_pq_codebook(e, n_cells, n_codes, n_subspaces, dim,
-                                 n_iter=n_iter, centroids=cent_lit,
-                                 validated=validated)
+            _residual_codebook(e, cent_lit, n_cells, n_codes, n_subspaces,
+                               dim)
             if residual else
-            _pq_codebook_literal(e, n_codes, n_subspaces, dim,
-                                 validated=validated)
+            _pq_codebook_literal(e, n_codes, n_subspaces, dim)
         )
     codes = _fused_assign_encode(e, cent_lit, codebook, n_subspaces, dim,
                                  residual=residual)
@@ -1625,26 +1560,21 @@ def knn(
     if not residual:
         probes = _probe(q, cent_lit, n_probe).select("query_id", "cell")
         qsub = _pq_subvectors(e.where(F.col("vec_id").isin(*query_ids)),
-                              n_subspaces, dim, validated=validated)
+                              n_subspaces, dim)
         return _adc_topk(
             codes.join(broadcast(probes), "cell"),
             _lut(qsub, codebook, F.col("vec_id").alias("query_id")),
             ["query_id", "m", "code"], k,
         )
     # per-(query, probed cell) residual q − centroid(cell): the LUT key
-    # gains the cell column. The length guard runs before the zip_with
-    # for the same reason as in _ivf_residual_frame (zip_with would
-    # NULL-pad a short query); the residual rows are then structurally
-    # dim-length.
+    # gains the cell column
     qres = _probe(q, cent_lit, n_probe, "centroid").select(
         "query_id", "cell",
         F.zip_with(
-            _guard_embedding_dim(dim, "q_emb"), F.col("centroid"),
-            lambda x, c: x.cast("double") - c,
+            "q_emb", "centroid", lambda x, c: x.cast("double") - c,
         ).alias("embedding"),
     )
-    qsub = _pq_subvectors(qres, n_subspaces, dim,
-                          keep=("query_id", "cell"), validated=True)
+    qsub = _pq_subvectors(qres, n_subspaces, dim, keep=("query_id", "cell"))
     return _adc_topk(codes, _lut(qsub, codebook, "query_id", "cell"),
                      ["cell", "m", "code"], k)
 
@@ -1681,12 +1611,13 @@ def knn_from_index(
       per-cell quantized means (:func:`_mean_literals`, n_cells × dim
       rows), and the candidate scan reads ONLY the probed cell
       partitions — dynamic partition pruning turns the probes⋈index
-      join on the partition column into a directory-level skip;
+      join on the partition column into a directory-level skip; a flat
+      search does not depend on ``dim``, so its queries go unchecked;
     - PQ (``write_pq_index``): geometry (M = max(m)+1, subdim = len(cv))
       is derived from the stored codebook rather than trusted from the
       caller — a mismatch would NULL out every LUT distance — and the
       scan reads only the packed codes (M bytes/vector); every query
-      row's length is checked in-plan by :func:`_pq_subvectors`;
+      row is checked in-plan against that geometry (:func:`_checked`);
     - residual IVF-PQ (``write_ivfpq_index``): centroids and codebook
       come from the session model cache (one bounded fetch per index),
       and probe ranking + LUT are computed on the DRIVER
@@ -1735,8 +1666,8 @@ def knn_from_index(
         if meta["mm"] is None:  # empty index (empty corpus at write time)
             return _empty(spark, "adc_d2")
         n_subspaces = int(meta["mm"]) + 1
-        qsub = _pq_subvectors(queries, n_subspaces,
-                              n_subspaces * int(meta["sd"]))
+        dim = n_subspaces * int(meta["sd"])
+        qsub = _pq_subvectors(_checked(queries, dim), n_subspaces, dim)
         codes = unpack_pq_codes(spark.read.parquet(f"{index_path}/codes"))
         return _adc_topk(codes, _lut(qsub, cb, F.col("vec_id").alias(
             "query_id")), ["m", "code"], k)

@@ -1012,7 +1012,7 @@ def ann_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn(
         _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, KNN_K,
         coarse="lloyd", n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
-        n_iter=_LLOYD_ITERS, validated=True,
+        n_iter=_LLOYD_ITERS,
     )
 
 
@@ -1126,7 +1126,7 @@ def _shared_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(spark, ("pq_codebook", sf_dir),
                   lambda: _pq_codebook_literal(
                       _shared_valid_embeddings(spark, sf_dir), PQ_CODES,
-                      PQ_SUBSPACES, 64, validated=True,
+                      PQ_SUBSPACES, 64,
                   ))
 
 
@@ -1134,7 +1134,6 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn(
         _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, KNN_K,
         code="pq", codebook=_shared_pq_codebook(spark, sf_dir),
-        validated=True,
     )
 
 
@@ -1256,7 +1255,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn(
         _shared_valid_embeddings(spark, sf_dir), KNN_QUERY_IDS, KNN_K,
         coarse="seed", code="pq", n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
-        codebook=_shared_pq_codebook(spark, sf_dir), validated=True,
+        codebook=_shared_pq_codebook(spark, sf_dir),
     )
 
 
@@ -1326,12 +1325,10 @@ register(QuerySpec("ann_ivf_pq", ann_ivf_pq, _ANN_IVF_PQ_SQL,
 # corpus-sized training pass, and the codebook trainer, the encoder and
 # the probe all consume the same literals.
 def _shared_valid_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The validate-once corpus projection the ANN tiers share
-    (operators/similarity.validated_embeddings): the length guard is a
-    raise_error expression that projection collapse would otherwise
-    inline into each tier's centroid/codeword folds and re-evaluate per
-    row per fold arm, and every tier would re-scan parquet to pay it.
-    One materialization per (session, sf_dir) — the
+    """The checked corpus projection the ANN tiers share
+    (operators/similarity.validated_embeddings): one materialization per
+    (session, sf_dir), so every tier reads checkpointed blocks instead
+    of re-scanning parquet, and a bad row fails once, here — the
     shared_shingle_sets pattern applied to the embedding corpus."""
     from bigdata2016w_spark.operators.similarity import validated_embeddings
 
@@ -1345,7 +1342,7 @@ def _shared_lloyd_centroids(spark: SparkSession, sf_dir: str) -> list:
 
     return shared(spark, ("lloyd_centroids", sf_dir), lambda: lloyd_centroids(
         _shared_valid_embeddings(spark, sf_dir),
-        n_cells=_IVF_CELLS, n_iter=_LLOYD_ITERS, validated=True,
+        n_cells=_IVF_CELLS, n_iter=_LLOYD_ITERS,
     ))
 
 
@@ -1357,7 +1354,6 @@ def _shared_residual_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
                       _shared_valid_embeddings(spark, sf_dir),
                       n_cells=_IVF_CELLS, n_iter=_LLOYD_ITERS,
                       centroids=_shared_lloyd_centroids(spark, sf_dir),
-                      validated=True,
                   ))
 
 
@@ -1372,7 +1368,7 @@ def _residual_knn(spark: SparkSession, sf_dir: str, k: int,
         coarse="lloyd", code="residual_pq", rerank=rerank,
         n_cells=_IVF_CELLS, n_probe=_IVF_PROBE, n_iter=_LLOYD_ITERS,
         codebook=_shared_residual_pq_codebook(spark, sf_dir),
-        centroids=_shared_lloyd_centroids(spark, sf_dir), validated=True,
+        centroids=_shared_lloyd_centroids(spark, sf_dir),
     )
 
 

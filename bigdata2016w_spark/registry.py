@@ -125,13 +125,7 @@ def all_specs() -> dict[str, QuerySpec]:
     reordered so _WINDOW_FRONT leads (the driver's 50-query correctness
     window), followed by the rest in registration order."""
     for mod in _SPEC_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Module not built yet (incremental rounds) — skip only if it is
-            # the plan module itself that is missing.
-            if mod not in str(e):
-                raise
+        importlib.import_module(mod)
     missing = [n for n in _WINDOW_FRONT if n not in REGISTRY]
     if missing:  # fail loudly: a rename must update the window, not hide
         raise KeyError(f"_WINDOW_FRONT names not registered: {missing}")

@@ -167,6 +167,13 @@ def write_zordered(
     w.parquet(path)
 
 
+def _write_by_cell(df: DataFrame, path: str, mode: str) -> None:
+    """``df`` hive-partitioned by its ``cell`` column, one file per cell
+    partition: the layout of every inverted-file table (the IVF index,
+    the IVF-PQ codes and their attribute sidecar)."""
+    df.repartition("cell").write.mode(mode).partitionBy("cell").parquet(path)
+
+
 def write_ivf_index(assigned: DataFrame, path: str,
                     mode: str = "overwrite") -> None:
     """Persist an IVF cell assignment (vec_id, embedding, cell) as the
@@ -176,12 +183,18 @@ def write_ivf_index(assigned: DataFrame, path: str,
     One file per cell partition (the cell table is already the coarse
     unit of work); at 100 TB each cell directory would hold many
     size-bounded files and the same pruning applies."""
-    (
-        assigned.repartition("cell")
-        .write.mode(mode)
-        .partitionBy("cell")
-        .parquet(path)
-    )
+    _write_by_cell(assigned, path, mode)
+
+
+def _first_dim(embeddings: DataFrame) -> int | None:
+    """Length of the first non-NULL embedding — the geometry an index is
+    built for — or None for an empty (or all-NULL) corpus."""
+    from pyspark.sql import functions as F
+
+    row = embeddings.where(
+        F.col("embedding").isNotNull()
+    ).select("embedding").first()
+    return None if row is None else len(row["embedding"])
 
 
 def write_pq_index(embeddings: DataFrame, path: str,
@@ -194,32 +207,64 @@ def write_pq_index(embeddings: DataFrame, path: str,
     what makes a 100 TB embedding corpus searchable from disk without
     rehydrating the floats. Training cost is bounded by the codebook's
     deterministic sample regardless of corpus size; encoding is one
-    map-side pass (``operators.similarity.pq_encode``)."""
-    from pyspark.sql import functions as F
-
+    map-side pass (``operators.similarity.pq_encode``). Every vector is
+    checked once against the first one's length."""
     from bigdata2016w_spark.operators.similarity import (
-        _pq_codebook_literal,
         PQ_CODES,
         PQ_SUBSPACES,
+        _checked,
+        _pq_codebook_literal,
+        _pq_encode,
         pack_pq_codes,
-        pq_encode,
     )
 
     spark = embeddings.sparkSession
-    row = embeddings.where(
-        F.col("embedding").isNotNull()
-    ).select("embedding").first()
-    if row is None:  # empty (or all-NULL) corpus: a valid, empty index
+    dim = _first_dim(embeddings)
+    if dim is None:  # empty (or all-NULL) corpus: a valid, empty index
         spark.createDataFrame([], "m int, code bigint, cv array<double>"
                               ).write.mode(mode).parquet(f"{path}/codebook")
         spark.createDataFrame([], "vec_id bigint, codes array<tinyint>"
                               ).write.mode(mode).parquet(f"{path}/codes")
         return
-    dim = len(row["embedding"])
-    cb = _pq_codebook_literal(embeddings, PQ_CODES, PQ_SUBSPACES, dim)
-    codes = pq_encode(embeddings, cb, PQ_SUBSPACES, dim)
+    e = _checked(embeddings, dim)
+    cb = _pq_codebook_literal(e, PQ_CODES, PQ_SUBSPACES, dim)
+    codes = _pq_encode(e, cb, PQ_SUBSPACES, dim)
     cb.write.mode(mode).parquet(f"{path}/codebook")
     pack_pq_codes(codes).write.mode(mode).parquet(f"{path}/codes")
+
+
+def _encode_packed(e: DataFrame, cent_lit, codebook: DataFrame,
+                   n_subspaces: int, dim: int) -> DataFrame:
+    """(vec_id, cell, codes): the residual codes of the checked frame
+    ``e`` (``operators.similarity._fused_assign_encode``, one map-side
+    pass) packed positionally — what every IVF-PQ writer persists: the
+    index build, the batch append and the streaming sink."""
+    from bigdata2016w_spark.operators.similarity import (
+        _fused_assign_encode,
+        pack_pq_codes,
+    )
+
+    return pack_pq_codes(
+        _fused_assign_encode(e, cent_lit, codebook, n_subspaces, dim,
+                             residual=True),
+        keep=("vec_id", "cell"),
+    )
+
+
+def _write_meta(e: DataFrame, cent_lit, meta_cols: tuple[str, ...],
+                index_path: str, mode: str) -> None:
+    """The attribute sidecar rows of ``e`` — vec_id + ``meta_cols``,
+    each row in the cell the frozen ``cent_lit`` assign it, the same cell
+    its codes land in — written to ``{index_path}/meta``."""
+    from bigdata2016w_spark.operators.similarity import (
+        _assign_to_literal_centroids,
+    )
+
+    _write_by_cell(
+        _assign_to_literal_centroids(e, cent_lit, keep=meta_cols)
+        .select("vec_id", *meta_cols, "cell"),
+        f"{index_path}/meta", mode,
+    )
 
 
 def write_ivfpq_index(embeddings: DataFrame, path: str,
@@ -237,7 +282,7 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
     enforced by the filesystem, which is what lets a 100 TB embedding
     corpus re-fit NOTHING at query time: both models are train-once
     artifacts here, and queries are one broadcast away from their ADC
-    ranks.
+    ranks. Every vector is checked once against the first one's length.
 
     ``meta_cols`` additionally persists ``{path}/meta`` — an attribute
     SIDECAR (vec_id + the named metadata columns from the input frame),
@@ -250,27 +295,23 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
     from pyspark.sql import functions as F
 
     from bigdata2016w_spark.operators.similarity import (
+        PQ_CODES,
         PQ_SUBSPACES,
-        _assign_to_literal_centroids,
         _centroid_frame,
-        _ivf_residual_frame,
-        lloyd_centroids,
-        pack_pq_codes,
-        pq_encode,
-        residual_pq_codebook,
+        _checked,
+        _index_cache_key,
+        _lloyd_fit,
+        _residual_codebook,
     )
+    from bigdata2016w_spark.shared import forget
 
     spark = embeddings.sparkSession
     # (re)writing the models: drop any session-shared copy for this path
     # (normalized key — a trailing-slash or relative alias must not
     # leave a stale entry behind)
-    from bigdata2016w_spark.operators.similarity import _index_cache_key
-    from bigdata2016w_spark.shared import forget
-
     forget(spark, _index_cache_key(path))
-    e = embeddings.where(F.col("embedding").isNotNull())
-    row = e.select("embedding").first()
-    if row is None:  # empty (or all-NULL) corpus: a valid, empty index
+    dim = _first_dim(embeddings)
+    if dim is None:  # empty (or all-NULL) corpus: a valid, empty index
         _centroid_frame(spark, []).write.mode(mode).parquet(
             f"{path}/centroids")
         spark.createDataFrame([], "m int, code bigint, cv array<double>"
@@ -280,7 +321,7 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
         ).write.mode(mode).partitionBy("cell").parquet(f"{path}/codes")
         if meta_cols:
             (
-                e.select("vec_id", *meta_cols)
+                embeddings.select("vec_id", *meta_cols)
                 .withColumn("cell", F.lit(0).cast("int"))
                 .limit(0)
                 .write.mode(mode).partitionBy("cell")
@@ -290,36 +331,17 @@ def write_ivfpq_index(embeddings: DataFrame, path: str,
         # re-filled the entry from the half-written index in between
         forget(spark, _index_cache_key(path))
         return
-    dim = len(row["embedding"])
-    cent_lit = lloyd_centroids(e, n_cells, n_iter, dim)
-    cent = _centroid_frame(spark, cent_lit)
-    cb = residual_pq_codebook(e, n_cells, dim=dim, n_iter=n_iter,
-                              centroids=cent_lit)
-    res = _ivf_residual_frame(
-        _assign_to_literal_centroids(e, cent_lit), cent, dim
-    )
-    codes = pq_encode(res, cb, PQ_SUBSPACES, dim, keep=("vec_id", "cell"))
-    cent.write.mode(mode).parquet(f"{path}/centroids")
+    e = _checked(embeddings, dim)
+    cent_lit = _lloyd_fit(e, n_cells, n_iter)
+    cb = _residual_codebook(e, cent_lit, n_cells, PQ_CODES, PQ_SUBSPACES,
+                            dim)
+    _centroid_frame(spark, cent_lit).write.mode(mode).parquet(
+        f"{path}/centroids")
     cb.write.mode(mode).parquet(f"{path}/codebook")
-    (
-        pack_pq_codes(codes, keep=("vec_id", "cell"))
-        .repartition("cell")
-        .write.mode(mode)
-        .partitionBy("cell")
-        .parquet(f"{path}/codes")
-    )
+    _write_by_cell(_encode_packed(e, cent_lit, cb, PQ_SUBSPACES, dim),
+                   f"{path}/codes", mode)
     if meta_cols:
-        # the attribute sidecar: same cell partitioning as the codes so
-        # a filtered probe prunes both scans identically (one extra
-        # assignment pass at build time; the codes path's assignment is
-        # inside its own residual/encode chain and stays untouched)
-        (
-            _assign_to_literal_centroids(e, cent_lit, keep=meta_cols)
-            .select("vec_id", *meta_cols, "cell")
-            .repartition("cell")
-            .write.mode(mode).partitionBy("cell")
-            .parquet(f"{path}/meta")
-        )
+        _write_meta(e, cent_lit, meta_cols, path, mode)
     else:
         # a REWRITE without meta_cols must not leave a previous write's
         # sidecar behind: filtered probes would silently semi-join the
@@ -349,16 +371,13 @@ def index_meta_cols(spark, index_path: str) -> tuple[str, ...]:
 
 def _ivfpq_frozen_models(spark, index_path: str):
     """Read a persisted residual IVF-PQ index's model artifacts back as
-    frozen encode inputs: (cent_lit, cent DataFrame, codebook DataFrame,
-    n_subspaces, dim). Raises on an empty index — there is no model to
-    encode against. Shared by :func:`ivfpq_index_append` and the
-    streaming ``streaming.index_sink.ivfpq_append_sink``. Model rows
-    come from the session-scoped ``_index_models`` cache (coherent under
-    the train-once contract; invalidated by :func:`write_ivfpq_index`)."""
-    from bigdata2016w_spark.operators.similarity import (
-        _centroid_frame,
-        _index_models,
-    )
+    frozen encode inputs: (cent_lit, codebook DataFrame, n_subspaces,
+    dim). Raises on an empty index — there is no model to encode
+    against. Shared by :func:`ivfpq_index_append` and the streaming
+    ``streaming.index_sink.ivfpq_append_sink``. Model rows come from the
+    session-scoped ``_index_models`` cache (coherent under the
+    train-once contract; invalidated by :func:`write_ivfpq_index`)."""
+    from bigdata2016w_spark.operators.similarity import _index_models
 
     cb_rows, cent_lit = _index_models(spark, index_path)
     if not cent_lit:
@@ -370,31 +389,7 @@ def _ivfpq_frozen_models(spark, index_path: str):
     n_subspaces = cb_rows[-1][0] + 1
     sd = max(len(r[2]) for r in cb_rows)
     cb = spark.createDataFrame(cb_rows, "m int, code bigint, cv array<double>")
-    return cent_lit, _centroid_frame(spark, cent_lit), cb, n_subspaces, n_subspaces * sd
-
-
-def ivfpq_encode_packed(new_embeddings: DataFrame, cent_lit, cent: DataFrame,
-                        cb: DataFrame, n_subspaces: int, dim: int
-                        ) -> DataFrame:
-    """(vec_id, codes, cell): one map-side pass — cell assignment +
-    residual encode + positional byte-packing — of new vectors against
-    FROZEN index models (no training shuffle, the append-path encode of
-    ``ivfpq_index_append`` and the streaming index sink)."""
-    from pyspark.sql import functions as F
-
-    from bigdata2016w_spark.operators.similarity import (
-        _assign_to_literal_centroids,
-        _ivf_residual_frame,
-        pack_pq_codes,
-        pq_encode,
-    )
-
-    e = new_embeddings.where(F.col("embedding").isNotNull())
-    res = _ivf_residual_frame(
-        _assign_to_literal_centroids(e, cent_lit), cent, dim
-    )
-    codes = pq_encode(res, cb, n_subspaces, dim, keep=("vec_id", "cell"))
-    return pack_pq_codes(codes, keep=("vec_id", "cell"))
+    return cent_lit, cb, n_subspaces, n_subspaces * sd
 
 
 def ivfpq_index_append(spark, index_path: str,
@@ -407,11 +402,18 @@ def ivfpq_index_append(spark, index_path: str,
     and its packed codes land in the existing cell partitions with
     ``mode('append')`` — no existing file is rewritten, searches see the
     union immediately. The caller owns vec_id uniqueness across appends
-    (the same contract as every keyed sink here). Appending to an empty
+    (the same contract as every keyed sink here). The new vectors are
+    checked once against the index's geometry. Appending to an empty
     index raises: there is no model to encode against. NOT replay-safe
     by itself (a retried append doubles its rows) — a streaming caller
     uses ``streaming.index_sink.ivfpq_append_sink``, whose batch-stamped
     overwrite layout makes each micro-batch's append idempotent.
+
+    A sidecar'd index keeps its ATTRIBUTE rows in lockstep with the
+    codes: appended vectors land in ``{path}/meta`` too, in the cells
+    the same frozen centroids give their codes, or every filtered probe
+    would silently exclude them. A frame that lacks the sidecar's
+    columns is refused before anything is written.
 
     Refuses while a crashed compaction's marker stands (same guard as
     the streaming sink): an append into ``codes`` would shift the base
@@ -420,49 +422,22 @@ def ivfpq_index_append(spark, index_path: str,
     streamed rows) it would mis-read the fold as landed and delete
     unfolded batch dirs. Run ``ivfpq_index_compact`` to auto-recover
     first."""
+    from bigdata2016w_spark.operators.similarity import _checked
     from bigdata2016w_spark.streaming.index_sink import _stream_dir
 
     refuse_while_compacting(spark, _stream_dir(index_path))
-    cent_lit, cent, cb, n_subspaces, dim = _ivfpq_frozen_models(
-        spark, index_path
-    )
-    (
-        ivfpq_encode_packed(new_embeddings, cent_lit, cent, cb,
-                            n_subspaces, dim)
-        .repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/codes")
-    )
-    # a sidecar'd index keeps its ATTRIBUTE rows in lockstep with the
-    # codes: appended vectors must land in {path}/meta too, or every
-    # filtered probe silently excludes them (the semi-join trap the
-    # include_streamed guard raises on). Cells come from the SAME
-    # frozen centroids as the codes, so the (vec_id, cell) keys agree.
+    cent_lit, cb, n_subspaces, dim = _ivfpq_frozen_models(spark, index_path)
     meta_cols = index_meta_cols(spark, index_path)
+    missing = [c for c in meta_cols if c not in new_embeddings.columns]
+    if missing:
+        raise ValueError(
+            f"index at {index_path!r} has a metadata sidecar with "
+            f"columns {meta_cols} but the appended frame lacks "
+            f"{missing} — appending without them would silently "
+            "exclude the new vectors from every filtered search"
+        )
+    e = _checked(new_embeddings, dim)
+    _write_by_cell(_encode_packed(e, cent_lit, cb, n_subspaces, dim),
+                   f"{index_path}/codes", "append")
     if meta_cols:
-        from pyspark.sql import functions as F
-
-        from bigdata2016w_spark.operators.similarity import (
-            _assign_to_literal_centroids,
-        )
-
-        missing = [c for c in meta_cols if c not in new_embeddings.columns]
-        if missing:
-            raise ValueError(
-                f"index at {index_path!r} has a metadata sidecar with "
-                f"columns {meta_cols} but the appended frame lacks "
-                f"{missing} — appending without them would silently "
-                "exclude the new vectors from every filtered search"
-            )
-        (
-            _assign_to_literal_centroids(
-                new_embeddings.where(F.col("embedding").isNotNull()),
-                cent_lit, keep=meta_cols,
-            )
-            .select("vec_id", *meta_cols, "cell")
-            .repartition("cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(f"{index_path}/meta")
-        )
+        _write_meta(e, cent_lit, meta_cols, index_path, "append")

@@ -108,19 +108,12 @@ def refuse_while_compacting(spark: SparkSession, root: str) -> None:
         )
 
 
-def start_batches(
-    stream: DataFrame,
-    root: str,
-    checkpoint_dir: str,
-    write_batch: Callable[[DataFrame, int], None],
-):
-    """Start ``stream`` as an availableNow query that hands each
-    micro-batch to ``write_batch(batch_df, batch_id)``; returns the
-    StreamingQuery. Refuses first while a compaction marker stands under
-    ``root``, and when ``checkpoint_dir`` is fresh (it has logged no
-    offset) but ``root`` already holds a batch dir or the compaction
-    tombstone."""
-    spark = stream.sparkSession
+def refuse_unsafe_start(
+    spark: SparkSession, root: str, checkpoint_dir: str
+) -> None:
+    """Raise while a compaction marker stands under ``root``, and when
+    ``checkpoint_dir`` is fresh (it has logged no offset) but ``root``
+    already holds a batch dir or the compaction tombstone."""
     refuse_while_compacting(spark, root)
     offsets, fs = fs_path(spark, f"{checkpoint_dir}/offsets")
     fresh = not (fs.exists(offsets) and len(fs.listStatus(offsets)) > 0)
@@ -134,6 +127,18 @@ def start_batches(
             "checkpoint, which lives and dies with this target, or point "
             "the stream at an empty target."
         )
+
+
+def start_batches(
+    stream: DataFrame,
+    root: str,
+    checkpoint_dir: str,
+    write_batch: Callable[[DataFrame, int], None],
+):
+    """Start ``stream`` as an availableNow query that hands each
+    micro-batch to ``write_batch(batch_df, batch_id)``; returns the
+    StreamingQuery. Refuses first (:func:`refuse_unsafe_start`)."""
+    refuse_unsafe_start(stream.sparkSession, root, checkpoint_dir)
     return (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)

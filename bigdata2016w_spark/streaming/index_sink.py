@@ -32,6 +32,7 @@ from bigdata2016w_spark.streaming.batches import (
     fs_path,
     leave_tombstone,
     read_marker,
+    refuse_unsafe_start,
     refuse_while_compacting,
     start_batches,
     write_marker,
@@ -105,7 +106,10 @@ def ivfpq_index_compact(spark: SparkSession, index_path: str) -> int:
     # probe silently excludes. Refuse rather than silently corrupt the
     # filtered tier; the operator appends via sources.sinks
     # .ivfpq_index_append (which maintains the sidecar) instead.
-    from bigdata2016w_spark.sources.sinks import index_meta_cols
+    from bigdata2016w_spark.sources.sinks import (
+        _write_by_cell,
+        index_meta_cols,
+    )
 
     if index_meta_cols(spark, index_path):
         raise ValueError(
@@ -124,12 +128,7 @@ def ivfpq_index_compact(spark: SparkSession, index_path: str) -> int:
     base_rows = spark.read.parquet(f"{index_path}/codes").count()
     write_marker(spark, _stream_dir(index_path),
                  {"base_rows": base_rows, "streamed_rows": n})
-    (
-        streamed.repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/codes")
-    )
+    _write_by_cell(streamed, f"{index_path}/codes", "append")
     _finish_compaction_cleanup(spark, index_path, dirs)
     return n
 
@@ -190,33 +189,33 @@ def ivfpq_append_sink(
     ``{index}/codes_stream/batch=N`` (overwrite — replay-idempotent).
     Returns the StreamingQuery.
 
-    Raises up front when the index is empty (no model to encode against,
-    the batch append's contract), and on a fresh checkpoint pointed at
-    a populated codes_stream (``streaming.batches.start_batches``):
-    after a compaction emptied codes_stream, that checkpoint would
-    silently re-encode every already-folded input file, so the
-    compaction's tombstone keeps the refusal armed."""
+    Raises up front while a compaction marker stands, on a fresh
+    checkpoint pointed at a populated codes_stream
+    (``streaming.batches.refuse_unsafe_start``: after a compaction
+    emptied codes_stream, that checkpoint would silently re-encode every
+    already-folded input file, so the compaction's tombstone keeps the
+    refusal armed), and then when the index is empty (no model to
+    encode against, the batch append's contract). The refusals come
+    first, so a refused start reads no model. Each batch is checked
+    once against the index's geometry before it is encoded."""
+    from bigdata2016w_spark.operators.similarity import _checked
     from bigdata2016w_spark.sources.sinks import (
+        _encode_packed,
         _ivfpq_frozen_models,
-        ivfpq_encode_packed,
+        _write_by_cell,
     )
 
     spark = emb_stream.sparkSession
+    root = _stream_dir(index_path)
+    refuse_unsafe_start(spark, root, checkpoint_dir)
     # frozen at sink start: every batch encodes against the SAME models,
     # so a replay of batch N is bit-identical to its first run
-    cent_lit, cent, cb, n_subspaces, dim = _ivfpq_frozen_models(
-        spark, index_path
-    )
+    cent_lit, cb, n_subspaces, dim = _ivfpq_frozen_models(spark, index_path)
 
     def _append(batch_df: DataFrame, bid: int) -> None:
-        (
-            ivfpq_encode_packed(batch_df, cent_lit, cent, cb,
-                                n_subspaces, dim)
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{_stream_dir(index_path)}/batch={bid}")
-        )
+        codes = _encode_packed(_checked(batch_df, dim), cent_lit, cb,
+                               n_subspaces, dim)
+        _write_by_cell(codes, f"{root}/batch={bid}", "overwrite")
 
-    return start_batches(emb_stream, _stream_dir(index_path),
-                         checkpoint_dir, _append)
+    # start_batches repeats the refusals right before the query starts
+    return start_batches(emb_stream, root, checkpoint_dir, _append)

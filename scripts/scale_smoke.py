@@ -375,7 +375,7 @@ def main() -> None:
     from bigdata2016w_spark.operators.similarity import (
         PQ_SUBSPACES,
         _assign_to_literal_centroids,
-        _pq_codebook_literal,
+        pq_codebook,
         pq_encode,
     )
 
@@ -406,7 +406,7 @@ def main() -> None:
 
     # PQ: bounded-sample codebook train + full map-side encode
     t0 = time.perf_counter()
-    cb = _pq_codebook_literal(emb, 16, PQ_SUBSPACES, dim)
+    cb = pq_codebook(emb, 16, PQ_SUBSPACES, dim)
     n_codes_rows = pq_encode(emb, cb, PQ_SUBSPACES, dim).count()
     print(f"pq train+encode: {time.perf_counter() - t0:.1f}s, "
           f"{n_codes_rows} code rows ({n_codes_rows // PQ_SUBSPACES} vectors)")
@@ -416,8 +416,8 @@ def main() -> None:
     # ratio 1.0 across a halving) while the re-rank stage's exact-
     # distance work stays |Q|·k·factor rows — independent of corpus size
     from bigdata2016w_spark.operators.similarity import (
-        _assign_to_literal_centroids,
-        _ivf_residual_frame,
+        _checked,
+        _fused_assign_encode,
         knn,
         lloyd_centroids,
         residual_pq_codebook,
@@ -428,16 +428,11 @@ def main() -> None:
     cents = lloyd_centroids(emb, n_cells, n_iter=1, dim=dim)
     rcb = residual_pq_codebook(emb, n_cells, dim=dim, n_iter=1,
                                centroids=cents)
-    cent_df = spark.createDataFrame(
-        cents, "cell int, centroid array<double>"
-    )
     wall_train = time.perf_counter() - t0
 
     def _res_encode_rows(e) -> int:
-        res = _ivf_residual_frame(
-            _assign_to_literal_centroids(e, cents), cent_df, dim
-        )
-        return pq_encode(res, rcb, PQ_SUBSPACES, dim).count()
+        return _fused_assign_encode(_checked(e, dim), cents, rcb,
+                                    PQ_SUBSPACES, dim, residual=True).count()
 
     t0 = time.perf_counter()
     res_full = _res_encode_rows(emb)

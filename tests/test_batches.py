@@ -4,7 +4,6 @@ the protocol in that one module."""
 
 import ast
 import os
-import shutil
 from pathlib import Path
 
 import pytest
@@ -42,35 +41,21 @@ def _sinks(spark):
     }
 
 
-@pytest.fixture(scope="module")
-def ivfpq_index(spark, sf_dir, tmp_path_factory):
-    """A small built index: the index sink reads its frozen models before
-    it starts, so its guard is reached only on an index that has them."""
-    from bigdata2016w_spark.sources.catalog import load_table
-    from bigdata2016w_spark.sources.sinks import write_ivfpq_index
-
-    path = str(tmp_path_factory.mktemp("batches") / "idx")
-    emb = load_table(spark, sf_dir, "embeddings").where("vec_id < 40")
-    write_ivfpq_index(emb, path)
-    return path
-
-
 @pytest.mark.parametrize("plant", ["populated", "compacting"])
 @pytest.mark.parametrize("sink", [
     "dedup_admission", "winnow_admission", "embedding_admission",
     "ivm_view", "cdc_ivm_view", "sketch_maintenance", "ivfpq_append",
 ])
-def test_sink_refuses_unsafe_start(spark, tmp_path, ivfpq_index, sink,
-                                   plant):
+def test_sink_refuses_unsafe_start(spark, tmp_path, sink, plant):
     """A fresh checkpoint against a target that already holds a batch dir
     (or, for the index sink, the tombstone a compaction leaves once no
     batch dir is left) would restart batch ids at 0 and overwrite or
     re-apply earlier batches; a standing compaction marker means the
     batch dirs may be half folded. Every sink refuses both before any
-    query starts."""
+    query starts, and before it reads anything from its target: the
+    index sink refuses on a bare directory with no index in it."""
     if sink == "ivfpq_append":
         target = str(tmp_path / "idx")
-        shutil.copytree(ivfpq_index, target)
         root = f"{target}/codes_stream"
     else:
         target = root = str(tmp_path / "out")
@@ -91,6 +76,23 @@ def test_sink_refuses_unsafe_start(spark, tmp_path, ivfpq_index, sink,
         start(stream, target, str(tmp_path / "ckpt")).awaitTermination()
     if match == "fresh" and sink == "ivfpq_append":
         assert "tombstone" in str(err.value)
+
+
+def test_index_sink_reports_marker_over_empty_index(spark, tmp_path):
+    """A standing compaction marker is reported ahead of the index's own
+    faults: over an index written from an empty corpus (no model to
+    encode against) the sink still names the marker."""
+    from bigdata2016w_spark.sources.sinks import write_ivfpq_index
+    from bigdata2016w_spark.streaming.index_sink import ivfpq_append_sink
+
+    idx = str(tmp_path / "idx")
+    write_ivfpq_index(spark.createDataFrame([], VECS), idx)
+    os.makedirs(f"{idx}/codes_stream")
+    Path(f"{idx}/codes_stream/_COMPACTING").touch()
+    (tmp_path / "in").mkdir()
+    stream = spark.readStream.schema(VECS).parquet(str(tmp_path / "in"))
+    with pytest.raises(ValueError, match="auto-recover"):
+        ivfpq_append_sink(stream, idx, str(tmp_path / "ckpt"))
 
 
 def _protocol_uses(path: Path) -> list[str]:

@@ -765,54 +765,6 @@ def test_pq_adc_exact_on_codebook_points(spark):
     assert got == {0: (4, 0), 1: (5, 0)}
 
 
-def test_pq_length_guard_shared_by_all_entry_points(spark):
-    """A length-mismatched embedding must RAISE from every PQ entry point
-    (the guard lives in _pq_subvectors, shared by codebook / encode /
-    ADC): without it the short vector's NULL zip_with distance terms
-    sort FIRST in the argmin struct, silently taking the lowest codeword
-    and surfacing as a fake neighbor. NULL embeddings still pass through
-    silently dropped (the documented oracle-parity convention)."""
-    import pytest
-
-    from bigdata2016w_spark.operators.similarity import (
-        knn, pq_codebook, pq_encode,
-    )
-
-    base = [
-        [1.0, 0.0, 0.5, 0.25, -1.0, 2.0, 0.125, 0.5],
-        [0.0, 1.0, -0.5, 0.75, 1.0, -2.0, 0.25, 0.0],
-        [2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0],
-        [-1.0, -1.0, 0.0, 0.0, 1.0, 1.0, 3.0, 3.0],
-    ]
-    clean = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(base + base)],
-        "vec_id bigint, embedding array<float>",
-    )
-    cb = pq_codebook(clean, n_codes=4, n_subspaces=4, dim=8)
-    dirty = clean.union(spark.createDataFrame(
-        [(8, [1.0, 2.0, 3.0]), (9, None)],
-        "vec_id bigint, embedding array<float>",
-    ))
-    with pytest.raises(Exception, match="does not match the PQ geometry"):
-        pq_encode(dirty, cb, n_subspaces=4, dim=8).collect()
-    with pytest.raises(Exception, match="does not match the PQ geometry"):
-        knn(dirty, [0, 1], k=1, code="pq", n_codes=4, n_subspaces=4,
-            dim=8, codebook=cb).collect()
-    # the RESIDUAL path must raise too — its zip_with against the
-    # centroid NULL-pads a short vector to full length, so without its
-    # own pre-zip guard the shared _pq_subvectors check never fires
-    with pytest.raises(Exception, match="does not match the PQ geometry"):
-        knn(dirty, [0, 1], k=1, coarse="lloyd", code="residual_pq",
-            n_cells=4, n_probe=2, n_codes=4, n_subspaces=4, dim=8).collect()
-    # NULL embedding alone: dropped, not raised — the clean answers hold
-    with_null = clean.union(spark.createDataFrame(
-        [(9, None)], "vec_id bigint, embedding array<float>"))
-    got = {r.query_id: (r.vec_id, r.adc_d2) for r in
-           knn(with_null, [0, 1], k=1, code="pq", n_codes=4, n_subspaces=4,
-               dim=8, codebook=cb).collect()}
-    assert got == {0: (4, 0), 1: (5, 0)}
-
-
 def test_corpus_curation_semdedup_oracle_and_derivation(spark, sf_dir, duck):
     """The semantic curation tier must match its DuckDB oracle AND equal
     the piecewise derivation (quality gate minus semantic_dedup
@@ -830,48 +782,6 @@ def test_corpus_curation_semdedup_oracle_and_derivation(spark, sf_dir, duck):
     got = {r.doc_id for r in spec.fn(spark, sf_dir).collect()}
     assert got == gated - dropped
     assert dropped & gated  # the tier actually removes something here
-
-
-def test_lloyd_entry_points_share_embedding_dim_guard(spark):
-    """The Lloyd coarse-quantizer paths must raise in-plan on a
-    length-mismatched embedding exactly like the PQ tiers: without the
-    shared guard a short non-NULL vector silently skews the quantized
-    centroid means (its missing dimensions zip to NULL and drop out of
-    the per-dim sums), and an all-short cell only surfaces as a
-    driver-side KeyError after the fit. NULL embeddings stay silently
-    dropped (the documented oracle-parity convention)."""
-    import pytest
-
-    from bigdata2016w_spark.operators.similarity import (
-        knn, lloyd_centroids,
-    )
-
-    base = [
-        [1.0, 0.0, 0.5, 0.25, -1.0, 2.0, 0.125, 0.5],
-        [0.0, 1.0, -0.5, 0.75, 1.0, -2.0, 0.25, 0.0],
-        [2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0],
-        [-1.0, -1.0, 0.0, 0.0, 1.0, 1.0, 3.0, 3.0],
-    ]
-    clean = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(base + base)],
-        "vec_id bigint, embedding array<float>",
-    )
-    dirty = clean.union(spark.createDataFrame(
-        [(8, [1.0, 2.0, 3.0]), (9, None)],
-        "vec_id bigint, embedding array<float>",
-    ))
-    with pytest.raises(Exception, match="does not match the PQ geometry"):
-        knn(dirty, [0, 1], k=1, coarse="lloyd", n_cells=4, n_probe=2,
-            n_iter=1, dim=8).collect()
-    with pytest.raises(Exception, match="does not match the PQ geometry"):
-        lloyd_centroids(dirty, n_cells=4, n_iter=1, dim=8)
-    # NULL embedding alone: dropped, not raised; the fit still returns
-    # the full centroid table
-    with_null = clean.union(spark.createDataFrame(
-        [(9, None)], "vec_id bigint, embedding array<float>"))
-    cents = lloyd_centroids(with_null, n_cells=4, n_iter=1, dim=8)
-    assert len(cents) == 4
-    assert all(len(c) == 8 for _, c in cents)
 
 
 def test_ann_ivf_pq_rerank_oracle_and_recall_gain(spark, sf_dir, duck):
@@ -1220,63 +1130,6 @@ def test_ann_ivf_pq_residual_oracle_and_recall_vs_global(spark, sf_dir, duck):
     glob_recall = _mean_recall_vs_bruteforce(spark, sf_dir, "ann_ivf_pq")
     assert res_recall >= glob_recall, (res_recall, glob_recall)
     assert res_recall >= 0.25
-
-
-def test_validated_embeddings_validate_once_path(spark):
-    """The validate-once materialization (validated_embeddings →
-    validated=True tiers) must (a) RAISE at validation time on a
-    length-mismatched row — the guard moves, it never disappears —
-    (b) silently drop NULL embeddings (the oracle-parity convention),
-    and (c) leave every tier's results bit-identical to the in-plan
-    guarded default path, since it carries the same rows with the same
-    values and only relocates where the raise_error is evaluated."""
-    import pytest
-
-    from bigdata2016w_spark.operators.similarity import (
-        knn,
-        lloyd_centroids,
-        validated_embeddings,
-    )
-
-    base = [
-        [1.0, 0.0, 0.5, 0.25, -1.0, 2.0, 0.125, 0.5],
-        [0.0, 1.0, -0.5, 0.75, 1.0, -2.0, 0.25, 0.0],
-        [2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0],
-        [-1.0, -1.0, 0.0, 0.0, 1.0, 1.0, 3.0, 3.0],
-    ]
-    clean = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(base + base)],
-        "vec_id bigint, embedding array<float>",
-    )
-    # (a) short row: the eager materialization IS the validation point
-    dirty = clean.union(spark.createDataFrame(
-        [(8, [1.0, 2.0, 3.0])], "vec_id bigint, embedding array<float>"))
-    with pytest.raises(Exception, match="does not match the PQ geometry"):
-        validated_embeddings(dirty, dim=8)
-    # (b) NULL row: dropped at validation, not raised
-    with_null = clean.union(spark.createDataFrame(
-        [(9, None)], "vec_id bigint, embedding array<float>"))
-    valid = validated_embeddings(with_null, dim=8)
-    assert valid.count() == 8
-
-    # (c) bit-identical results through every validated-aware tier
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    assert lloyd_centroids(valid, n_cells=4, n_iter=1, dim=8,
-                           validated=True) == \
-        lloyd_centroids(with_null, n_cells=4, n_iter=1, dim=8)
-    for mode in (
-        {"coarse": "lloyd", "n_cells": 4, "n_probe": 2, "n_iter": 1},
-        {"code": "pq", "n_codes": 4, "n_subspaces": 4},
-        {"coarse": "seed", "code": "pq", "n_cells": 4, "n_probe": 2,
-         "n_codes": 4, "n_subspaces": 4},
-        {"coarse": "lloyd", "code": "residual_pq", "rerank": 3,
-         "n_cells": 4, "n_probe": 2, "n_codes": 4, "n_subspaces": 4},
-    ):
-        assert rows(knn(valid, [0, 1], k=2, dim=8, validated=True,
-                        **mode)) == \
-            rows(knn(with_null, [0, 1], k=2, dim=8, **mode))
 
 
 def test_ivf_probe_sweep_oracle(spark, duck, sf_dir):

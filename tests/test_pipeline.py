@@ -1132,6 +1132,61 @@ def test_ann_ivf_pq_residual_oracle_and_recall_vs_global(spark, sf_dir, duck):
     assert res_recall >= 0.25
 
 
+def test_validated_embeddings_validate_once_path(spark):
+    """The validate-once materialization (validated_embeddings, shared
+    by the pipeline's tiers) must (a) RAISE at validation time on a
+    length-mismatched row, (b) silently drop NULL embeddings (the
+    oracle-parity convention), and (c) leave every tier's results
+    bit-identical to the same tier run on the raw frame: it carries the
+    same rows with the same values, and each tier's own entry check
+    passes every row it holds."""
+    import pytest
+
+    from bigdata2016w_spark.operators.similarity import (
+        knn,
+        lloyd_centroids,
+        validated_embeddings,
+    )
+
+    base = [
+        [1.0, 0.0, 0.5, 0.25, -1.0, 2.0, 0.125, 0.5],
+        [0.0, 1.0, -0.5, 0.75, 1.0, -2.0, 0.25, 0.0],
+        [2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0, 2.0],
+        [-1.0, -1.0, 0.0, 0.0, 1.0, 1.0, 3.0, 3.0],
+    ]
+    clean = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(base + base)],
+        "vec_id bigint, embedding array<float>",
+    )
+    # (a) short row: the eager materialization IS the validation point
+    dirty = clean.union(spark.createDataFrame(
+        [(8, [1.0, 2.0, 3.0])], "vec_id bigint, embedding array<float>"))
+    with pytest.raises(Exception, match="does not match the PQ geometry"):
+        validated_embeddings(dirty, dim=8)
+    # (b) NULL row: dropped at validation, not raised
+    with_null = clean.union(spark.createDataFrame(
+        [(9, None)], "vec_id bigint, embedding array<float>"))
+    valid = validated_embeddings(with_null, dim=8)
+    assert valid.count() == 8
+
+    # (c) bit-identical results through every geometry-bound tier
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert lloyd_centroids(valid, n_cells=4, n_iter=1, dim=8) == \
+        lloyd_centroids(with_null, n_cells=4, n_iter=1, dim=8)
+    for mode in (
+        {"coarse": "lloyd", "n_cells": 4, "n_probe": 2, "n_iter": 1},
+        {"code": "pq", "n_codes": 4, "n_subspaces": 4},
+        {"coarse": "seed", "code": "pq", "n_cells": 4, "n_probe": 2,
+         "n_codes": 4, "n_subspaces": 4},
+        {"coarse": "lloyd", "code": "residual_pq", "rerank": 3,
+         "n_cells": 4, "n_probe": 2, "n_codes": 4, "n_subspaces": 4},
+    ):
+        assert rows(knn(valid, [0, 1], k=2, dim=8, **mode)) == \
+            rows(knn(with_null, [0, 1], k=2, dim=8, **mode))
+
+
 def test_ivf_probe_sweep_oracle(spark, duck, sf_dir):
     from bigdata2016w_spark.registry import all_specs
     from tests.oracle import compare_spark_duckdb

@@ -351,6 +351,20 @@ def test_sketch_ops_dirty_inputs_parity(spark, tmp_path):
 # the kernels' NULL/NaN parity claims to hold (np_kernels module doc).
 
 
+def test_validated_embeddings_raises_on_null_element(spark):
+    from pyspark.errors import PySparkException
+
+    from bigdata2016w_spark.operators.similarity import validated_embeddings
+
+    df = spark.createDataFrame(
+        [(1, [float(i) for i in range(64)]),
+         (2, [1.0, None] + [0.0] * 62)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(PySparkException, match="NULL elements"):
+        validated_embeddings(df)  # eager localCheckpoint evaluates guard
+
+
 def test_serve_lut_raises_named_error_on_null_element():
     """The serve path's driver-side LUT must reject a query vector with
     a NULL element with the in-plan guard's error, not a bare TypeError
@@ -362,6 +376,16 @@ def test_serve_lut_raises_named_error_on_null_element():
     cb = [(m, 0, [0.0] * 8) for m in range(8)]
     with pytest.raises(ValueError, match="NULL elements"):
         _adc_lut_driver(q, cent, cb, n_probe=1, n_subspaces=8, sd=8, dim=64)
+
+
+def test_validated_embeddings_still_drops_null_rows(spark):
+    from bigdata2016w_spark.operators.similarity import validated_embeddings
+
+    df = spark.createDataFrame(
+        [(1, [float(i) for i in range(64)]), (2, None)],
+        "vec_id long, embedding array<double>",
+    )
+    assert validated_embeddings(df).count() == 1
 
 
 def test_pair_cosine_kernel_zero_length_raises_divide_by_zero():
